@@ -104,11 +104,22 @@ object Bench {
       (pools.map(_.getUsage.getUsed).sum / 1e6,
         pools.map(_.getUsage.getMax.max(0L)).sum / 1e6)
     }
+    // Janino compiles so far in this JVM: every generated class that missed
+    // Spark's codegen cache (spark.sql.codegen.cache.maxEntries). The
+    // per-rep delta per query shows cache pressure: once rep 1 has
+    // compiled a query's classes, a later rep that compiles again means
+    // the cache evicted them, and that recompile lands in the timed window
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val cacheCapacity = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    val comps = scala.collection.mutable.Map.empty[String, List[Long]]
+      .withDefaultValue(Nil)
     val gcRunStart = gcMillis
     var gcForced = 0
     for (_ <- 1 to reps; name <- names) {
       val fn = SparkEntry.queries(name)
       val gc0 = gcMillis
+      val c0 = compiles
       val t0 = System.nanoTime()
       // the timed action lives in BenchAction (shared with ColdProbe so
       // probe timings stay comparable by construction)
@@ -119,6 +130,7 @@ object Bench {
           Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(80)}")
         }
       val secs = (System.nanoTime() - t0) / 1e9
+      comps(name) = (compiles - c0) :: comps(name)
       failed match {
         case Some(msg) => errs(name) = msg // failures poison the query, not the run
         case None =>
@@ -171,6 +183,11 @@ object Bench {
     val gcJson = names.filter(n => gcs(n).nonEmpty && !errs.contains(n))
       .map(n => jstr(n) + ":" + jnum(median(gcs(n)))).mkString("{", ",", "}")
     val total = perQuery.collect { case (_, v) if v >= 0 => v }.sum
+    // per-rep compile counts in rep order, failed reps included (a failed
+    // query still compiled its classes)
+    val compJson = names.map(n => jstr(n) + ":" + comps(n).reverse.mkString("[", ",", "]"))
+      .mkString("{", ",", "}")
+    val compTotal = comps.values.map(_.sum).sum
     // The driver records a 2000-char stdout TAIL (measured in
     // BENCH_r05.json: len(tail) == 2000 exactly), and sbt's [success]
     // epilogue eats ~75 more. The 92-query map alone is ~2.3k chars, so it
@@ -185,7 +202,7 @@ object Bench {
       s""""loadavg1_start":${jnum(load1Start)},"contaminated":$contaminated,"idle_waited_sec":$idleWaited"""
     val (ccUsed, ccMax) = codeCacheMb
     val fullLine =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"gc_sec":$gcJson,"errors":$errJson,"reps":$reps,"sf":${jstr(sfDir)},"loadavg_start":${jstr(loadStart)},"loadavg_end":${jstr(loadAvg)},$adjudication,"gc_total_sec":${jnum((gcMillis - gcRunStart) / 1e3)},"gc_forced":$gcForced,"codecache_used_mb":${jnum(ccUsed)},"codecache_max_mb":${jnum(ccMax)}}"""
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"gc_sec":$gcJson,"errors":$errJson,"reps":$reps,"sf":${jstr(sfDir)},"loadavg_start":${jstr(loadStart)},"loadavg_end":${jstr(loadAvg)},$adjudication,"gc_total_sec":${jnum((gcMillis - gcRunStart) / 1e3)},"gc_forced":$gcForced,"codecache_used_mb":${jnum(ccUsed)},"codecache_max_mb":${jnum(ccMax)},"codegen_cache_max_entries":$cacheCapacity,"codegen_compiles_total":$compTotal,"codegen_compiles":$compJson}"""
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_times.json")
     try {
       java.nio.file.Files.write(

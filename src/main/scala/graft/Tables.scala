@@ -64,8 +64,4 @@ object Tables {
       case _ => df
     }
   }
-
-  /** Register every fixture table as a temp view (for spark.sql surfaces). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -7,9 +7,10 @@ package graft.functions
   *
   * These exist so the LLM-data ops (MinHash/SimHash dedup, fingerprints) are
   * *oracle-checkable*: the DuckDB oracle replays the same arithmetic with
-  * list_transform/list_reduce. At scale the same expressions run inside
-  * Spark's higher-order functions (no UDF, no serialization boundary); a
-  * codegen'd native Expression is the planned optimization path.
+  * list_transform/list_reduce. On the Spark side the hot hashes run as
+  * codegen'd native expressions ([[HashExpressions]]: `graft_tokens`,
+  * `graft_token_hashes`, `graft_polyhash`, registered by GraftExtensions),
+  * so no UDF and no interpreted lambda sits on the corpus path.
   */
 object Portable {
   /** Modulus for token/char hashes (fits products with 31 in int64). */
@@ -90,10 +91,4 @@ object Portable {
     * oracles' `th` step. */
   def duckHashTokensSql(arr: String): String =
     s"list_transform($arr, t -> ${duckPolyHashSql("t")})"
-
-  /** Token-hash array: polyHash applied to each token. */
-  def tokenHashesSql(c: String): String =
-    s"""transform(${tokensSql(c)},
-       | t -> aggregate(transform(sequence(1, length(t)), i -> bigint(ascii(substring(t, i, 1)))),
-       |   bigint(0), (h, ch) -> (h * 31 + ch) % ${P}L))""".stripMargin
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import graft.functions.Portable.{P, P61, MIX, tokensSql, tokenHashesSql}
+import graft.functions.Portable.{P, P61, MIX, tokensSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel

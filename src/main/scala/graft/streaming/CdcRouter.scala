@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType}
+import org.apache.spark.sql.types.{MapType, StringType, VariantType}
 
 /** P3 — CDC changelog routing driven by a live config table.
   *
@@ -33,24 +33,33 @@ object CdcRouter {
         when(col("type") === "bootstrap-insert", "insert").otherwise(col("type")))
       .filter(col("table").isNotNull && col("data").isNotNull && length(col("data")) > 3)
 
-  /** Join with the routing config and prune `data` to `sink_columns`. */
+  /** Join with the routing config and prune `data` to `sink_columns`.
+    *
+    * The envelope parses to `map<string, variant>`, so the pruned `data`
+    * keeps each value's JSON type, as the reference's JSONObject key
+    * removal does: a number stays a number and a string stays a string.
+    * A `map<string,string>` parse turned `{"id":1001}` into
+    * `{"id":"1001"}`, and P6's typed parse (OrderWide.infoSchema, LongType
+    * ids) then read every id as null. `data_pruned` and `pk` are the
+    * string renderings of the same values. */
   def route(cdc: DataFrame, config: DataFrame): DataFrame =
     cdc.join(broadcast(config),
         cdc("table") === config("source_table") && cdc("type") === config("operate_type"))
-      .withColumn("data_map", from_json(col("data"), MapType(StringType, StringType)))
+      .withColumn("data_map", from_json(col("data"), MapType(StringType, VariantType)))
       .withColumn("cols", split(col("sink_columns"), ","))
-      .withColumn("data_pruned",
+      .withColumn("data_kept",
         map_filter(col("data_map"), (k, _) => array_contains(col("cols"), k)))
       .select(col("database"), col("table"), col("type"),
         col("sink_type"), col("sink_table"), col("sink_pk"),
-        to_json(col("data_pruned")).as("data"), col("data_pruned"),
+        to_json(col("data_kept")).as("data"),
+        transform_values(col("data_kept"), (_, v) => v.cast(StringType)).as("data_pruned"),
         // pk from the UNPRUNED envelope: a config whose sink_columns list
         // omits the pk (DimDdl.ensureTable explicitly supports it by
         // prepending the column) leaves no pk key in data_pruned — under
         // ANSI mode element_at would kill the micro-batch, and with ANSI
         // off every dim row would collapse onto pk NULL. try_element_at
         // keeps a malformed envelope a null-pk row, not a query failure.
-        expr("try_element_at(data_map, sink_pk)").as("pk"))
+        expr("try_element_at(data_map, sink_pk)").cast(StringType).as("pk"))
 
   /** One micro-batch of routing: facts appended per-topic (partitioned by
     * sink_table ≈ dynamic-topic Kafka sink), dims upserted by primary key

@@ -19,12 +19,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // `.config("spark.sql.extensions", ...)` is a STATIC conf — honored
       // only when the SparkContext itself is built (true in a fresh
       // deployment; this JVM's context belongs to the shared fixture).
-      // `withExtensions` drives the exact same GraftExtensions.apply.
-      val spark = SparkSession.builder()
+      // `withExtensions` (in GraftSession.configure) drives the exact same
+      // GraftExtensions.apply. The rest of configure matters when this
+      // suite runs first: its context's static confs (the codegen cache
+      // size) then hold for every later suite in the JVM.
+      val spark = GraftSession.configure(SparkSession.builder())
         .master("local[2]")
         .appName("graft-extensions-spec")
-        .withExtensions(new GraftExtensions)
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       val r = spark.sql(
         "SELECT graft_simhash('hello world hello') AS sh, " +

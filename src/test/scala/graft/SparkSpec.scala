@@ -5,27 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for suites (one per suite via lazy val). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    // the suites run the SAME session packaging production deploys — the
-    // graft_* native functions come from the extensions (no planner
-    // strategies are injected, by the decision recorded in
-    // GraftExtensions' scaladoc), so plan audits pin the plans users
-    // actually get
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the suites exercise the SAME state-store provider production uses
-    // (GraftSession): RocksDB-backed keyed state, off-heap, incremental
-    // checkpoints — so every stateful-streaming test (UV dedup, bounce
-    // CEP, order-wide join buffers) proves its semantics under the
-    // provider that survives billion-key state, not the on-heap default
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // the suites run the SAME session definition production deploys
+  // (GraftSession.configure): the graft_* native functions from the
+  // extensions (no planner strategies are injected, by the decision
+  // recorded in GraftExtensions' scaladoc), so plan audits pin the plans
+  // users actually get; the RocksDB state store, so every stateful-
+  // streaming test runs under the provider that survives billion-key
+  // state; and the codegen cache size, a static conf that the first
+  // session to generate code fixes for the whole forked test JVM
+  lazy val spark: SparkSession =
+    GraftSession.configure(SparkSession.builder().master("local[4]"))
+      .config("spark.sql.shuffle.partitions", "4")
+      .getOrCreate()
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

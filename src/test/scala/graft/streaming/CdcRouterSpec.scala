@@ -125,4 +125,36 @@ class CdcRouterSpec extends SparkSpec {
     assert(byPk.keySet == Set("u1", "u2"))
     assert(byPk("u1").contains("alice2")) // updated value won
   }
+
+  test("P3 -> P6: routed order facts keep typed ids, so the interval join matches") {
+    val out = tmpDir("cdcorderwide")
+    val cfg = Seq(
+      ("order_info", "insert", "kafka", "dwd_order_info",
+        "id,province_id,user_id,total_amount,create_time", "id", ""),
+      ("order_detail", "insert", "kafka", "dwd_order_detail",
+        "id,order_id,sku_id,sku_num,order_price,create_time", "id", ""))
+      .toDF("source_table", "operate_type", "sink_type", "sink_table",
+        "sink_columns", "sink_pk", "sink_extend")
+    // Maxwell writes numeric columns as JSON numbers
+    val batch = CdcRouter.parse(Seq(
+      cdc("order_info", "insert", """{"id":1001,"province_id":3,"user_id":11,""" +
+        """"total_amount":199.00,"create_time":"2021-11-13 11:10:00","secret":"x"}"""),
+      cdc("order_detail", "insert", """{"id":5001,"order_id":1001,"sku_id":5,""" +
+        """"sku_num":2,"order_price":99.50,"create_time":"2021-11-13 11:10:02"}""")).toDF("value"))
+    CdcRouter.processBatch(batch, cfg, out, 0L)
+
+    def topic(t: String) = CdcRouter.factsExactlyOnce(spark, out)
+      .filter(col("sink_table") === t).select(col("data").as("value"))
+    val info = OrderWide.parseInfo(topic("dwd_order_info"))
+    val detail = OrderWide.parseDetail(topic("dwd_order_detail"))
+    assert(info.select("id", "province_id", "user_id").as[(Long, Long, Long)].collect().toSeq ==
+      Seq((1001L, 3L, 11L)))
+    assert(detail.select("detail_id", "order_id", "sku_id", "sku_num")
+      .as[(Long, Long, Long, Long)].collect().toSeq == Seq((5001L, 1001L, 5L, 2L)))
+    assert(info.select(col("total_amount").cast("string")).as[String].collect().toSeq ==
+      Seq("199.00"))
+    val wide = OrderWide.intervalJoin(info, detail).select("id", "detail_id")
+      .as[(Long, Long)].collect().toSeq
+    assert(wide == Seq((1001L, 5001L)))
+  }
 }
