@@ -121,8 +121,8 @@ object Bench {
       val gc0 = gcMillis
       val c0 = compiles
       val t0 = System.nanoTime()
-      // the timed action lives in BenchAction (shared with ColdProbe so
-      // probe timings stay comparable by construction)
+      // the timed action lives in BenchAction (shared with the gmallbench
+      // harness so its timings stay comparable by construction)
       val failed: Option[String] =
         try { BenchAction.run(fn(spark, sfDir)); None }
         catch { case e: Throwable =>

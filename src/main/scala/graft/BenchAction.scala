@@ -3,9 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** The ONE timed materialization action and median, shared by [[Bench]]
-  * and [[graft.tools.ColdProbe]] so probe timings stay comparable with
-  * bench timings by construction (they were hand-copied before — a change
-  * to one would silently desynchronize the other).
+  * and the gmallbench harness so their timings stay comparable by
+  * construction.
   *
   * Action rationale (load-bearing, see git history): the hash-agg
   * materializes EVERY output column (count() would let Catalyst prune the

@@ -458,19 +458,11 @@ object Dedup {
        |  FROM th WHERE len(th) >= 3)""".stripMargin
 
 
-  /** The dedup_ngram_jaccard pipeline stages, ONE definition shared by the
-    * query below and by [[graft.tools.NgramStageProbe]] — the probe used
-    * to hand-copy this chain, so a tuning here silently desynchronized
-    * its per-stage attributions (review find, round 7). */
-  private[graft] final case class NgramStages(
-      bucketed: DataFrame, depth: DataFrame, cand: DataFrame,
-      pruned: DataFrame, verified: DataFrame)
-
-  private[graft] def ngramPipeline(s: SparkSession, dir: String): NgramStages =
-    ngramPipelineOf(Tables.load(s, dir, "documents"))
-
-  /** The pipeline over an arbitrary `(doc_id, lang, n_chars, text)`
-    * frame. `midCap` selects the deep-bucket (df > 50) pairing tier:
+  /** The dedup_ngram_jaccard pipeline over an arbitrary
+    * `(doc_id, lang, n_chars, text)` frame: the verified
+    * `(doc_a, doc_b, jaccard)` pairs; its per-stage candidate volumes
+    * are recorded in SCALE.md, "Measured scaling, 1× → 10× corpus".
+    * `midCap` selects the deep-bucket (df > 50) pairing tier:
     * 1 = hub pairing (the default, each member witnessed by the bucket
     * min — O(df) per bucket); k > 1 = CAPPED pairing (the
     * dedup_minhash_capped semantics: first k residents by doc_id pair
@@ -478,7 +470,7 @@ object Dedup {
     * resident-resident recall hub pairing trades away; see
     * [[winnowPairs]] for the same knob on the winnow family). */
   private[graft] def ngramPipelineOf(docs: DataFrame,
-      midCap: Int = 1): NgramStages = {
+      midCap: Int = 1): DataFrame = {
       require(midCap >= 1, s"midCap must be >= 1, got $midCap")
       val s = docs.sparkSession
       graft.functions.HashExpressions.register(s)
@@ -588,7 +580,7 @@ object Dedup {
       // count equals set intersection exactly (oracle unchanged).
       val slim = d.selectExpr("doc_id",
         "sort_array(transform(g, x -> CAST(x AS INT))) AS g")
-      val verified = pruned
+      pruned
         .join(slim.selectExpr("doc_id AS doc_a", "g AS g_a"), "doc_a")
         .join(slim.selectExpr("doc_id AS doc_b", "g AS g_b"), "doc_b")
         .selectExpr("doc_a", "doc_b",
@@ -596,7 +588,6 @@ object Dedup {
         .selectExpr("doc_a", "doc_b",
           "CAST(inter AS DOUBLE) / (sa + sb - inter) AS jaccard")
         .filter("jaccard >= 0.7")
-    NgramStages(bucketed, depth, cand, pruned, verified)
   }
 
   /** Verified MinHash near-dup pairs (doc_a < doc_b, jaccard >= 0.8)
@@ -913,7 +904,7 @@ object Dedup {
     // ---- char-5-gram Jaccard near-dups with (lang, length-band) blocking --
     "dedup_ngram_jaccard" -> QueryDef(
       (s, dir) => {
-        ngramPipeline(s, dir).verified
+        ngramPipelineOf(Tables.load(s, dir, "documents"))
           .transform(graft.Sorted.byNames(_, "doc_a", "doc_b"))
       },
       s"""WITH d AS (SELECT doc_id, lang, n_chars,

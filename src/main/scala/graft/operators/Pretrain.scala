@@ -134,14 +134,11 @@ object Pretrain {
     *    `spark.catalog.clearCache()` between corpora; repeated auto
     *    calls over DIFFERENT inputs otherwise accumulate one cached
     *    sig table each, ~128 B/doc). */
-  /** Stages 1–2 of [[pretrainPrep]] (quality gates → exact-dedup
-    * survivors), factored to ONE definition so the decade probe
-    * (tools/Probe `pretrainauto` leg) observes the exact frame the
-    * `"auto"` dispatch profiles — no hand copy to drift. Returns
-    * (gated, ek, ekDocs): the gate-surviving corpus (lineage-cut), the
-    * canonical exact-dedup ids, and their full rows. */
-  private[graft] def gateAndExactDedup(s: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) = {
+  def pretrainPrep(s: SparkSession, dir: String,
+      budgetTokens: Long = BudgetTokens,
+      evalPoolExpr: String = DefaultEvalPool,
+      dedupEmitter: String = "all",
+      autoCappedBudget: Long = Dedup.AutoCappedBudget): DataFrame = {
     graft.functions.HashExpressions.register(s)
     val d = Tables.load(s, dir, "documents")
 
@@ -184,16 +181,6 @@ object Pretrain {
     // columnar string cache build is the dominant term; the same
     // economics as the minhashSigTable slim-cache rule).
     val ekDocs = gated.join(ek, "doc_id")
-    (gated, ek, ekDocs)
-  }
-
-  def pretrainPrep(s: SparkSession, dir: String,
-      budgetTokens: Long = BudgetTokens,
-      evalPoolExpr: String = DefaultEvalPool,
-      dedupEmitter: String = "all",
-      autoCappedBudget: Long = Dedup.AutoCappedBudget): DataFrame = {
-    val d = Tables.load(s, dir, "documents")
-    val (gated, ek, ekDocs) = gateAndExactDedup(s, dir)
 
     // ---- 3. MinHash near-dedup, keep-first -------------------------------
     val emitter = dedupEmitter match {
@@ -347,9 +334,9 @@ object Pretrain {
       pretrainPrepSql(BudgetTokens, FixedEvalPool)),
     // the saturated-corpus direction: fixed pool AND the canonical-star
     // near-dedup emitter — exactly the configuration a duplicate-heavy
-    // 100 TB caller runs (Probe's pretrainstar leg; the only one whose
-    // K=1000 decade fits on a box). Oracle-checked with duckStarCandCte
-    // spliced into the SAME seven-stage DuckDB twin, so the star
+    // 100 TB caller runs (the only emitter whose K=1000 decade fits on a
+    // box: SCALE.md, "Round-12: pretrain_prep"). Oracle-checked with
+    // duckStarCandCte spliced into the SAME seven-stage DuckDB twin, so the star
     // emitter's keep-first semantics are pinned end-to-end, not just at
     // the pair level (dedup_minhash_star)
     "pretrain_prep_star" -> QueryDef(

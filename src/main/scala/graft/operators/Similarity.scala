@@ -1004,8 +1004,9 @@ object Similarity {
     * no higher-cosine pairs, dedup_embedding_cosine's documented demo
     * threshold), while a production near-dup radius (~0.9, p ≈ 0.86)
     * holds ~75% recall per 4-band split at width 8. The width sizing is
-    * MEASURED across corpus decades in SCALE.md (RangeWidthProbe), not
-    * argued in prose. Key encoding is internal: any injective encoding
+    * MEASURED across corpus decades in SCALE.md ("Round-9: the
+    * radius-search band-width knob, measured"), not argued in prose.
+    * Key encoding is internal: any injective encoding
     * of the width-bit tuple yields the same candidate set, so the demo
     * oracle's arithmetic 3-bit keys and this method's concat keys agree. */
   /** The persisted (vec_id, band, key) frame shared by the SRP family:
@@ -1013,10 +1014,10 @@ object Similarity {
     * Key encoding (bit concat) is internal — any injective encoding of
     * the width-bit tuple partitions candidates identically. */
   /** Occupancy-targeted SRP band width — the `width ~ log2(N)` growth
-    * rule the decade probes measured (SCALE.md, RangeWidthProbe), as
-    * code: expected band-bucket occupancy is N / 2^width, so holding a
-    * target mean occupancy takes width = ceil(log2(N /
-    * targetOccupancy)). Mirrors [[sqrtCellK]]'s pattern: the caller
+    * rule the decade probes measured (SCALE.md, "Round-9: the
+    * radius-search band-width knob, measured"), as code: expected
+    * band-bucket occupancy is N / 2^width, so holding a target mean
+    * occupancy takes width = ceil(log2(N / targetOccupancy)). Mirrors [[sqrtCellK]]'s pattern: the caller
     * passes the corpus size it already knows (or counted once) and gets
     * the width that keeps candidate volume flat as the corpus grows — a
     * CONSTANT width saturates: at fixed width 3 the 100× probe's
@@ -1107,7 +1108,8 @@ object Similarity {
     * [[hardNegatives]]: the persisted cell frame ([[assignCells]], k ~ √N
     * default — ONE definition of the kk sizing), both pair sides off the
     * cache, exact cosine per pair with BOTH endpoint labels carried.
-    * Pair volume ~N²/k — the measured knob (SCALE.md, KnnKProbe). */
+    * Pair volume ~N²/k — the measured knob (SCALE.md, "Round-9: the
+    * semantic-dedup cell knob, measured"). */
   private def inCellPairs(emb: DataFrame, k: Int, corpusSize: Long): DataFrame = {
     val kk = sqrtCellK(emb, k, corpusSize)
     graft.functions.HashExpressions.register(emb.sparkSession)

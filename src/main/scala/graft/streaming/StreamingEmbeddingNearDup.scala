@@ -21,10 +21,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * total state is bounded by (active buckets in the horizon) × cap ×
   * the embedding payload — not by stream history. WIDTH is the same
   * occupancy knob as the batch family (a constant key space saturates
-  * at scale; width ~ log2(N) holds bucket occupancy flat — SCALE.md's
-  * measured RangeWidthProbe story), so the default here is 8 (the
-  * production point the rangeSearch scaladoc documents), not the batch
-  * fixture's demo width 3.
+  * at scale; width ~ log2(N) holds bucket occupancy flat — SCALE.md,
+  * "Round-9: the radius-search band-width knob, measured"), so the
+  * default here is 8 (the production point the rangeSearch scaladoc
+  * documents), not the batch fixture's demo width 3.
   *
   * Verification is EXACT cosine on the resident embeddings (the batch
   * operator's contract — the signature only selects candidates), with

@@ -58,8 +58,8 @@ class WinnowCappedSpec extends SparkSpec {
     // are mutually near-identical, so every emitted candidate verifies
     val docs = saturated(60)
       .selectExpr("doc_id", "'en' AS lang", "CAST(length(text) AS BIGINT) AS n_chars", "text")
-    val hub = pairSet(Dedup.ngramPipelineOf(docs, midCap = 1).verified)
-    val capped = pairSet(Dedup.ngramPipelineOf(docs, midCap = 4).verified)
+    val hub = pairSet(Dedup.ngramPipelineOf(docs, midCap = 1))
+    val capped = pairSet(Dedup.ngramPipelineOf(docs, midCap = 4))
     assert(hub.subsetOf(capped), s"hub extras: ${hub -- capped}")
     assert(hub == (2L to 60L).map((1L, _)).toSet,
       s"hub tier must witness every member against the bucket min: $hub")

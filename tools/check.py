@@ -5,12 +5,30 @@ Runs after `tools/run.sh graft.Verify <sfDir> <outDir>`:
 for each query, loads outDir/<name> (Spark parquet) and runs the oracle SQL
 from outDir/oracle_sql.json in DuckDB with the fixture tables registered as
 views, then compares (columns sorted by name, rows sorted, exact values).
+
+Every top-level CTE runs MATERIALIZED (computed once, same rows): DuckDB
+otherwise inlines a CTE at each reference, and the pretrain_prep family's
+oracles then exceed any memory limit on the 500-document sf0.01 corpus
+("failed to pin block"; 12.5 GiB unbounded). DuckDB also runs under a
+memory limit of half the host's RAM and spills to a temp directory under
+/tmp, so one oracle cannot exhaust a shared host.
 """
-import sys, json, glob, math
+import sys, json, glob, math, os, re, tempfile
 import duckdb
 
+CTE_HEAD = re.compile(r"(?m)^(WITH )?(\w+) AS \(")
+
+def materialized(sql: str) -> str:
+    return CTE_HEAD.sub(r"\1\2 AS MATERIALIZED (", sql)
+
 def main(sf_dir: str, out_dir: str) -> int:
-    con = duckdb.connect()
+    with tempfile.TemporaryDirectory(prefix="check_duckdb_", dir="/tmp") as spill:
+        return check(sf_dir, out_dir, spill)
+
+def check(sf_dir: str, out_dir: str, spill: str) -> int:
+    half_ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
+    con = duckdb.connect(config={"memory_limit": f"{half_ram_mb}MB",
+                                 "temp_directory": spill})
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -23,7 +41,7 @@ def main(sf_dir: str, out_dir: str) -> int:
         try:
             got_tbl = con.execute(
                 f"SELECT * FROM read_parquet({files!r})").arrow()
-            exp_tbl = con.execute(sql).arrow()
+            exp_tbl = con.execute(materialized(sql)).arrow()
             got = got_tbl.to_pandas()
             exp = exp_tbl.to_pandas()
         except Exception as e:

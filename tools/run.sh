@@ -10,8 +10,6 @@ java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
 java.base/sun.util.calendar"
 FLAGS=""
 for p in $OPENS; do FLAGS="$FLAGS --add-opens $p=ALL-UNNAMED"; done
-# GRAFT_JVM_FLAGS: extra JVM flags (e.g. -XX:ReservedCodeCacheSize=512m
-# for the bench code-cache experiment) — empty by default
-exec java $FLAGS $GRAFT_JVM_FLAGS -Xmx${SPARK_DRIVER_MEM:-8g} \
+exec java $FLAGS -Xmx${SPARK_DRIVER_MEM:-8g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
