@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   *    buckets — get split instead of stalling a straggler);
   *  - UTC session time zone (oracle parity and sane event-time math);
   *  - nanosAsLong for the ns-precision parquet fixtures;
-  *  - a codegen cache that holds the registry's generated classes.
+  *  - a codegen cache that holds the registry's generated classes;
+  *  - a `file:` scheme that does not fork a shell (LocalFs.scala).
   */
 object GraftSession {
   /** Capacity of Spark's generated-code cache
@@ -59,6 +60,8 @@ object GraftSession {
     .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     .config("spark.ui.enabled", "false")
+    .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
 
   def build(master: Option[String], shufflePartitions: Int,
       appName: String = "graft"): SparkSession = {

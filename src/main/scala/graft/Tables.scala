@@ -48,7 +48,7 @@ object Tables {
             "subsequent timestamp rendering/parsing in this session is UTC")
       spark.conf.set("spark.sql.session.timeZone", "UTC")
     }
-    val df = spark.read.parquet(path(dir, name))
+    val df = SchemaMemo.read(spark, path(dir, name))
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) =>
         // integer division: `/` on longs is double division and loses

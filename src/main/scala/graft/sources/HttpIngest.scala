@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 import scala.collection.mutable.ArrayBuffer
 
 /** P1 — HTTP log ingestion endpoint, the engine's analog of the reference's
@@ -39,9 +40,18 @@ object HttpIngest {
     * behavior) and spools it. */
   final class Server(spoolDir: String, port: Int = 0, flushEvery: Int = 100) {
     Files.createDirectories(Paths.get(spoolDir))
+    // The JDK server sends the headers and the body in two writes. With
+    // Nagle on, the body waits for the client's delayed ACK of the headers,
+    // about 40 ms per request on a kept-alive connection. The JDK server
+    // reads this property once, when the JVM's first HttpServer is made.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     private val server = HttpServer.create(new InetSocketAddress(port), 0)
     private val buf = new ArrayBuffer[String]
     private var fileNo = 0
+    // the file source orders files by whole-millisecond mtime and breaks
+    // ties arbitrarily, so every spool file gets a later mtime than the last
+    private var lastStamp = 0L
     // per-instance token: multiple collector instances share one spool dir
     // (the horizontal-shard deployment) without file-name collisions
     private val token = java.util.UUID.randomUUID().toString.take(8)
@@ -83,8 +93,9 @@ object HttpIngest {
         // A dot-prefixed name keeps the file source from matching it pre-move.
         val tmp = Files.createTempFile(Paths.get(spoolDir), ".httpingest", ".tmp")
         Files.write(tmp, buf.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-        val dest: Path = Paths.get(spoolDir,
-          f"part-$token%s-${System.currentTimeMillis()}%d-$fileNo%05d.jsonl")
+        lastStamp = math.max(System.currentTimeMillis(), lastStamp + 1)
+        Files.setLastModifiedTime(tmp, FileTime.fromMillis(lastStamp))
+        val dest: Path = Paths.get(spoolDir, f"part-$token%s-$lastStamp%d-$fileNo%05d.jsonl")
         Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
         fileNo += 1
         buf.clear()

@@ -124,7 +124,7 @@ object CdcRouter {
     raw.writeStream
       .option("checkpointLocation", s"$outDir/_chk")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val config = spark.read.option("header", "true").csv(configPath)
+        val config = graft.SchemaMemo.read(spark, configPath, "csv", Map("header" -> "true"))
         processBatch(parse(batch), config, outDir, batchId)
       }
       .start()

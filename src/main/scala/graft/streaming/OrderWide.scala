@@ -309,12 +309,16 @@ object OrderWide {
       trademark: DataFrame) // tmid, tm_name
 
   /** Build the dim bundle from parquet dirs (one per dim, reference's
-    * DIM_* tables); used with per-micro-batch re-read for freshness. */
-  def dimsFromParquet(spark: SparkSession, dir: String): Dims = Dims(
-    user = spark.read.parquet(s"$dir/dim_user_info"),
-    province = spark.read.parquet(s"$dir/dim_base_province"),
-    sku = spark.read.parquet(s"$dir/dim_sku_info"),
-    spu = spark.read.parquet(s"$dir/dim_spu_info"),
-    category3 = spark.read.parquet(s"$dir/dim_base_category3"),
-    trademark = spark.read.parquet(s"$dir/dim_base_trademark"))
+    * DIM_* tables); used with per-micro-batch re-read for freshness. A
+    * dim's schema is inferred again only when its files change. */
+  def dimsFromParquet(spark: SparkSession, dir: String): Dims = {
+    def dim(name: String) = graft.SchemaMemo.read(spark, s"$dir/$name")
+    Dims(
+      user = dim("dim_user_info"),
+      province = dim("dim_base_province"),
+      sku = dim("dim_sku_info"),
+      spu = dim("dim_spu_info"),
+      category3 = dim("dim_base_category3"),
+      trademark = dim("dim_base_trademark"))
+  }
 }

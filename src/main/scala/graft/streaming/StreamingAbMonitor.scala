@@ -42,24 +42,19 @@ object StreamingAbMonitor {
     val cum = units
       .groupBy(col("variant"))
       .agg(count(lit(1)).as("n"), sum(col("converted").cast("long")).as("conv"))
-    cum.writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // <= |variants| rows by construction of the complete-mode agg
-        val rows = batch.collect()
-        def cnt(v: Int, i: Int): Long =
-          rows.find(_.getInt(0) == v).map(_.getLong(i)).getOrElse(0L)
-        val counts = spark.createDataFrame(
-          java.util.List.of(Row(cnt(0, 1), cnt(0, 2), cnt(1, 1), cnt(1, 2))),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "n_a BIGINT, conv_a BIGINT, n_b BIGINT, conv_b BIGINT"))
-        val r = graft.operators.EventOps.chi2Readout(counts).collect()(0)
-        onReadout(Readout(batchId, r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
-          r.getLong(7), r.getInt(8) == 1))
-        ()
-      }
-      .start()
+    CompleteMonitor.run(cum, checkpointDir) { (batch, batchId) =>
+      // <= |variants| rows by construction of the complete-mode agg
+      val rows = batch.collect()
+      def cnt(v: Int, i: Int): Long =
+        rows.find(_.getInt(0) == v).map(_.getLong(i)).getOrElse(0L)
+      val counts = spark.createDataFrame(
+        java.util.List.of(Row(cnt(0, 1), cnt(0, 2), cnt(1, 1), cnt(1, 2))),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "n_a BIGINT, conv_a BIGINT, n_b BIGINT, conv_b BIGINT"))
+      val r = graft.operators.EventOps.chi2Readout(counts).collect()(0)
+      onReadout(Readout(batchId, r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
+        r.getLong(7), r.getInt(8) == 1))
+    }
   }
 }

@@ -42,21 +42,16 @@ object StreamingBenford {
       .where(col("x") > 0L)
       .selectExpr("CAST(substring(CAST(x AS STRING), 1, 1) AS BIGINT) AS d")
       .groupBy(col("d")).agg(count(lit(1)).as("c"))
-    dig.writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an all-nonpositive (or empty) stream leaves the digit histogram
-        // empty; the readout's global sum would be NULL — short-circuit to
-        // the defined "no data, no verdict" row instead
-        if (batch.isEmpty) onReadout(Readout(batchId, 0L, 0L, suspicious = false))
-        else {
-          val r = CorpusOps.benfordReadout(batch, Seq.empty, flagTvdPpm)
-            .collect()(0)
-          onReadout(Readout(batchId, r.getLong(0), r.getLong(1), r.getInt(2) == 1))
-        }
-        ()
+    CompleteMonitor.run(dig, checkpointDir) { (batch, batchId) =>
+      // an all-nonpositive (or empty) stream leaves the digit histogram
+      // empty; the readout's global sum would be NULL — short-circuit to
+      // the defined "no data, no verdict" row instead
+      if (batch.isEmpty) onReadout(Readout(batchId, 0L, 0L, suspicious = false))
+      else {
+        val r = CorpusOps.benfordReadout(batch, Seq.empty, flagTvdPpm)
+          .collect()(0)
+        onReadout(Readout(batchId, r.getLong(0), r.getLong(1), r.getInt(2) == 1))
       }
-      .start()
+    }
   }
 }

@@ -74,15 +74,10 @@ object StreamingDriftMonitor {
       .select(expr("graft_token_hashes(text)").as("th"))
       .select(explode(expr(graft.operators.CorpusOps.bigramBktExpr)).as("bkt"))
       .groupBy(col("bkt")).agg(count(lit(1)).as("o"))
-    counts.writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val n = batch.agg(coalesce(sum(col("o")), lit(0L))).collect()(0).getLong(0)
-        val tvd = tvdPpb(batch, ref)
-        onReadout(Readout(batchId, n, tvd, tvd >= thresholdPpb))
-        ()
-      }
-      .start()
+    CompleteMonitor.run(counts, checkpointDir) { (batch, batchId) =>
+      val n = batch.agg(coalesce(sum(col("o")), lit(0L))).collect()(0).getLong(0)
+      val tvd = tvdPpb(batch, ref)
+      onReadout(Readout(batchId, n, tvd, tvd >= thresholdPpb))
+    }
   }
 }

@@ -48,25 +48,20 @@ object StreamingFkMonitor {
       .agg(count(lit(1)).as("n_fact"),
         coalesce(sum(col("is_null")), lit(0L)).as("n_fk_null"),
         coalesce(sum(col("is_orphan")), lit(0L)).as("n_orphan"))
-    flagged.writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rows = batch.collect()
-        if (rows.isEmpty) onReadout(Readout(batchId, 0L, 0L, 0L, 0L))
-        else {
-          val r = rows(0)
-          val n = r.getLong(0)
-          val o = r.getLong(2)
-          // same DECIMAL-free staging as the batch gate: the ppm quotient
-          // is bounded, and n stays far under the int64 * 1e6 edge at any
-          // realistic stream horizon (documented; the batch gate stages
-          // in DECIMAL for the 100 TB one-shot)
-          onReadout(Readout(batchId, n, r.getLong(1), o,
-            if (n == 0) 0L else o * 1000000L / n))
-        }
-        ()
+    CompleteMonitor.run(flagged, checkpointDir) { (batch, batchId) =>
+      val rows = batch.collect()
+      if (rows.isEmpty) onReadout(Readout(batchId, 0L, 0L, 0L, 0L))
+      else {
+        val r = rows(0)
+        val n = r.getLong(0)
+        val o = r.getLong(2)
+        // same DECIMAL-free staging as the batch gate: the ppm quotient
+        // is bounded, and n stays far under the int64 * 1e6 edge at any
+        // realistic stream horizon (documented; the batch gate stages
+        // in DECIMAL for the 100 TB one-shot)
+        onReadout(Readout(batchId, n, r.getLong(1), o,
+          if (n == 0) 0L else o * 1000000L / n))
       }
-      .start()
+    }
   }
 }

@@ -47,15 +47,10 @@ object StreamingHllUv {
       .selectExpr(s"h2 % ${m}L AS idx",
         s"${graft.operators.CorpusOps.hllRhoExpr("v", m)} AS rho")
       .groupBy(col("idx")).agg(max(col("rho")).as("mj"))
-    regs.writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val r = graft.operators.CorpusOps.hllEstimate(batch, m, Seq.empty)
-          .collect()(0)
-        onReadout(Readout(batchId, r.getLong(1), r.getLong(0)))
-        ()
-      }
-      .start()
+    CompleteMonitor.run(regs, checkpointDir) { (batch, batchId) =>
+      val r = graft.operators.CorpusOps.hllEstimate(batch, m, Seq.empty)
+        .collect()(0)
+      onReadout(Readout(batchId, r.getLong(1), r.getLong(0)))
+    }
   }
 }

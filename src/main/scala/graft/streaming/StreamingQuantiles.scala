@@ -48,19 +48,14 @@ object StreamingQuantiles {
     val hist = vals
       .selectExpr(s"${CorpusOps.hdrBucketExpr("x", subBits)} AS bkt")
       .groupBy(col("bkt")).agg(count(lit(1)).as("cnt"))
-    hist.writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val resident = batch.persist()
-        val rows = CorpusOps.hdrQuantiles(resident, Seq.empty, subBits, qsPm)
-          .orderBy(col("q_pm")).collect()
-        val n = if (rows.isEmpty) 0L else rows(0).getLong(1)
-        onReadout(Readout(batchId,
-          rows.map(r => r.getInt(0) -> r.getLong(2)).toSeq, n, resident.count()))
-        resident.unpersist()
-        ()
-      }
-      .start()
+    CompleteMonitor.run(hist, checkpointDir) { (batch, batchId) =>
+      val resident = batch.persist()
+      val rows = CorpusOps.hdrQuantiles(resident, Seq.empty, subBits, qsPm)
+        .orderBy(col("q_pm")).collect()
+      val n = if (rows.isEmpty) 0L else rows(0).getLong(1)
+      onReadout(Readout(batchId,
+        rows.map(r => r.getInt(0) -> r.getLong(2)).toSeq, n, resident.count()))
+      resident.unpersist()
+    }
   }
 }
