@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -355,7 +355,14 @@ object HashExpressions {
     // mismatched dimensionality is malformed input: return NaN (filtered by
     // every >= threshold and skipped by TopK) rather than silently computing
     // a plausible-but-wrong cosine over the common prefix
-    if (a.length != b.length) return Double.NaN
+    if (a.length != b.length) Double.NaN else cosine(a, b)
+  }
+
+  /** The cosine kernel of `graft_cosine` and the streaming embedding
+    * near-dup: element products in FLOAT, accumulation left-to-right in
+    * DOUBLE, final division in DOUBLE (DuckDB's `duckCos` replays the
+    * same arithmetic). NaN for a zero-norm side. Equal lengths assumed. */
+  def cosine(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0
     var na = 0.0
     var nb = 0.0
@@ -490,10 +497,23 @@ object HashExpressions {
 
   private val Self = "graft.functions.HashExpressions$.MODULE$"
 
+  /** A text function's argument: a wrong type fails ANALYSIS instead of
+    * a task (a ClassCastException or a Janino compile error). The check
+    * adds nothing to the generated code. */
+  trait TextArg extends ExpectsInputTypes {
+    override def inputTypes: Seq[StringType] = Seq(StringType)
+  }
+
+  /** Embedding arguments, all array<float> — [[TextArg]]'s check for
+    * the vector functions. */
+  trait FloatArrayArgs extends ExpectsInputTypes {
+    override def inputTypes: Seq[ArrayType] = children.map(_ => ArrayType(FloatType))
+  }
+
   /** text -> array<string> of the tokens themselves — the compiled
     * [[Portable.tokensSql]] (see [[tokens]] for the equivalence
     * argument). */
-  case class TokensExpr(child: Expression) extends UnaryExpression {
+  case class TokensExpr(child: Expression) extends UnaryExpression with TextArg {
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override def nullSafeEval(v: Any): Any = evalTokens(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -503,7 +523,7 @@ object HashExpressions {
   }
 
   /** text -> array<long> of token poly-hashes (with multiplicity). */
-  case class TokenHashesExpr(child: Expression) extends UnaryExpression {
+  case class TokenHashesExpr(child: Expression) extends UnaryExpression with TextArg {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullSafeEval(v: Any): Any = evalTokenHashes(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -513,7 +533,7 @@ object HashExpressions {
   }
 
   /** text -> array<long> of distinct 3-token shingle hashes. */
-  case class ShingleSetExpr(child: Expression) extends UnaryExpression {
+  case class ShingleSetExpr(child: Expression) extends UnaryExpression with TextArg {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullSafeEval(v: Any): Any = evalShingles(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -524,7 +544,7 @@ object HashExpressions {
 
   /** text -> array<long>(16) MinHash signature (null-free; docs with no
     * shingles yield Long.MaxValue sentinels — filter on graft_shingles). */
-  case class MinHashSigExpr(child: Expression) extends UnaryExpression {
+  case class MinHashSigExpr(child: Expression) extends UnaryExpression with TextArg {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullSafeEval(v: Any): Any = evalMinhashSig(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -534,7 +554,7 @@ object HashExpressions {
   }
 
   /** text -> 60-bit SimHash fingerprint. */
-  case class SimHashExpr(child: Expression) extends UnaryExpression {
+  case class SimHashExpr(child: Expression) extends UnaryExpression with TextArg {
     override def dataType: DataType = LongType
     override def nullSafeEval(v: Any): Any = evalSimhash(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -544,7 +564,7 @@ object HashExpressions {
   }
 
   /** text -> array<long> of distinct rolling char-5-gram hashes. */
-  case class Gram5Expr(child: Expression) extends UnaryExpression {
+  case class Gram5Expr(child: Expression) extends UnaryExpression with TextArg {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullSafeEval(v: Any): Any = evalGram5(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -554,7 +574,7 @@ object HashExpressions {
   }
 
   /** text -> array<long> of distinct rolling 8-token window hashes. */
-  case class WinHash8Expr(child: Expression) extends UnaryExpression {
+  case class WinHash8Expr(child: Expression) extends UnaryExpression with TextArg {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullSafeEval(v: Any): Any = evalWinHash8(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -568,7 +588,8 @@ object HashExpressions {
     * [[winnowSel]]. k and w ride the case class as plain ints (the
     * builder requires integer literals), so the expression stays unary
     * over text and the codegen call sites are constants. */
-  case class WinnowSelExpr(child: Expression, k: Int, w: Int) extends UnaryExpression {
+  case class WinnowSelExpr(child: Expression, k: Int, w: Int)
+      extends UnaryExpression with TextArg {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullSafeEval(v: Any): Any =
       evalWinnowSel(v.asInstanceOf[UTF8String], k, w)
@@ -581,7 +602,7 @@ object HashExpressions {
 
   /** text -> array<int> of 1-based content-defined chunk boundary
     * positions (rolling 16-char hash ≡ 0 mod 64). */
-  case class CdcBoundsExpr(child: Expression) extends UnaryExpression {
+  case class CdcBoundsExpr(child: Expression) extends UnaryExpression with TextArg {
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def nullSafeEval(v: Any): Any = evalCdcBounds(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -595,7 +616,7 @@ object HashExpressions {
     * final division in DOUBLE — bit-identical to the SQL higher-order-
     * function form and to DuckDB's replay. */
   case class CosineExpr(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with FloatArrayArgs {
     override def dataType: DataType = DoubleType
     override def nullSafeEval(l: Any, r: Any): Any =
       evalCosine(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
@@ -698,7 +719,7 @@ object HashExpressions {
   }
 
   /** text -> 64-bit raw-char polynomial hash (document fingerprint). */
-  case class PolyHashExpr(child: Expression) extends UnaryExpression {
+  case class PolyHashExpr(child: Expression) extends UnaryExpression with TextArg {
     override def dataType: DataType = LongType
     override def nullSafeEval(v: Any): Any = evalPolyHash(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -708,7 +729,7 @@ object HashExpressions {
   }
 
   /** text -> struct of single-pass token/stopword/punctuation statistics. */
-  case class TextStatsExpr(child: Expression) extends UnaryExpression {
+  case class TextStatsExpr(child: Expression) extends UnaryExpression with TextArg {
     override def dataType: DataType = textStatsType
     override def nullSafeEval(v: Any): Any = evalTextStats(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -719,7 +740,7 @@ object HashExpressions {
 
   /** text -> struct(n_words, sum_len, n_alpha, stop_hits) — the gopher
     * gate's per-doc statistics in one compiled pass ([[evalGopherStats]]). */
-  case class GopherStatsExpr(child: Expression) extends UnaryExpression {
+  case class GopherStatsExpr(child: Expression) extends UnaryExpression with TextArg {
     override def dataType: DataType = gopherStatsType
     override def nullSafeEval(v: Any): Any = evalGopherStats(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -729,7 +750,7 @@ object HashExpressions {
   }
 
   /** array<float> -> array<int>(12) sign-random-projection signature. */
-  case class Srp12Expr(child: Expression) extends UnaryExpression {
+  case class Srp12Expr(child: Expression) extends UnaryExpression with FloatArrayArgs {
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def nullSafeEval(v: Any): Any = evalSrp12(v.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

@@ -26,8 +26,8 @@ import scala.collection.mutable.ArrayBuffer
   */
 object HttpIngest {
 
-  /** The streaming view over the spool — one string column `value`, same
-    * contract as [[Kafka.source]] (swap-in parity). */
+  /** The streaming view over the spool — one string column `value`, the
+    * shape Spark's Kafka source gives after `CAST(value AS STRING)`. */
   def source(spark: SparkSession, spoolDir: String): DataFrame =
     spark.readStream.text(spoolDir).toDF("value")
 

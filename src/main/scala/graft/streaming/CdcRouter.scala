@@ -98,8 +98,8 @@ object CdcRouter {
     * between sink write and checkpoint commit appends byte-identical
     * (sink_table, batch_id, data) rows. Keyed dedup on read restores
     * exactly-once — the idempotent-consumer recipe for the reference's
-    * transactional-producer gap (MyKafkaUtil.java:43-49; see
-    * sources/Kafka.scala scaladoc and CdcRouterSpec's replay test). At
+    * transactional-producer gap (MyKafkaUtil.java:43-49; see COVERAGE.md,
+    * "Paper-parity gap: MyKafkaUtil", and CdcRouterSpec's replay test). At
     * scale this is a per-(batch_id) shuffle-free dedup when the log is
     * partitioned by batch_id; here the general dropDuplicates form. */
   def factsExactlyOnce(spark: SparkSession, outDir: String): DataFrame =

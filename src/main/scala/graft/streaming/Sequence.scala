@@ -110,13 +110,10 @@ object Sequence {
     }
     if (prefix.nonEmpty) {
       state.update(prefix)
-      // clamp to just past the current watermark: registering a timeout AT
-      // or BEFORE the watermark throws and kills the query — reachable via
-      // a straggler anchor whose window already elapsed. The clamp fires
-      // the timeout next batch instead: the partial had no completion
-      // inside its window, so the emission is exactly right, just late.
-      val wm = state.getCurrentWatermarkMs()
-      state.setTimeoutTimestamp(math.max(p.eventTs(prefix.head) + p.withinMs, wm + 1))
+      // a straggler anchor whose window already elapsed is clamped past the
+      // watermark: the partial had no completion inside its window, so the
+      // timeout emission is exactly right, just late
+      KeyedState.expireAt(state, p.eventTs(prefix.head) + p.withinMs)
     } else if (state.exists) state.remove()
     out.result().iterator
   }
@@ -157,7 +154,7 @@ object Sequence {
       if (live.isEmpty) state.remove()
       else {
         state.update(live)
-        state.setTimeoutTimestamp(math.max(live.map(deadline).min, wm + 1))
+        KeyedState.expireAt(state, live.map(deadline).min)
       }
       return (if (p.emitTimedOut) dead.map(_.head) else Seq.empty).iterator
     }
@@ -189,8 +186,7 @@ object Sequence {
     }
     if (runs.nonEmpty) {
       state.update(runs)
-      val wm = state.getCurrentWatermarkMs()
-      state.setTimeoutTimestamp(math.max(runs.map(deadline).min, wm + 1))
+      KeyedState.expireAt(state, runs.map(deadline).min)
     } else if (state.exists) state.remove()
     out.result().iterator
   }

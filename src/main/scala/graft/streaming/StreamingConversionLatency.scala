@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -20,9 +20,9 @@ import graft.operators.CorpusOps
   *     StreamingScd2 idempotent-consumer rule, so an at-least-once
   *     upstream never emits a phantom conversion). A user's latency
   *     emits EXACTLY ONCE PER FUNNEL EPISODE: first qualifying purchase
-  *     strictly after the episode's first view. Event-time TTL
-  *     (watermark-clamped, ALWAYS set — the StreamingNearDup leak rule)
-  *     expires both unconverted users past the funnel window and
+  *     strictly after the episode's first view. Event-time TTL (always
+  *     armed, through [[KeyedState.expireAt]]) expires both unconverted
+  *     users past the funnel window and
   *     converted users once replays can no longer arrive, so state is
   *     the in-flight-user domain, not the stream — and, deliberately, a
   *     user active again AFTER expiry starts a NEW episode that can
@@ -41,12 +41,10 @@ import graft.operators.CorpusOps
   *     concatenated latencies (pinned by StreamingConversionLatencySpec).
   *     Because the pairing layer is itself stateful, the histogram
   *     cannot ride a second engine aggregation in the same query; it
-  *     rides the StreamingHeavyHitters driver-tracker recipe instead:
-  *     per batch, executors partial-sum their slice into <= domain
-  *     (bkt, cnt) rows, the driver merges them into a fixed-length
-  *     array and publishes a VERSIONED state file (newest complete
-  *     wins, torn writes skipped, replayed batch ids at or below the
-  *     restored id are absorbed) — exactly-once across crash/restart.
+  *     is driver-held instead ([[HistTracker]]): per batch, executors
+  *     partial-sum their slice into <= domain (bkt, cnt) rows and the
+  *     driver merges them into a fixed-length array kept exactly-once
+  *     across crash/restart by a [[SnapshotStore]].
   *
   * Scale shape: nothing stream-volume-sized is ever held — per-user
   * state is one row with TTL, per-batch driver traffic is <= ~1.9k
@@ -99,11 +97,9 @@ object StreamingConversionLatency {
       }
     }
     state.update(st)
-    // ALWAYS set the timeout (the NearDup rule): unconverted users expire
-    // after the funnel window; converted users expire once replays can no
-    // longer arrive. Never at/before the watermark (Spark rejects it).
-    val wm = state.getCurrentWatermarkMs()
-    state.setTimeoutTimestamp(math.max(st.lastEms + ttlMs, wm + 1L))
+    // always armed: unconverted users expire after the funnel window;
+    // converted users expire once replays can no longer arrive
+    KeyedState.expireAt(state, st.lastEms + ttlMs)
     out.iterator
   }
 
@@ -143,78 +139,27 @@ object StreamingConversionLatency {
         stateFn(fromType, toType, ttlMs))
   }
 
-  /** Driver-held versioned histogram — the StreamingHeavyHitters Tracker
-    * recipe with the CMS array swapped for the HDR bucket array. */
+  /** Driver-held HDR bucket histogram, exactly-once across replay and
+    * restart through a [[SnapshotStore]] (`hdr_state.<batchId>.bin`). */
   final class HistTracker(stateDir: Option[String], subBits: Int)
       extends Serializable {
     val len: Int = histLen(subBits)
-    @volatile var hist: Array[Long] = new Array[Long](len)
-    @volatile private var lastBatchId: Long = -1L
+    private val store = new SnapshotStore(stateDir, "hdr_state", new Array[Long](len))
 
-    private val StateName = """hdr_state\.(\d{19})\.bin""".r
-    restore()
-
-    private def expectedLen: Long = 8L * (2 + len)
-    private def stateDirPath = new org.apache.hadoop.fs.Path(stateDir.get)
-    private def stateFile(v: Long) =
-      new org.apache.hadoop.fs.Path(stateDir.get, f"hdr_state.$v%019d.bin")
-    private def fsConf: org.apache.hadoop.conf.Configuration =
-      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-        .map(_.sparkContext.hadoopConfiguration)
-        .getOrElse(new org.apache.hadoop.conf.Configuration())
-
-    private def restore(): Unit = stateDir.foreach { _ =>
-      val fs = stateDirPath.getFileSystem(fsConf)
-      if (!fs.exists(stateDirPath)) return
-      fs.listStatus(stateDirPath).toSeq
-        .flatMap(st => st.getPath.getName match {
-          case StateName(v) if st.getLen == expectedLen => Some((v.toLong, st.getPath))
-          case _ => None
-        })
-        .sortBy(-_._1).headOption.foreach { case (_, p) =>
-          val in = new java.io.DataInputStream(fs.open(p))
-          try {
-            lastBatchId = in.readLong()
-            val marker = in.readLong()
-            require(marker == len.toLong, s"state width $marker != $len")
-            hist = Array.fill(len)(in.readLong())
-          } finally in.close()
-        }
-    }
-
-    private def persist(): Unit = stateDir.foreach { _ =>
-      val fs = stateDirPath.getFileSystem(fsConf)
-      val out = new java.io.DataOutputStream(fs.create(stateFile(lastBatchId), true))
-      try {
-        out.writeLong(lastBatchId)
-        out.writeLong(len.toLong)
-        hist.foreach(out.writeLong)
-      } finally out.close()
-      try {
-        fs.listStatus(stateDirPath).toSeq
-          .flatMap(st => st.getPath.getName match {
-            case StateName(v) => Some((v.toLong, st.getPath))
-            case _ => None
-          })
-          .sortBy(-_._1).drop(2)
-          .foreach { case (_, p) => fs.delete(p, false) }
-      } catch { case _: java.io.IOException => () }
-    }
+    def hist: Array[Long] = store.values
 
     /** Fold one micro-batch of (bkt, cnt) partials; replayed ids at or
       * below the restored/last id are absorbed (exactly-once). Returns
       * false when the batch was a replay. */
-    def update(partials: Seq[(Long, Long)], batchId: Long): Boolean = {
-      if (batchId >= 0 && batchId <= lastBatchId) return false
-      val next = hist.clone() // copy-on-write: readers see snapshots
-      partials.foreach { case (bkt, cnt) =>
-        require(bkt >= 0 && bkt < len, s"bucket $bkt outside [0, $len)")
-        next(bkt.toInt) += cnt
+    def update(partials: Seq[(Long, Long)], batchId: Long): Boolean =
+      !store.isReplay(batchId) && {
+        val next = hist.clone() // copy-on-write: readers see snapshots
+        partials.foreach { case (bkt, cnt) =>
+          require(bkt >= 0 && bkt < len, s"bucket $bkt outside [0, $len)")
+          next(bkt.toInt) += cnt
+        }
+        store.commit(next, batchId)
       }
-      hist = next
-      if (batchId >= 0) { lastBatchId = batchId; persist() }
-      true
-    }
   }
 
   /** Start the full sketch: pairing + histogram + shared HDR readout.

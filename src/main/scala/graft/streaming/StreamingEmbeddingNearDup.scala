@@ -17,7 +17,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (vec_id, embedding) set, so a new vector compares only against
   * vectors sharing a band key — never against the corpus. Per bucket
   * the state is CAPPED (`maxPerBucket`) and EVICTED by an event-time
-  * TTL (`ttlMs` past the bucket's newest arrival, watermark-clamped):
+  * TTL (`ttlMs` past the bucket's newest arrival) — the same
+  * [[KeyedState.admit]] and [[KeyedState.expireAt]] steps:
   * total state is bounded by (active buckets in the horizon) × cap ×
   * the embedding payload — not by stream history. WIDTH is the same
   * occupancy knob as the batch family (a constant key space saturates
@@ -28,11 +29,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Verification is EXACT cosine on the resident embeddings (the batch
   * operator's contract — the signature only selects candidates), with
-  * the same NaN posture: a zero-norm vector's cosine is NaN and never
-  * qualifies. Emission/idempotence contract is StreamingNearDup's:
-  * pairs keyed (vec_a < vec_b), at most once per shared band (cross-
-  * band duplicates possible by design — downstream dedups on the pair
-  * key), re-delivered vec_ids neither re-pair nor re-enter state.
+  * `graft_cosine`'s kernel ([[HashExpressions.cosine]]) and NaN posture:
+  * a zero-norm vector's cosine is NaN and never qualifies.
+  * Emission/idempotence contract is StreamingNearDup's: pairs keyed
+  * (vec_a < vec_b), at most once per shared band (cross-band duplicates
+  * possible by design — downstream dedups on the pair key), re-delivered
+  * vec_ids neither re-pair nor re-enter state.
   */
 object StreamingEmbeddingNearDup {
 
@@ -46,48 +48,30 @@ object StreamingEmbeddingNearDup {
   /** Bucket-resident vectors: bounded at `maxPerBucket`, TTL-evicted. */
   case class VecBucketState(entries: List[(Long, Array[Float])])
 
-  /** Exact cosine, double accumulation over float components — the same
-    * arithmetic shape as the native `graft_cosine` expression; NaN for
-    * a zero-norm side (never a near-dup). */
-  private[streaming] def cosine(a: Array[Float], b: Array[Float]): Double = {
-    require(a.length == b.length && a.length > 0,
-      s"embedding width mismatch: ${a.length} vs ${b.length}")
-    var i = 0; var dot = 0.0; var na = 0.0; var nb = 0.0
-    while (i < a.length) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  /** Per-bucket state transition — StreamingNearDup.stateFn's exact
-    * posture (deterministic vec_id order, pair-then-maybe-enter, cap
-    * overflow still pairs, unconditional watermark-clamped TTL, timeout
-    * clears the bucket), with exact-cosine verification. */
+  /** Per-bucket state transition: [[StreamingNearDup.stateFn]]'s shape
+    * ([[KeyedState.admit]], TTL armed by [[KeyedState.expireAt]],
+    * timeout clears the bucket) verified by exact cosine — the
+    * [[HashExpressions.cosine]] kernel `graft_cosine` runs, so a pair at
+    * the threshold qualifies here exactly when it does in batch. */
   private[streaming] def stateFn(maxPerBucket: Int, threshold: Double, ttlMs: Long)(
       key: String, rows: Iterator[VecBandRow],
       state: GroupState[VecBucketState]): Iterator[VecCandPair] = {
     if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var entries = state.getOption.map(_.entries).getOrElse(Nil)
-    var maxMs = 0L
+    val batch = rows.toSeq
     val out = scala.collection.mutable.ArrayBuffer.empty[VecCandPair]
-    rows.toSeq.sortBy(_.vecId).foreach { r =>
-      if (r.ems > maxMs) maxMs = r.ems
-      if (!entries.exists(_._1 == r.vecId)) {
-        entries.foreach { case (id, e) =>
-          val c = cosine(e, r.emb)
-          // NaN >= threshold is false: zero-norm vectors never pair
-          if (c >= threshold)
-            out += (if (id < r.vecId) VecCandPair(id, r.vecId, c)
-                    else VecCandPair(r.vecId, id, c))
-        }
-        if (entries.size < maxPerBucket) entries = entries :+ ((r.vecId, r.emb))
-      }
+    val (entries, _) = KeyedState.admit(state.getOption.map(_.entries).getOrElse(Nil),
+        batch.map(r => (r.vecId, r.emb)), maxPerBucket) { case ((id, e), (newId, emb)) =>
+      // a width mismatch is malformed input and must be LOUD here, where
+      // graft_cosine answers NaN
+      require(e.length == emb.length && e.length > 0,
+        s"embedding width mismatch: ${e.length} vs ${emb.length}")
+      val c = HashExpressions.cosine(e, emb)
+      // NaN >= threshold is false: zero-norm vectors never pair
+      if (c >= threshold) out += VecCandPair(math.min(id, newId), math.max(id, newId), c)
     }
     if (entries.nonEmpty) {
       state.update(VecBucketState(entries))
-      val wm = state.getCurrentWatermarkMs()
-      state.setTimeoutTimestamp(math.max(maxMs + ttlMs, wm + 1L))
+      KeyedState.expireAt(state, batch.foldLeft(0L)((m, r) => math.max(m, r.ems)) + ttlMs)
     } else state.remove()
     out.iterator
   }

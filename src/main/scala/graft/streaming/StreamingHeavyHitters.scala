@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.CountMin
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -26,109 +26,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamingHeavyHitters {
 
-  /** Driver-held running sketch, merged once per micro-batch.
-    *
-    * Failure semantics (review find): the streaming query checkpoints its
-    * OFFSETS, so a bare in-memory sketch would silently lose all pre-crash
-    * counts on restart (offsets resume, batches never replay) and
-    * double-count a batch replayed after an uncommitted attempt. With
-    * `stateDir` set the tracker is exactly-once across both: each merge
-    * publishes a VERSIONED state file (`cms_state.<batchId>.bin`) and
-    * restore picks the newest complete one (fixed-length format, torn
-    * writes skipped; the previous version remains as fallback). Versioned
-    * create works on every Hadoop FileSystem — including object stores
-    * with no AbstractFileSystem binding, where FileContext.rename(
-    * OVERWRITE) throws UnsupportedFileSystemException, and where create
-    * streams only become visible complete at close. `update` skips any
-    * batch id at or below the restored one. */
+  /** Driver-held running sketch, merged once per micro-batch. With
+    * `stateDir` set it is exactly-once across replay and restart: the
+    * sketch lives in a [[SnapshotStore]] (`cms_state.<batchId>.bin`). */
   final class Tracker(stateDir: Option[String] = None) extends Serializable {
     val agg = new CountMin()
-    @volatile var sketch: Array[Long] = agg.zero
-    @volatile private var lastBatchId: Long = -1L
+    private val store = new SnapshotStore(stateDir, "cms_state", agg.zero)
 
-    // declared before the restore() call below — constructor-order dependency
-    private val StateName = """cms_state\.(\d{19})\.bin""".r
-
-    restore()
-
-    /** Fixed on-disk length: batch id + the (Depth*Width + 1) sketch longs —
-      * restore uses it to skip torn files from a crash mid-write. */
-    private def expectedLen: Long = 8L * (2 + CountMin.Depth * CountMin.Width)
-
-    private def stateDirPath = new org.apache.hadoop.fs.Path(stateDir.get)
-
-    private def stateFile(v: Long) =
-      new org.apache.hadoop.fs.Path(stateDir.get, f"cms_state.$v%019d.bin")
-
-
-    /** The session's Hadoop configuration (object-store credentials,
-      * fs.defaultFS overrides), not a bare `new Configuration()` — the
-      * tracker lives on the driver, where an active session is always
-      * available; the bare default is only the sessionless-test fallback. */
-    private def fsConf: org.apache.hadoop.conf.Configuration =
-      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-        .map(_.sparkContext.hadoopConfiguration)
-        .getOrElse(new org.apache.hadoop.conf.Configuration())
-
-    private def readState(fs: org.apache.hadoop.fs.FileSystem,
-        p: org.apache.hadoop.fs.Path): Unit = {
-      val in = new java.io.DataInputStream(fs.open(p))
-      try {
-        lastBatchId = in.readLong()
-        sketch = Array.fill(CountMin.Depth * CountMin.Width + 1)(in.readLong())
-      } finally in.close()
-    }
-
-    private def restore(): Unit = stateDir.foreach { _ =>
-      val fs = stateDirPath.getFileSystem(fsConf)
-      if (!fs.exists(stateDirPath)) return
-      // newest COMPLETE versioned file wins; short (torn) files skipped
-      val versioned = fs.listStatus(stateDirPath).toSeq
-        .flatMap(st => st.getPath.getName match {
-          case StateName(v) if st.getLen == expectedLen => Some((v.toLong, st.getPath))
-          case _ => None
-        })
-        .sortBy(-_._1)
-      versioned.headOption match {
-        case Some((_, p)) => readState(fs, p)
-        case None => // pre-versioning layout, kept readable across upgrade
-          val legacy = new org.apache.hadoop.fs.Path(stateDir.get, "cms_state.bin")
-          if (fs.exists(legacy)) readState(fs, legacy)
-      }
-    }
-
-    private def persist(): Unit = stateDir.foreach { _ =>
-      val fs = stateDirPath.getFileSystem(fsConf)
-      // publish with NO window and NO rename: a new versioned file is
-      // written and closed; restore never sees it until it is complete
-      // (length-validated, and object-store creates are only visible at
-      // close). The previous version stays on disk as the fallback, so a
-      // crash anywhere leaves a valid newest-complete state. Versioned
-      // create is portable across every FileSystem, unlike
-      // FileContext.rename(OVERWRITE) (review find: no AbstractFileSystem
-      // binding for s3a/gcs out of the box).
-      val out = new java.io.DataOutputStream(fs.create(stateFile(lastBatchId), true))
-      try {
-        out.writeLong(lastBatchId)
-        sketch.foreach(out.writeLong)
-      } finally out.close()
-      // best-effort cleanup: keep the newest two versions
-      try {
-        fs.listStatus(stateDirPath).toSeq
-          .flatMap(st => st.getPath.getName match {
-            case StateName(v) => Some((v.toLong, st.getPath))
-            case _ => None
-          })
-          .sortBy(-_._1).drop(2)
-          .foreach { case (_, p) => fs.delete(p, false) }
-      } catch { case _: java.io.IOException => () }
-    }
+    def sketch: Array[Long] = store.values
 
     /** Fold one micro-batch of documents (column `text`) into the sketch.
       * `batchId >= 0` enables replay idempotence (skip already-applied
       * ids); the default -1 applies unconditionally (ad-hoc batch use). */
     def update(batch: DataFrame, batchId: Long = -1L): Unit = {
-      if (batchId >= 0 && batchId <= lastBatchId) return // replayed batch
+      if (store.isReplay(batchId)) return
       val s = batch.sparkSession
       graft.functions.HashExpressions.register(s)
       import s.implicits._
@@ -141,8 +52,7 @@ object StreamingHeavyHitters {
       // concurrent heavyHitters()/totalTokens reader observe a torn
       // sketch (some counters updated, others not) despite the volatile
       // reference — copy-on-write gives readers snapshot isolation
-      sketch = agg.merge(sketch.clone(), partial)
-      if (batchId >= 0) { lastBatchId = batchId; persist() }
+      store.commit(agg.merge(sketch.clone(), partial), batchId)
     }
 
     def totalTokens: Long = sketch(CountMin.Depth * CountMin.Width)

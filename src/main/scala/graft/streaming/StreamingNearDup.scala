@@ -17,11 +17,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * per micro-batch; state is keyed by BAND BUCKET and holds the bucket's
   * resident (doc_id, sig) set, so a new document compares only against
   * docs that share a band key — never against the corpus. Per bucket the
-  * state is CAPPED (`maxPerBucket`, the streaming twin of the batch df
-  * cap: a boilerplate bucket saturates its cap and stops growing) and
-  * EVICTED by an event-time TTL (`ttlMs` past the bucket's newest
-  * arrival, watermark-clamped), so total state is bounded by
-  * (active buckets in the horizon) × cap — not by stream history.
+  * state is CAPPED by [[KeyedState.admit]] (`maxPerBucket`, the streaming
+  * twin of the batch df cap: a boilerplate bucket saturates its cap and
+  * stops growing) and EVICTED by an event-time TTL (`ttlMs` past the
+  * bucket's newest arrival, [[KeyedState.expireAt]]), so total state is
+  * bounded by (active buckets in the horizon) × cap — not by stream
+  * history.
   * Verification is the signature itself: matching-lane fraction in
   * per-mille (`minhash_calibration`'s estimator), so the original text
   * never enters state.
@@ -33,7 +34,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * for exactly this reason). Downstream consumers dedup on (doc_a,
   * doc_b) — the exactly-once-view posture StreamingCuration documents.
   * Re-delivered doc_ids (at-least-once sources) are idempotent: a
-  * resident doc_id re-arriving neither re-pairs nor re-enters state.
+  * resident doc_id re-arriving neither re-pairs nor re-enters state
+  * ([[KeyedState.admit]]).
   */
 object StreamingNearDup {
 
@@ -57,11 +59,10 @@ object StreamingNearDup {
   case class BucketLoad(bucket: String, seen: Long, overflow: Long)
 
   /** [[bucketLoad]]'s per-bucket state: the doc_ids the pair query would
-    * have admitted as residents (bounded at the cap, same admission rule
-    * as [[stateFn]] — sorted-by-id within a batch, dedup against the
-    * tracked set) plus one counter of truncated arrivals. Tracking the
-    * ids instead of a bare arrival count keeps the telemetry honest
-    * against duplicate delivery: a doc_id re-delivered while resident is
+    * have admitted as residents (bounded at the cap, the same
+    * [[KeyedState.admit]] step as [[stateFn]]) plus one counter of
+    * truncated arrivals. Tracking the ids instead of a bare arrival
+    * count keeps the telemetry honest against duplicate delivery: a doc_id re-delivered while resident is
     * ignored here exactly as [[stateFn]] ignores it, so `overflow`
     * counts only arrivals the pair query actually refused state for. */
   private[streaming] case class LoadState(ids: List[Long], extra: Long)
@@ -76,43 +77,31 @@ object StreamingNearDup {
     m * 1000L / a.length
   }
 
-  /** Per-bucket state transition. New arrivals (deterministic doc_id
-    * order) pair against the RESIDENT set and earlier same-batch
-    * arrivals; an arrival over the cap still pairs against residents but
-    * does not enter state (bounded state, candidates still surface
-    * against the bucket's resident set — the cap-overflow posture of the
-    * batch df cap). Timeout clears the bucket. */
+  /** Per-bucket state transition: [[KeyedState.admit]] verified by
+    * lane agreement, a TTL past the bucket's newest arrival armed by
+    * [[KeyedState.expireAt]]. Timeout clears the bucket. */
   private[streaming] def stateFn(maxPerBucket: Int, minEstPm: Long, ttlMs: Long)(
       key: String, rows: Iterator[BandRow],
       state: GroupState[BucketState]): Iterator[CandPair] = {
     if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var entries = state.getOption.map(_.entries).getOrElse(Nil)
-    var maxMs = 0L
+    val batch = rows.toSeq
     val out = scala.collection.mutable.ArrayBuffer.empty[CandPair]
-    rows.toSeq.sortBy(_.docId).foreach { r =>
-      if (r.ems > maxMs) maxMs = r.ems
-      if (!entries.exists(_._1 == r.docId)) {
-        entries.foreach { case (id, s) =>
-          val est = lanesEqualPm(s, r.sig)
-          if (est >= minEstPm)
-            out += (if (id < r.docId) CandPair(id, r.docId, est)
-                    else CandPair(r.docId, id, est))
-        }
-        if (entries.size < maxPerBucket) entries = entries :+ ((r.docId, r.sig))
-      }
+    val (entries, _) = KeyedState.admit(state.getOption.map(_.entries).getOrElse(Nil),
+        batch.map(r => (r.docId, r.sig)), maxPerBucket) { case ((id, s), (newId, sig)) =>
+      val est = lanesEqualPm(s, sig)
+      if (est >= minEstPm) out += CandPair(math.min(id, newId), math.max(id, newId), est)
     }
     if (entries.nonEmpty) {
       state.update(BucketState(entries))
-      // ALWAYS set the timeout when state exists: a bucket whose rows all
-      // carry epoch-millis <= 0 (maxMs stays 0) would otherwise never be
-      // TTL-evicted and leak for the life of the query. The watermark
-      // clamp does double duty — never at/before the current watermark
-      // (Spark rejects it): a straggler-only batch clamps forward by 1 ms.
-      val wm = state.getCurrentWatermarkMs()
-      state.setTimeoutTimestamp(math.max(maxMs + ttlMs, wm + 1L))
+      // armed even when every row carries epoch-millis <= 0: an unarmed
+      // bucket would never be evicted and leak for the life of the query
+      KeyedState.expireAt(state, newestMs(batch) + ttlMs)
     } else state.remove() // timeout on removed state would throw
     out.iterator
   }
+
+  /** The newest arrival's epoch millis, 0 for none. */
+  private def newestMs(batch: Seq[BandRow]): Long = batch.foldLeft(0L)((m, r) => math.max(m, r.ems))
 
   /** Map-side banding shared by [[pairs]] and [[bucketLoad]] — ONE
     * signature/band-key/watermark definition, so the telemetry counts
@@ -147,34 +136,24 @@ object StreamingNearDup {
         stateFn(maxPerBucket, minEstPm, ttlMs))
   }
 
-  /** Per-bucket load telemetry — [[stateFn]]'s overflow twin. Counts
-    * this batch's arrivals into the cumulative census and reports the
-    * bucket ONLY when it is past the cap, so output volume is bounded
-    * by saturated buckets touched per batch, never bucket count. */
+  /** Per-bucket load telemetry — [[stateFn]]'s overflow twin, on the
+    * same [[KeyedState.admit]] step with ids only. Counts this batch's
+    * arrivals into the cumulative census and reports the bucket ONLY
+    * when it is past the cap, so output volume is bounded by saturated
+    * buckets touched per batch, never bucket count. A truncated id
+    * re-delivered counts again — the pair query re-processes it too. */
   private[streaming] def loadFn(cap: Int, ttlMs: Long)(
       key: String, rows: Iterator[BandRow],
       state: GroupState[LoadState]): Iterator[BucketLoad] = {
     if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var st = state.getOption.getOrElse(LoadState(Nil, 0L))
-    var ids = st.ids
-    var extra = st.extra
-    var maxMs = 0L
-    // mirror stateFn's admission exactly: batch arrivals in doc_id order,
-    // a doc_id already resident is skipped (the pair query skips it too,
-    // so it cost no recall), a new id enters the tracked set while there
-    // is room and is otherwise a truncated arrival. A truncated id
-    // re-delivered counts again — the pair query re-processes it too.
-    rows.toSeq.sortBy(_.docId).foreach { r =>
-      if (r.ems > maxMs) maxMs = r.ems
-      if (!ids.contains(r.docId)) {
-        if (ids.size < cap) ids = ids :+ r.docId
-        else extra += 1L
-      }
-    }
+    val st = state.getOption.getOrElse(LoadState(Nil, 0L))
+    val batch = rows.toSeq
+    val (residents, refused) = KeyedState.admit(st.ids.map(id => (id, ())),
+      batch.map(r => (r.docId, ())), cap)((_, _) => ())
+    val ids = residents.map(_._1)
+    val extra = st.extra + refused
     state.update(LoadState(ids, extra))
-    // same TTL discipline as stateFn: watermark-clamped, never unset
-    val wm = state.getCurrentWatermarkMs()
-    state.setTimeoutTimestamp(math.max(maxMs + ttlMs, wm + 1L))
+    KeyedState.expireAt(state, newestMs(batch) + ttlMs)
     if (extra > 0) Iterator.single(BucketLoad(key, ids.size + extra, extra))
     else Iterator.empty
   }

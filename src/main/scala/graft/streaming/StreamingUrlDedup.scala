@@ -73,10 +73,7 @@ object StreamingUrlDedup {
       }
     }
     state.update(st)
-    // ALWAYS set the timeout (the StreamingNearDup leak rule), never
-    // at/before the watermark (Spark rejects it)
-    val wm = state.getCurrentWatermarkMs()
-    state.setTimeoutTimestamp(math.max(st.lastEms + ttlMs, wm + 1L))
+    KeyedState.expireAt(state, st.lastEms + ttlMs) // always armed: no leak
     out.iterator
   }
 

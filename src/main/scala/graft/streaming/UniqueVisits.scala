@@ -49,7 +49,7 @@ object UniqueVisits {
     }
     if (lastDt.nonEmpty && maxTs > 0L) {
       state.update(lastDt)
-      state.setTimeoutTimestamp(maxTs + TtlMs)
+      KeyedState.expireAt(state, maxTs + TtlMs)
     }
     out.iterator
   }

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * not part of the shared SparkSpec fixture. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("spark.sql.extensions=graft.GraftExtensions registers graft_* for SQL") {
+  /** Run `f` on a session built through [[GraftSession.configure]], then
+    * restore whatever default/active session the JVM held. */
+  private def withExtensionsSession(f: SparkSession => Unit): Unit = {
     // extensions apply at session construction; other suites in this JVM may
     // hold a default session, so clear (and later restore) rather than
     // stop() — the underlying SparkContext is shared
@@ -23,10 +25,23 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // GraftExtensions.apply. The rest of configure matters when this
       // suite runs first: its context's static confs (the codegen cache
       // size) then hold for every later suite in the JVM.
-      val spark = GraftSession.configure(SparkSession.builder())
+      f(GraftSession.configure(SparkSession.builder())
         .master("local[2]")
         .appName("graft-extensions-spec")
-        .getOrCreate()
+        .getOrCreate())
+    } finally {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("spark.sql.extensions=graft.GraftExtensions registers graft_* for SQL") {
+    withExtensionsSession { spark =>
       val r = spark.sql(
         "SELECT graft_simhash('hello world hello') AS sh, " +
           "size(graft_shingles('a b c d')) AS n, " +
@@ -38,11 +53,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // find was exactly this drift (the extension shipped 9 of 11
       // functions); resolving each name pins the shared-list fix
       graft.functions.HashExpressions.builders.foreach { case (name, _) =>
-        // type-correct args per signature: the surfaced Spark Bloom
-        // expressions type-check at analysis (long hash / binary sketch),
-        // unlike the graft_* string family
+        // type-correct args per signature: every function type-checks
+        // its arguments at analysis
         val args = name match {
-          case "graft_cosine" => "'x', 'x'"
+          case "graft_cosine" => "array(1.0f), array(1.0f)"
+          case "graft_srp12" => "array(1.0f)"
           case "graft_sorted_inter" => "array(1), array(1)"
           case "graft_bloom_agg" => "xxhash64('x'), 1000L, 8192L"
           case "graft_might_contain" => "CAST(NULL AS BINARY), xxhash64('x')"
@@ -57,8 +72,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // IndexOutOfBoundsException
       val e = intercept[Exception](
         spark.sql("SELECT graft_cosine(array(1.0f))").queryExecution.analyzed)
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
       assert(messages(e).exists(_.contains("requires exactly 2 argument")),
         s"unexpected failure shape: $e")
       // nullable-element arrays are rejected at ANALYSIS: the merge walk
@@ -74,11 +87,24 @@ class GraftExtensionsSpec extends AnyFunSuite {
       spark.sql("SELECT graft_sorted_inter(" +
         "array_compact(array(1, CAST(NULL AS INT))), array(1))")
         .queryExecution.analyzed
-    } finally {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("graft_* functions reject wrong argument types at analysis") {
+    withExtensionsSession { spark =>
+      // a text function fed a number, and a vector function fed text, must
+      // fail ANALYSIS (not a task: a ClassCastException or a Janino error)
+      val textFns = graft.functions.HashExpressions.builders.map(_._1).filterNot(Set(
+        "graft_cosine", "graft_sorted_inter", "graft_bloom_agg",
+        "graft_might_contain", "graft_srp", "graft_srp12", "graft_winnow_sel"))
+      val calls = textFns.map(n => s"$n(1)") ++ Seq("graft_winnow_sel(1, 3, 4)",
+        "graft_cosine('x', 'x')", "graft_cosine(array(1.0D), array(1.0D))",
+        "graft_srp12('x')")
+      calls.foreach { c =>
+        val e = intercept[org.apache.spark.sql.AnalysisException](
+          spark.sql(s"SELECT $c").queryExecution.analyzed)
+        assert(messages(e).exists(_.contains("DATATYPE_MISMATCH")), s"$c: $e")
+      }
     }
   }
 }

@@ -153,4 +153,17 @@ class StreamingConversionLatencySpec extends SparkSpec {
     assert(buf.last.quantiles == qAll && buf.last.n == nAll,
       "post-restart readout must equal the one-shot build over all events")
   }
+
+  test("a restart with another bucket width fails loudly instead of restarting empty") {
+    val st = Some(tmpDir("sclat_width"))
+    val t5 = new StreamingConversionLatency.HistTracker(st, 5)
+    assert(t5.update(Seq((3L, 2L)), batchId = 0L))
+    val e = intercept[IllegalArgumentException](
+      new StreamingConversionLatency.HistTracker(st, 6))
+    val (w5, w6) = (StreamingConversionLatency.histLen(5), StreamingConversionLatency.histLen(6))
+    assert(e.getMessage.contains(s"width $w5") && e.getMessage.contains(w6.toString),
+      s"the error must name both widths: ${e.getMessage}")
+    // the same width still restores
+    assert(new StreamingConversionLatency.HistTracker(st, 5).hist(3) == 2L)
+  }
 }

@@ -135,4 +135,31 @@ class StreamingEmbeddingNearDupSpec extends SparkSpec {
         "b", Iterator(row(3, Array(1.0f, 2.0f), 1000L)), st).toSeq
     }
   }
+
+  test("the streaming cosine is graft_cosine's, bit for bit") {
+    import org.apache.spark.sql.streaming.TestGroupState
+    import org.apache.spark.api.java.Optional
+    val rnd = new scala.util.Random(17)
+    val a = Array.fill(16)(rnd.nextFloat() - 0.5f)
+    val b = Array.fill(16)(rnd.nextFloat() - 0.5f)
+    // the fixture must separate the two arithmetics: products taken in
+    // double round differently from graft_cosine's float products
+    val doubleProducts = {
+      val dot = a.indices.map(i => a(i).toDouble * b(i)).sum
+      def norm(v: Array[Float]) = math.sqrt(v.map(x => x.toDouble * x).sum)
+      dot / (norm(a) * norm(b))
+    }
+    graft.functions.HashExpressions.register(spark)
+    val batch = Seq((a, b)).toDF("x", "y")
+      .selectExpr("graft_cosine(x, y)").head().getDouble(0)
+    assert(java.lang.Double.doubleToLongBits(doubleProducts) !=
+      java.lang.Double.doubleToLongBits(batch), "fixture does not separate the arithmetics")
+    val st = TestGroupState.create[StreamingEmbeddingNearDup.VecBucketState](
+      Optional.of(StreamingEmbeddingNearDup.VecBucketState(List((1L, a)))),
+      GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(0L), hasTimedOut = false)
+    val out = StreamingEmbeddingNearDup.stateFn(64, -1.0, 60000L)(
+      "b", Iterator(row(2, b, 1000L)), st).toSeq
+    assert(out.map(_.cosine).map(java.lang.Double.doubleToLongBits) ==
+      Seq(java.lang.Double.doubleToLongBits(batch)), s"stream $out vs batch $batch")
+  }
 }
