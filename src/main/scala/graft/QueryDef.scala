@@ -37,10 +37,7 @@ object QueryDef {
   * child already ends in a shuffle (plain aggregations) don't need this —
   * sampling only re-runs the cheap post-shuffle step there. */
 object Sorted {
-  import org.apache.spark.sql.Column
   import org.apache.spark.storage.StorageLevel
-  def apply(df: DataFrame, cols: Column*): DataFrame =
-    df.persist(StorageLevel.MEMORY_AND_DISK).orderBy(cols: _*)
   def byNames(df: DataFrame, first: String, rest: String*): DataFrame =
     df.persist(StorageLevel.MEMORY_AND_DISK).orderBy(first, rest: _*)
 }

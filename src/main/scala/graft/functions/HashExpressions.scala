@@ -31,40 +31,48 @@ object HashExpressions {
   final val P61: Long = Portable.P61
   final val MIX: Long = Portable.MIX
 
-  /** The tokens THEMSELVES (round 17): bit-identical to
-    * `filter(split(lower(c), '[^a-z0-9]+'), t -> length(t) > 0)` — the
-    * [[Portable.tokensSql]] contract — as one compiled scan per row.
-    * Equivalence argument (pinned by PortableTokensSpec): `lower()` under
-    * the default UTF8_BINARY collation is `UTF8String.toLowerCase`, called
-    * here verbatim; after FULL lowercasing the token class [a-z0-9] is
-    * pure ASCII and the split regex `[^a-z0-9]+` separates on every other
-    * code point, so the non-empty split parts are exactly the maximal
-    * ASCII-alnum runs this scan collects (surrogate halves are never in
-    * [a-z0-9], so a char-level scan cannot split a supplementary
-    * character's token — both its units are separators). NOTE this is NOT
-    * the same lowering as [[tokenHashes]] (full vs per-code-point simple
-    * lowercase — U+0130 lowers to two code points here, one there); the
-    * two families keep their own DuckDB twins, as before. */
+  /** THE lowering of every native text scan ([[tokens]] and so
+    * `graft_gopher_stats`, [[tokenHashes]], [[gram5Hashes]],
+    * [[evalTextStats]]): Unicode SIMPLE lowercase, one code point in and
+    * one out — DuckDB's `lower()`, which every tokenizing oracle runs
+    * (U+0130 -> 'i', U+212A KELVIN SIGN -> 'k'). Full lowering
+    * (`UTF8String.toLowerCase`: U+0130 -> 'i' + U+0307) would split a
+    * token the oracle keeps whole. */
+  @inline final def lowerCp(cp: Int): Int = Character.toLowerCase(cp)
+
+  /** The token class [a-z0-9] over a [[lowerCp]]-lowered code point;
+    * everything else separates tokens (on both engines). */
+  @inline final def isTokenChar(lc: Int): Boolean =
+    (lc >= 'a' && lc <= 'z') || (lc >= '0' && lc <= '9')
+
+  /** The tokens THEMSELVES: the maximal [[isTokenChar]] runs of the
+    * [[lowerCp]]-lowered code points — the DuckDB `duckToksSql` contract
+    * (`string_split_regex(lower(c), '[^a-z0-9]+')`, empties dropped), as
+    * one compiled scan per row. Tokens are ASCII, so they are written one
+    * byte per char into one row buffer that every token of the row
+    * views. */
   private[functions] def tokens(s: UTF8String): Array[UTF8String] = {
-    val str = s.toLowerCase.toString
-    val out = mutable.ArrayBuilder.make[UTF8String]
+    val str = s.toString
     val n = str.length
+    val buf = new Array[Byte](n)
+    val out = mutable.ArrayBuilder.make[UTF8String]
+    var len = 0
+    var start = 0
     var i = 0
-    var start = -1
     while (i < n) {
-      val c = str.charAt(i)
-      val alnum = (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-      if (alnum) { if (start < 0) start = i }
-      else if (start >= 0) {
-        out += UTF8String.fromString(str.substring(start, i)); start = -1
+      val cp = str.codePointAt(i)
+      val lc = lowerCp(cp)
+      if (isTokenChar(lc)) { buf(len) = lc.toByte; len += 1 }
+      else if (len > start) {
+        out += UTF8String.fromBytes(buf, start, len - start); start = len
       }
-      i += 1
+      i += Character.charCount(cp)
     }
-    if (start >= 0) out += UTF8String.fromString(str.substring(start, n))
+    if (len > start) out += UTF8String.fromBytes(buf, start, len - start)
     out.result()
   }
 
-  /** Lowercase (ASCII) + tokenize on non-[a-z0-9] + per-token poly hash. */
+  /** [[tokens]]' scan with a per-token poly hash instead of the token. */
   private[functions] def tokenHashes(s: UTF8String): Array[Long] = {
     val str = s.toString
     val out = mutable.ArrayBuilder.make[Long]
@@ -73,16 +81,9 @@ object HashExpressions {
     var i = 0
     val n = str.length
     while (i < n) {
-      // CODE POINTS + Unicode simple lowercase, then the ASCII token
-      // class — the oracle tokenizes lower(text), and a few non-ASCII
-      // code points lower into [a-z] (U+212A KELVIN SIGN -> 'k'); an
-      // ASCII-only fold would split tokens the oracle keeps intact
-      // (review find). Anything still >= 128 after lowering separates
-      // on both engines ([^a-z0-9] covers it).
       val cp = str.codePointAt(i)
-      val lc = Character.toLowerCase(cp)
-      val alnum = (lc >= 'a' && lc <= 'z') || (lc >= '0' && lc <= '9')
-      if (alnum) {
+      val lc = lowerCp(cp)
+      if (isTokenChar(lc)) {
         h = (h * 31 + lc) % P
         inTok = true
       } else if (inTok) {
@@ -242,12 +243,11 @@ object HashExpressions {
   }
 
   /** Distinct rolling char-5-gram hashes of the lowercased string.
-    * CODE POINTS, not UTF-16 units, and Unicode simple lowercase — the
+    * CODE POINTS, not UTF-16 units, lowered by [[lowerCp]] — the
     * dedup_ngram_jaccard oracle walks ascii(substr(lower(text), i, 1)),
     * i.e. one code point per position with DuckDB's lower() (review
     * find: the old ASCII-only fold left 'É' unfolded and split astral
-    * chars into two surrogates). Full case folding (e.g. U+0130 mapping
-    * to two code points) stays out of contract on both engines. */
+    * chars into two surrogates). */
   private[functions] def gram5Hashes(s: UTF8String): Array[Long] = {
     val str = s.toString
     val cps = str.codePoints().toArray
@@ -256,7 +256,7 @@ object HashExpressions {
     val codes = new Array[Long](n)
     var i = 0
     while (i < n) {
-      codes(i) = Character.toLowerCase(cps(i)).toLong
+      codes(i) = lowerCp(cps(i)).toLong
       i += 1
     }
     val seen = new mutable.LinkedHashSet[Long]
@@ -311,8 +311,7 @@ object HashExpressions {
     StructField("n_alpha", LongType, nullable = false),
     StructField("stop_hits", IntegerType, nullable = false)))
 
-  /** One pass over the [[tokens]] array (the FULL-lowercase tokensSql
-    * contract — NOT [[tokenHashes]]' simple per-code-point lowering) for
+  /** One pass over the [[tokens]] array for
     * the four gopher-gate statistics the SQL form computed with three
     * interpreted per-token lambdas (aggregate length-sum, rlike filter,
     * array_intersect over a distinct): token count, summed token length
@@ -360,7 +359,7 @@ object HashExpressions {
 
   /** The cosine kernel of `graft_cosine` and the streaming embedding
     * near-dup: element products in FLOAT, accumulation left-to-right in
-    * DOUBLE, final division in DOUBLE (DuckDB's `duckCos` replays the
+    * DOUBLE, final division in DOUBLE ([[Portable.duckCosSql]] replays the
     * same arithmetic). NaN for a zero-norm side. Equal lengths assumed. */
   def cosine(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0
@@ -427,14 +426,8 @@ object HashExpressions {
       // regexp_replace'd string, which counts code points — an astral
       // char must count once, not twice (review find)
       val cp = str.codePointAt(i)
-      // Unicode simple lowercase FIRST, then the ASCII token class: the
-      // oracle tokenizes lower(text), and a few non-ASCII code points
-      // lower into [a-z] (U+212A KELVIN SIGN -> 'k') — an ASCII-only
-      // fold would split tokens the oracle keeps intact (review find)
-      val lc = Character.toLowerCase(cp)
-      val c = if (lc < 128) lc.toChar else ' '
-      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) sb.append(c)
-      else flush()
+      val lc = lowerCp(cp)
+      if (isTokenChar(lc)) sb.append(lc.toChar) else flush()
       val isAlnumOrSpace =
         (cp >= 'a' && cp <= 'z') || (cp >= '0' && cp <= '9') || cp == ' '
       if (!isAlnumOrSpace) nPunct += 1

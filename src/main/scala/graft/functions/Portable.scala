@@ -57,11 +57,10 @@ object Portable {
     * `filter(split(lower(c), '[^a-z0-9]+'), t -> length(t) > 0)`, which
     * ran INTERPRETED per element at every one of the ~30 call sites —
     * Spark's split-with-regex plus an ArrayFilter CodegenFallback.
-    * Bit-identical by construction (same UTF8String.toLowerCase, maximal
-    * ASCII-alnum runs == non-empty regex split parts) and pinned against
-    * the old form by PortableTokensSpec; the DuckDB twin below is
-    * unchanged, so every tokenizing oracle still checks the contract
-    * end-to-end. The function registers via GraftExtensions in the ONE
+    * It lowers per code point like the DuckDB twin below
+    * ([[HashExpressions.lowerCp]]), so it equals the old form except
+    * where full and simple lowercase differ (U+0130); PortableTokensSpec
+    * pins both. The function registers via GraftExtensions in the ONE
     * session factory, so every Verify/Bench/test session resolves it. */
   def tokensSql(c: String): String = s"graft_tokens($c)"
 
@@ -91,4 +90,20 @@ object Portable {
     * oracles' `th` step. */
   def duckHashTokensSql(arr: String): String =
     s"list_transform($arr, t -> ${duckPolyHashSql("t")})"
+
+  /** THE DuckDB dot product of two float-array SQL expressions: products
+    * in FLOAT, accumulated left-to-right in DOUBLE — the arithmetic of
+    * `graft_cosine` ([[HashExpressions.cosine]]). The dimension is
+    * `len(a)`, never a hard-coded 64: a fixture regenerated at another
+    * dim must move both engines together (a mismatched pair is NaN in
+    * `graft_cosine` and a NULL-poisoned reduce here; the ranked oracles
+    * drop both). */
+  def duckDotSql(a: String, b: String): String =
+    s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, len($a) + 1), i -> ($a[i] * $b[i])::DOUBLE)), (u, v) -> u + v)"
+
+  /** THE DuckDB twin of `graft_cosine`: [[duckDotSql]] over the two norms,
+    * one DOUBLE division. Every cosine oracle (Similarity, Retrieval)
+    * uses it. */
+  def duckCosSql(a: String, b: String): String =
+    s"${duckDotSql(a, b)} / (sqrt(${duckDotSql(a, a)}) * sqrt(${duckDotSql(b, b)}))"
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Sorted, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -80,6 +80,123 @@ object CorpusOps {
        |      i -> ((th[i-1] * $MIX + th[i]) % $P) % 8192)
        |    ELSE CAST([] AS BIGINT[]) END""".stripMargin
   }
+
+  /** The fixture every classifier row shares: [[trainHashedClassifier]]
+    * on the doc_id % 2 = 0 half with lang = 'en' as the positive class,
+    * then [[hashedClassifierScore]] over the held-out doc_id % 2 = 1 half
+    * (`heldOut`) or the whole corpus. */
+  private def fixtureScores(s: SparkSession, dir: String, heldOut: Boolean): DataFrame = {
+    val d = Tables.load(s, dir, "documents")
+    val w = trainHashedClassifier(d.filter("doc_id % 2 = 0"), posExpr = "lang = 'en'")
+    hashedClassifierScore(if (heldOut) d.filter("doc_id % 2 = 1") else d, w)
+  }
+
+  /** The DuckDB twin of [[fixtureScores]]' training: bigram bucket rows
+    * `f(doc_id, lang, bkt)` of every doc and the trained B = 8192 weight
+    * table `w(bkt, w)`. */
+  private val duckClassifierW: String =
+    s"""th AS (SELECT doc_id, lang,
+       |    ${graft.functions.Portable.duckHashTokensSql(duckToks)} AS th
+       |  FROM documents),
+       |f AS (SELECT doc_id, lang, unnest($duckBigramBkt) AS bkt FROM th),
+       |tr AS (SELECT lang, bkt FROM f WHERE doc_id % 2 = 0),
+       |pos AS (SELECT bkt, COUNT(*)::BIGINT AS pc FROM tr WHERE lang = 'en' GROUP BY bkt),
+       |neg AS (SELECT bkt, COUNT(*)::BIGINT AS nc FROM tr WHERE NOT (lang = 'en') GROUP BY bkt),
+       |pt AS (SELECT COALESCE((SELECT SUM(pc) FROM pos), 0)::BIGINT AS ptot),
+       |nt AS (SELECT COALESCE((SELECT SUM(nc) FROM neg), 0)::BIGINT AS ntot),
+       |dom AS (SELECT UNNEST(range(0, 8192)) AS bkt),
+       |w AS (SELECT dom.bkt,
+       |    ((COALESCE(pc, 0) + 1) * 1000000000) // (ptot + 8192)
+       |      - ((COALESCE(nc, 0) + 1) * 1000000000) // (ntot + 8192) AS w
+       |  FROM dom CROSS JOIN pt CROSS JOIN nt
+       |  LEFT JOIN pos ON pos.bkt = dom.bkt
+       |  LEFT JOIN neg ON neg.bkt = dom.bkt)""".stripMargin
+
+  /** The fixture's HLL geometry (hllDistinct / hllOverlap defaults). */
+  private val HllM = 256
+  private val HllCap = 54
+
+  /** The DuckDB replay of [[hllRegs]] shared by the hll_distinct and
+    * hll_overlap oracles: token-trigram fingerprints `g(source, fp)` and
+    * the per-source register table `mr(source, idx, mj)`. */
+  private val duckHllRegisters: String = {
+    import graft.functions.Portable.{MIX, MIX2, P, P2, P61}
+    val m = HllM; val cap = HllCap
+    s"""th AS (SELECT source,
+       |    ${graft.functions.Portable.duckHashTokensSql(duckToks)} AS th
+       |  FROM documents),
+       |g AS (SELECT source,
+       |    unnest(CASE WHEN len(th) >= 3 THEN list_transform(range(3, len(th) + 1),
+       |      i -> ((((th[i-2] * $MIX + th[i-1]) % $P) * $MIX + th[i]) % $P) * 2147483648
+       |         + (((th[i-2] * $MIX2 + th[i-1]) % $P2) * $MIX2 + th[i]) % $P2)
+       |      ELSE CAST([] AS BIGINT[]) END) AS fp
+       |  FROM th),
+       |v AS (SELECT source,
+       |    (((fp % 2147483648) * $MIX) % $P61
+       |     + ((fp // 2147483648) * $MIX2) % $P61) % $P61 AS v FROM g),
+       |r AS (SELECT source, v % $m AS idx,
+       |    CASE WHEN v // $m = 0 THEN $cap
+       |         ELSE length(bin((v // $m) & (-(v // $m)))) END AS rho FROM v),
+       |mr AS (SELECT source, idx, MAX(rho) AS mj FROM r GROUP BY source, idx)""".stripMargin
+  }
+
+  /** The DuckDB replay of the dp_counts / dp_quantiles noise draw: each
+    * row of `src` hashed by the string key `key` through the polyhash →
+    * fingerprint chain into the two-sided dyadic geometric noise, ending
+    * in `nn(<cols>, noise)`. */
+  private def duckDpNoise(key: String, src: String, cols: String): String = {
+    import graft.functions.Portable.{MIX, MIX2, P, P2, P61}
+    s"""hh AS (SELECT *, ${graft.functions.Portable.duckPolyHashSql(key)} AS h FROM $src),
+       |ff AS (SELECT *,
+       |    ((((h % $P) * (h % $P)) % $P) * $MIX + (h % $P)) % $P AS h1,
+       |    ((((h % $P2) * (h % $P2)) % $P2) * $MIX2 + (h % $P2)) % $P2 AS h2
+       |  FROM hh),
+       |vv AS (SELECT *,
+       |    ((((h1 * 2147483648 + h2) % 2147483648) * $MIX) % $P61
+       |     + (((h1 * 2147483648 + h2) // 2147483648) * $MIX2) % $P61)
+       |    % $P61 % 3221225470 AS u FROM ff),
+       |nn AS (SELECT $cols,
+       |    CASE WHEN u < 1073741824 THEN 0
+       |         ELSE (1 - 2 * ((u - 1073741824) % 2))
+       |            * (31 - length(bin(1073741823 - (u - 1073741824) // 2)))
+       |    END::BIGINT AS noise FROM vv)""".stripMargin
+  }
+
+  /** Content-defined chunk spans `(doc_id, text, chunk_idx, cstart,
+    * cend)` of every non-empty doc, 1-based inclusive code-point bounds,
+    * shared by chunk_content_defined and chunk_dedup. Boundaries come
+    * from the native Rabin-Karp `graft_cdc_bounds` — the SQL-lambda
+    * refold form (aggregate inside filter, O(n*16) interpreted) measured
+    * 52 s at sf0.1 vs ~1 s native; the oracle keeps the direct refold,
+    * which modular arithmetic makes value-identical to the rolled hash.
+    * Map-side explode only. */
+  private def cdcSpans(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.HashExpressions.register(s)
+    Tables.load(s, dir, "documents")
+      .filter(col("n_chars") >= 1)
+      .selectExpr("doc_id", "text", "length(text) AS n")
+      .selectExpr("doc_id", "text", "n",
+        "concat(array(1), transform(graft_cdc_bounds(text), i -> i + 1)) AS starts")
+      .selectExpr("doc_id", "text", "n", "starts", "posexplode(starts) AS (k, cstart)")
+      .selectExpr("doc_id", "text", "k AS chunk_idx", "cstart",
+        "IF(k + 1 < size(starts), element_at(starts, k + 2) - 1, n) AS cend")
+      .filter("cend >= cstart")
+  }
+
+  /** The DuckDB twin of [[cdcSpans]]' boundaries: `b(doc_id, text, n,
+    * starts)` by direct 16-char refold, `k` one row per chunk start. */
+  private val duckCdcStarts: String =
+    s"""b AS (SELECT doc_id, text, length(text) AS n,
+       |    list_prepend(1, list_transform(
+       |      list_filter(range(16, length(text) + 1),
+       |        i -> list_reduce(list_prepend(0::BIGINT,
+       |               list_transform(range(i - 15, i + 1),
+       |                 j -> ascii(substr(text, j::INT, 1))::BIGINT)),
+       |               (h, c) -> (h * 31 + c) % ${graft.functions.Portable.P}) % 64 = 0),
+       |      i -> i::INT + 1)) AS starts
+       |  FROM documents WHERE n_chars >= 1),
+       |k AS (SELECT doc_id, text, n, starts,
+       |    unnest(range(1, len(starts) + 1)) AS kk FROM b)""".stripMargin
 
   val defs: ListMap[String, QueryDef] = ListMap(
 
@@ -374,38 +491,13 @@ object CorpusOps {
     // md5 exactly like chunk_text. ----------------------------------------
     "chunk_content_defined" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
-        Tables.load(s, dir, "documents")
-          .filter(col("n_chars") >= 1)
-          .selectExpr("doc_id", "text", "length(text) AS n")
-          // boundary positions from the native Rabin-Karp expression — the
-          // SQL-lambda refold form (aggregate inside filter, O(n*16)
-          // interpreted) measured 52 s at sf0.1 vs ~1 s native; the oracle
-          // keeps the direct refold, which modular arithmetic makes
-          // value-identical to the rolled hash
-          .selectExpr("doc_id", "text", "n",
-            "concat(array(1), transform(graft_cdc_bounds(text), i -> i + 1)) AS starts")
-          .selectExpr("doc_id", "text", "n", "starts",
-            "posexplode(starts) AS (k, cstart)")
-          .selectExpr("doc_id", "text", "k AS chunk_idx", "cstart",
-            "IF(k + 1 < size(starts), element_at(starts, k + 2) - 1, n) AS cend")
-          .filter("cend >= cstart")
+        cdcSpans(s, dir)
           .selectExpr("doc_id", "chunk_idx",
             "CAST(cend - cstart + 1 AS BIGINT) AS chunk_len",
             "md5(substring(text, cstart, cend - cstart + 1)) AS chunk_md5")
           .transform(Sorted.byNames(_, "doc_id", "chunk_idx"))
       },
-      s"""WITH b AS (SELECT doc_id, text, length(text) AS n,
-         |    list_prepend(1, list_transform(
-         |      list_filter(range(16, length(text) + 1),
-         |        i -> list_reduce(list_prepend(0::BIGINT,
-         |               list_transform(range(i - 15, i + 1),
-         |                 j -> ascii(substr(text, j::INT, 1))::BIGINT)),
-         |               (h, c) -> (h * 31 + c) % ${graft.functions.Portable.P}) % 64 = 0),
-         |      i -> i::INT + 1)) AS starts
-         |  FROM documents WHERE n_chars >= 1),
-         |k AS (SELECT doc_id, text, n, starts,
-         |    unnest(range(1, len(starts) + 1)) AS kk FROM b),
+      s"""WITH $duckCdcStarts,
          |c AS (SELECT doc_id, kk - 1 AS chunk_idx, starts[kk::INT] AS cstart,
          |    CASE WHEN kk < len(starts) THEN starts[kk::INT + 1] - 1 ELSE n END AS cend,
          |    text
@@ -427,16 +519,7 @@ object CorpusOps {
     // chunk set. ----------------------------------------------------------
     "chunk_dedup" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
-        Tables.load(s, dir, "documents")
-          .filter(col("n_chars") >= 1)
-          .selectExpr("doc_id", "text", "length(text) AS n")
-          .selectExpr("doc_id", "text", "n",
-            "concat(array(1), transform(graft_cdc_bounds(text), i -> i + 1)) AS starts")
-          .selectExpr("doc_id", "text", "n", "starts", "posexplode(starts) AS (k, cstart)")
-          .selectExpr("doc_id", "text",
-            "IF(k + 1 < size(starts), element_at(starts, k + 2) - 1, n) AS cend", "cstart")
-          .filter("cend >= cstart")
+        cdcSpans(s, dir)
           .selectExpr("doc_id",
             "md5(substring(text, cstart, cend - cstart + 1)) AS chunk_md5",
             "CAST(cend - cstart + 1 AS BIGINT) AS chunk_len")
@@ -447,17 +530,7 @@ object CorpusOps {
           .filter(col("n_docs") >= 2)
           .transform(Sorted.byNames(_, "chunk_md5"))
       },
-      """WITH b AS (SELECT doc_id, text, length(text) AS n,
-        |    list_prepend(1, list_transform(
-        |      list_filter(range(16, length(text) + 1),
-        |        i -> list_reduce(list_prepend(0::BIGINT,
-        |               list_transform(range(i - 15, i + 1),
-        |                 j -> ascii(substr(text, j::INT, 1))::BIGINT)),
-        |               (h, c) -> (h * 31 + c) % 1000000007) % 64 = 0),
-        |      i -> i::INT + 1)) AS starts
-        |  FROM documents WHERE n_chars >= 1),
-        |k AS (SELECT doc_id, text, n, starts,
-        |    unnest(range(1, len(starts) + 1)) AS kk FROM b),
+      s"""WITH $duckCdcStarts,
         |c AS (SELECT doc_id, starts[kk::INT] AS cstart,
         |    CASE WHEN kk < len(starts) THEN starts[kk::INT + 1] - 1 ELSE n END AS cend,
         |    text FROM k),
@@ -673,28 +746,8 @@ object CorpusOps {
     // caveat family). Docs with < 2 tokens have no bigram features and
     // drop from the scored frame in both engines. ------------------------
     "quality_classifier" -> QueryDef(
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val w = trainHashedClassifier(
-          d.filter("doc_id % 2 = 0"), posExpr = "lang = 'en'")
-        hashedClassifierScore(d, w)
-      },
-      s"""WITH th AS (SELECT doc_id, lang,
-         |    ${graft.functions.Portable.duckHashTokensSql(duckToks)} AS th
-         |  FROM documents),
-         |f AS (SELECT doc_id, lang, unnest($duckBigramBkt) AS bkt FROM th),
-         |tr AS (SELECT lang, bkt FROM f WHERE doc_id % 2 = 0),
-         |pos AS (SELECT bkt, COUNT(*)::BIGINT AS pc FROM tr WHERE lang = 'en' GROUP BY bkt),
-         |neg AS (SELECT bkt, COUNT(*)::BIGINT AS nc FROM tr WHERE NOT (lang = 'en') GROUP BY bkt),
-         |pt AS (SELECT COALESCE((SELECT SUM(pc) FROM pos), 0)::BIGINT AS ptot),
-         |nt AS (SELECT COALESCE((SELECT SUM(nc) FROM neg), 0)::BIGINT AS ntot),
-         |dom AS (SELECT UNNEST(range(0, 8192)) AS bkt),
-         |w AS (SELECT dom.bkt,
-         |    ((COALESCE(pc, 0) + 1) * 1000000000) // (ptot + 8192)
-         |      - ((COALESCE(nc, 0) + 1) * 1000000000) // (ntot + 8192) AS w
-         |  FROM dom CROSS JOIN pt CROSS JOIN nt
-         |  LEFT JOIN pos ON pos.bkt = dom.bkt
-         |  LEFT JOIN neg ON neg.bkt = dom.bkt)
+      (s, dir) => fixtureScores(s, dir, heldOut = false),
+      s"""WITH $duckClassifierW
          |SELECT doc_id, lang, COUNT(*) AS n_bigrams,
          |  CAST(SUM(w.w) AS BIGINT) // COUNT(*) AS score_ppb,
          |  CASE WHEN CAST(SUM(w.w) AS BIGINT) // COUNT(*) > 0 THEN 1 ELSE 0 END AS keep
@@ -759,29 +812,9 @@ object CorpusOps {
     // (ccnet_buckets' shape) — no new corpus-volume stage appears in
     // the composition. ---------------------------------------------------
     "classifier_buckets" -> QueryDef(
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val w = trainHashedClassifier(
-          d.filter("doc_id % 2 = 0"), posExpr = "lang = 'en'")
-        TextOps.ccnetBuckets(
-          hashedClassifierScore(d, w), scoreCol = "score_ppb")
-      },
-      s"""WITH th AS (SELECT doc_id, lang,
-         |    ${graft.functions.Portable.duckHashTokensSql(duckToks)} AS th
-         |  FROM documents),
-         |f AS (SELECT doc_id, lang, unnest($duckBigramBkt) AS bkt FROM th),
-         |tr AS (SELECT lang, bkt FROM f WHERE doc_id % 2 = 0),
-         |pos AS (SELECT bkt, COUNT(*)::BIGINT AS pc FROM tr WHERE lang = 'en' GROUP BY bkt),
-         |neg AS (SELECT bkt, COUNT(*)::BIGINT AS nc FROM tr WHERE NOT (lang = 'en') GROUP BY bkt),
-         |pt AS (SELECT COALESCE((SELECT SUM(pc) FROM pos), 0)::BIGINT AS ptot),
-         |nt AS (SELECT COALESCE((SELECT SUM(nc) FROM neg), 0)::BIGINT AS ntot),
-         |dom AS (SELECT UNNEST(range(0, 8192)) AS bkt),
-         |w AS (SELECT dom.bkt,
-         |    ((COALESCE(pc, 0) + 1) * 1000000000) // (ptot + 8192)
-         |      - ((COALESCE(nc, 0) + 1) * 1000000000) // (ntot + 8192) AS w
-         |  FROM dom CROSS JOIN pt CROSS JOIN nt
-         |  LEFT JOIN pos ON pos.bkt = dom.bkt
-         |  LEFT JOIN neg ON neg.bkt = dom.bkt),
+      (s, dir) => TextOps.ccnetBuckets(
+        fixtureScores(s, dir, heldOut = false), scoreCol = "score_ppb"),
+      s"""WITH $duckClassifierW,
          |scores AS (SELECT doc_id, lang,
          |    CAST(SUM(w.w) AS BIGINT) // COUNT(*) AS score_ppb
          |  FROM f JOIN w USING (bkt) GROUP BY doc_id, lang),
@@ -825,30 +858,9 @@ object CorpusOps {
     // result is deterministic-size); scale shape: one scoring pass, a
     // 2-row threshold fold broadcast back, flags map-side. ---------------
     "label_noise_detect" -> QueryDef(
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val w = trainHashedClassifier(
-          d.filter("doc_id % 2 = 0"), posExpr = "lang = 'en'")
-        labelNoiseDetect(
-          hashedClassifierScore(d.filter("doc_id % 2 = 1"), w),
-          labelExpr = "lang = 'en'")
-      },
-      s"""WITH th AS (SELECT doc_id, lang,
-         |    ${graft.functions.Portable.duckHashTokensSql(duckToks)} AS th
-         |  FROM documents),
-         |f AS (SELECT doc_id, lang, unnest($duckBigramBkt) AS bkt FROM th),
-         |tr AS (SELECT lang, bkt FROM f WHERE doc_id % 2 = 0),
-         |pos AS (SELECT bkt, COUNT(*)::BIGINT AS pc FROM tr WHERE lang = 'en' GROUP BY bkt),
-         |neg AS (SELECT bkt, COUNT(*)::BIGINT AS nc FROM tr WHERE NOT (lang = 'en') GROUP BY bkt),
-         |pt AS (SELECT COALESCE((SELECT SUM(pc) FROM pos), 0)::BIGINT AS ptot),
-         |nt AS (SELECT COALESCE((SELECT SUM(nc) FROM neg), 0)::BIGINT AS ntot),
-         |dom AS (SELECT UNNEST(range(0, 8192)) AS bkt),
-         |w AS (SELECT dom.bkt,
-         |    ((COALESCE(pc, 0) + 1) * 1000000000) // (ptot + 8192)
-         |      - ((COALESCE(nc, 0) + 1) * 1000000000) // (ntot + 8192) AS w
-         |  FROM dom CROSS JOIN pt CROSS JOIN nt
-         |  LEFT JOIN pos ON pos.bkt = dom.bkt
-         |  LEFT JOIN neg ON neg.bkt = dom.bkt),
+      (s, dir) =>
+        labelNoiseDetect(fixtureScores(s, dir, heldOut = true), labelExpr = "lang = 'en'"),
+      s"""WITH $duckClassifierW,
          |scored AS (SELECT doc_id, lang,
          |    CAST(SUM(w.w) AS BIGINT) // COUNT(*) AS score_ppb
          |  FROM f JOIN w USING (bkt) WHERE doc_id % 2 = 1 GROUP BY doc_id, lang),
@@ -867,30 +879,9 @@ object CorpusOps {
          |FROM lab CROSS JOIN cut ORDER BY doc_id""".stripMargin),
 
     "classifier_eval" -> QueryDef(
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val w = trainHashedClassifier(
-          d.filter("doc_id % 2 = 0"), posExpr = "lang = 'en'")
-        classifierEval(
-          hashedClassifierScore(d.filter("doc_id % 2 = 1"), w),
-          labelExpr = "lang = 'en'")
-      },
-      s"""WITH th AS (SELECT doc_id, lang,
-         |    ${graft.functions.Portable.duckHashTokensSql(duckToks)} AS th
-         |  FROM documents),
-         |f AS (SELECT doc_id, lang, unnest($duckBigramBkt) AS bkt FROM th),
-         |tr AS (SELECT lang, bkt FROM f WHERE doc_id % 2 = 0),
-         |pos AS (SELECT bkt, COUNT(*)::BIGINT AS pc FROM tr WHERE lang = 'en' GROUP BY bkt),
-         |neg AS (SELECT bkt, COUNT(*)::BIGINT AS nc FROM tr WHERE NOT (lang = 'en') GROUP BY bkt),
-         |pt AS (SELECT COALESCE((SELECT SUM(pc) FROM pos), 0)::BIGINT AS ptot),
-         |nt AS (SELECT COALESCE((SELECT SUM(nc) FROM neg), 0)::BIGINT AS ntot),
-         |dom AS (SELECT UNNEST(range(0, 8192)) AS bkt),
-         |w AS (SELECT dom.bkt,
-         |    ((COALESCE(pc, 0) + 1) * 1000000000) // (ptot + 8192)
-         |      - ((COALESCE(nc, 0) + 1) * 1000000000) // (ntot + 8192) AS w
-         |  FROM dom CROSS JOIN pt CROSS JOIN nt
-         |  LEFT JOIN pos ON pos.bkt = dom.bkt
-         |  LEFT JOIN neg ON neg.bkt = dom.bkt),
+      (s, dir) =>
+        classifierEval(fixtureScores(s, dir, heldOut = true), labelExpr = "lang = 'en'"),
+      s"""WITH $duckClassifierW,
          |sc AS (SELECT doc_id, lang,
          |    CASE WHEN CAST(SUM(w.w) AS BIGINT) // COUNT(*) > 0 THEN 1 ELSE 0 END AS keep
          |  FROM f JOIN w USING (bkt) WHERE doc_id % 2 = 1 GROUP BY doc_id, lang),
@@ -923,30 +914,9 @@ object CorpusOps {
     // integer division toward zero (verified: DuckDB -7//2 = -3), so the
     // negative per-doc mean scores need no sign decomposition. ---------------
     "classifier_auc" -> QueryDef(
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val w = trainHashedClassifier(
-          d.filter("doc_id % 2 = 0"), posExpr = "lang = 'en'")
-        classifierAuc(
-          hashedClassifierScore(d.filter("doc_id % 2 = 1"), w),
-          labelExpr = "lang = 'en'")
-      },
-      s"""WITH th AS (SELECT doc_id, lang,
-         |    ${graft.functions.Portable.duckHashTokensSql(duckToks)} AS th
-         |  FROM documents),
-         |f AS (SELECT doc_id, lang, unnest($duckBigramBkt) AS bkt FROM th),
-         |tr AS (SELECT lang, bkt FROM f WHERE doc_id % 2 = 0),
-         |pos AS (SELECT bkt, COUNT(*)::BIGINT AS pc FROM tr WHERE lang = 'en' GROUP BY bkt),
-         |neg AS (SELECT bkt, COUNT(*)::BIGINT AS nc FROM tr WHERE NOT (lang = 'en') GROUP BY bkt),
-         |pt AS (SELECT COALESCE((SELECT SUM(pc) FROM pos), 0)::BIGINT AS ptot),
-         |nt AS (SELECT COALESCE((SELECT SUM(nc) FROM neg), 0)::BIGINT AS ntot),
-         |dom AS (SELECT UNNEST(range(0, 8192)) AS bkt),
-         |w AS (SELECT dom.bkt,
-         |    ((COALESCE(pc, 0) + 1) * 1000000000) // (ptot + 8192)
-         |      - ((COALESCE(nc, 0) + 1) * 1000000000) // (ntot + 8192) AS w
-         |  FROM dom CROSS JOIN pt CROSS JOIN nt
-         |  LEFT JOIN pos ON pos.bkt = dom.bkt
-         |  LEFT JOIN neg ON neg.bkt = dom.bkt),
+      (s, dir) =>
+        classifierAuc(fixtureScores(s, dir, heldOut = true), labelExpr = "lang = 'en'"),
+      s"""WITH $duckClassifierW,
          |sc AS (SELECT doc_id, CAST(lang = 'en' AS BIGINT) AS y,
          |    CAST(SUM(w.w) AS BIGINT) // COUNT(*) AS s
          |  FROM f JOIN w USING (bkt) WHERE doc_id % 2 = 1 GROUP BY doc_id, lang),
@@ -980,30 +950,9 @@ object CorpusOps {
     // the distribution then the <= buckets-row frame. Same held-out
     // fixture as classifier_eval/classifier_auc. --------------------------
     "classifier_lift" -> QueryDef(
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val w = trainHashedClassifier(
-          d.filter("doc_id % 2 = 0"), posExpr = "lang = 'en'")
-        classifierLift(
-          hashedClassifierScore(d.filter("doc_id % 2 = 1"), w),
-          labelExpr = "lang = 'en'")
-      },
-      s"""WITH th AS (SELECT doc_id, lang,
-         |    ${graft.functions.Portable.duckHashTokensSql(duckToks)} AS th
-         |  FROM documents),
-         |f AS (SELECT doc_id, lang, unnest($duckBigramBkt) AS bkt FROM th),
-         |tr AS (SELECT lang, bkt FROM f WHERE doc_id % 2 = 0),
-         |pos AS (SELECT bkt, COUNT(*)::BIGINT AS pc FROM tr WHERE lang = 'en' GROUP BY bkt),
-         |neg AS (SELECT bkt, COUNT(*)::BIGINT AS nc FROM tr WHERE NOT (lang = 'en') GROUP BY bkt),
-         |pt AS (SELECT COALESCE((SELECT SUM(pc) FROM pos), 0)::BIGINT AS ptot),
-         |nt AS (SELECT COALESCE((SELECT SUM(nc) FROM neg), 0)::BIGINT AS ntot),
-         |dom AS (SELECT UNNEST(range(0, 8192)) AS bkt),
-         |w AS (SELECT dom.bkt,
-         |    ((COALESCE(pc, 0) + 1) * 1000000000) // (ptot + 8192)
-         |      - ((COALESCE(nc, 0) + 1) * 1000000000) // (ntot + 8192) AS w
-         |  FROM dom CROSS JOIN pt CROSS JOIN nt
-         |  LEFT JOIN pos ON pos.bkt = dom.bkt
-         |  LEFT JOIN neg ON neg.bkt = dom.bkt),
+      (s, dir) =>
+        classifierLift(fixtureScores(s, dir, heldOut = true), labelExpr = "lang = 'en'"),
+      s"""WITH $duckClassifierW,
          |sc AS (SELECT doc_id, CAST(lang = 'en' AS BIGINT) AS y,
          |    CAST(SUM(w.w) AS BIGINT) // COUNT(*) AS s
          |  FROM f JOIN w USING (bkt) WHERE doc_id % 2 = 1 GROUP BY doc_id, lang),
@@ -1370,30 +1319,15 @@ object CorpusOps {
     // calibration read); withTrue = false is the release path. ----------
     "dp_counts" -> QueryDef(
       (s, dir) => dpCounts(Tables.load(s, dir, "orders")
-        .select("o_orderpriority", "o_orderstatus")), {
-        import graft.functions.Portable.{MIX, MIX2, P, P2, P61}
-        s"""WITH g AS (SELECT o_orderpriority, o_orderstatus,
-           |    COUNT(*)::BIGINT AS true_n
-           |  FROM orders GROUP BY 1, 2),
-           |hh AS (SELECT *, ${graft.functions.Portable.duckPolyHashSql(
-                "(o_orderpriority || '|' || o_orderstatus)")} AS h FROM g),
-           |ff AS (SELECT *,
-           |    ((((h % $P) * (h % $P)) % $P) * $MIX + (h % $P)) % $P AS h1,
-           |    ((((h % $P2) * (h % $P2)) % $P2) * $MIX2 + (h % $P2)) % $P2 AS h2
-           |  FROM hh),
-           |vv AS (SELECT *,
-           |    ((((h1 * 2147483648 + h2) % 2147483648) * $MIX) % $P61
-           |     + (((h1 * 2147483648 + h2) // 2147483648) * $MIX2) % $P61)
-           |    % $P61 % 3221225470 AS u FROM ff),
-           |nn AS (SELECT o_orderpriority, o_orderstatus, true_n,
-           |    CASE WHEN u < 1073741824 THEN 0
-           |         ELSE (1 - 2 * ((u - 1073741824) % 2))
-           |            * (31 - length(bin(1073741823 - (u - 1073741824) // 2)))
-           |    END::BIGINT AS noise FROM vv)
-           |SELECT o_orderpriority, o_orderstatus, true_n, noise,
-           |  CASE WHEN true_n + noise < 0 THEN 0 ELSE true_n + noise END AS released
-           |FROM nn ORDER BY o_orderpriority, o_orderstatus""".stripMargin
-      }),
+        .select("o_orderpriority", "o_orderstatus")),
+      s"""WITH g AS (SELECT o_orderpriority, o_orderstatus,
+         |    COUNT(*)::BIGINT AS true_n
+         |  FROM orders GROUP BY 1, 2),
+         |${duckDpNoise("(o_orderpriority || '|' || o_orderstatus)", "g",
+           "o_orderpriority, o_orderstatus, true_n")}
+         |SELECT o_orderpriority, o_orderstatus, true_n, noise,
+         |  CASE WHEN true_n + noise < 0 THEN 0 ELSE true_n + noise END AS released
+         |FROM nn ORDER BY o_orderpriority, o_orderstatus""".stripMargin),
 
     // ---- DP quantile release (the governance ladder's distribution
     // artifact beside dp_counts' count release): the published
@@ -1415,59 +1349,43 @@ object CorpusOps {
     "dp_quantiles" -> QueryDef(
       (s, dir) => dpQuantiles(Tables.load(s, dir, "orders")
         .selectExpr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x"),
-        "x"), {
-        import graft.functions.Portable.{MIX, MIX2, P, P2, P61}
-        s"""WITH v AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
-           |  FROM orders),
-           |h0 AS (SELECT CASE WHEN x < 32 THEN x
-           |    ELSE (length(bin(x)) - 6) * 32 + (x >> (length(bin(x)) - 6))
-           |    END AS bkt, COUNT(*)::BIGINT AS cnt
-           |  FROM v GROUP BY 1),
-           |hh AS (SELECT *, ${graft.functions.Portable.duckPolyHashSql(
-                "CAST(bkt AS VARCHAR)")} AS h FROM h0),
-           |ff AS (SELECT *,
-           |    ((((h % $P) * (h % $P)) % $P) * $MIX + (h % $P)) % $P AS h1,
-           |    ((((h % $P2) * (h % $P2)) % $P2) * $MIX2 + (h % $P2)) % $P2 AS h2
-           |  FROM hh),
-           |vv AS (SELECT *,
-           |    ((((h1 * 2147483648 + h2) % 2147483648) * $MIX) % $P61
-           |     + (((h1 * 2147483648 + h2) // 2147483648) * $MIX2) % $P61)
-           |    % $P61 % 3221225470 AS u FROM ff),
-           |nn AS (SELECT bkt, cnt,
-           |    CASE WHEN u < 1073741824 THEN 0
-           |         ELSE (1 - 2 * ((u - 1073741824) % 2))
-           |            * (31 - length(bin(1073741823 - (u - 1073741824) // 2)))
-           |    END::BIGINT AS noise FROM vv),
-           |noisy AS (SELECT bkt, cnt + noise AS cnt FROM nn WHERE cnt + noise > 0),
-           |q AS (SELECT unnest([500, 900, 990]) AS q_pm),
-           |cT AS (SELECT bkt, cnt, SUM(cnt) OVER ()::BIGINT AS n,
-           |    SUM(cnt) OVER (ORDER BY bkt
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum
-           |  FROM h0),
-           |eT AS (SELECT q_pm, n, MIN(bkt) AS qb
-           |  FROM cT CROSS JOIN q WHERE cum >= (q_pm * n + 999) // 1000
-           |  GROUP BY 1, 2),
-           |estT AS (SELECT q_pm, n AS true_n,
-           |    CASE WHEN qb < 32 THEN qb
-           |         ELSE ((qb % 32) + 32) << ((qb // 32) - 1) END AS true_q
-           |  FROM eT),
-           |cN AS (SELECT bkt, cnt, SUM(cnt) OVER ()::BIGINT AS n,
-           |    SUM(cnt) OVER (ORDER BY bkt
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum
-           |  FROM noisy),
-           |eN AS (SELECT q_pm, n, MIN(bkt) AS qb
-           |  FROM cN CROSS JOIN q WHERE cum >= (q_pm * n + 999) // 1000
-           |  GROUP BY 1, 2),
-           |estN AS (SELECT q_pm, n AS released_n,
-           |    CASE WHEN qb < 32 THEN qb
-           |         ELSE ((qb % 32) + 32) << ((qb // 32) - 1) END AS released_q
-           |  FROM eN)
-           |SELECT q_pm, true_n, true_q,
-           |  COALESCE(released_n, 0) AS released_n,
-           |  COALESCE(released_q, 0) AS released_q
-           |FROM estT LEFT JOIN estN USING (q_pm)
-           |ORDER BY q_pm""".stripMargin
-      }),
+        "x"),
+      s"""WITH v AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
+         |  FROM orders),
+         |h0 AS (SELECT CASE WHEN x < 32 THEN x
+         |    ELSE (length(bin(x)) - 6) * 32 + (x >> (length(bin(x)) - 6))
+         |    END AS bkt, COUNT(*)::BIGINT AS cnt
+         |  FROM v GROUP BY 1),
+         |${duckDpNoise("CAST(bkt AS VARCHAR)", "h0", "bkt, cnt")},
+         |noisy AS (SELECT bkt, cnt + noise AS cnt FROM nn WHERE cnt + noise > 0),
+         |q AS (SELECT unnest([500, 900, 990]) AS q_pm),
+         |cT AS (SELECT bkt, cnt, SUM(cnt) OVER ()::BIGINT AS n,
+         |    SUM(cnt) OVER (ORDER BY bkt
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum
+         |  FROM h0),
+         |eT AS (SELECT q_pm, n, MIN(bkt) AS qb
+         |  FROM cT CROSS JOIN q WHERE cum >= (q_pm * n + 999) // 1000
+         |  GROUP BY 1, 2),
+         |estT AS (SELECT q_pm, n AS true_n,
+         |    CASE WHEN qb < 32 THEN qb
+         |         ELSE ((qb % 32) + 32) << ((qb // 32) - 1) END AS true_q
+         |  FROM eT),
+         |cN AS (SELECT bkt, cnt, SUM(cnt) OVER ()::BIGINT AS n,
+         |    SUM(cnt) OVER (ORDER BY bkt
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum
+         |  FROM noisy),
+         |eN AS (SELECT q_pm, n, MIN(bkt) AS qb
+         |  FROM cN CROSS JOIN q WHERE cum >= (q_pm * n + 999) // 1000
+         |  GROUP BY 1, 2),
+         |estN AS (SELECT q_pm, n AS released_n,
+         |    CASE WHEN qb < 32 THEN qb
+         |         ELSE ((qb % 32) + 32) << ((qb // 32) - 1) END AS released_q
+         |  FROM eN)
+         |SELECT q_pm, true_n, true_q,
+         |  COALESCE(released_n, 0) AS released_n,
+         |  COALESCE(released_q, 0) AS released_q
+         |FROM estT LEFT JOIN estN USING (q_pm)
+         |ORDER BY q_pm""".stripMargin),
 
     // ---- Benford first-digit deviation screen -------------------------------
     // The forensic-audit read beside the governance gates: naturally-grown
@@ -1657,24 +1575,8 @@ object CorpusOps {
     // for the caller to apply engine-side. ------------------------------
     "hll_distinct" -> QueryDef(
       (s, dir) => hllDistinct(Tables.load(s, dir, "documents")), {
-        import graft.functions.Portable.{MIX, MIX2, P, P2, P61}
-        val m = 256; val cap = 54; val alphaPpm = hllAlphaPpm(m)
-        s"""WITH th AS (SELECT source,
-           |    ${graft.functions.Portable.duckHashTokensSql(duckToks)} AS th
-           |  FROM documents),
-           |g AS (SELECT source,
-           |    unnest(CASE WHEN len(th) >= 3 THEN list_transform(range(3, len(th) + 1),
-           |      i -> ((((th[i-2] * $MIX + th[i-1]) % $P) * $MIX + th[i]) % $P) * 2147483648
-           |         + (((th[i-2] * $MIX2 + th[i-1]) % $P2) * $MIX2 + th[i]) % $P2)
-           |      ELSE CAST([] AS BIGINT[]) END) AS fp
-           |  FROM th),
-           |v AS (SELECT source,
-           |    (((fp % 2147483648) * $MIX) % $P61
-           |     + ((fp // 2147483648) * $MIX2) % $P61) % $P61 AS v FROM g),
-           |r AS (SELECT source, v % $m AS idx,
-           |    CASE WHEN v // $m = 0 THEN $cap
-           |         ELSE length(bin((v // $m) & (-(v // $m)))) END AS rho FROM v),
-           |mr AS (SELECT source, idx, MAX(rho) AS mj FROM r GROUP BY source, idx),
+        val m = HllM; val cap = HllCap; val alphaPpm = hllAlphaPpm(m)
+        s"""WITH $duckHllRegisters,
            |sc AS (SELECT source,
            |    SUM(1::BIGINT << ($cap - mj)) + ($m - COUNT(*)) * (1::BIGINT << $cap) AS s_scaled,
            |    $m - COUNT(*) AS zero_registers
@@ -1707,24 +1609,8 @@ object CorpusOps {
     // 100 TB sketch-only path. --------------------------------------------
     "hll_overlap" -> QueryDef(
       (s, dir) => hllOverlap(Tables.load(s, dir, "documents")), {
-        import graft.functions.Portable.{MIX, MIX2, P, P2, P61}
-        val m = 256; val cap = 54; val alphaPpm = hllAlphaPpm(m)
-        s"""WITH th AS (SELECT source,
-           |    ${graft.functions.Portable.duckHashTokensSql(duckToks)} AS th
-           |  FROM documents),
-           |g AS (SELECT source,
-           |    unnest(CASE WHEN len(th) >= 3 THEN list_transform(range(3, len(th) + 1),
-           |      i -> ((((th[i-2] * $MIX + th[i-1]) % $P) * $MIX + th[i]) % $P) * 2147483648
-           |         + (((th[i-2] * $MIX2 + th[i-1]) % $P2) * $MIX2 + th[i]) % $P2)
-           |      ELSE CAST([] AS BIGINT[]) END) AS fp
-           |  FROM th),
-           |v AS (SELECT source,
-           |    (((fp % 2147483648) * $MIX) % $P61
-           |     + ((fp // 2147483648) * $MIX2) % $P61) % $P61 AS v FROM g),
-           |r AS (SELECT source, v % $m AS idx,
-           |    CASE WHEN v // $m = 0 THEN $cap
-           |         ELSE length(bin((v // $m) & (-(v // $m)))) END AS rho FROM v),
-           |mr AS (SELECT source, idx, MAX(rho) AS mj FROM r GROUP BY source, idx),
+        val m = HllM; val cap = HllCap; val alphaPpm = hllAlphaPpm(m)
+        s"""WITH $duckHllRegisters,
            |sc AS (SELECT source,
            |    SUM(1::BIGINT << ($cap - mj)) + ($m - COUNT(*)) * (1::BIGINT << $cap) AS s_scaled
            |  FROM mr GROUP BY source),

@@ -437,11 +437,30 @@ object Dedup {
        |$duckBandsCte,
        |$duckCandCte,
        |pairs AS (SELECT doc_a, doc_b,
-       |  CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-       |   / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS jaccard
-       |  FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-       |  WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-       |   / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8)""".stripMargin
+       |  ${duckJaccard("   ")} AS jaccard
+       |  ${duckVerified("  ", "   ")})""".stripMargin
+
+  /** THE shingle-Jaccard of a candidate pair over `sh` (aliases sa, sb),
+    * continuation lines indented by `ind`. */
+  private def duckJaccard(ind: String): String =
+    s"""CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+       |$ind/ (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))""".stripMargin
+
+  /** THE verify step every MinHash-pair oracle shares: `cand` pairs
+    * joined to their shingle sets and kept at Jaccard >= 0.8 — the
+    * DuckDB twin of [[verifyPairs]]. `ind` indents the WHERE line,
+    * `cont` the Jaccard continuation. */
+  private def duckVerified(ind: String, cont: String): String =
+    s"""FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
+       |${ind}WHERE ${duckJaccard(cont)} >= 0.8""".stripMargin
+
+  /** The verified `(doc_a, doc_b, jaccard)` SELECT closing the
+    * dedup_minhash, _star and _capped oracles. */
+  private lazy val duckJaccardSelect: String =
+    s"""SELECT doc_a, doc_b,
+       |  ${duckJaccard("   ")} AS jaccard
+       |${duckVerified("", "   ")}
+       |ORDER BY doc_a, doc_b""".stripMargin
 
   /** Full-corpus shingle CTE chain `toks -> th -> sh(doc_id, sh)` —
     * private[operators] so the pretrain_prep capstone chain can compose
@@ -634,20 +653,14 @@ object Dedup {
       s"""WITH $duckSigCtes,
          |$duckBandsCte,
          |$duckCandCte
-         |SELECT doc_a, doc_b,
-         |  CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         |   / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS jaccard
-         |FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-         |WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         |   / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8
-         |ORDER BY doc_a, doc_b""".stripMargin),
+         |$duckJaccardSelect""".stripMargin),
 
     // ---- canonical-star MinHash pairs: the BOUNDED pair emitter the
     // bucket-load profiler's verdict engages. Candidates are (bucket
     // canonical, resident) — linear in corpus at ANY duplicate-cluster
     // size, where dedup_minhash's in-bucket self-join is quadratic (the
     // K=1000 salted corpus: 16.6 B vs ~20 M candidates). Verified by the
-    // SAME shingle-Jaccard fragments; semantics documented on
+    // SAME verifyPairs / duckJaccardSelect; semantics documented on
     // bandedCandidatesStar (keep-first approximation: chains sharing one
     // bucket may keep a middle-linked doc all-pairs would drop). --------
     "dedup_minhash_star" -> QueryDef(
@@ -656,13 +669,7 @@ object Dedup {
       s"""WITH $duckSigCtes,
          |$duckBandsCte,
          |$duckStarCandCte
-         |SELECT doc_a, doc_b,
-         |  CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         |   / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS jaccard
-         |FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-         |WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         |   / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8
-         |ORDER BY doc_a, doc_b""".stripMargin),
+         |$duckJaccardSelect""".stripMargin),
 
     // ---- capped MinHash pairs: the recall-preserving middle ground the
     // dedup_minhash_profile verdict engages when max_bucket exceeds the
@@ -670,21 +677,15 @@ object Dedup {
     // maxPerBucket semantics in batch (first 64 residents per bucket by
     // doc_id pair fully; overflow docs pair against residents only), so
     // per-bucket volume is O(cap·n) at any saturation. cap=1 is the star
-    // emitter; cap=∞ is dedup_minhash. Verified by the SAME
-    // shingle-Jaccard fragments. --------------------------------------------
+    // emitter; cap=∞ is dedup_minhash. Verified by the SAME verifyPairs /
+    // duckJaccardSelect. ----------------------------------------------------
     "dedup_minhash_capped" -> QueryDef(
       (s, dir) => minhashPairsCappedOf(Tables.load(s, dir, "documents"))
         .transform(graft.Sorted.byNames(_, "doc_a", "doc_b")),
       s"""WITH $duckSigCtes,
          |$duckBandsCte,
          |${duckCappedCandCte()}
-         |SELECT doc_a, doc_b,
-         |  CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         |   / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS jaccard
-         |FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-         |WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         |   / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8
-         |ORDER BY doc_a, doc_b""".stripMargin),
+         |$duckJaccardSelect""".stripMargin),
 
     // ---- LSH bucket-load profiler: the "know before you pay" diagnostic
     // for the pair emitter. bandedCandidates' in-bucket self-join is
@@ -785,9 +786,7 @@ object Dedup {
          |$duckBandsCte,
          |$duckCandCte,
          |dup AS (SELECT DISTINCT doc_b AS doc_id
-         |  FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-         |  WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         |     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8)
+         |  ${duckVerified("  ", "     ")})
          |SELECT d.doc_id, CAST(dup.doc_id IS NULL AS INT) AS keep
          |FROM documents d LEFT JOIN dup ON d.doc_id = dup.doc_id
          |ORDER BY d.doc_id""".stripMargin),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.Portable.P
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -121,6 +122,43 @@ object Multimodal {
     * byte[k mod len] — which the DuckDB oracle replays independently, so
     * the decoded width/height/pixel checksum verify the full container
     * round trip, not just the arithmetic. */
+  /** One decoded pixel's R, G, B channel values folded into `acc`
+    * (polynomial base 31 mod P) — the pixel checksum step every codec
+    * and the oracles' byte replays share. */
+  private def mixRgb(acc: Long, rgb: Int): Long = {
+    val r = (acc * 31 + ((rgb >> 16) & 0xff)) % P
+    val g = (r * 31 + ((rgb >> 8) & 0xff)) % P
+    (g * 31 + (rgb & 0xff)) % P
+  }
+
+  /** [[mixRgb]] over every pixel of `img`, row-major from `acc`. */
+  private def foldRgb(acc: Long, img: java.awt.image.BufferedImage): Long = {
+    var a = acc
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) { a = mixRgb(a, img.getRGB(x, y)); x += 1 }
+      y += 1
+    }
+    a
+  }
+
+  /** Adds `img`'s R, G, B channel values to the 16-bin (v / 16) `hist`. */
+  private def histRgb(hist: Array[Double], img: java.awt.image.BufferedImage): Unit = {
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val rgb = img.getRGB(x, y)
+        hist(((rgb >> 16) & 0xff) / 16) += 1.0
+        hist(((rgb >> 8) & 0xff) / 16) += 1.0
+        hist((rgb & 0xff) / 16) += 1.0
+        x += 1
+      }
+      y += 1
+    }
+  }
+
   object BmpCodec {
     // ImageIO.read(InputStream) defaults to a DISK-cached
     // ImageInputStream (useCache = true): every decode writes a temp
@@ -132,7 +170,6 @@ object Multimodal {
     // already in memory; cache them in memory. JVM-global, idempotent,
     // runs once per executor JVM at codec class-load.
     javax.imageio.ImageIO.setUseCache(false)
-    private val MOD = 1000000007L
 
     /** Deterministic image dimensions from doc_id (4..16 x 4..14). */
     def dims(docId: Long): (Int, Int) =
@@ -219,21 +256,8 @@ object Multimodal {
       * fold over decoded R,G,B channel values in row-major scan order. */
     def decodeMeta(r: MediaRow): MediaMeta = {
       val img = decode(r)
-      var acc = 0L
-      var y = 0
-      while (y < img.getHeight) {
-        var x = 0
-        while (x < img.getWidth) {
-          val rgb = img.getRGB(x, y)
-          acc = (acc * 31 + ((rgb >> 16) & 0xff)) % MOD
-          acc = (acc * 31 + ((rgb >> 8) & 0xff)) % MOD
-          acc = (acc * 31 + (rgb & 0xff)) % MOD
-          x += 1
-        }
-        y += 1
-      }
       MediaMeta(r.doc_id, r.media_type, r.content.length,
-        img.getWidth, img.getHeight, duration_ms = 0L, checksum = acc)
+        img.getWidth, img.getHeight, duration_ms = 0L, checksum = foldRgb(0L, img))
     }
 
     /** REAL nearest-neighbor resize to t x t over the decoded raster:
@@ -250,10 +274,7 @@ object Multimodal {
         var x = 0
         while (x < t) {
           val sx = x * sw / t
-          val rgb = img.getRGB(sx, sy)
-          acc = (acc * 31 + ((rgb >> 16) & 0xff)) % MOD
-          acc = (acc * 31 + ((rgb >> 8) & 0xff)) % MOD
-          acc = (acc * 31 + (rgb & 0xff)) % MOD
+          acc = mixRgb(acc, img.getRGB(sx, sy))
           x += 1
         }
         y += 1
@@ -266,18 +287,7 @@ object Multimodal {
     def decodeFeatures(r: MediaRow): MediaFeatures = {
       val img = decode(r)
       val hist = new Array[Double](16)
-      var y = 0
-      while (y < img.getHeight) {
-        var x = 0
-        while (x < img.getWidth) {
-          val rgb = img.getRGB(x, y)
-          hist(((rgb >> 16) & 0xff) / 16) += 1.0
-          hist(((rgb >> 8) & 0xff) / 16) += 1.0
-          hist((rgb & 0xff) / 16) += 1.0
-          x += 1
-        }
-        y += 1
-      }
+      histRgb(hist, img)
       val n = img.getWidth * img.getHeight * 3
       MediaFeatures(r.doc_id, hist.map(_ / n))
     }
@@ -292,7 +302,6 @@ object Multimodal {
     * and a bug anywhere in the header/endianness/sample-assembly path
     * breaks the hash compare. */
   object WavCodec {
-    private val MOD = 1000000007L
     val SampleRate = 8000
 
     def sampleFn(text: Array[Byte]): Int => Int =
@@ -346,7 +355,7 @@ object Multimodal {
       val (s, rate) = readSamples(r)
       var acc = 0L
       var i = 0
-      while (i < s.length) { acc = (acc * 31 + (s(i) + 32768)) % MOD; i += 1 }
+      while (i < s.length) { acc = (acc * 31 + (s(i) + 32768)) % P; i += 1 }
       MediaMeta(r.doc_id, r.media_type, r.content.length, width = 0, height = 0,
         duration_ms = s.length.toLong * 1000L / rate, checksum = acc)
     }
@@ -377,7 +386,6 @@ object Multimodal {
     // same in-memory ImageInputStream posture as BmpCodec (per-frame
     // ImageIO decodes would otherwise write a temp file EACH)
     javax.imageio.ImageIO.setUseCache(false)
-    private val MOD = 1000000007L
     val Fps = 5
 
     def frameCount(docId: Long): Int = (2 + docId % 4).toInt
@@ -549,43 +557,14 @@ object Multimodal {
 
     /** Per-frame checksum: polynomial fold over one decoded frame's R,G,B
       * channels in row-major scan order (acc reset per frame). */
-    def frameChecksum(img: java.awt.image.BufferedImage): Long = {
-      var acc = 0L
-      var y = 0
-      while (y < img.getHeight) {
-        var x = 0
-        while (x < img.getWidth) {
-          val rgb = img.getRGB(x, y)
-          acc = (acc * 31 + ((rgb >> 16) & 0xff)) % MOD
-          acc = (acc * 31 + ((rgb >> 8) & 0xff)) % MOD
-          acc = (acc * 31 + (rgb & 0xff)) % MOD
-          x += 1
-        }
-        y += 1
-      }
-      acc
-    }
+    def frameChecksum(img: java.awt.image.BufferedImage): Long = foldRgb(0L, img)
 
     /** width/height from the stream header, duration from frame count and
       * strh timing, checksum = polynomial fold over every frame's decoded
       * R,G,B channels in frame order, row-major scan order. */
     def decodeMeta(r: MediaRow): MediaMeta = {
       val s = parseAvi(r)
-      var acc = 0L
-      s.frames.foreach { img =>
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val rgb = img.getRGB(x, y)
-            acc = (acc * 31 + ((rgb >> 16) & 0xff)) % MOD
-            acc = (acc * 31 + ((rgb >> 8) & 0xff)) % MOD
-            acc = (acc * 31 + (rgb & 0xff)) % MOD
-            x += 1
-          }
-          y += 1
-        }
-      }
+      val acc = s.frames.foldLeft(0L)(foldRgb)
       MediaMeta(r.doc_id, r.media_type, r.content.length, s.width, s.height,
         duration_ms = s.frames.length.toLong * 1000L * s.scale / s.rate, checksum = acc)
     }
@@ -595,20 +574,7 @@ object Multimodal {
     def decodeFeatures(r: MediaRow): MediaFeatures = {
       val s = parseAvi(r)
       val hist = new Array[Double](16)
-      s.frames.foreach { img =>
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val rgb = img.getRGB(x, y)
-            hist(((rgb >> 16) & 0xff) / 16) += 1.0
-            hist(((rgb >> 8) & 0xff) / 16) += 1.0
-            hist((rgb & 0xff) / 16) += 1.0
-            x += 1
-          }
-          y += 1
-        }
-      }
+      s.frames.foreach(histRgb(hist, _))
       val n = math.max(s.frames.length * s.width * s.height * 3, 1)
       MediaFeatures(r.doc_id, hist.map(_ / n))
     }
@@ -767,7 +733,7 @@ object Multimodal {
       var outLen = 0
       var i = 0
       while (i < n) {
-        h = (h * 31 + (r.content(i) & 0xff)) % 1000000007L
+        h = (h * 31 + (r.content(i) & 0xff)) % P
         outLen += 1
         i += stride
       }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.Portable
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -154,38 +154,31 @@ object Retrieval {
             (col("pos") + 1).cast("int").as("rank"), col("t._1").as("rrf"))
           .orderBy("q_id", "rank")
       },
-      {
-        val dot =
-          "list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, 65), i -> (q_emb[i] * embedding[i])::DOUBLE)), (a, b) -> a + b)"
-        val qn =
-          "list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, 65), i -> (q_emb[i] * q_emb[i])::DOUBLE)), (a, b) -> a + b)"
-        val en =
-          "list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, 65), i -> (embedding[i] * embedding[i])::DOUBLE)), (a, b) -> a + b)"
-        s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-           |scored AS (
-           |  SELECT q_id, vec_id,
-           |    $dot / (sqrt($qn) * sqrt($en)) AS cosine, $dot AS dot
-           |  FROM q JOIN embeddings ON vec_id != q_id),
-           |ra AS (SELECT q_id, vec_id, rank_a FROM (
-           |  SELECT q_id, vec_id,
-           |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rank_a
-           |  FROM scored WHERE NOT coalesce(isnan(cosine), TRUE)) WHERE rank_a <= 20),
-           |rb AS (SELECT q_id, vec_id, rank_b FROM (
-           |  SELECT q_id, vec_id,
-           |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot DESC, vec_id) AS rank_b
-           |  FROM scored WHERE NOT coalesce(isnan(dot), TRUE)) WHERE rank_b <= 20),
-           |fused AS (
-           |  SELECT COALESCE(ra.q_id, rb.q_id) AS q_id,
-           |    COALESCE(ra.vec_id, rb.vec_id) AS vec_id,
-           |    COALESCE(1.0::DOUBLE / (60.0::DOUBLE + CAST(rank_a AS DOUBLE)), 0.0::DOUBLE)
-           |      + COALESCE(1.0::DOUBLE / (60.0::DOUBLE + CAST(rank_b AS DOUBLE)), 0.0::DOUBLE) AS rrf
-           |  FROM ra FULL JOIN rb ON ra.q_id = rb.q_id AND ra.vec_id = rb.vec_id)
-           |SELECT q_id, vec_id, rank, rrf FROM (
-           |  SELECT q_id, vec_id,
-           |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY rrf DESC, vec_id) AS INT) AS rank,
-           |    rrf
-           |  FROM fused) WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
-      }),
+      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
+         |scored AS (
+         |  SELECT q_id, vec_id,
+         |    ${Portable.duckCosSql("q_emb", "embedding")} AS cosine,
+         |    ${Portable.duckDotSql("q_emb", "embedding")} AS dot
+         |  FROM q JOIN embeddings ON vec_id != q_id),
+         |ra AS (SELECT q_id, vec_id, rank_a FROM (
+         |  SELECT q_id, vec_id,
+         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rank_a
+         |  FROM scored WHERE NOT coalesce(isnan(cosine), TRUE)) WHERE rank_a <= 20),
+         |rb AS (SELECT q_id, vec_id, rank_b FROM (
+         |  SELECT q_id, vec_id,
+         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot DESC, vec_id) AS rank_b
+         |  FROM scored WHERE NOT coalesce(isnan(dot), TRUE)) WHERE rank_b <= 20),
+         |fused AS (
+         |  SELECT COALESCE(ra.q_id, rb.q_id) AS q_id,
+         |    COALESCE(ra.vec_id, rb.vec_id) AS vec_id,
+         |    COALESCE(1.0::DOUBLE / (60.0::DOUBLE + CAST(rank_a AS DOUBLE)), 0.0::DOUBLE)
+         |      + COALESCE(1.0::DOUBLE / (60.0::DOUBLE + CAST(rank_b AS DOUBLE)), 0.0::DOUBLE) AS rrf
+         |  FROM ra FULL JOIN rb ON ra.q_id = rb.q_id AND ra.vec_id = rb.vec_id)
+         |SELECT q_id, vec_id, rank, rrf FROM (
+         |  SELECT q_id, vec_id,
+         |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY rrf DESC, vec_id) AS INT) AS rank,
+         |    rrf
+         |  FROM fused) WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin),
 
     // ---- NDCG@10 ranking-quality eval ---------------------------------------
     // ann_recall_report grades set overlap; rank_fusion merges rankings;
@@ -204,66 +197,18 @@ object Retrieval {
     // bounded folds; the 30-row ranked set broadcasts back for grades;
     // every NDCG stage after runs on the result-list domain. -----------------
     "ndcg_eval" -> QueryDef(
-      (s, dir) => {
-        val topk = udaf(new graft.functions.TopK(10),
-          Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong))
-        val slim = Tables.load(s, dir, "documents")
-          .selectExpr("doc_id", s"${Portable.tokensSql("text")} AS toks")
-          .selectExpr("doc_id",
-            "size(filter(toks, t -> t = 'spark')) AS tfs",
-            "size(filter(toks, t -> t = 'join')) AS tfj",
-            "size(filter(toks, t -> t = 'window')) AS tfw")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // NaN scores are dropped by the TopK buffer: tf = 0 docs never rank
-        def sc(tf: String) =
-          expr(s"IF($tf > 0, CAST($tf AS DOUBLE), CAST('NaN' AS DOUBLE))")
-        // persisted: the 1-row TopK frame feeds three union branches AND
-        // the grade join — without this the corpus fold re-executes per
-        // consumer (the mad_outliers median-frame rule)
-        val tops = slim.agg(
-          topk(sc("tfs"), col("doc_id")).as("ts"),
-          topk(sc("tfj"), col("doc_id")).as("tj"),
-          topk(sc("tfw"), col("doc_id")).as("tw"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val ranked = Seq(("spark", "ts"), ("join", "tj"), ("window", "tw"))
-          .map { case (q, c) => tops
-            .select(lit(q).as("qid"), posexplode(col(c)).as(Seq("pos", "t")))
-            .selectExpr("qid", "pos + 1 AS rank", "t._2 AS doc_id") }
-          .reduce(_ union _)
-        val graded = slim.join(broadcast(ranked), "doc_id")
-          .selectExpr("qid", "rank",
-            """CAST(CASE qid WHEN 'spark' THEN least(3, tfj)
-              |     WHEN 'join' THEN least(3, tfw)
-              |     ELSE least(3, tfs) END AS BIGINT) AS rel""".stripMargin)
-        ndcgAt(graded, 10)
-      }, {
-        def tf(t: String) = s"len(list_filter(toks, x -> x = '$t'))"
-        s"""WITH tf AS (SELECT doc_id, ${tf("spark")} AS tfs,
-           |    ${tf("join")} AS tfj, ${tf("window")} AS tfw
-           |  FROM (SELECT doc_id, ${Portable.duckToksSql("text")} AS toks
-           |        FROM documents)),
-           |q AS (SELECT * FROM (VALUES ('spark'), ('join'), ('window')) v(qid)),
-           |sc AS (SELECT qid, doc_id,
-           |    CASE qid WHEN 'spark' THEN tfs WHEN 'join' THEN tfj ELSE tfw END AS tf,
-           |    CASE qid WHEN 'spark' THEN LEAST(3, tfj)
-           |         WHEN 'join' THEN LEAST(3, tfw)
-           |         ELSE LEAST(3, tfs) END AS rel
-           |  FROM q CROSS JOIN tf),
-           |rk AS (SELECT qid, rel, ROW_NUMBER() OVER (PARTITION BY qid
-           |    ORDER BY tf DESC, doc_id) AS rank
-           |  FROM sc WHERE tf > 0),
-           |top AS (SELECT * FROM rk WHERE rank <= 10),
-           |dc AS (SELECT qid, SUM(rel * ${ndcgDiscCase("rank")})::BIGINT AS dcg
-           |  FROM top GROUP BY 1),
-           |ir AS (SELECT qid, rel, ROW_NUMBER() OVER (PARTITION BY qid
-           |    ORDER BY rel DESC, rank) AS irank FROM top),
-           |ic AS (SELECT qid, SUM(rel * ${ndcgDiscCase("irank")})::BIGINT AS idcg
-           |  FROM ir GROUP BY 1)
-           |SELECT dc.qid, dcg AS dcg_scaled, idcg AS idcg_scaled,
-           |  CASE WHEN idcg = 0 THEN 0
-           |       ELSE CAST(dcg::HUGEINT * 1000000 // idcg AS BIGINT) END AS ndcg_ppm
-           |FROM dc JOIN ic USING (qid) ORDER BY qid""".stripMargin
-      }),
+      (s, dir) => ndcgAt(rankedByTermTf(s, dir, tf => s"least(3, $tf)"), 10),
+      s"""WITH ${duckRankedByTermTf(tf => s"LEAST(3, $tf)")},
+         |dc AS (SELECT qid, SUM(rel * ${ndcgDiscCase("rank")})::BIGINT AS dcg
+         |  FROM top GROUP BY 1),
+         |ir AS (SELECT qid, rel, ROW_NUMBER() OVER (PARTITION BY qid
+         |    ORDER BY rel DESC, rank) AS irank FROM top),
+         |ic AS (SELECT qid, SUM(rel * ${ndcgDiscCase("irank")})::BIGINT AS idcg
+         |  FROM ir GROUP BY 1)
+         |SELECT dc.qid, dcg AS dcg_scaled, idcg AS idcg_scaled,
+         |  CASE WHEN idcg = 0 THEN 0
+         |       ELSE CAST(dcg::HUGEINT * 1000000 // idcg AS BIGINT) END AS ndcg_ppm
+         |FROM dc JOIN ic USING (qid) ORDER BY qid""".stripMargin),
 
     // ---- MAP / MRR ranking eval ---------------------------------------------
     // ndcg_eval grades GRADED relevance; average precision and
@@ -277,68 +222,81 @@ object Retrieval {
     // binarized at co-topic tf > 0; every stage after the ranking runs
     // on the result-list domain. -----------------------------------------
     "map_eval" -> QueryDef(
-      (s, dir) => {
-        val topk = udaf(new graft.functions.TopK(10),
-          Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong))
-        val slim = Tables.load(s, dir, "documents")
-          .selectExpr("doc_id", s"${Portable.tokensSql("text")} AS toks")
-          .selectExpr("doc_id",
-            "size(filter(toks, t -> t = 'spark')) AS tfs",
-            "size(filter(toks, t -> t = 'join')) AS tfj",
-            "size(filter(toks, t -> t = 'window')) AS tfw")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        def sc(tf: String) =
-          expr(s"IF($tf > 0, CAST($tf AS DOUBLE), CAST('NaN' AS DOUBLE))")
-        // persisted: the 1-row TopK frame feeds three union branches AND
-        // the grade join — without this the corpus fold re-executes per
-        // consumer (the mad_outliers median-frame rule)
-        val tops = slim.agg(
-          topk(sc("tfs"), col("doc_id")).as("ts"),
-          topk(sc("tfj"), col("doc_id")).as("tj"),
-          topk(sc("tfw"), col("doc_id")).as("tw"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val ranked = Seq(("spark", "ts"), ("join", "tj"), ("window", "tw"))
-          .map { case (q, c) => tops
-            .select(lit(q).as("qid"), posexplode(col(c)).as(Seq("pos", "t")))
-            .selectExpr("qid", "pos + 1 AS rank", "t._2 AS doc_id") }
-          .reduce(_ union _)
-        val graded = slim.join(broadcast(ranked), "doc_id")
-          .selectExpr("qid", "rank",
-            """CAST(CASE qid WHEN 'spark' THEN CAST(tfj > 0 AS INT)
-              |     WHEN 'join' THEN CAST(tfw > 0 AS INT)
-              |     ELSE CAST(tfs > 0 AS INT) END AS BIGINT) AS rel""".stripMargin)
-        avgPrecisionAt(graded, 10)
-      }, {
-        def tf(t: String) = s"len(list_filter(toks, x -> x = '$t'))"
-        s"""WITH tf AS (SELECT doc_id, ${tf("spark")} AS tfs,
-           |    ${tf("join")} AS tfj, ${tf("window")} AS tfw
-           |  FROM (SELECT doc_id, ${Portable.duckToksSql("text")} AS toks
-           |        FROM documents)),
-           |q AS (SELECT * FROM (VALUES ('spark'), ('join'), ('window')) v(qid)),
-           |sc AS (SELECT qid, doc_id,
-           |    CASE qid WHEN 'spark' THEN tfs WHEN 'join' THEN tfj ELSE tfw END AS tf,
-           |    CASE qid WHEN 'spark' THEN CAST(tfj > 0 AS BIGINT)
-           |         WHEN 'join' THEN CAST(tfw > 0 AS BIGINT)
-           |         ELSE CAST(tfs > 0 AS BIGINT) END AS rel
-           |  FROM q CROSS JOIN tf),
-           |rk AS (SELECT qid, rel, ROW_NUMBER() OVER (PARTITION BY qid
-           |    ORDER BY tf DESC, doc_id) AS rank
-           |  FROM sc WHERE tf > 0),
-           |top AS (SELECT * FROM rk WHERE rank <= 10),
-           |ch AS (SELECT qid, rank, rel,
-           |    SUM(rel) OVER (PARTITION BY qid ORDER BY rank
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cumhits
-           |  FROM top)
-           |SELECT qid, COUNT(*)::BIGINT AS n_ranked,
-           |  SUM(rel)::BIGINT AS n_rel,
-           |  CASE WHEN SUM(rel) = 0 THEN 0
-           |       ELSE SUM(CASE WHEN rel > 0 THEN cumhits * 1000000 // rank
-           |                ELSE 0 END) // SUM(rel) END::BIGINT AS ap_ppm,
-           |  COALESCE(1000000 // MIN(CASE WHEN rel > 0 THEN rank END), 0)::BIGINT
-           |    AS rr_ppm
-           |FROM ch GROUP BY qid ORDER BY qid""".stripMargin
-      })
+      (s, dir) => avgPrecisionAt(rankedByTermTf(s, dir, tf => s"CAST($tf > 0 AS INT)"), 10),
+      s"""WITH ${duckRankedByTermTf(tf => s"CAST($tf > 0 AS BIGINT)")},
+         |ch AS (SELECT qid, rank, rel,
+         |    SUM(rel) OVER (PARTITION BY qid ORDER BY rank
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cumhits
+         |  FROM top)
+         |SELECT qid, COUNT(*)::BIGINT AS n_ranked,
+         |  SUM(rel)::BIGINT AS n_rel,
+         |  CASE WHEN SUM(rel) = 0 THEN 0
+         |       ELSE SUM(CASE WHEN rel > 0 THEN cumhits * 1000000 // rank
+         |                ELSE 0 END) // SUM(rel) END::BIGINT AS ap_ppm,
+         |  COALESCE(1000000 // MIN(CASE WHEN rel > 0 THEN rank END), 0)::BIGINT
+         |    AS rr_ppm
+         |FROM ch GROUP BY qid ORDER BY qid""".stripMargin)
   )
+
+  /** The graded ranked-list fixture of ndcg_eval and map_eval: three
+    * term queries ranked by exact term frequency through one bounded
+    * TopK(10) fold each (never a corpus rank window; tf = 0 docs score
+    * NaN and never rank), every ranked doc graded by `grade` of the
+    * CO-TOPIC term's tf (spark↔join, join↔window, window↔spark) →
+    * `(qid, rank, rel)`. One tokenize pass feeds all three tf columns
+    * and folds; the 30-row ranked set broadcasts back for grades. */
+  private def rankedByTermTf(s: SparkSession, dir: String,
+      grade: String => String): DataFrame = {
+    val topk = topkUdaf(10)
+    val slim = Tables.load(s, dir, "documents")
+      .selectExpr("doc_id", s"${Portable.tokensSql("text")} AS toks")
+      .selectExpr("doc_id",
+        "size(filter(toks, t -> t = 'spark')) AS tfs",
+        "size(filter(toks, t -> t = 'join')) AS tfj",
+        "size(filter(toks, t -> t = 'window')) AS tfw")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    def sc(tf: String) =
+      expr(s"IF($tf > 0, CAST($tf AS DOUBLE), CAST('NaN' AS DOUBLE))")
+    // persisted: the 1-row TopK frame feeds three union branches AND
+    // the grade join — without this the corpus fold re-executes per
+    // consumer (the mad_outliers median-frame rule)
+    val tops = slim.agg(
+      topk(sc("tfs"), col("doc_id")).as("ts"),
+      topk(sc("tfj"), col("doc_id")).as("tj"),
+      topk(sc("tfw"), col("doc_id")).as("tw"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ranked = Seq(("spark", "ts"), ("join", "tj"), ("window", "tw"))
+      .map { case (q, c) => tops
+        .select(lit(q).as("qid"), posexplode(col(c)).as(Seq("pos", "t")))
+        .selectExpr("qid", "pos + 1 AS rank", "t._2 AS doc_id") }
+      .reduce(_ union _)
+    slim.join(broadcast(ranked), "doc_id")
+      .selectExpr("qid", "rank",
+        s"""CAST(CASE qid WHEN 'spark' THEN ${grade("tfj")}
+           |     WHEN 'join' THEN ${grade("tfw")}
+           |     ELSE ${grade("tfs")} END AS BIGINT) AS rel""".stripMargin)
+  }
+
+  /** The DuckDB twin of [[rankedByTermTf]]: CTEs `tf, q, sc, rk, top`,
+    * ending in `top(qid, rel, rank)`. */
+  private def duckRankedByTermTf(grade: String => String): String = {
+    def tf(t: String) = s"len(list_filter(toks, x -> x = '$t'))"
+    s"""tf AS (SELECT doc_id, ${tf("spark")} AS tfs,
+       |    ${tf("join")} AS tfj, ${tf("window")} AS tfw
+       |  FROM (SELECT doc_id, $duckToks AS toks
+       |        FROM documents)),
+       |q AS (SELECT * FROM (VALUES ('spark'), ('join'), ('window')) v(qid)),
+       |sc AS (SELECT qid, doc_id,
+       |    CASE qid WHEN 'spark' THEN tfs WHEN 'join' THEN tfj ELSE tfw END AS tf,
+       |    CASE qid WHEN 'spark' THEN ${grade("tfj")}
+       |         WHEN 'join' THEN ${grade("tfw")}
+       |         ELSE ${grade("tfs")} END AS rel
+       |  FROM q CROSS JOIN tf),
+       |rk AS (SELECT qid, rel, ROW_NUMBER() OVER (PARTITION BY qid
+       |    ORDER BY tf DESC, doc_id) AS rank
+       |  FROM sc WHERE tf > 0),
+       |top AS (SELECT * FROM rk WHERE rank <= 10)""".stripMargin
+  }
 
   /** 1/log2(rank+1) discount, ppm — log2 is transcendental, so these are
     * the published constants rounded offline (the Benford discipline),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.Portable.{duckCosSql, duckDotSql}
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -26,19 +27,6 @@ object Similarity {
   private val eNormSql =
     "aggregate(transform(embedding, x -> double(x * x)), double(0), (a, b) -> a + b)"
 
-  /** DuckDB cosine between two named float-array columns — the same
-    * float-multiply / double-accumulate parity contract as graft_cosine.
-    * Dimension comes from len() of the first column, NOT a hard-coded 64:
-    * a fixture regenerated at another dim must move both engines together
-    * (graft_cosine already adapts; a mismatched pair is NaN there and a
-    * NULL-poisoned reduce here — both dropped by the ranked-CTE NaN/NULL
-    * guard below). */
-  private def duckCos(a: String, b: String): String = {
-    def dot(x: String, y: String) =
-      s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, len($x) + 1), i -> ($x[i] * $y[i])::DOUBLE)), (u, v) -> u + v)"
-    s"${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)}))"
-  }
-
   /** DuckDB replay of [[kmeansAssign]] at the fixture's (k = 4 seeds,
     * 2 Lloyd rounds): the WITH-clause body ending in
     * `af(vec_id, cell, sim)` — the final assignment under the
@@ -49,7 +37,7 @@ object Similarity {
     * be editable in one place). */
   private lazy val duckKmeansAf: String = {
     def round(cin: String, n: Int): String = {
-      s"""s$n AS (SELECT e.vec_id, c.c_id, coalesce(${duckCos("c_emb", "embedding")}, -2.0) AS sim
+      s"""s$n AS (SELECT e.vec_id, c.c_id, coalesce(${duckCosSql("c_emb", "embedding")}, -2.0) AS sim
          |  FROM embeddings e CROSS JOIN $cin c),
          |a$n AS (SELECT vec_id, c_id AS cell FROM (
          |    SELECT vec_id, c_id,
@@ -70,7 +58,7 @@ object Similarity {
        |  FROM embeddings WHERE vec_id < 4),
        |${round("c0", 0)},
        |${round("c1", 1)},
-       |sf AS (SELECT e.vec_id, c.c_id, coalesce(${duckCos("c_emb", "embedding")}, -2.0) AS sim
+       |sf AS (SELECT e.vec_id, c.c_id, coalesce(${duckCosSql("c_emb", "embedding")}, -2.0) AS sim
        |  FROM embeddings e CROSS JOIN c2 c),
        |af AS (SELECT vec_id, c_id AS cell, sim FROM (
        |    SELECT vec_id, c_id, sim,
@@ -78,12 +66,53 @@ object Similarity {
        |    FROM sf) WHERE rn = 1)""".stripMargin
   }
 
-  private val duckDot =
-    "list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, len(q_emb) + 1), i -> (q_emb[i] * embedding[i])::DOUBLE)), (a, b) -> a + b)"
-  private val duckQNorm =
-    "list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, len(q_emb) + 1), i -> (q_emb[i] * q_emb[i])::DOUBLE)), (a, b) -> a + b)"
-  private val duckENorm =
-    "list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, len(embedding) + 1), i -> (embedding[i] * embedding[i])::DOUBLE)), (a, b) -> a + b)"
+  /** The DuckDB twin of [[assignCells]] at the fixture's k = 4: `cents`
+    * are the first four vectors, `sc` scores every vector against them
+    * (-2 zero-norm sentinel), `asg` keeps the argmax with ties to the
+    * smaller c_id. ONE definition for the IVF family's oracles. */
+  private val duckAsg: String =
+    s"""cents AS (SELECT vec_id AS c_id, embedding AS c_emb
+       |  FROM embeddings WHERE vec_id < 4),
+       |sc AS (SELECT e.vec_id, c.c_id,
+       |    coalesce(${duckCosSql("c_emb", "embedding")}, -2.0) AS sim
+       |  FROM embeddings e CROSS JOIN cents c),
+       |asg AS (SELECT vec_id, c_id AS cell FROM (
+       |    SELECT vec_id, c_id,
+       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
+       |    FROM sc) WHERE rn = 1)""".stripMargin
+
+  /** Each of the 8 query vectors' two nearest cells over [[duckAsg]]'s
+    * `sc` — the oracle twin of [[probeCells]] at nprobe = 2. */
+  private val duckProbes: String =
+    """probes AS (SELECT vec_id AS q_id, c_id AS probe_cell FROM (
+      |    SELECT vec_id, c_id,
+      |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
+      |    FROM sc WHERE vec_id < 8) WHERE rn <= 2)""".stripMargin
+
+  /** The DuckDB twin of [[inCellPairs]] over [[duckAsg]]'s cells:
+    * every ordered in-cell pair with both labels and its cosine. */
+  private val duckInCellPairs: String =
+    s"""ce AS (SELECT e.vec_id, e.label, e.embedding, a.cell
+       |  FROM embeddings e JOIN asg a USING (vec_id)),
+       |pairs AS (SELECT a.vec_id AS q_id, a.label, b.vec_id, b.label AS nb_label,
+       |    ${duckCosSql("a.embedding", "b.embedding")} AS cosine
+       |  FROM ce a JOIN ce b ON a.cell = b.cell AND a.vec_id != b.vec_id)""".stripMargin
+
+  /** The 12-plane SRP signature and its 4 × 3 band keys — the DuckDB
+    * replay of [[srpBands]] at the fixture's demo point, shared by the
+    * SRP-banded oracles. */
+  private val duckSrpBands: String =
+    """signed AS (
+      |  SELECT vec_id, embedding,
+      |    list_transform(range(0, 12), j ->
+      |      CASE WHEN list_reduce(list_prepend(0.0::DOUBLE,
+      |        list_transform(range(1, 65),
+      |          i -> embedding[i]::DOUBLE * (((i * 1103 + j * 907) % 2001 - 1000)::DOUBLE / 1000.0))),
+      |        (a, b) -> a + b) >= 0 THEN 1 ELSE 0 END) AS sg
+      |  FROM embeddings),
+      |bands AS (SELECT vec_id, b.band AS band,
+      |    sg[b.band * 3 + 1] * 4 + sg[b.band * 3 + 2] * 2 + sg[b.band * 3 + 3] AS key
+      |  FROM signed, (SELECT unnest(range(0, 4)) AS band) b)""".stripMargin
 
   /** The oracle-side mirror of [[graft.functions.TopK]]'s NaN drop: a
     * zero-norm vector's cosine is 0/0 = NaN, which BOTH engines order
@@ -93,6 +122,51 @@ object Similarity {
     * degenerate vector. NULL (length-mismatch poisoning, null embedding)
     * falls out of the same predicate. */
   private val duckRankable = "NOT coalesce(isnan(cosine), TRUE)"
+
+  /** The PQ codebook of embedding_pq and ann_ivf_pq: vectors 0 and 1
+    * as the one-row `(e0, e1)` frame. */
+  private def pqCodebook(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 2)
+      .agg(max(when(col("vec_id") === 0, col("embedding"))).as("e0"),
+        max(when(col("vec_id") === 1, col("embedding"))).as("e1"))
+
+  /** Squared L2 of `embedding` to both codebook entries per subspace
+    * (4 × 16 dims, fixed fold order), named `<prefix><j>0` and
+    * `<prefix><j>1`; [[duckPqDists]] replays it. */
+  private def pqDists(prefix: String): Seq[String] = {
+    def dist(j: Int, c: String) =
+      s"""aggregate(sequence(1, 16), CAST(0 AS DOUBLE), (a, i) ->
+         |  a + (CAST(element_at(embedding, ${16 * j} + CAST(i AS INT)) AS DOUBLE)
+         |       - CAST(element_at($c, ${16 * j} + CAST(i AS INT)) AS DOUBLE))
+         |    * (CAST(element_at(embedding, ${16 * j} + CAST(i AS INT)) AS DOUBLE)
+         |       - CAST(element_at($c, ${16 * j} + CAST(i AS INT)) AS DOUBLE)))""".stripMargin
+    (0 until 4).flatMap(j =>
+      Seq(s"${dist(j, "e0")} AS $prefix${j}0", s"${dist(j, "e1")} AS $prefix${j}1"))
+  }
+
+  /** Nearest codebook entry per subspace over [[pqDists]]("d"). */
+  private val pqCodes: Seq[String] =
+    (0 until 4).map(j => s"CAST(IF(d${j}0 <= d${j}1, 0, 1) AS INT) AS code$j")
+
+  private val duckPqCb: String =
+    """cb AS (SELECT
+      |    (SELECT embedding FROM embeddings WHERE vec_id = 0) AS e0,
+      |    (SELECT embedding FROM embeddings WHERE vec_id = 1) AS e1)""".stripMargin
+
+  private def duckPqDists(prefix: String): String = {
+    def ddist(j: Int, c: String) =
+      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 17), i ->
+         |  (CAST(embedding[${16 * j} + i::INT] AS DOUBLE) - CAST($c[${16 * j} + i::INT] AS DOUBLE))
+         |  * (CAST(embedding[${16 * j} + i::INT] AS DOUBLE) - CAST($c[${16 * j} + i::INT] AS DOUBLE)))),
+         |  (a, b) -> a + b)""".stripMargin
+    (0 until 4).flatMap(j =>
+      Seq(s"${ddist(j, "e0")} AS $prefix${j}0", s"${ddist(j, "e1")} AS $prefix${j}1"))
+      .mkString(",\n")
+  }
+
+  private def duckPqCodes(sep: String): String = (0 until 4)
+    .map(j => s"CAST(CASE WHEN d${j}0 <= d${j}1 THEN 0 ELSE 1 END AS INT) AS code$j")
+    .mkString(sep)
 
   /** Scale-safe top-k per query via the bounded [[graft.functions.TopK]]
     * Aggregator: ONE partial+final aggregation — every map task reduces its
@@ -143,7 +217,7 @@ object Similarity {
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
          |scored AS (
          |  SELECT q_id, vec_id,
-         |    $duckDot / (sqrt($duckQNorm) * sqrt($duckENorm)) AS cosine
+         |    ${duckCosSql("q_emb", "embedding")} AS cosine
          |  FROM q JOIN embeddings ON vec_id != q_id),
          |ranked AS (
          |  SELECT q_id, vec_id, cosine,
@@ -171,7 +245,7 @@ object Similarity {
          |  FROM embeddings WHERE vec_id < 20),
          |scored AS (
          |  SELECT q_id, vec_id, label,
-         |    $duckDot / (sqrt($duckQNorm) * sqrt($duckENorm)) AS cosine
+         |    ${duckCosSql("q_emb", "embedding")} AS cosine
          |  FROM q JOIN embeddings ON label = q_label AND vec_id != q_id),
          |ranked AS (
          |  SELECT q_id, vec_id, label, cosine,
@@ -193,16 +267,8 @@ object Similarity {
       (s, dir) => {
         graft.functions.HashExpressions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
-        val cents = emb.filter(col("vec_id") < 4)
-          .selectExpr("vec_id AS c_id", "embedding AS c_emb")
-        // argmax cosine via max(struct(sim, -c_id)): equal sims pick the
-        // larger -c_id = smaller c_id, matching the oracle's (sim DESC,
-        // c_id ASC) row_number. Persisted slim: feeds queries AND candidates.
-        val assigned = emb.crossJoin(broadcast(cents))
-          .selectExpr("vec_id", "c_id", "nanvl(graft_cosine(c_emb, embedding), -2.0) AS sim")
-          .groupBy(col("vec_id"))
-          .agg(max(struct(col("sim"), (-col("c_id")).as("nc"))).as("m"))
-          .select(col("vec_id"), (-col("m.nc")).as("cell"))
+        // persisted slim: feeds queries AND candidates
+        val assigned = assignCells(emb, 4).select(col("vec_id"), col("cell"))
           .persist(StorageLevel.MEMORY_AND_DISK)
         val cellEmb = emb.join(assigned, "vec_id")
         val q = cellEmb.filter(col("vec_id") < 8)
@@ -215,21 +281,13 @@ object Similarity {
           .select(col("q_id"), col("cell"), col("vec_id"), col("rank"), col("cosine"))
           .orderBy("q_id", "rank")
       },
-      s"""WITH cents AS (SELECT vec_id AS c_id, embedding AS c_emb
-         |  FROM embeddings WHERE vec_id < 4),
-         |sc AS (SELECT e.vec_id, c.c_id,
-         |    coalesce(${duckCos("c_emb", "embedding")}, -2.0) AS sim
-         |  FROM embeddings e CROSS JOIN cents c),
-         |asg AS (SELECT vec_id, c_id AS cell FROM (
-         |    SELECT vec_id, c_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
-         |    FROM sc) WHERE rn = 1),
+      s"""WITH $duckAsg,
          |ce AS (SELECT e.vec_id, e.embedding, a.cell
          |  FROM embeddings e JOIN asg a USING (vec_id)),
          |q AS (SELECT vec_id AS q_id, cell AS q_cell, embedding AS q_emb
          |  FROM ce WHERE vec_id < 8),
          |scored AS (SELECT q_id, vec_id, cell,
-         |    ${duckCos("q_emb", "embedding")} AS cosine
+         |    ${duckCosSql("q_emb", "embedding")} AS cosine
          |  FROM q JOIN ce ON cell = q_cell AND vec_id != q_id),
          |ranked AS (SELECT q_id, cell, vec_id, cosine,
          |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rank
@@ -250,28 +308,17 @@ object Similarity {
       (s, dir) => {
         graft.functions.HashExpressions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
-        val cents = emb.filter(col("vec_id") < 4)
-          .selectExpr("vec_id AS c_id", "embedding AS c_emb")
-        def centSim(of: DataFrame): DataFrame = of.crossJoin(broadcast(cents))
-          .selectExpr("vec_id", "c_id", "nanvl(graft_cosine(c_emb, embedding), -2.0) AS sim")
+        val cents = seedCents(emb, 4)
         // persist the N-row ASSIGNMENT, not the 4N-row similarity frame:
         // assignment feeds both the cell join and the final cell re-attach,
         // while the probe ranking only needs the 8 query vectors' sims —
         // recomputing those 32 cosines is free, caching 4x the corpus to
         // share them is not (measured 1.9x vs the recorded median before
-        // this change). Same argmax expression both paths -> bit-identical.
-        val assigned = centSim(emb)
-          .groupBy(col("vec_id"))
-          .agg(max(struct(col("sim"), (-col("c_id")).as("nc"))).as("m"))
-          .select(col("vec_id"), (-col("m.nc")).as("cell"))
+        // this change). Same sim expression both paths -> bit-identical.
+        val assigned = scoreCells(emb, cents).select(col("vec_id"), col("cell"))
           .persist(StorageLevel.MEMORY_AND_DISK)
         val cellEmb = emb.join(assigned, "vec_id")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("c_id"))
-        val probes = centSim(emb.filter(col("vec_id") < 8))
-          .withColumn("probe", row_number().over(w))
-          .filter(col("probe") <= 2)
-          .selectExpr("vec_id AS q_id", "c_id AS probe_cell")
+        val probes = probeCells(emb.filter(col("vec_id") < 8), cents)
         val q = emb.filter(col("vec_id") < 8)
           .selectExpr("vec_id AS q_id", "embedding AS q_emb")
           .join(probes, "q_id")
@@ -284,25 +331,14 @@ object Similarity {
           .select(col("q_id"), col("cell"), col("vec_id"), col("rank"), col("cosine"))
           .orderBy("q_id", "rank")
       },
-      s"""WITH cents AS (SELECT vec_id AS c_id, embedding AS c_emb
-         |  FROM embeddings WHERE vec_id < 4),
-         |sc AS (SELECT e.vec_id, c.c_id,
-         |    coalesce(${duckCos("c_emb", "embedding")}, -2.0) AS sim
-         |  FROM embeddings e CROSS JOIN cents c),
-         |asg AS (SELECT vec_id, c_id AS cell FROM (
-         |    SELECT vec_id, c_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
-         |    FROM sc) WHERE rn = 1),
+      s"""WITH $duckAsg,
          |ce AS (SELECT e.vec_id, e.embedding, a.cell
          |  FROM embeddings e JOIN asg a USING (vec_id)),
-         |probes AS (SELECT vec_id AS q_id, c_id AS probe_cell FROM (
-         |    SELECT vec_id, c_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
-         |    FROM sc WHERE vec_id < 8) WHERE rn <= 2),
+         |$duckProbes,
          |q AS (SELECT e.vec_id AS q_id, p.probe_cell, e.embedding AS q_emb
          |  FROM embeddings e JOIN probes p ON p.q_id = e.vec_id),
          |scored AS (SELECT q_id, ce.vec_id, ce.cell,
-         |    ${duckCos("q_emb", "embedding")} AS cosine
+         |    ${duckCosSql("q_emb", "embedding")} AS cosine
          |  FROM q JOIN ce ON ce.cell = q.probe_cell AND ce.vec_id != q.q_id),
          |ranked AS (SELECT q_id, cell, vec_id, cosine,
          |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rank
@@ -317,22 +353,12 @@ object Similarity {
     // recall at a real 0.9 near-dup threshold with these bands is ~0.98.) --
     "dedup_embedding_cosine" -> QueryDef(
       (s, dir) => embeddingCosinePairs(Tables.load(s, dir, "embeddings")),
-      s"""WITH signed AS (
-         |  SELECT vec_id, embedding,
-         |    list_transform(range(0, 12), j ->
-         |      CASE WHEN list_reduce(list_prepend(0.0::DOUBLE,
-         |        list_transform(range(1, 65),
-         |          i -> embedding[i]::DOUBLE * (((i * 1103 + j * 907) % 2001 - 1000)::DOUBLE / 1000.0))),
-         |        (a, b) -> a + b) >= 0 THEN 1 ELSE 0 END) AS sg
-         |  FROM embeddings),
-         |bands AS (SELECT vec_id, b.band AS band,
-         |    sg[b.band * 3 + 1] * 4 + sg[b.band * 3 + 2] * 2 + sg[b.band * 3 + 3] AS key
-         |  FROM signed, (SELECT unnest(range(0, 4)) AS band) b),
+      s"""WITH $duckSrpBands,
          |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
          |  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id),
          |scored AS (
          |  SELECT id_a, id_b,
-         |    $duckDot / (sqrt($duckQNorm) * sqrt($duckENorm)) AS cosine
+         |    ${duckCosSql("q_emb", "embedding")} AS cosine
          |  FROM cand
          |  JOIN (SELECT vec_id AS id_a, embedding AS q_emb FROM embeddings) USING (id_a)
          |  JOIN (SELECT vec_id AS id_b, embedding FROM embeddings) USING (id_b))
@@ -352,8 +378,8 @@ object Similarity {
           .orderBy("label")
       },
       s"""SELECT label, COUNT(*) AS n,
-         |  MIN(sqrt($duckENorm)) AS min_norm,
-         |  MAX(sqrt($duckENorm)) AS max_norm
+         |  MIN(sqrt(${duckDotSql("embedding", "embedding")})) AS min_norm,
+         |  MAX(sqrt(${duckDotSql("embedding", "embedding")})) AS max_norm
          |FROM embeddings GROUP BY label ORDER BY label""".stripMargin),
 
     // ---- int8 symmetric quantization of embeddings — the storage/IO path
@@ -434,27 +460,19 @@ object Similarity {
           .selectExpr("q_id", "n_hits", "CAST(n_hits AS DOUBLE) / 3 AS recall_at_3")
           .orderBy("q_id")
       },
-      s"""WITH cents AS (SELECT vec_id AS c_id, embedding AS c_emb
-         |  FROM embeddings WHERE vec_id < 4),
-         |sc AS (SELECT e.vec_id, c.c_id,
-         |    coalesce(${duckCos("c_emb", "embedding")}, -2.0) AS sim
-         |  FROM embeddings e CROSS JOIN cents c),
-         |asg AS (SELECT vec_id, c_id AS cell FROM (
-         |    SELECT vec_id, c_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
-         |    FROM sc) WHERE rn = 1),
+      s"""WITH $duckAsg,
          |ce AS (SELECT e.vec_id, e.embedding, a.cell
          |  FROM embeddings e JOIN asg a USING (vec_id)),
          |q AS (SELECT vec_id AS q_id, cell AS q_cell, embedding AS q_emb
          |  FROM ce WHERE vec_id < 8),
-         |iscored AS (SELECT q_id, vec_id, ${duckCos("q_emb", "embedding")} AS cosine
+         |iscored AS (SELECT q_id, vec_id, ${duckCosSql("q_emb", "embedding")} AS cosine
          |  FROM q JOIN ce ON cell = q_cell AND vec_id != q_id),
          |ivf AS (SELECT q_id, vec_id FROM (
          |    SELECT q_id, vec_id,
          |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rank
          |    FROM iscored WHERE $duckRankable) WHERE rank <= 3),
          |tscored AS (SELECT q.q_id, e.vec_id,
-         |    ${duckCos("q_emb", "embedding")} AS cosine
+         |    ${duckCosSql("q_emb", "embedding")} AS cosine
          |  FROM q JOIN embeddings e ON e.vec_id != q.q_id),
          |truth AS (SELECT q_id, vec_id FROM (
          |    SELECT q_id, vec_id,
@@ -480,43 +498,21 @@ object Similarity {
     "embedding_pq" -> QueryDef(
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
-        val cb = emb.filter(col("vec_id") < 2)
-          .agg(max(when(col("vec_id") === 0, col("embedding"))).as("e0"),
-            max(when(col("vec_id") === 1, col("embedding"))).as("e1"))
-        def dist(j: Int, c: String) =
-          s"""aggregate(sequence(1, 16), CAST(0 AS DOUBLE), (a, i) ->
-             |  a + (CAST(element_at(embedding, ${16 * j} + CAST(i AS INT)) AS DOUBLE)
-             |       - CAST(element_at($c, ${16 * j} + CAST(i AS INT)) AS DOUBLE))
-             |    * (CAST(element_at(embedding, ${16 * j} + CAST(i AS INT)) AS DOUBLE)
-             |       - CAST(element_at($c, ${16 * j} + CAST(i AS INT)) AS DOUBLE)))""".stripMargin
-        val dists = (0 until 4).flatMap(j =>
-          Seq(s"${dist(j, "e0")} AS d${j}0", s"${dist(j, "e1")} AS d${j}1"))
-        emb.crossJoin(broadcast(cb))
-          .selectExpr(Seq("vec_id") ++ dists: _*)
-          .selectExpr(Seq("vec_id") ++
-            (0 until 4).map(j => s"CAST(IF(d${j}0 <= d${j}1, 0, 1) AS INT) AS code$j") ++
+        emb.crossJoin(broadcast(pqCodebook(emb)))
+          .selectExpr(Seq("vec_id") ++ pqDists("d"): _*)
+          .selectExpr(Seq("vec_id") ++ pqCodes ++
             Seq((0 until 4).map(j => s"IF(d${j}0 <= d${j}1, d${j}0, d${j}1)")
               .mkString("((", " + ", ")") + ") AS err"): _*)
           .transform(graft.Sorted.byNames(_, "vec_id"))
-      }, {
-        def ddist(j: Int, c: String) =
-          s"""list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 17), i ->
-             |  (CAST(embedding[${16 * j} + i::INT] AS DOUBLE) - CAST($c[${16 * j} + i::INT] AS DOUBLE))
-             |  * (CAST(embedding[${16 * j} + i::INT] AS DOUBLE) - CAST($c[${16 * j} + i::INT] AS DOUBLE)))),
-             |  (a, b) -> a + b)""".stripMargin
-        val dd = (0 until 4).flatMap(j =>
-          Seq(s"${ddist(j, "e0")} AS d${j}0", s"${ddist(j, "e1")} AS d${j}1")).mkString(",\n")
-        s"""WITH cb AS (SELECT
-           |    (SELECT embedding FROM embeddings WHERE vec_id = 0) AS e0,
-           |    (SELECT embedding FROM embeddings WHERE vec_id = 1) AS e1),
-           |d AS (SELECT vec_id,
-           |$dd
-           |  FROM embeddings, cb)
-           |SELECT vec_id,
-           |  ${(0 until 4).map(j => s"CAST(CASE WHEN d${j}0 <= d${j}1 THEN 0 ELSE 1 END AS INT) AS code$j").mkString(",\n  ")},
-           |  ((${(0 until 4).map(j => s"CASE WHEN d${j}0 <= d${j}1 THEN d${j}0 ELSE d${j}1 END").mkString(" + ")})) AS err
-           |FROM d ORDER BY vec_id""".stripMargin
-      }),
+      },
+      s"""WITH $duckPqCb,
+         |d AS (SELECT vec_id,
+         |${duckPqDists("d")}
+         |  FROM embeddings, cb)
+         |SELECT vec_id,
+         |  ${duckPqCodes(",\n  ")},
+         |  ((${(0 until 4).map(j => s"CASE WHEN d${j}0 <= d${j}1 THEN d${j}0 ELSE d${j}1 END").mkString(" + ")})) AS err
+         |FROM d ORDER BY vec_id""".stripMargin),
 
     // ---- IVF+PQ ADC search: the full 100 TB ANN index composed ------------
     // ann_ivf_nprobe's probes (top-2 cells per query) scanned with
@@ -537,45 +533,21 @@ object Similarity {
       (s, dir) => {
         graft.functions.HashExpressions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
-        val cents = emb.filter(col("vec_id") < 4)
-          .selectExpr("vec_id AS c_id", "embedding AS c_emb")
-        def centSim(of: DataFrame): DataFrame = of.crossJoin(broadcast(cents))
-          .selectExpr("vec_id", "c_id", "nanvl(graft_cosine(c_emb, embedding), -2.0) AS sim")
-        // rank-1 cell assignment — same argmax expression as ann_ivf_nprobe
-        val assigned = centSim(emb)
-          .groupBy(col("vec_id"))
-          .agg(max(struct(col("sim"), (-col("c_id")).as("nc"))).as("m"))
-          .select(col("vec_id"), (-col("m.nc")).as("cell"))
-        val cb = emb.filter(col("vec_id") < 2)
-          .agg(max(when(col("vec_id") === 0, col("embedding"))).as("e0"),
-            max(when(col("vec_id") === 1, col("embedding"))).as("e1"))
-        def dist(v: String, j: Int, c: String) =
-          s"""aggregate(sequence(1, 16), CAST(0 AS DOUBLE), (a, i) ->
-             |  a + (CAST(element_at($v, ${16 * j} + CAST(i AS INT)) AS DOUBLE)
-             |       - CAST(element_at($c, ${16 * j} + CAST(i AS INT)) AS DOUBLE))
-             |    * (CAST(element_at($v, ${16 * j} + CAST(i AS INT)) AS DOUBLE)
-             |       - CAST(element_at($c, ${16 * j} + CAST(i AS INT)) AS DOUBLE)))""".stripMargin
-        val dcols = (0 until 4).flatMap(j =>
-          Seq(s"${dist("embedding", j, "e0")} AS d${j}0", s"${dist("embedding", j, "e1")} AS d${j}1"))
+        val cents = seedCents(emb, 4)
+        // rank-1 cell assignment — the same scoreCells as ann_ivf_nprobe
+        val assigned = scoreCells(emb, cents).select(col("vec_id"), col("cell"))
+        val cb = pqCodebook(emb)
         // the PQ-coded corpus: (vec_id, cell, code0..code3) — this is the
         // frame a production index PERSISTS; the float vectors are gone
         val codes = emb.crossJoin(broadcast(cb))
-          .selectExpr(Seq("vec_id") ++ dcols: _*)
-          .selectExpr(Seq("vec_id") ++
-            (0 until 4).map(j => s"CAST(IF(d${j}0 <= d${j}1, 0, 1) AS INT) AS code$j"): _*)
+          .selectExpr(Seq("vec_id") ++ pqDists("d"): _*)
+          .selectExpr(Seq("vec_id") ++ pqCodes: _*)
           .join(assigned, "vec_id")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("c_id"))
-        val probes = centSim(emb.filter(col("vec_id") < 8))
-          .withColumn("probe", row_number().over(w))
-          .filter(col("probe") <= 2)
-          .selectExpr("vec_id AS q_id", "c_id AS probe_cell")
+        val probes = probeCells(emb.filter(col("vec_id") < 8), cents)
         // per-query ADC lookup table: 4 subspaces x 2 centroids = 8 doubles
-        val lcols = (0 until 4).flatMap(j =>
-          Seq(s"${dist("embedding", j, "e0")} AS l${j}0", s"${dist("embedding", j, "e1")} AS l${j}1"))
         val qlut = emb.filter(col("vec_id") < 8)
           .crossJoin(broadcast(cb))
-          .selectExpr(Seq("vec_id AS q_id") ++ lcols: _*)
+          .selectExpr(Seq("vec_id AS q_id") ++ pqDists("l"): _*)
           .join(probes, "q_id")
         val adc = (0 until 4).map(j => s"IF(code$j = 0, l${j}0, l${j}1)").mkString(" + ")
         val shortScored = broadcast(qlut)
@@ -596,46 +568,20 @@ object Similarity {
           .select(col("q_id"), col("vec_id"), col("rank"), col("adc"), col("cosine"))
           .orderBy("q_id", "rank")
       }, {
-        def ddist(v: String, j: Int, c: String) =
-          s"""list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 17), i ->
-             |  (CAST($v[${16 * j} + i::INT] AS DOUBLE) - CAST($c[${16 * j} + i::INT] AS DOUBLE))
-             |  * (CAST($v[${16 * j} + i::INT] AS DOUBLE) - CAST($c[${16 * j} + i::INT] AS DOUBLE)))),
-             |  (a, b) -> a + b)""".stripMargin
-        val dd = (0 until 4).flatMap(j =>
-          Seq(s"${ddist("embedding", j, "e0")} AS d${j}0",
-            s"${ddist("embedding", j, "e1")} AS d${j}1")).mkString(",\n")
-        val ll = (0 until 4).flatMap(j =>
-          Seq(s"${ddist("embedding", j, "e0")} AS l${j}0",
-            s"${ddist("embedding", j, "e1")} AS l${j}1")).mkString(",\n")
         val dadc = (0 until 4)
           .map(j => s"CASE WHEN code$j = 0 THEN l${j}0 ELSE l${j}1 END").mkString(" + ")
-        s"""WITH cents AS (SELECT vec_id AS c_id, embedding AS c_emb
-           |  FROM embeddings WHERE vec_id < 4),
-           |sc AS (SELECT e.vec_id, c.c_id,
-           |    coalesce(${duckCos("c_emb", "embedding")}, -2.0) AS sim
-           |  FROM embeddings e CROSS JOIN cents c),
-           |asg AS (SELECT vec_id, c_id AS cell FROM (
-           |    SELECT vec_id, c_id,
-           |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
-           |    FROM sc) WHERE rn = 1),
-           |probes AS (SELECT vec_id AS q_id, c_id AS probe_cell FROM (
-           |    SELECT vec_id, c_id,
-           |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
-           |    FROM sc WHERE vec_id < 8) WHERE rn <= 2),
-           |cb AS (SELECT
-           |    (SELECT embedding FROM embeddings WHERE vec_id = 0) AS e0,
-           |    (SELECT embedding FROM embeddings WHERE vec_id = 1) AS e1),
+        s"""WITH $duckAsg,
+           |$duckProbes,
+           |$duckPqCb,
            |dcodes AS (SELECT vec_id,
-           |$dd
+           |${duckPqDists("d")}
            |  FROM embeddings, cb),
            |codes AS (SELECT c.vec_id,
-           |    ${(0 until 4).map(j =>
-              s"CAST(CASE WHEN d${j}0 <= d${j}1 THEN 0 ELSE 1 END AS INT) AS code$j")
-              .mkString(",\n    ")},
+           |    ${duckPqCodes(",\n    ")},
            |    a.cell
            |  FROM dcodes c JOIN asg a USING (vec_id)),
            |qlut AS (SELECT vec_id AS q_id,
-           |$ll
+           |${duckPqDists("l")}
            |  FROM embeddings, cb WHERE vec_id < 8),
            |scored AS (SELECT q.q_id, c.vec_id, ($dadc) AS adc
            |  FROM qlut q JOIN probes p ON p.q_id = q.q_id
@@ -645,7 +591,7 @@ object Similarity {
            |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adc ASC, vec_id) AS rn
            |    FROM scored WHERE NOT coalesce(isnan(adc), TRUE)) WHERE rn <= 8),
            |rescored AS (SELECT s.q_id, s.vec_id, s.adc,
-           |    ${duckCos("q_emb", "embedding")} AS cosine
+           |    ${duckCosSql("q_emb", "embedding")} AS cosine
            |  FROM short s JOIN embeddings e ON e.vec_id = s.vec_id
            |  JOIN (SELECT vec_id AS qv, embedding AS q_emb
            |        FROM embeddings WHERE vec_id < 8) q ON q.qv = s.q_id),
@@ -707,20 +653,12 @@ object Similarity {
     // DEFAULT of the operator signature and decade-probed in SCALE.md. --
     "dedup_semantic" -> QueryDef(
       (s, dir) => semanticDedup(Tables.load(s, dir, "embeddings"), k = 4),
-      s"""WITH cents AS (SELECT vec_id AS c_id, embedding AS c_emb
-         |  FROM embeddings WHERE vec_id < 4),
-         |sc AS (SELECT e.vec_id, c.c_id,
-         |    coalesce(${duckCos("c_emb", "embedding")}, -2.0) AS sim
-         |  FROM embeddings e CROSS JOIN cents c),
-         |asg AS (SELECT vec_id, c_id AS cell FROM (
-         |    SELECT vec_id, c_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
-         |    FROM sc) WHERE rn = 1),
+      s"""WITH $duckAsg,
          |ce AS (SELECT e.vec_id, e.embedding, a.cell
          |  FROM embeddings e JOIN asg a USING (vec_id)),
          |drops AS (SELECT DISTINCT b.vec_id
          |  FROM ce a JOIN ce b ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE ${duckCos("a.embedding", "b.embedding")} >= 0.45)
+         |  WHERE ${duckCosSql("a.embedding", "b.embedding")} >= 0.45)
          |SELECT ce.vec_id, ce.cell, CAST(d.vec_id IS NULL AS INT) AS keep
          |FROM ce LEFT JOIN drops d ON ce.vec_id = d.vec_id
          |ORDER BY ce.vec_id""".stripMargin),
@@ -738,23 +676,13 @@ object Similarity {
     // ann_cosine_topk convention). -----------------------------------------
     "ann_range_search" -> QueryDef(
       (s, dir) => rangeSearch(Tables.load(s, dir, "embeddings")),
-      s"""WITH signed AS (
-         |  SELECT vec_id, embedding,
-         |    list_transform(range(0, 12), j ->
-         |      CASE WHEN list_reduce(list_prepend(0.0::DOUBLE,
-         |        list_transform(range(1, 65),
-         |          i -> embedding[i]::DOUBLE * (((i * 1103 + j * 907) % 2001 - 1000)::DOUBLE / 1000.0))),
-         |        (a, b) -> a + b) >= 0 THEN 1 ELSE 0 END) AS sg
-         |  FROM embeddings),
-         |bands AS (SELECT vec_id, b.band AS band,
-         |    sg[b.band * 3 + 1] * 4 + sg[b.band * 3 + 2] * 2 + sg[b.band * 3 + 3] AS key
-         |  FROM signed, (SELECT unnest(range(0, 4)) AS band) b),
+      s"""WITH $duckSrpBands,
          |cand AS (SELECT DISTINCT q.vec_id AS q_id, c.vec_id
          |  FROM bands q JOIN bands c ON q.band = c.band AND q.key = c.key
          |    AND q.vec_id % 25 = 0 AND q.vec_id != c.vec_id),
          |scored AS (
          |  SELECT q_id, cand.vec_id,
-         |    $duckDot / (sqrt($duckQNorm) * sqrt($duckENorm)) AS cosine
+         |    ${duckCosSql("q_emb", "embedding")} AS cosine
          |  FROM cand
          |  JOIN (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings) USING (q_id)
          |  JOIN (SELECT vec_id, embedding FROM embeddings) USING (vec_id))
@@ -767,20 +695,8 @@ object Similarity {
     // default, same contract as dedup_semantic. ---------------------------
     "knn_label_probe" -> QueryDef(
       (s, dir) => knnLabelProbe(Tables.load(s, dir, "embeddings"), k = 4),
-      s"""WITH cents AS (SELECT vec_id AS c_id, embedding AS c_emb
-         |  FROM embeddings WHERE vec_id < 4),
-         |sc AS (SELECT e.vec_id, c.c_id,
-         |    coalesce(${duckCos("c_emb", "embedding")}, -2.0) AS sim
-         |  FROM embeddings e CROSS JOIN cents c),
-         |asg AS (SELECT vec_id, c_id AS cell FROM (
-         |    SELECT vec_id, c_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
-         |    FROM sc) WHERE rn = 1),
-         |ce AS (SELECT e.vec_id, e.label, e.embedding, a.cell
-         |  FROM embeddings e JOIN asg a USING (vec_id)),
-         |pairs AS (SELECT a.vec_id AS q_id, a.label, b.vec_id, b.label AS nb_label,
-         |    ${duckCos("a.embedding", "b.embedding")} AS cosine
-         |  FROM ce a JOIN ce b ON a.cell = b.cell AND a.vec_id != b.vec_id),
+      s"""WITH $duckAsg,
+         |$duckInCellPairs,
          |nn AS (SELECT q_id, label, nb_label FROM (
          |    SELECT q_id, label, nb_label,
          |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rn
@@ -801,20 +717,8 @@ object Similarity {
     // of the family. -------------------------------------------------------
     "hard_negatives" -> QueryDef(
       (s, dir) => hardNegatives(Tables.load(s, dir, "embeddings"), k = 4),
-      s"""WITH cents AS (SELECT vec_id AS c_id, embedding AS c_emb
-         |  FROM embeddings WHERE vec_id < 4),
-         |sc AS (SELECT e.vec_id, c.c_id,
-         |    coalesce(${duckCos("c_emb", "embedding")}, -2.0) AS sim
-         |  FROM embeddings e CROSS JOIN cents c),
-         |asg AS (SELECT vec_id, c_id AS cell FROM (
-         |    SELECT vec_id, c_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
-         |    FROM sc) WHERE rn = 1),
-         |ce AS (SELECT e.vec_id, e.label, e.embedding, a.cell
-         |  FROM embeddings e JOIN asg a USING (vec_id)),
-         |pairs AS (SELECT a.vec_id AS q_id, a.label, b.vec_id, b.label AS nb_label,
-         |    ${duckCos("a.embedding", "b.embedding")} AS cosine
-         |  FROM ce a JOIN ce b ON a.cell = b.cell AND a.vec_id != b.vec_id),
+      s"""WITH $duckAsg,
+         |$duckInCellPairs,
          |nn AS (SELECT q_id, label, vec_id, nb_label, cosine,
          |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rank
          |  FROM pairs WHERE nb_label != label AND $duckRankable)
@@ -837,7 +741,7 @@ object Similarity {
          |    list(CAST(sq::DOUBLE / n / 1048576 AS FLOAT) ORDER BY dim) AS c_emb
          |  FROM g GROUP BY label),
          |s AS (SELECT e.vec_id, e.label, c.c_label,
-         |    coalesce(${duckCos("c_emb", "embedding")}, -2.0) AS sim
+         |    coalesce(${duckCosSql("c_emb", "embedding")}, -2.0) AS sim
          |  FROM embeddings e CROSS JOIN c),
          |m AS (SELECT vec_id, label,
          |    MAX(CASE WHEN c_label = label THEN sim END) AS own,
@@ -906,14 +810,6 @@ object Similarity {
          |FROM pr ORDER BY vec_id""".stripMargin)
   )
 
-  /** Coarse cell assignment shared by [[semanticDedup]] and
-    * [[kmeansAssign]]: nearest of the first-k content-derived seed
-    * centroids (`vec_id < k`), scored via a broadcast k×N map-side pass
-    * and a window-free argmax (one partial+final aggregate). Zero-norm
-    * vectors are degenerate everywhere cosine appears: assignment ranks
-    * them with an explicit -2 sentinel (Spark's NaN orders GREATEST,
-    * DuckDB's 0/0 is NULL and orders last — the sentinel pins both
-    * engines to "worse than any real cosine"; fuzz find, seed 77). */
   /** THE ONE definition of the k ~ √N cell sizing shared by
     * [[semanticDedup]], [[knnLabelProbe]], and [[hardNegatives]]
     * (SCALE.md "the semantic-dedup cell knob": in-cell pair volume
@@ -932,20 +828,49 @@ object Similarity {
       math.max(1, math.round(math.sqrt(n.toDouble)).toInt)
     }
 
+  /** Coarse cell assignment of the IVF family ([[semanticDedup]],
+    * [[inCellPairs]], ann_ivf_probe): nearest of the first-k
+    * content-derived seed centroids (`vec_id < k`) by [[scoreCells]].
+    * Zero-norm vectors are degenerate everywhere cosine appears:
+    * assignment ranks them with an explicit -2 sentinel (Spark's NaN
+    * orders GREATEST, DuckDB's 0/0 is NULL and orders last — the
+    * sentinel pins both engines to "worse than any real cosine"; fuzz
+    * find, seed 77). */
   def assignCells(emb: DataFrame, k: Int): DataFrame =
-    scoreCells(emb, emb.filter(col("vec_id") < k)
-      .selectExpr("vec_id AS c_id", "embedding AS c_emb"))
+    scoreCells(emb, seedCents(emb, k))
 
-  /** THE nearest-centroid assignment: broadcast-scored cosine against a
-    * `(c_id, c_emb)` centroid frame, zero-norm -2 sentinel, window-free
-    * min-id-tie-break argmax → `(vec_id, cell, sim)`. One definition —
-    * assignCells and both kmeansAssign sites (loop + final) ride it, so
-    * the sentinel and tie-break contracts (both fuzz-found) cannot
-    * drift apart across call sites. */
-  private def scoreCells(emb: DataFrame, cents: DataFrame): DataFrame = {
+  /** The first-k content-derived seed centroids `(c_id, c_emb)`. */
+  private def seedCents(emb: DataFrame, k: Int): DataFrame =
+    emb.filter(col("vec_id") < k).selectExpr("vec_id AS c_id", "embedding AS c_emb")
+
+  /** Every vector's cosine to every broadcast centroid `(vec_id, c_id,
+    * sim)`, zero-norm vectors at the -2 sentinel. */
+  private def cellSims(emb: DataFrame, cents: DataFrame): DataFrame = {
     graft.functions.HashExpressions.register(emb.sparkSession)
     emb.crossJoin(broadcast(cents))
       .selectExpr("vec_id", "c_id", "nanvl(graft_cosine(c_emb, embedding), -2.0) AS sim")
+  }
+
+  /** Each vector's two nearest cells `(q_id, probe_cell)` (nprobe = 2),
+    * ties to the smaller c_id. The window runs over k sims per vector. */
+  private def probeCells(emb: DataFrame, cents: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("c_id"))
+    cellSims(emb, cents)
+      .withColumn("probe", row_number().over(w))
+      .filter(col("probe") <= 2)
+      .selectExpr("vec_id AS q_id", "c_id AS probe_cell")
+  }
+
+  /** THE nearest-centroid assignment: [[cellSims]] and a window-free
+    * min-id-tie-break argmax → `(vec_id, cell, sim)`. max(struct(sim,
+    * -c_id)) picks the larger -c_id = smaller c_id on equal sims, the
+    * oracle's (sim DESC, c_id ASC) row_number. One definition — every
+    * IVF query, assignCells and both kmeansAssign sites (loop + final)
+    * ride it, so the sentinel and tie-break contracts (both fuzz-found)
+    * cannot drift apart across call sites. */
+  private def scoreCells(emb: DataFrame, cents: DataFrame): DataFrame = {
+    cellSims(emb, cents)
       .groupBy(col("vec_id"))
       .agg(max(struct(col("sim"), (-col("c_id")).as("nc"))).as("m"))
       .select(col("vec_id"), (-col("m.nc")).as("cell"), col("m.sim").as("sim"))
@@ -1256,8 +1181,7 @@ object Similarity {
     graft.functions.HashExpressions.register(emb0.sparkSession)
     val emb = emb0.select(col("vec_id"), col("embedding"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var cents = emb.filter(col("vec_id") < k)
-      .selectExpr("vec_id AS c_id", "embedding AS c_emb")
+    var cents = seedCents(emb, k)
     for (_ <- 1 to iters) {
       val asg = scoreCells(emb, cents).select(col("vec_id"), col("cell"))
       cents = emb.join(asg, "vec_id")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -25,19 +26,41 @@ import scala.collection.immutable.ListMap
   * inputs, bit-identical across engines. */
 object TimeSeries {
 
+  /** THE `(seg, m, rev_c)` monthly series every row here starts from:
+    * orders joined to customer, month index m = year·12 + month, revenue
+    * summed per (seg, m) in exact DECIMAL and quantized to int64 cents.
+    * `withMoy` adds the calendar month of year as a third key
+    * (ts_seasonality). One partial+final aggregation; callers that read
+    * the frame twice persist it. */
+  private def monthlyRevenue(s: SparkSession, dir: String,
+      withMoy: Boolean = false): DataFrame = {
+    val keys = Seq("seg", "m") ++ (if (withMoy) Seq("moy") else Nil)
+    Tables.load(s, dir, "orders")
+      .join(Tables.load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .selectExpr(Seq("c_mktsegment AS seg",
+        "CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m") ++
+        (if (withMoy) Seq("CAST(month(o_orderdate) AS BIGINT) AS moy") else Nil) :+
+        "CAST(o_totalprice AS DECIMAL(18,2)) AS p": _*)
+      .groupBy(keys.map(col): _*)
+      .agg(expr("CAST(SUM(p) * 100 AS BIGINT)").as("rev_c"))
+  }
+
+  /** The DuckDB twin of [[monthlyRevenue]]: the `monthly` CTE. */
+  private def duckMonthly(withMoy: Boolean = false): String =
+    s"""monthly AS (
+       |  SELECT c_mktsegment AS seg,
+       |    CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m,${
+         if (withMoy) "\n    CAST(month(o_orderdate) AS BIGINT) AS moy," else ""}
+       |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rev_c
+       |  FROM orders JOIN customer ON o_custkey = c_custkey
+       |  GROUP BY ${if (withMoy) "1, 2, 3" else "1, 2"})""".stripMargin
+
   val defs: ListMap[String, QueryDef] = ListMap(
 
     // ---- per-segment monthly revenue features: n, total, mean, slope ------
     "ts_features" -> QueryDef(
       (s, dir) => {
-        val o = Tables.load(s, dir, "orders")
-        val c = Tables.load(s, dir, "customer")
-        val monthly = o.join(c, col("o_custkey") === col("c_custkey"))
-          .selectExpr("c_mktsegment AS seg",
-            "CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m",
-            "CAST(o_totalprice AS DECIMAL(18,2)) AS p")
-          .groupBy("seg", "m")
-          .agg(expr("CAST(SUM(p) * 100 AS BIGINT)").as("rev_c"))
+        val monthly = monthlyRevenue(s, dir)
         monthly.groupBy("seg")
           .agg(expr("CAST(COUNT(*) AS BIGINT)").as("n_months"),
             expr("SUM(m)").as("sx"), expr("SUM(m * m)").as("sxx"),
@@ -56,12 +79,7 @@ object TimeSeries {
               |ELSE CAST(0 AS DOUBLE) END AS slope_per_month""".stripMargin)
           .orderBy("seg")
       },
-      """WITH monthly AS (
-        |  SELECT c_mktsegment AS seg,
-        |    CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rev_c
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2)
+      s"""WITH ${duckMonthly()}
         |SELECT seg, CAST(COUNT(*) AS BIGINT) AS n_months,
         |  CAST(CAST(SUM(rev_c) AS BIGINT) AS DOUBLE) / 100.0 AS total_rev,
         |  CAST(CAST(SUM(rev_c) AS BIGINT) AS DOUBLE) / 100.0 / CAST(COUNT(*) AS BIGINT) AS mean_monthly_rev,
@@ -81,14 +99,7 @@ object TimeSeries {
     // float accumulation anywhere. ----------------------------------------
     "ts_forecast_grouped" -> QueryDef(
       (s, dir) => {
-        val o = Tables.load(s, dir, "orders")
-        val c = Tables.load(s, dir, "customer")
-        val monthly = o.join(c, col("o_custkey") === col("c_custkey"))
-          .selectExpr("c_mktsegment AS seg",
-            "CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m",
-            "CAST(o_totalprice AS DECIMAL(18,2)) AS p")
-          .groupBy("seg", "m")
-          .agg(expr("CAST(SUM(p) * 100 AS BIGINT)").as("rev_c"))
+        val monthly = monthlyRevenue(s, dir)
         monthly.groupBy("seg")
           .agg(expr("CAST(COUNT(*) AS BIGINT)").as("n"),
             expr("SUM(m)").as("sx"), expr("SUM(m * m)").as("sxx"),
@@ -110,12 +121,7 @@ object TimeSeries {
             "(a + b * CAST(target_month AS DOUBLE)) / 100.0 AS forecast_rev")
           .orderBy("seg")
       },
-      """WITH monthly AS (
-        |  SELECT c_mktsegment AS seg,
-        |    CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rev_c
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2),
+      s"""WITH ${duckMonthly()},
         |sums AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(m) AS BIGINT) AS sx, CAST(SUM(m * m) AS BIGINT) AS sxx,
         |    CAST(SUM(rev_c) AS BIGINT) AS sy, CAST(SUM(m * rev_c) AS BIGINT) AS sxy,
@@ -147,15 +153,7 @@ object TimeSeries {
     // ~1e11 x 84 months stays far under 2^63. ------------------------------
     "ts_seasonality" -> QueryDef(
       (s, dir) => {
-        val o = Tables.load(s, dir, "orders")
-        val c = Tables.load(s, dir, "customer")
-        val monthly = o.join(c, col("o_custkey") === col("c_custkey"))
-          .selectExpr("c_mktsegment AS seg",
-            "CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m",
-            "CAST(month(o_orderdate) AS BIGINT) AS moy",
-            "CAST(o_totalprice AS DECIMAL(18,2)) AS p")
-          .groupBy("seg", "m", "moy")
-          .agg(expr("CAST(SUM(p) * 100 AS BIGINT)").as("rev_c"))
+        val monthly = monthlyRevenue(s, dir, withMoy = true)
           .persist(StorageLevel.MEMORY_AND_DISK)
         val perMoy = monthly.groupBy("seg", "moy")
           .agg(sum(col("rev_c")).as("sum_m"), count(lit(1)).as("n_m"))
@@ -167,13 +165,7 @@ object TimeSeries {
             "CAST(sum_m * n_all AS DOUBLE) / (n_m * sum_all) AS seasonal_idx")
           .orderBy("seg", "moy")
       },
-      """WITH monthly AS (
-        |  SELECT c_mktsegment AS seg,
-        |    CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m,
-        |    CAST(month(o_orderdate) AS BIGINT) AS moy,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rev_c
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2, 3),
+      s"""WITH ${duckMonthly(withMoy = true)},
         |per_moy AS (SELECT seg, moy, CAST(SUM(rev_c) AS BIGINT) AS sum_m,
         |    COUNT(*) AS n_m FROM monthly GROUP BY seg, moy),
         |per_seg AS (SELECT seg, CAST(SUM(rev_c) AS BIGINT) AS sum_all,
@@ -195,14 +187,7 @@ object TimeSeries {
     // presentation column.
     "ts_anomaly" -> QueryDef(
       (s, dir) => {
-        val o = Tables.load(s, dir, "orders")
-        val c = Tables.load(s, dir, "customer")
-        val monthly = o.join(c, col("o_custkey") === col("c_custkey"))
-          .selectExpr("c_mktsegment AS seg",
-            "CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m",
-            "CAST(o_totalprice AS DECIMAL(18,2)) AS p")
-          .groupBy("seg", "m")
-          .agg(expr("CAST(SUM(p) * 100 AS BIGINT)").as("rev_c"))
+        val monthly = monthlyRevenue(s, dir)
           .persist(StorageLevel.MEMORY_AND_DISK)
         val stats = monthly.groupBy("seg")
           .agg(expr("CAST(COUNT(*) AS DECIMAL(38,0))").as("n"),
@@ -218,12 +203,7 @@ object TimeSeries {
             "CAST(CASE WHEN n * rev_c > s_sum THEN 1 ELSE -1 END AS INT) AS direction")
           .orderBy("seg", "m")
       },
-      """WITH monthly AS (
-        |  SELECT c_mktsegment AS seg,
-        |    CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rev_c
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2),
+      s"""WITH ${duckMonthly()},
         |stats AS (
         |  SELECT seg, CAST(COUNT(*) AS HUGEINT) AS n,
         |    CAST(SUM(rev_c) AS HUGEINT) AS s_sum,
@@ -250,23 +230,11 @@ object TimeSeries {
     // stats broadcast back. -----------------------------------------------
     "ts_changepoint" -> QueryDef(
       (s, dir) => {
-        val o = Tables.load(s, dir, "orders")
-        val c = Tables.load(s, dir, "customer")
-        val monthly = o.join(c, col("o_custkey") === col("c_custkey"))
-          .selectExpr("c_mktsegment AS seg",
-            "CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m",
-            "CAST(o_totalprice AS DECIMAL(18,2)) AS p")
-          .groupBy("seg", "m")
-          .agg(expr("CAST(SUM(p) * 100 AS BIGINT)").as("rev_c"))
+        val monthly = monthlyRevenue(s, dir)
           .persist(StorageLevel.MEMORY_AND_DISK)
         cusumChangepoint(monthly)
       },
-      """WITH monthly AS (
-        |  SELECT c_mktsegment AS seg,
-        |    CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rev_c
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2),
+      s"""WITH ${duckMonthly()},
         |stats AS (SELECT seg, CAST(COUNT(*) AS HUGEINT) AS n,
         |    CAST(SUM(rev_c) AS HUGEINT) AS tot
         |  FROM monthly GROUP BY seg),
@@ -299,23 +267,11 @@ object TimeSeries {
     // grid (model-sized — never a corpus funnel), stats broadcast. --------
     "ts_acf" -> QueryDef(
       (s, dir) => {
-        val o = Tables.load(s, dir, "orders")
-        val c = Tables.load(s, dir, "customer")
-        val monthly = o.join(c, col("o_custkey") === col("c_custkey"))
-          .selectExpr("c_mktsegment AS seg",
-            "CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m",
-            "CAST(o_totalprice AS DECIMAL(18,2)) AS p")
-          .groupBy("seg", "m")
-          .agg(expr("CAST(SUM(p) * 100 AS BIGINT)").as("rev_c"))
+        val monthly = monthlyRevenue(s, dir)
           .persist(StorageLevel.MEMORY_AND_DISK)
         tsAutocorrelation(monthly)
       },
-      """WITH monthly AS (
-        |  SELECT c_mktsegment AS seg,
-        |    CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rev_c
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2),
+      s"""WITH ${duckMonthly()},
         |stats AS (SELECT seg, CAST(COUNT(*) AS HUGEINT) AS n,
         |    CAST(SUM(rev_c) AS HUGEINT) AS tot
         |  FROM monthly GROUP BY seg),
@@ -351,8 +307,8 @@ object TimeSeries {
     * than emitted as NULL.
     */
   def tsAutocorrelation(
-      monthly: org.apache.spark.sql.DataFrame,
-      maxLag: Int = 3): org.apache.spark.sql.DataFrame = {
+      monthly: DataFrame,
+      maxLag: Int = 3): DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1, got $maxLag")
     val stats = monthly.groupBy("seg")
       .agg(expr("CAST(COUNT(*) AS DECIMAL(38,0))").as("n"),
@@ -388,7 +344,7 @@ object TimeSeries {
     * per-segment window-shape contract.
     */
   def cusumChangepoint(
-      monthly: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      monthly: DataFrame): DataFrame = {
     val stats = monthly.groupBy("seg")
       .agg(expr("CAST(COUNT(*) AS DECIMAL(38,0))").as("n"),
         expr("CAST(SUM(rev_c) AS DECIMAL(38,0))").as("tot"))

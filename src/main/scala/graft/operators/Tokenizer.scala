@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -79,8 +80,8 @@ object Tokenizer {
     * all. Pair exhaustion: an empty argmax simply stops emitting merge
     * rows and the encoding passes through unchanged (same short-table
     * semantics as the old LEFT-JOIN-on-TRUE guard). */
-  private def train(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def train(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     val d = Tables.load(s, dir, "documents")
     // the ONLY corpus-wide pass: tokenize, explode, count each word
     val vocab = d
@@ -251,10 +252,10 @@ object Tokenizer {
     * Returns (pieces = final (piece, piece_len, usage), seg = final
     * (word, cnt, ps) encodings). Pieces with zero final usage are
     * omitted — they remain reachable only as fallback chars. */
-  private[operators] def unigramTrain(wordsIn: org.apache.spark.sql.DataFrame,
+  private[operators] def unigramTrain(wordsIn: DataFrame,
       maxLen: Int = UniMaxLen, seedMulti: Int = UniSeedMulti,
       rounds: Int = UniRounds)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      : (DataFrame, DataFrame) = {
     require(maxLen >= 2 && maxLen <= 8, s"maxLen must be in [2, 8], got $maxLen")
     require(seedMulti >= 1 && seedMulti <= 65536,
       s"seedMulti must be in [1, 65536], got $seedMulti")
@@ -283,10 +284,10 @@ object Tokenizer {
       .orderBy(col("seed_cnt").desc, col("piece").asc)
       .limit(seedMulti).select("piece").collect().map(_.getString(0)).toSeq
     var vocab: Seq[String] = chars ++ seedTop
-    def segment(vs: Seq[String]): org.apache.spark.sql.DataFrame =
+    def segment(vs: Seq[String]): DataFrame =
       words.withColumn("vs", typedLit(vs.sorted))
         .selectExpr("word", "cnt", s"${segExpr(maxLen)} AS ps")
-    def usage(seg: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    def usage(seg: DataFrame): DataFrame =
       seg.select(col("cnt"), explode(col("ps")).as("piece"))
         .groupBy("piece").agg(sum(col("cnt")).as("usage"))
     (1 to rounds).foreach { r =>
@@ -334,6 +335,80 @@ object Tokenizer {
        |sgf AS MATERIALIZED (SELECT word, cnt, ${duckSegExpr(UniMaxLen)} AS ps
        |  FROM uwords CROSS JOIN va$UniRounds)""".stripMargin
 
+  /** Symbols per word of a BPE encoding (symbols joined by two spaces). */
+  private val bpeSymbols = "size(split(trim(enc), '  ')) AS ns"
+
+  /** Every corpus word occurrence counted `(word, cnt)` — unigramTrain's input. */
+  private def corpusWords(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "documents")
+      .selectExpr(s"explode(${graft.functions.Portable.tokensSql("text")}) AS word")
+      .groupBy("word").agg(count(lit(1)).as("cnt"))
+
+  /** One corpus word explode joined to a trained `(word, ns, wl)`
+    * table (symbols and chars per word), broadcast — the encode step
+    * both tokenizers' reports share. */
+  private def encoded(s: SparkSession, dir: String, key: String,
+      enc: DataFrame): DataFrame =
+    Tables.load(s, dir, "documents")
+      .selectExpr(key, s"explode(${graft.functions.Portable.tokensSql("text")}) AS word")
+      .join(broadcast(enc), "word")
+
+  /** Per-doc compression report of an encoding: words, symbols, token
+    * chars and chars per symbol. A partial+final fold. */
+  private def encodeReport(s: SparkSession, dir: String, enc: DataFrame): DataFrame =
+    encoded(s, dir, "doc_id", enc)
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_words"),
+        sum(col("ns")).as("n_symbols"),
+        sum(col("wl")).as("n_token_chars"))
+      .selectExpr("doc_id", "n_words", "n_symbols", "n_token_chars",
+        "CAST(n_token_chars AS DOUBLE) / n_symbols AS chars_per_symbol")
+      .transform(graft.Sorted.byNames(_, "doc_id"))
+
+  /** Per-language fertility of an encoding (per-mille symbols per word
+    * and chars per symbol): |langs| rows, combiner-perfect. */
+  private def fertilityReport(s: SparkSession, dir: String, enc: DataFrame): DataFrame =
+    encoded(s, dir, "lang", enc)
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_words"),
+        sum(col("ns")).as("n_symbols"),
+        sum(col("wl")).as("n_chars"))
+      .selectExpr("lang", "n_words", "n_symbols", "n_chars",
+        "(n_symbols * 1000L) div n_words AS fertility_mille",
+        "(n_chars * 1000L) div n_symbols AS chars_per_symbol_mille")
+      .transform(graft.Sorted.byNames(_, "lang"))
+
+  /** DuckDB twin of [[encodeReport]]; `enc` is the body of the
+    * `enc(word, ns, wl)` CTE after `SELECT word, `. */
+  private def duckEncodeReport(enc: String): String =
+    s"""dtoks AS (SELECT doc_id,
+       |    ${graft.functions.Portable.duckToksSql("text")} AS ts
+       |  FROM documents),
+       |dw AS (SELECT doc_id, unnest(ts) AS word FROM dtoks),
+       |enc AS (SELECT word, $enc)
+       |SELECT doc_id, COUNT(*) AS n_words,
+       |  CAST(SUM(ns) AS BIGINT) AS n_symbols,
+       |  CAST(SUM(wl) AS BIGINT) AS n_token_chars,
+       |  CAST(CAST(SUM(wl) AS BIGINT) AS DOUBLE) / CAST(SUM(ns) AS BIGINT) AS chars_per_symbol
+       |FROM dw JOIN enc USING (word)
+       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
+  /** DuckDB twin of [[fertilityReport]]; `enc` as in [[duckEncodeReport]]. */
+  private def duckFertilityReport(enc: String): String =
+    s"""dtoks AS (SELECT lang,
+       |    ${graft.functions.Portable.duckToksSql("text")} AS ts
+       |  FROM documents),
+       |dw AS (SELECT lang, unnest(ts) AS word FROM dtoks),
+       |enc AS (SELECT word, $enc),
+       |agg AS (SELECT lang, COUNT(*) AS n_words,
+       |    CAST(SUM(ns) AS BIGINT) AS n_symbols,
+       |    CAST(SUM(wl) AS BIGINT) AS n_chars
+       |  FROM dw JOIN enc USING (word) GROUP BY lang)
+       |SELECT lang, n_words, n_symbols, n_chars,
+       |  (n_symbols * 1000) // n_words AS fertility_mille,
+       |  (n_chars * 1000) // n_symbols AS chars_per_symbol_mille
+       |FROM agg ORDER BY lang""".stripMargin
+
   val defs: ListMap[String, QueryDef] = ListMap(
 
     // ---- BPE merge table: Steps merge rounds over the corpus
@@ -356,31 +431,10 @@ object Tokenizer {
     "tokenizer_apply" -> QueryDef(
       (s, dir) => {
         val words = train(s, dir)._1 // (word, cnt, enc) after all merges
-        Tables.load(s, dir, "documents")
-          .selectExpr("doc_id",
-            s"explode(${graft.functions.Portable.tokensSql("text")}) AS word")
-          .join(broadcast(words.selectExpr("word",
-            "size(split(trim(enc), '  ')) AS ns", "length(word) AS wl")), "word")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_words"),
-            sum(col("ns")).as("n_symbols"),
-            sum(col("wl")).as("n_token_chars"))
-          .selectExpr("doc_id", "n_words", "n_symbols", "n_token_chars",
-            "CAST(n_token_chars AS DOUBLE) / n_symbols AS chars_per_symbol")
-          .transform(graft.Sorted.byNames(_, "doc_id"))
+        encodeReport(s, dir, words.selectExpr("word", bpeSymbols, "length(word) AS wl"))
       },
       s"""WITH $duckTrain,
-         |dtoks AS (SELECT doc_id,
-         |    ${graft.functions.Portable.duckToksSql("text")} AS ts
-         |  FROM documents),
-         |dw AS (SELECT doc_id, unnest(ts) AS word FROM dtoks),
-         |enc AS (SELECT word, len(string_split(trim(enc), '  ')) AS ns, length(word) AS wl FROM w$Steps)
-         |SELECT doc_id, COUNT(*) AS n_words,
-         |  CAST(SUM(ns) AS BIGINT) AS n_symbols,
-         |  CAST(SUM(wl) AS BIGINT) AS n_token_chars,
-         |  CAST(CAST(SUM(wl) AS BIGINT) AS DOUBLE) / CAST(SUM(ns) AS BIGINT) AS chars_per_symbol
-         |FROM dw JOIN enc USING (word)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+         |${duckEncodeReport(s"len(string_split(trim(enc), '  ')) AS ns, length(word) AS wl FROM w$Steps")}""".stripMargin),
 
     // ---- per-language fertility of the learned tokenizer: mean BPE
     // symbols per word (per-mille, integer-exact) — THE multilingual
@@ -394,34 +448,10 @@ object Tokenizer {
     "tokenizer_fertility" -> QueryDef(
       (s, dir) => {
         val words = train(s, dir)._1
-        Tables.load(s, dir, "documents")
-          .selectExpr("lang",
-            s"explode(${graft.functions.Portable.tokensSql("text")}) AS word")
-          .join(broadcast(words.selectExpr("word",
-            "size(split(trim(enc), '  ')) AS ns", "length(word) AS wl")), "word")
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n_words"),
-            sum(col("ns")).as("n_symbols"),
-            sum(col("wl")).as("n_chars"))
-          .selectExpr("lang", "n_words", "n_symbols", "n_chars",
-            "(n_symbols * 1000L) div n_words AS fertility_mille",
-            "(n_chars * 1000L) div n_symbols AS chars_per_symbol_mille")
-          .transform(graft.Sorted.byNames(_, "lang"))
+        fertilityReport(s, dir, words.selectExpr("word", bpeSymbols, "length(word) AS wl"))
       },
       s"""WITH $duckTrain,
-         |dtoks AS (SELECT lang,
-         |    ${graft.functions.Portable.duckToksSql("text")} AS ts
-         |  FROM documents),
-         |dw AS (SELECT lang, unnest(ts) AS word FROM dtoks),
-         |enc AS (SELECT word, len(string_split(trim(enc), '  ')) AS ns, length(word) AS wl FROM w$Steps),
-         |agg AS (SELECT lang, COUNT(*) AS n_words,
-         |    CAST(SUM(ns) AS BIGINT) AS n_symbols,
-         |    CAST(SUM(wl) AS BIGINT) AS n_chars
-         |  FROM dw JOIN enc USING (word) GROUP BY lang)
-         |SELECT lang, n_words, n_symbols, n_chars,
-         |  (n_symbols * 1000) // n_words AS fertility_mille,
-         |  (n_chars * 1000) // n_symbols AS chars_per_symbol_mille
-         |FROM agg ORDER BY lang""".stripMargin),
+         |${duckFertilityReport(s"len(string_split(trim(enc), '  ')) AS ns, length(word) AS wl FROM w$Steps")}""".stripMargin),
 
     // ---- Unigram-LM tokenizer train (Kudo 2018): the EM-prune loop
     // over the corpus word-frequency substrate — see the block comment
@@ -431,10 +461,7 @@ object Tokenizer {
     // keeps, bounded literal-array vocabularies). Output: the
     // final piece inventory with its usage under the final vocabulary.
     "tokenizer_unigram" -> QueryDef(
-      (s, dir) => unigramTrain(
-        Tables.load(s, dir, "documents")
-          .selectExpr(s"explode(${graft.functions.Portable.tokensSql("text")}) AS word")
-          .groupBy("word").agg(count(lit(1)).as("cnt")))._1,
+      (s, dir) => unigramTrain(corpusWords(s, dir))._1,
       s"""WITH $duckUniTrain
          |SELECT piece, CAST(length(piece) AS INT) AS piece_len,
          |  CAST(SUM(cnt) AS BIGINT) AS usage
@@ -451,35 +478,11 @@ object Tokenizer {
     // corpus word explode; per-doc sums are a partial+final fold. --------
     "tokenizer_unigram_apply" -> QueryDef(
       (s, dir) => {
-        val segF = unigramTrain(
-          Tables.load(s, dir, "documents")
-            .selectExpr(s"explode(${graft.functions.Portable.tokensSql("text")}) AS word")
-            .groupBy("word").agg(count(lit(1)).as("cnt")))._2
-        Tables.load(s, dir, "documents")
-          .selectExpr("doc_id",
-            s"explode(${graft.functions.Portable.tokensSql("text")}) AS word")
-          .join(broadcast(segF.selectExpr("word",
-            "size(ps) AS ns", "length(word) AS wl")), "word")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_words"),
-            sum(col("ns")).as("n_symbols"),
-            sum(col("wl")).as("n_token_chars"))
-          .selectExpr("doc_id", "n_words", "n_symbols", "n_token_chars",
-            "CAST(n_token_chars AS DOUBLE) / n_symbols AS chars_per_symbol")
-          .transform(graft.Sorted.byNames(_, "doc_id"))
+        val segF = unigramTrain(corpusWords(s, dir))._2
+        encodeReport(s, dir, segF.selectExpr("word", "size(ps) AS ns", "length(word) AS wl"))
       },
       s"""WITH $duckUniTrain,
-         |dtoks AS (SELECT doc_id,
-         |    ${graft.functions.Portable.duckToksSql("text")} AS ts
-         |  FROM documents),
-         |dw AS (SELECT doc_id, unnest(ts) AS word FROM dtoks),
-         |enc AS (SELECT word, len(ps) AS ns, length(word) AS wl FROM sgf)
-         |SELECT doc_id, COUNT(*) AS n_words,
-         |  CAST(SUM(ns) AS BIGINT) AS n_symbols,
-         |  CAST(SUM(wl) AS BIGINT) AS n_token_chars,
-         |  CAST(CAST(SUM(wl) AS BIGINT) AS DOUBLE) / CAST(SUM(ns) AS BIGINT) AS chars_per_symbol
-         |FROM dw JOIN enc USING (word)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+         |${duckEncodeReport("len(ps) AS ns, length(word) AS wl FROM sgf")}""".stripMargin),
 
     // ---- per-language fertility of the unigram tokenizer: the same
     // report as tokenizer_fertility, swapping the BPE encodings for the
@@ -489,37 +492,10 @@ object Tokenizer {
     // vocabulary-sized and broadcasts onto one corpus word explode. ------
     "tokenizer_unigram_fertility" -> QueryDef(
       (s, dir) => {
-        val segF = unigramTrain(
-          Tables.load(s, dir, "documents")
-            .selectExpr(s"explode(${graft.functions.Portable.tokensSql("text")}) AS word")
-            .groupBy("word").agg(count(lit(1)).as("cnt")))._2
-        Tables.load(s, dir, "documents")
-          .selectExpr("lang",
-            s"explode(${graft.functions.Portable.tokensSql("text")}) AS word")
-          .join(broadcast(segF.selectExpr("word",
-            "size(ps) AS ns", "length(word) AS wl")), "word")
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n_words"),
-            sum(col("ns")).as("n_symbols"),
-            sum(col("wl")).as("n_chars"))
-          .selectExpr("lang", "n_words", "n_symbols", "n_chars",
-            "(n_symbols * 1000L) div n_words AS fertility_mille",
-            "(n_chars * 1000L) div n_symbols AS chars_per_symbol_mille")
-          .transform(graft.Sorted.byNames(_, "lang"))
+        val segF = unigramTrain(corpusWords(s, dir))._2
+        fertilityReport(s, dir, segF.selectExpr("word", "size(ps) AS ns", "length(word) AS wl"))
       },
       s"""WITH $duckUniTrain,
-         |dtoks AS (SELECT lang,
-         |    ${graft.functions.Portable.duckToksSql("text")} AS ts
-         |  FROM documents),
-         |dw AS (SELECT lang, unnest(ts) AS word FROM dtoks),
-         |enc AS (SELECT word, len(ps) AS ns, length(word) AS wl FROM sgf),
-         |agg AS (SELECT lang, COUNT(*) AS n_words,
-         |    CAST(SUM(ns) AS BIGINT) AS n_symbols,
-         |    CAST(SUM(wl) AS BIGINT) AS n_chars
-         |  FROM dw JOIN enc USING (word) GROUP BY lang)
-         |SELECT lang, n_words, n_symbols, n_chars,
-         |  (n_symbols * 1000) // n_words AS fertility_mille,
-         |  (n_chars * 1000) // n_symbols AS chars_per_symbol_mille
-         |FROM agg ORDER BY lang""".stripMargin)
+         |${duckFertilityReport("len(ps) AS ns, length(word) AS wl FROM sgf")}""".stripMargin)
   )
 }

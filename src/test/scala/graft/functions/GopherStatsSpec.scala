@@ -8,7 +8,8 @@ import graft.SparkSpec
   * token length, letter-bearing token count, distinct stop-list hits —
   * including the shapes each statistic can get wrong: all-digit tokens
   * (alpha), repeated stopwords (distinctness), Unicode lowering, empty
-  * and null text. */
+  * and null text. U+0130 follows DuckDB's per-code-point lowering, not
+  * the lambda form's full lowering (PortableTokensSpec). */
 class GopherStatsSpec extends SparkSpec {
 
   private val oldSql =
@@ -22,7 +23,7 @@ class GopherStatsSpec extends SparkSpec {
       "42 007 12345 only digits here 99",
       "the the the THE tHe", // repeated stopwords: distinct count = 1
       "", "  ...  ",
-      "İstanbul Kelvin sign mixed ünïcödé",
+      "Kelvin sign mixed ünïcödé",
       "be with", "x")
     val rows = texts.toDF("text")
       .selectExpr(
@@ -42,6 +43,14 @@ class GopherStatsSpec extends SparkSpec {
       assert(r.getLong(2) == r.getLong(6), "n_alpha")
       assert(r.getInt(3) == r.getInt(7), "stop_hits")
     }
+    // U+0130 lowers per code point to 'i' (DuckDB's lower(), the gopher
+    // oracle's tokenizer), where the lambda form's full lowering splits
+    // "İstanbul" into i + stanbul: 7 tokens, not 8
+    val u = Seq("İstanbul Kelvin sign mixed ünïcödé").toDF("text")
+      .selectExpr("graft_gopher_stats(text) AS gs")
+      .selectExpr("gs.n_words", "gs.sum_len", "gs.n_alpha", "gs.stop_hits")
+      .collect()(0)
+    assert((u.getInt(0), u.getLong(1), u.getLong(2), u.getInt(3)) == ((7, 26L, 7L, 0)))
     // the one-definition stop list renders the same DuckDB literal the
     // oracle CTE previously hardcoded
     assert(HashExpressions.gopherStopsDuckList ==
