@@ -12,17 +12,14 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * }}}
   *
   * or `SparkSession.builder().withExtensions(new GraftExtensions)`. This is
-  * the packaging a user of the library deploys cluster-wide (functions are
-  * present in every session, SQL and DataFrame API alike) — the
-  * per-session [[graft.functions.HashExpressions.register]] temp-function
-  * path remains for ad-hoc use.
+  * the packaging a user of the library deploys cluster-wide, and the only
+  * way a session gets the functions: [[GraftSession.configure]] applies
+  * it, and sessions derived from one (`newSession`, the clone a streaming
+  * query runs `foreachBatch` on) inherit them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    // the ONE builder list shared with HashExpressions.register — the two
-    // registration paths can no longer drift (review find: this class had
-    // silently fallen two functions behind the temp-function path)
     graft.functions.HashExpressions.builders.foreach { case (name, builder) =>
       e.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.functions.HashExpressions", name),

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -503,77 +502,63 @@ object HashExpressions {
     override def inputTypes: Seq[ArrayType] = children.map(_ => ArrayType(FloatType))
   }
 
-  /** text -> array<string> of the tokens themselves — the compiled
-    * [[Portable.tokensSql]] (see [[tokens]] for the equivalence
-    * argument). */
-  case class TokensExpr(child: Expression) extends UnaryExpression with TextArg {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = evalTokens(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"${Self}.evalTokens($c)")
-    override protected def withNewChildInternal(c: Expression): TokensExpr = copy(c)
-    override def prettyName: String = "graft_tokens"
+  /** One one-argument kernel: its SQL name, result type, argument type
+    * and `evalX` entry point. `eval` calls that same entry point for the
+    * interpreted path. */
+  final case class Kernel(name: String, dataType: DataType, inputType: DataType,
+      entry: String)(val eval: Any => Any)
+
+  /** The one-argument kernels, each a [[KernelExpr]] under its name. */
+  val kernels: Seq[Kernel] = {
+    def text(name: String, dataType: DataType, entry: String)(f: UTF8String => Any) =
+      Kernel(name, dataType, StringType, entry)(v => f(v.asInstanceOf[UTF8String]))
+    val longs = ArrayType(LongType, containsNull = false)
+    val ints = ArrayType(IntegerType, containsNull = false)
+    Seq(
+      // the tokens themselves: the compiled `Portable.tokensSql`
+      text("graft_tokens", ArrayType(StringType, containsNull = false), "evalTokens")(evalTokens),
+      // token poly-hashes, with multiplicity
+      text("graft_token_hashes", longs, "evalTokenHashes")(evalTokenHashes),
+      // distinct 3-token shingle hashes
+      text("graft_shingles", longs, "evalShingles")(evalShingles),
+      // 16-lane MinHash signature; docs with no shingles yield
+      // Long.MaxValue sentinels (filter on graft_shingles)
+      text("graft_minhash_sig", longs, "evalMinhashSig")(evalMinhashSig),
+      // 60-bit SimHash fingerprint
+      text("graft_simhash", LongType, "evalSimhash")(evalSimhash),
+      // distinct rolling char-5-gram hashes
+      text("graft_gram5", longs, "evalGram5")(evalGram5),
+      // distinct rolling 8-token window hashes
+      text("graft_winhash8", longs, "evalWinHash8")(evalWinHash8),
+      // 1-based content-defined chunk boundaries (rolling 16-char hash
+      // = 0 mod 64)
+      text("graft_cdc_bounds", ints, "evalCdcBounds")(evalCdcBounds),
+      // raw-char polynomial hash (document fingerprint)
+      text("graft_polyhash", LongType, "evalPolyHash")(evalPolyHash),
+      // single-pass token/stopword/punctuation statistics
+      text("graft_text_stats", textStatsType, "evalTextStats")(evalTextStats),
+      // the gopher gate's (n_words, sum_len, n_alpha, stop_hits)
+      text("graft_gopher_stats", gopherStatsType, "evalGopherStats")(evalGopherStats),
+      // array<float> -> 12-bit sign-random-projection signature
+      Kernel("graft_srp12", ints, ArrayType(FloatType), "evalSrp12")(
+        v => evalSrp12(v.asInstanceOf[ArrayData])))
   }
 
-  /** text -> array<long> of token poly-hashes (with multiplicity). */
-  case class TokenHashesExpr(child: Expression) extends UnaryExpression with TextArg {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = evalTokenHashes(v.asInstanceOf[UTF8String])
+  /** A [[Kernel]] as an expression: a wrong argument type fails ANALYSIS,
+    * and the generated code is one direct call to the kernel's `evalX`
+    * (a primitive result stays unboxed). */
+  case class KernelExpr(child: Expression, kernel: Kernel)
+      extends UnaryExpression with ExpectsInputTypes {
+    override def inputTypes: Seq[DataType] = Seq(kernel.inputType)
+    override def dataType: DataType = kernel.dataType
+    override def nullSafeEval(v: Any): Any = kernel.eval(v)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"${Self}.evalTokenHashes($c)")
-    override protected def withNewChildInternal(c: Expression): TokenHashesExpr = copy(c)
-    override def prettyName: String = "graft_token_hashes"
-  }
-
-  /** text -> array<long> of distinct 3-token shingle hashes. */
-  case class ShingleSetExpr(child: Expression) extends UnaryExpression with TextArg {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = evalShingles(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"${Self}.evalShingles($c)")
-    override protected def withNewChildInternal(c: Expression): ShingleSetExpr = copy(c)
-    override def prettyName: String = "graft_shingles"
-  }
-
-  /** text -> array<long>(16) MinHash signature (null-free; docs with no
-    * shingles yield Long.MaxValue sentinels — filter on graft_shingles). */
-  case class MinHashSigExpr(child: Expression) extends UnaryExpression with TextArg {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = evalMinhashSig(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"${Self}.evalMinhashSig($c)")
-    override protected def withNewChildInternal(c: Expression): MinHashSigExpr = copy(c)
-    override def prettyName: String = "graft_minhash_sig"
-  }
-
-  /** text -> 60-bit SimHash fingerprint. */
-  case class SimHashExpr(child: Expression) extends UnaryExpression with TextArg {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(v: Any): Any = evalSimhash(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"${Self}.evalSimhash($c)")
-    override protected def withNewChildInternal(c: Expression): SimHashExpr = copy(c)
-    override def prettyName: String = "graft_simhash"
-  }
-
-  /** text -> array<long> of distinct rolling char-5-gram hashes. */
-  case class Gram5Expr(child: Expression) extends UnaryExpression with TextArg {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = evalGram5(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"${Self}.evalGram5($c)")
-    override protected def withNewChildInternal(c: Expression): Gram5Expr = copy(c)
-    override def prettyName: String = "graft_gram5"
-  }
-
-  /** text -> array<long> of distinct rolling 8-token window hashes. */
-  case class WinHash8Expr(child: Expression) extends UnaryExpression with TextArg {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = evalWinHash8(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"${Self}.evalWinHash8($c)")
-    override protected def withNewChildInternal(c: Expression): WinHash8Expr = copy(c)
-    override def prettyName: String = "graft_winhash8"
+      defineCodeGen(ctx, ev, c => s"$Self.${kernel.entry}($c)")
+    override protected def withNewChildInternal(c: Expression): KernelExpr =
+      copy(child = c)
+    override def prettyName: String = kernel.name
+    // printed as `name(child)`, like the other graft_* expressions
+    override protected def stringArgs: Iterator[Any] = Iterator(child)
   }
 
   /** (text, k, w) -> array<long> of packed winnowing fingerprints
@@ -591,17 +576,6 @@ object HashExpressions {
     override protected def withNewChildInternal(c: Expression): WinnowSelExpr =
       copy(child = c)
     override def prettyName: String = "graft_winnow_sel"
-  }
-
-  /** text -> array<int> of 1-based content-defined chunk boundary
-    * positions (rolling 16-char hash ≡ 0 mod 64). */
-  case class CdcBoundsExpr(child: Expression) extends UnaryExpression with TextArg {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = evalCdcBounds(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"${Self}.evalCdcBounds($c)")
-    override protected def withNewChildInternal(c: Expression): CdcBoundsExpr = copy(c)
-    override def prettyName: String = "graft_cdc_bounds"
   }
 
   /** array<float> cosine similarity with the oracle-parity contract:
@@ -711,47 +685,6 @@ object HashExpressions {
     override def prettyName: String = "graft_sorted_inter"
   }
 
-  /** text -> 64-bit raw-char polynomial hash (document fingerprint). */
-  case class PolyHashExpr(child: Expression) extends UnaryExpression with TextArg {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(v: Any): Any = evalPolyHash(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$Self.evalPolyHash($c)")
-    override protected def withNewChildInternal(c: Expression): PolyHashExpr = copy(c)
-    override def prettyName: String = "graft_polyhash"
-  }
-
-  /** text -> struct of single-pass token/stopword/punctuation statistics. */
-  case class TextStatsExpr(child: Expression) extends UnaryExpression with TextArg {
-    override def dataType: DataType = textStatsType
-    override def nullSafeEval(v: Any): Any = evalTextStats(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$Self.evalTextStats($c)")
-    override protected def withNewChildInternal(c: Expression): TextStatsExpr = copy(c)
-    override def prettyName: String = "graft_text_stats"
-  }
-
-  /** text -> struct(n_words, sum_len, n_alpha, stop_hits) — the gopher
-    * gate's per-doc statistics in one compiled pass ([[evalGopherStats]]). */
-  case class GopherStatsExpr(child: Expression) extends UnaryExpression with TextArg {
-    override def dataType: DataType = gopherStatsType
-    override def nullSafeEval(v: Any): Any = evalGopherStats(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$Self.evalGopherStats($c)")
-    override protected def withNewChildInternal(c: Expression): GopherStatsExpr = copy(c)
-    override def prettyName: String = "graft_gopher_stats"
-  }
-
-  /** array<float> -> array<int>(12) sign-random-projection signature. */
-  case class Srp12Expr(child: Expression) extends UnaryExpression with FloatArrayArgs {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = evalSrp12(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$Self.evalSrp12($c)")
-    override protected def withNewChildInternal(c: Expression): Srp12Expr = copy(c)
-    override def prettyName: String = "graft_srp12"
-  }
-
   /** Width-parameterized SRP signature — `graft_srp(embedding, nbits)`.
     * Same hyperplane family as graft_srp12 (w ≤ 12 prefixes agree), with
     * the bit count as the LSH occupancy knob for corpus-sized banding. */
@@ -775,13 +708,12 @@ object HashExpressions {
     override def prettyName: String = "graft_srp"
   }
 
-  /** ONE (name, arity, builder) list serving BOTH registration paths —
-    * the per-session temp-function [[register]] and the cluster-wide
-    * [[graft.GraftExtensions]]. A function added here reaches both
-    * automatically (review find: the extensions path had silently fallen
-    * two functions behind this list). Builders are arity-checked so a
-    * wrong-arity SQL call fails analysis with a clear message instead of
-    * an IndexOutOfBoundsException from `es(1)`. */
+  /** Every `graft_*` function as a (name, builder) pair — what
+    * [[graft.GraftExtensions]] injects into each session: one
+    * [[KernelExpr]] per [[kernels]] row, the multi-argument expressions,
+    * and Spark's two runtime-filter Bloom expressions. Builders are
+    * arity-checked so a wrong-arity SQL call fails analysis with a clear
+    * message instead of an IndexOutOfBoundsException from `es(1)`. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = {
     def checked(name: String, arity: Int)(b: Seq[Expression] => Expression): (String, Seq[Expression] => Expression) =
       name -> { es =>
@@ -790,14 +722,7 @@ object HashExpressions {
             s"$name requires exactly $arity argument(s), got ${es.length}")
         b(es)
       }
-    Seq(
-      checked("graft_tokens", 1)(es => TokensExpr(es.head)),
-      checked("graft_token_hashes", 1)(es => TokenHashesExpr(es.head)),
-      checked("graft_shingles", 1)(es => ShingleSetExpr(es.head)),
-      checked("graft_minhash_sig", 1)(es => MinHashSigExpr(es.head)),
-      checked("graft_simhash", 1)(es => SimHashExpr(es.head)),
-      checked("graft_gram5", 1)(es => Gram5Expr(es.head)),
-      checked("graft_winhash8", 1)(es => WinHash8Expr(es.head)),
+    kernels.map(k => checked(k.name, 1)(es => KernelExpr(es.head, k))) ++ Seq(
       checked("graft_winnow_sel", 3) { es =>
         def lit(e: Expression, what: String): Int = e match {
           case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
@@ -806,13 +731,8 @@ object HashExpressions {
         }
         WinnowSelExpr(es.head, lit(es(1), "k"), lit(es(2), "w"))
       },
-      checked("graft_cdc_bounds", 1)(es => CdcBoundsExpr(es.head)),
       checked("graft_cosine", 2)(es => CosineExpr(es.head, es(1))),
       checked("graft_sorted_inter", 2)(es => SortedInterCountExpr(es.head, es(1))),
-      checked("graft_polyhash", 1)(es => PolyHashExpr(es.head)),
-      checked("graft_text_stats", 1)(es => TextStatsExpr(es.head)),
-      checked("graft_gopher_stats", 1)(es => GopherStatsExpr(es.head)),
-      checked("graft_srp12", 1)(es => Srp12Expr(es.head)),
       checked("graft_srp", 2)(es => SrpExpr(es.head, es(1))),
       // Spark's own runtime-filter Bloom expressions (used internally for
       // InjectRuntimeFilter but not exposed in the public FunctionRegistry
@@ -828,14 +748,5 @@ object HashExpressions {
       checked("graft_might_contain", 2)(es =>
         org.apache.spark.sql.catalyst.expressions
           .BloomFilterMightContain(es.head, es(1))))
-  }
-
-  /** Register all graft_* functions for use in selectExpr/spark.sql.
-    * Idempotent per session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    }
   }
 }

@@ -53,10 +53,11 @@ object Portable {
 
   /** Lowercased alnum tokens of a string SQL expression. NATIVE since
     * round 17: `graft_tokens` (one compiled scan per row, codegen'd —
-    * [[HashExpressions.TokensExpr]]) replaces the lambda form
-    * `filter(split(lower(c), '[^a-z0-9]+'), t -> length(t) > 0)`, which
-    * ran INTERPRETED per element at every one of the ~30 call sites —
-    * Spark's split-with-regex plus an ArrayFilter CodegenFallback.
+    * [[HashExpressions.evalTokens]]) replaces the lambda form (a regex
+    * `split` of `lower(c)` under a `filter` dropping empty tokens), which
+    * ran INTERPRETED per element at every call site — Spark's
+    * split-with-regex plus an ArrayFilter CodegenFallback. Every Spark
+    * plan that tokenizes goes through here.
     * It lowers per code point like the DuckDB twin below
     * ([[HashExpressions.lowerCp]]), so it equals the old form except
     * where full and simple lowercase differ (U+0130); PortableTokensSpec

@@ -1,7 +1,7 @@
 package graft.functions
 
 /** Stopword vocabularies shared by the language-ID / quality operators and
-  * the native [[HashExpressions.TextStatsExpr]] (single source of truth so
+  * the native [[HashExpressions.evalTextStats]] (single source of truth so
   * the Spark hot path and the DuckDB oracle literals can't drift). */
 object Stopwords {
   /** Languages scored by graft_text_stats, in struct-field order. */

@@ -433,8 +433,7 @@ object Analytics {
     "q18_explode_tokens" -> QueryDef(
       (s, dir) => {
         val d = Tables.load(s, dir, "documents")
-        d.select(explode(split(lower(col("text")), "[^a-z0-9]+")).as("token"))
-          .filter(length(col("token")) > 0)
+        d.select(explode(expr(graft.functions.Portable.tokensSql("text"))).as("token"))
           .groupBy(col("token")).agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("token"))
           .limit(20)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Sorted, Tables}
+import graft.functions.Portable.tokensSql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -49,10 +50,8 @@ object CorpusOps {
   private val DPhone = PhoneRe
   private val DIp = IpRe
 
-  // one tokenization contract for every corpus statistic in this module
-  // (boilerplate shingles, bigrams) — same shape as TextOps' oracles
-  private val toksExpr =
-    "filter(split(lower(text), '[^a-z0-9]+'), t -> t != '')"
+  // the DuckDB tokenizer of every corpus statistic in this module
+  // (boilerplate shingles, bigrams); the Spark side uses `tokensSql`
   private val duckToks = graft.functions.Portable.duckToksSql("text")
 
   /** Hashed-bigram bucket explosion over a `th` token-hash column — the
@@ -171,7 +170,6 @@ object CorpusOps {
     * which modular arithmetic makes value-identical to the rolled hash.
     * Map-side explode only. */
   private def cdcSpans(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashExpressions.register(s)
     Tables.load(s, dir, "documents")
       .filter(col("n_chars") >= 1)
       .selectExpr("doc_id", "text", "length(text) AS n")
@@ -261,7 +259,7 @@ object CorpusOps {
     "boilerplate_flag" -> QueryDef(
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents")
-        val toks = docs.select(col("doc_id"), expr(toksExpr).as("ts"))
+        val toks = docs.select(col("doc_id"), expr(tokensSql("text")).as("ts"))
         // Spark [] indexing is 0-based; slice() is 1-based — i in [5, size]
         // picks 1-based token window [i-4, i]
         // persisted: sh feeds BOTH the doc-frequency count and the
@@ -331,7 +329,7 @@ object CorpusOps {
     "dedup_paragraph" -> QueryDef(
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents")
-        val paras = docs.select(col("doc_id"), expr(toksExpr).as("ts"))
+        val paras = docs.select(col("doc_id"), expr(tokensSql("text")).as("ts"))
           .select(col("doc_id"),
             posexplode(expr(
               "CASE WHEN size(ts) >= 1 THEN transform(sequence(1, (size(ts) + 15) div 16), " +
@@ -391,7 +389,7 @@ object CorpusOps {
     "source_overlap" -> QueryDef(
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents")
-        val toks = docs.select(col("source"), expr(toksExpr).as("ts"))
+        val toks = docs.select(col("source"), expr(tokensSql("text")).as("ts"))
         val sg = toks.select(col("source"),
           explode(expr(
             "CASE WHEN size(ts) >= 5 THEN transform(sequence(5, size(ts)), " +
@@ -420,7 +418,7 @@ object CorpusOps {
     "ngram_top_corpus" -> QueryDef(
       (s, dir) => {
         Tables.load(s, dir, "documents")
-          .select(expr(toksExpr).as("ts"))
+          .select(expr(tokensSql("text")).as("ts"))
           .select(explode(expr(
             "CASE WHEN size(ts) >= 2 THEN transform(sequence(2, size(ts)), " +
               "i -> concat(ts[i-2], ' ', ts[i-1])) " +
@@ -556,7 +554,6 @@ object CorpusOps {
     // the output is genuinely sketch-derived. -----------------------------
     "cms_heavy_hitters" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         import graft.functions.CountMin
         import s.implicits._
         // persisted: the exploded term stream feeds BOTH the sketch fold and
@@ -564,7 +561,7 @@ object CorpusOps {
         // regex-tokenized and exploded twice per run (the dominant cost at
         // scale; same shape as boilerplate_flag's persisted shingle frame)
         val toks = Tables.load(s, dir, "documents")
-          .select(explode(expr(toksExpr)).as("term"))
+          .select(explode(expr(tokensSql("text"))).as("term"))
           .persist(StorageLevel.MEMORY_AND_DISK)
         val sketch = toks.selectExpr("graft_polyhash(term) AS h").as[Long]
           .select(new CountMin().toColumn).toDF("cms")
@@ -643,7 +640,7 @@ object CorpusOps {
     "sample_importance" -> QueryDef(
       (s, dir) => {
         val toks = Tables.load(s, dir, "documents")
-          .select(col("doc_id"), col("lang"), explode(expr(toksExpr)).as("term"))
+          .select(col("doc_id"), col("lang"), explode(expr(tokensSql("text"))).as("term"))
           .persist(StorageLevel.MEMORY_AND_DISK)
         val src = toks.groupBy(col("term")).agg(count(lit(1)).as("sc"))
         val tgt = toks.filter(col("lang") === "en")
@@ -691,7 +688,6 @@ object CorpusOps {
     // bigram rows and drop from the ranking in both engines. -------------
     "importance_hashed" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val feats = Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("lang"),
             expr("graft_token_hashes(text)").as("th"))
@@ -769,7 +765,7 @@ object CorpusOps {
       (s, dir) => {
         Tables.load(s, dir, "documents")
           .select(col("source"), col("lang"), col("n_chars"),
-            expr(s"size($toksExpr)").cast("long").as("n_tokens"))
+            expr(s"size(${tokensSql("text")})").cast("long").as("n_tokens"))
           .rollup(col("source"), col("lang"))
           .agg(
             (grouping(col("source")) * 2 + grouping(col("lang"))).cast("int").as("lvl"),
@@ -1078,7 +1074,6 @@ object CorpusOps {
     // (n_r > 0 guard). ---------------------------------------------------
     "source_drift" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val sb = Tables.load(s, dir, "documents")
           .select(col("source"), expr("graft_token_hashes(text)").as("th"))
           .select(col("source"), explode(expr(bigramBktExpr)).as("bkt"))
@@ -1654,7 +1649,7 @@ object CorpusOps {
   def rareTokenDocs(docs: DataFrame, rareDf: Int = 2): DataFrame = {
     require(rareDf >= 1, s"rareDf must be >= 1, got $rareDf")
     val dt = docs.selectExpr("doc_id",
-        s"explode(${graft.functions.Portable.tokensSql("text")}) AS tok")
+        s"explode(${tokensSql("text")}) AS tok")
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val dfc = dt.groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -1679,7 +1674,7 @@ object CorpusOps {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val toks = docs
-      .select(expr(graft.functions.Portable.tokensSql("text")).as("ts"))
+      .select(expr(tokensSql("text")).as("ts"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val tot = toks.agg(
       coalesce(sum(expr("size(ts)")), lit(0L))
@@ -1983,13 +1978,6 @@ object CorpusOps {
         s"${hdrRepExpr("qb", subBits)} AS est_q"): _*)
   }
 
-  /** Mergeable quantile sketch + calibration over a group-key + value
-    * frame — every column EXCEPT `valueCol` is part of the group key
-    * (the kAnonymityProfile contract); `valueCol` must be a NON-NEGATIVE
-    * int64 (quantize first — the cents contract). See the
-    * `quantile_sketch` registry comment for geometry and scale shape.
-    * `withExact = false` drops the exact percentile columns and their
-    * value-distribution shuffle (the 100 TB path). */
   /** Benford's-law first-digit probabilities, ppm. log10(1 + 1/d) is
     * transcendental, so the nine values are the published constants
     * rounded offline by largest remainder to sum to EXACTLY 1e6 (the
@@ -2100,6 +2088,13 @@ object CorpusOps {
       .agg(min(col(valueCol)).as("exact_q"))
   }
 
+  /** Mergeable quantile sketch + calibration over a group-key + value
+    * frame — every column EXCEPT `valueCol` is part of the group key
+    * (the kAnonymityProfile contract); `valueCol` must be a NON-NEGATIVE
+    * int64 (quantize first — the cents contract). See the
+    * `quantile_sketch` registry comment for geometry and scale shape.
+    * `withExact = false` drops the exact percentile columns and their
+    * value-distribution shuffle (the 100 TB path). */
   def quantileSketch(vals: DataFrame, valueCol: String, subBits: Int = 5,
       qsPm: Seq[Int] = Seq(500, 900, 990), withExact: Boolean = true): DataFrame = {
     requireSketchKnobs(subBits, qsPm)
@@ -2235,16 +2230,9 @@ object CorpusOps {
           " AS BIGINT) END AS est_distinct"): _*)
   }
 
-  /** Per-source HLL distinct-trigram estimate — see the `hll_distinct`
-    * registry comment for the sketch, parity and calibration contracts.
-    * `m` (power of two >= 16) is the register count / accuracy knob;
-    * `withExact = false` drops the exact-distinct columns and their
-    * corpus-volume distinct shuffle — the sketch-only 100 TB path
-    * (schema: source, est_distinct, zero_registers). */
   /** The (source, fp) trigram-fingerprint stream shared by the HLL census
     * and the overlap sketch: one tokenize+hash pass, paired 60-bit fps. */
   private def triFps(docs: DataFrame): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     import graft.functions.Portable.{MIX, MIX2, P, P2}
     def at(off: Int) = s"element_at(th, i - $off)"
     val tri = s"CASE WHEN size(th) >= 3 THEN transform(sequence(3, size(th)), " +
@@ -2264,6 +2252,12 @@ object CorpusOps {
     .selectExpr("source", s"v % ${m}L AS idx", s"${hllRhoExpr("v", m)} AS rho")
     .groupBy(col("source"), col("idx")).agg(max(col("rho")).as("mj"))
 
+  /** Per-source HLL distinct-trigram estimate — see the `hll_distinct`
+    * registry comment for the sketch, parity and calibration contracts.
+    * `m` (power of two >= 16) is the register count / accuracy knob;
+    * `withExact = false` drops the exact-distinct columns and their
+    * corpus-volume distinct shuffle — the sketch-only 100 TB path
+    * (schema: source, est_distinct, zero_registers). */
   def hllDistinct(docs: DataFrame, m: Int = 256,
       withExact: Boolean = true): DataFrame = {
     hllCap(m)
@@ -2349,7 +2343,6 @@ object CorpusOps {
     * approx_count_distinct (HLL, mergeable partial+final) and drop the
     * oracle row — documented knob, not the default. */
   def corpusDiversity(docs: DataFrame): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     import graft.functions.Portable.{MIX, MIX2, P, P2}
     val empty = "CAST(array() AS array<struct<n: int, fp: bigint>>)"
     def at(off: Int) = s"element_at(th, i - $off)"
@@ -2381,7 +2374,6 @@ object CorpusOps {
     * consumer (mix_doremi) never needs a corpus-sized join-back. */
   private def hashedFeatures(docs: DataFrame,
       carryCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val carry = carryCols.map(col)
     docs
       .select(col("doc_id") +: col("lang") +: carry :+
@@ -2418,13 +2410,6 @@ object CorpusOps {
           "- ((coalesce(nc, 0L) + 1L) * 1000000000L) div (ntot + 8192L) AS w")
   }
 
-  /** Score a corpus with a trained weight table and gate on the mean
-    * feature weight: `score_ppb = Σ w(bkt) div n_bigrams` (trunc-toward-
-    * zero in BOTH engines), `keep = score_ppb > thresholdPpb`. The weight
-    * table BROADCASTS (≤ B rows by construction); scoring is one
-    * tokenize+hash pass plus a partial+final per-doc sum — map-side
-    * bounded regardless of corpus size. Docs with < 2 tokens have no
-    * features and drop, same contract as importance_hashed. */
   /** Threshold-free ranking quality of a scored frame: exact-integer AUC
     * via the Mann–Whitney rank-sum identity with MIDRANKS for ties
     * (AUC = P(score_pos > score_neg) + ½·P(tie) — the probabilistic
@@ -2541,6 +2526,13 @@ object CorpusOps {
       .transform(Sorted.byNames(_, "doc_id"))
   }
 
+  /** Score a corpus with a trained weight table and gate on the mean
+    * feature weight: `score_ppb = Σ w(bkt) div n_bigrams` (trunc-toward-
+    * zero in BOTH engines), `keep = score_ppb > thresholdPpb`. The weight
+    * table BROADCASTS (≤ B rows by construction); scoring is one
+    * tokenize+hash pass plus a partial+final per-doc sum — map-side
+    * bounded regardless of corpus size. Docs with < 2 tokens have no
+    * features and drop, same contract as importance_hashed. */
   def hashedClassifierScore(docs: DataFrame, weights: DataFrame,
       thresholdPpb: Long = 0L, carryCols: Seq[String] = Nil): DataFrame =
     hashedFeatures(docs, carryCols)

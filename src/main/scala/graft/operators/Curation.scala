@@ -183,7 +183,6 @@ object Curation {
     // both engines, so the argmax order is bit-identical. -------------------
     "dedup_keep_best" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val pairs = Dedup.defs("dedup_minhash").fn(s, dir).select("doc_a", "doc_b")
         val clusters = connectedComponents(pairs)
         Tables.load(s, dir, "documents")
@@ -392,9 +391,8 @@ object Curation {
           .join(canon, "digest")
           .filter(col("doc_id") === col("canonical_id")) // exact-dup canonical
           .filter(col("lang") === "en")
-          .selectExpr("doc_id",
-            "size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) AS n_tokens",
-            "filter(split(lower(text), '[^a-z0-9]+'), t -> length(t) > 0) AS toks")
+          .selectExpr("doc_id", s"${graft.functions.Portable.tokensSql("text")} AS toks")
+          .selectExpr("doc_id", "size(toks) AS n_tokens", "toks")
           .filter(col("n_tokens").between(20, 5000))
           .selectExpr("doc_id", "n_tokens",
             "CAST(size(array_distinct(toks)) AS DOUBLE) / size(toks) AS uniq_ratio")
@@ -980,35 +978,6 @@ object Curation {
     s"CAST(floor($pow * 1000000) AS BIGINT)"
   }
 
-  /** Temperature-scaled mixture resampling: language l drawn ∝ p_l^alpha
-    * (the multilingual alpha-sampling of mBERT/XLM-R). Head languages
-    * flatten, tail languages boost: each doc receives base = floor(r_l)
-    * copies plus one more with probability frac(r_l), decided by the
-    * portable hash — deterministic and replay-safe, with the per-lang
-    * rate table AND the realized per-lang copy totals both
-    * oracle-verified. The repeat factor r_l = (s_l/ssum)/(n_l/total) is
-    * held as the exact fraction (s_l*total)/(ssum*n_l), multiplied in
-    * DECIMAL(18,0)→(37,0) (HUGEINT on the DuckDB side): in int64 the
-    * numerator is ~total^1.5 * 1e6, overflowing past ~4e8 total docs —
-    * far beyond the fixtures, but exactly the scale this engine
-    * advertises, and Spark would WRAP silently where DuckDB raises, so
-    * the engines would diverge rather than fail loudly. The quotients
-    * (base_copies, extra_m) return to int64. Scale shape: rates are
-    * |langs| rows (broadcast); the corpus side is one partial+final count
-    * plus a map-side copy computation — no corpus shuffle beyond the
-    * group-by (plan-pinned). */
-  /** Token-budget epoch plan over a `documents` frame — see the
-    * `mix_epoch_plan` registry comment for semantics (Muennighoff et al.
-    * 2023's ~4-epoch repeat cap over a uniform per-source target). The
-    * knobs are the SIGNATURE per the repo convention: `budgetTokens` is
-    * the training token budget split uniformly across sources,
-    * `capMilliEpochs` the repeat cap in milli-epochs (4000 = the
-    * published 4-epoch rule). All int64: budgetTokens·1000 and
-    * n_tokens·capMilliEpochs must stay under 2^63 — at 100 TB
-    * (~2.5e13 tokens) a 4000 cap sits at 1e17, comfortably in range.
-    * Scale shape: ONE corpus-linear tokenize+count pass into a
-    * |sources|-row persisted frame feeding both the n_src count and the
-    * plan; the budget arithmetic is model-sized. */
   /** Weighted priority sample of any (source, doc_id, n_chars) frame —
     * see the `weighted_sample` registry comment for the E–S-surrogate
     * and bounded-fold contracts. `k` docs per source; weight = n_chars.
@@ -1067,6 +1036,18 @@ object Curation {
       .orderBy("params")
   }
 
+  /** Token-budget epoch plan over a `documents` frame — see the
+    * `mix_epoch_plan` registry comment for semantics (Muennighoff et al.
+    * 2023's ~4-epoch repeat cap over a uniform per-source target). The
+    * knobs are the SIGNATURE per the repo convention: `budgetTokens` is
+    * the training token budget split uniformly across sources,
+    * `capMilliEpochs` the repeat cap in milli-epochs (4000 = the
+    * published 4-epoch rule). All int64: budgetTokens·1000 and
+    * n_tokens·capMilliEpochs must stay under 2^63 — at 100 TB
+    * (~2.5e13 tokens) a 4000 cap sits at 1e17, comfortably in range.
+    * Scale shape: ONE corpus-linear tokenize+count pass into a
+    * |sources|-row persisted frame feeding both the n_src count and the
+    * plan; the budget arithmetic is model-sized. */
   def mixEpochPlan(docs: DataFrame, budgetTokens: Long = 1000000L,
       capMilliEpochs: Long = 4000L): DataFrame = {
     require(budgetTokens > 0 && capMilliEpochs > 0,
@@ -1316,6 +1297,23 @@ object Curation {
       .transform(graft.Sorted.byNames(_, domainCol))
   }
 
+  /** Temperature-scaled mixture resampling: language l drawn ∝ p_l^alpha
+    * (the multilingual alpha-sampling of mBERT/XLM-R). Head languages
+    * flatten, tail languages boost: each doc receives base = floor(r_l)
+    * copies plus one more with probability frac(r_l), decided by the
+    * portable hash — deterministic and replay-safe, with the per-lang
+    * rate table AND the realized per-lang copy totals both
+    * oracle-verified. The repeat factor r_l = (s_l/ssum)/(n_l/total) is
+    * held as the exact fraction (s_l*total)/(ssum*n_l), multiplied in
+    * DECIMAL(18,0)→(37,0) (HUGEINT on the DuckDB side): in int64 the
+    * numerator is ~total^1.5 * 1e6, overflowing past ~4e8 total docs —
+    * far beyond the fixtures, but exactly the scale this engine
+    * advertises, and Spark would WRAP silently where DuckDB raises, so
+    * the engines would diverge rather than fail loudly. The quotients
+    * (base_copies, extra_m) return to int64. Scale shape: rates are
+    * |langs| rows (broadcast); the corpus side is one partial+final count
+    * plus a map-side copy computation — no corpus shuffle beyond the
+    * group-by (plan-pinned). */
   def mixTemperature(docs: DataFrame, alpha: Double = 0.5): DataFrame = {
     val w = weightSql("CAST(n_docs AS DOUBLE)", alpha)
     val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))

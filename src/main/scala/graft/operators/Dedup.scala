@@ -60,17 +60,12 @@ object Dedup {
   /** The signature table over an arbitrary `(doc_id, text)` frame — the
     * composition form (pretrain_prep signs the exact-dedup survivors). */
   private[operators] def minhashSigOf(docs: DataFrame): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     docs
       .selectExpr("doc_id", "graft_minhash_sig(text) AS sig")
       .filter(s"element_at(sig, 1) != ${Long.MaxValue}L")
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Banded candidate pairs (doc_a < doc_b) over a signature table for an
-    * arbitrary (bands × width) split of the 16 lanes — the LSH recall
-    * knob as a parameter (minhash_band_sweep measures the alternatives;
-    * the operating point is [[bandedCandidates]]). */
   /** doc_id → (band, key) rows for an arbitrary (bands × width) split of
     * the 16 lanes — ONE explode definition behind every banding consumer
     * (all three pair emitters AND the bucket-load profiler), so a band
@@ -83,6 +78,10 @@ object Dedup {
       .selectExpr("doc_id", "bk.band AS band", "bk.key AS key")
   }
 
+  /** Banded candidate pairs (doc_a < doc_b) over a signature table for an
+    * arbitrary (bands × width) split of the 16 lanes — the LSH recall
+    * knob as a parameter (minhash_band_sweep measures the alternatives;
+    * the operating point is [[bandedCandidates]]). */
   private def bandedCandidatesCfg(sig: DataFrame, nb: Int, w: Int): DataFrame = {
     val bands = bandsOf(sig, nb, w)
     bands.alias("a")
@@ -326,7 +325,6 @@ object Dedup {
     * form (pretrain_prep shingles the eval pool and the dedup
     * survivors). */
   private[operators] def shinglesOf(docs: DataFrame): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     docs
       .selectExpr("doc_id", "graft_shingles(text) AS sh")
       .filter("size(sh) > 0")
@@ -345,7 +343,6 @@ object Dedup {
     * stop-window cap, one corpus-linear explode, bounded self-join; per-doc
     * window counts come off the same cached frame. */
   def containment(docs: DataFrame, excerpts: DataFrame): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val corpus = docs.selectExpr("doc_id", "text")
       .unionAll(excerpts.selectExpr("doc_id", "text"))
     val ex = corpus
@@ -384,15 +381,11 @@ object Dedup {
   /** doc_id + 60-bit SimHash, persisted so the block-LSH self-join reads the
     * fingerprint from cache instead of deriving it twice. */
   private[operators] def simhashFp(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashExpressions.register(s)
     Tables.load(s, dir, "documents")
       .selectExpr("doc_id", "graft_simhash(text) AS simhash")
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Shared DuckDB CTE chain ending in `pairs(doc_a, doc_b, jaccard)` — the
-    * verified MinHash near-dup pair set; composed by dedup_minhash,
-    * dedup_keep_list and Curation.dedup_clusters oracles. */
   /** Shingles + 16-lane MinHash signature CTEs ending in `sig(doc_id, sh,
     * sig)` — shared by [[duckPairsCtes]] and Multimodal's b-bit pHash. */
   private[operators] def duckSigCtes: String =
@@ -432,6 +425,9 @@ object Dedup {
   /** In-bucket candidate pairs (doc_a < doc_b) from [[duckBandsCte]]. */
   private[operators] val duckCandCte: String = duckCandCteOn()
 
+  /** Shared DuckDB CTE chain ending in `pairs(doc_a, doc_b, jaccard)` — the
+    * verified MinHash near-dup pair set; composed by dedup_minhash,
+    * dedup_keep_list and Curation.dedup_clusters oracles. */
   private[operators] def duckPairsCtes: String =
     s"""$duckSigCtes,
        |$duckBandsCte,
@@ -492,7 +488,6 @@ object Dedup {
       midCap: Int = 1): DataFrame = {
       require(midCap >= 1, s"midCap must be >= 1, got $midCap")
       val s = docs.sparkSession
-      graft.functions.HashExpressions.register(s)
       // gram arrays are recomputed per use — the native graft_gram5 is a
       // cheap map-side loop, and columnar-caching the heavy array<long>
       // column measured SLOWER than recomputation (cache build + decode
@@ -966,7 +961,6 @@ object Dedup {
     // (<= df^2/2 per bucket) self-join. ------------------------------------
     "dedup_substring" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         // distinct within doc by construction (LinkedHashSet in the expr)
         val ex = Tables.load(s, dir, "documents")
           .selectExpr("doc_id", "explode(graft_winhash8(text)) AS h")
@@ -1019,7 +1013,6 @@ object Dedup {
     // mints. ----------------------------------------------------------------
     "dedup_containment" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val docs = Tables.load(s, dir, "documents")
         // the synthetic excerpt pool lives HERE in the fixture wrapper,
         // not in the operator: containment() takes the excerpt side as a
@@ -1171,7 +1164,6 @@ object Dedup {
     // candidates. Per batch doc: exact_dup / near_dup / keep flags. -------
     "dedup_incremental" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val d = Tables.load(s, dir, "documents")
         val histDig = d.filter(col("doc_id") % 10 =!= 0)
           .select(graft.functions.Portable.contentDigest.as("digest")).distinct()
@@ -1244,7 +1236,6 @@ object Dedup {
     // just row-counted. -----------------------------------------------------
     "bloom_membership" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         Tables.load(s, dir, "documents")
           .withColumn("digest", graft.functions.Portable.contentDigest)
           .createOrReplaceTempView("graft_bloom_docs")
@@ -1294,7 +1285,6 @@ object Dedup {
     // fingerprint can never go quadratic. ---------------------------------
     "dedup_winnow" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         winnowPairs(Tables.load(s, dir, "documents"))
       },
       duckWinnowSql()),
@@ -1312,7 +1302,6 @@ object Dedup {
     // capped ⊆ full containment on a saturated fixture. ---------------------
     "dedup_winnow_capped" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         winnowPairs(Tables.load(s, dir, "documents"), dfCap = 3, midCap = 4)
       },
       duckWinnowSql(dfCap = 3, midCap = 4)),
@@ -1541,8 +1530,8 @@ object Dedup {
     * start — O(len) per gram, O(len²) per document (measured: minutes
     * on the sf0.01 fixture). Token grams combine k consecutive entries
     * of the ONE native token-hash array by O(1) element_at — O(len)
-    * per document. Selection is entirely map-side; `graft_token_hashes`
-    * must be registered on the session.
+    * per document. Selection is entirely map-side, one
+    * `graft_winnow_sel` call per document.
     */
   private[operators] def winnowSelect(docs: DataFrame, k: Int = 3,
       w: Int = 4): DataFrame =
@@ -1783,7 +1772,6 @@ object Dedup {
       minRunShingles: Int = 3): DataFrame = {
     require(k >= 2, s"window width k must be >= 2 tokens, got $k")
     require(minRunShingles >= 1, s"minRunShingles must be >= 1, got $minRunShingles")
-    graft.functions.HashExpressions.register(train.sparkSession)
     // (0-seeded h*31+x fold over the k token hashes ending at i — the
     // dedup_substring window-hash family, width parameterized)
     val fold = (k - 1 to 0 by -1).foldLeft("0L")((h, j) =>

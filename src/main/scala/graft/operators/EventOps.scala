@@ -604,11 +604,6 @@ object EventOps {
         "chi2_milli", s"CAST(chi2_milli >= ${critMilli}L AS INT) AS significant"): _*)
   }
 
-  /** Transition-lift mining of any (user_id, ts, event_id, event_type)
-    * frame — see the `event_path_lift` registry comment for the lift
-    * arithmetic and window-shape contracts. `minCount` prunes the pair
-    * table before any join.
-    */
   /** First-view-to-first-subsequent-purchase latency distribution — see
     * the `conversion_latency` registry comment. `fromType`/`toType` are
     * the funnel ends; latency quantizes to whole seconds BEFORE the
@@ -658,6 +653,11 @@ object EventOps {
       .limit(k)
   }
 
+  /** Transition-lift mining of any (user_id, ts, event_id, event_type)
+    * frame — see the `event_path_lift` registry comment for the lift
+    * arithmetic and window-shape contracts. `minCount` prunes the pair
+    * table before any join.
+    */
   def transitionLift(ev: DataFrame, minCount: Long = 5L): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     val trans = ev

@@ -1104,12 +1104,6 @@ object Extras {
         "CAST(n_dim = n_pk_distinct AS INT) AS pk_is_unique")
   }
 
-  /** Per-column data card of any frame of profileable columns (integral,
-    * float, string, timestamp, date) — see the `table_profile` registry
-    * comment for the canonicalization, the exact-or-sketch distinct lane
-    * and the scale shape. `m` is the register knob, `exactK` the
-    * exact-distinct bound; unsupported column types fail loudly (select
-    * the profileable columns first). */
   /** Exact duplicate-row census of any profileable frame — see the
     * `row_dupes` registry comment. The row digest is md5 over the
     * type-canonicalized columns joined by chr(1) with chr(2) for NULLs
@@ -1182,12 +1176,17 @@ object Extras {
     }
   }
 
+  /** Per-column data card of any frame of profileable columns (integral,
+    * float, string, timestamp, date) — see the `table_profile` registry
+    * comment for the canonicalization, the exact-or-sketch distinct lane
+    * and the scale shape. `m` is the register knob, `exactK` the
+    * exact-distinct bound; unsupported column types fail loudly (select
+    * the profileable columns first). */
   def tableProfile(df: org.apache.spark.sql.DataFrame, m: Int = 256,
       exactK: Int = 1024): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.types._
     import graft.operators.CorpusOps
     require(exactK >= 1, s"exactK must be positive, got $exactK")
-    graft.functions.HashExpressions.register(df.sparkSession)
     val fields = df.schema.fields
     require(fields.nonEmpty, "nothing to profile")
     def canonInt(f: StructField): Option[String] = colCanonInt(f)

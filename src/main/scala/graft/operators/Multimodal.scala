@@ -115,13 +115,6 @@ object Multimodal {
   /** Sampled frame: offset + a slice of bytes. */
   case class Frame(doc_id: Long, frame_no: Int, offset: Int, frame_bytes: Array[Byte])
 
-  /** REAL image codec: hand-rolled 24-bit BMP encoder + `javax.imageio`
-    * decoder (both in-JDK). Pixel channel values are a deterministic
-    * function of the source text bytes — value at flat index
-    * k = (y*w + x)*3 + c (row-major top-down, channels R,G,B) is
-    * byte[k mod len] — which the DuckDB oracle replays independently, so
-    * the decoded width/height/pixel checksum verify the full container
-    * round trip, not just the arithmetic. */
   /** One decoded pixel's R, G, B channel values folded into `acc`
     * (polynomial base 31 mod P) — the pixel checksum step every codec
     * and the oracles' byte replays share. */
@@ -159,6 +152,13 @@ object Multimodal {
     }
   }
 
+  /** REAL image codec: hand-rolled 24-bit BMP encoder + `javax.imageio`
+    * decoder (both in-JDK). Pixel channel values are a deterministic
+    * function of the source text bytes — value at flat index
+    * k = (y*w + x)*3 + c (row-major top-down, channels R,G,B) is
+    * byte[k mod len] — which the DuckDB oracle replays independently, so
+    * the decoded width/height/pixel checksum verify the full container
+    * round trip, not just the arithmetic. */
   object BmpCodec {
     // ImageIO.read(InputStream) defaults to a DISK-cached
     // ImageInputStream (useCache = true): every decode writes a temp
@@ -1018,7 +1018,6 @@ object Multimodal {
     // hash is the recall knob; its plumbing is dedup_simhash_pairs'. ------
     "multimodal_phash_dedup" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         mediaTable(s, dir).toDF()
           .selectExpr("doc_id", "media_type", "decode(content, 'UTF-8') AS payload")
           // same >= 3-token guard as the MinHash family (empty shingle

@@ -139,7 +139,6 @@ object Pretrain {
       evalPoolExpr: String = DefaultEvalPool,
       dedupEmitter: String = "all",
       autoCappedBudget: Long = Dedup.AutoCappedBudget): DataFrame = {
-    graft.functions.HashExpressions.register(s)
     val d = Tables.load(s, dir, "documents")
 
     // ---- 1. quality gates ------------------------------------------------

@@ -122,7 +122,6 @@ object Retrieval {
     // and one addition, same order as the oracle. ---------------------------
     "rank_fusion" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
         val q = emb.filter(col("vec_id") < 10)
           .selectExpr("vec_id AS q_id", "embedding AS q_emb")

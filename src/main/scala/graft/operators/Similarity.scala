@@ -203,7 +203,6 @@ object Similarity {
     // ---- brute-force cosine top-k (k=5) for 10 query vectors --------------
     "ann_cosine_topk" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
         val q = emb.filter(col("vec_id") < 10)
           .selectExpr("vec_id AS q_id", "embedding AS q_emb")
@@ -230,7 +229,6 @@ object Similarity {
     // (label = centroid assignment), top-3 neighbors for 20 query vectors ---
     "ann_cosine_bucketed" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
         val q = emb.filter(col("vec_id") < 20)
           .selectExpr("vec_id AS q_id", "label AS q_label", "embedding AS q_emb")
@@ -265,7 +263,6 @@ object Similarity {
     // partition pruning, exactly as ann_cosine_bucketed's plan shows. ------
     "ann_ivf_probe" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
         // persisted slim: feeds queries AND candidates
         val assigned = assignCells(emb, 4).select(col("vec_id"), col("cell"))
@@ -306,7 +303,6 @@ object Similarity {
     // (bounded by n_cells, not by data). ------------------------------------
     "ann_ivf_nprobe" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
         val cents = seedCents(emb, 4)
         // persist the N-row ASSIGNMENT, not the 4N-row similarity frame:
@@ -444,7 +440,6 @@ object Similarity {
     // Queries with zero overlap keep their row via the left join. ----------
     "ann_recall_report" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
         val q = emb.filter(col("vec_id") < 8)
           .selectExpr("vec_id AS q_id", "embedding AS q_emb")
@@ -531,7 +526,6 @@ object Similarity {
     // same fixed-order IEEE sequence as embedding_pq's dist columns. ------
     "ann_ivf_pq" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
         val cents = seedCents(emb, 4)
         // rank-1 cell assignment — the same scoreCells as ann_ivf_nprobe
@@ -846,7 +840,6 @@ object Similarity {
   /** Every vector's cosine to every broadcast centroid `(vec_id, c_id,
     * sim)`, zero-norm vectors at the -2 sentinel. */
   private def cellSims(emb: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.HashExpressions.register(emb.sparkSession)
     emb.crossJoin(broadcast(cents))
       .selectExpr("vec_id", "c_id", "nanvl(graft_cosine(c_emb, embedding), -2.0) AS sim")
   }
@@ -912,32 +905,6 @@ object Similarity {
       .transform(graft.Sorted.byNames(_, "vec_id"))
   }
 
-  /** Radius (ε-NN) similarity search — ALL corpus vectors within a cosine
-    * radius of each query (queries = corpus vectors with `vec_id %
-    * queryMod = 0`). SRP-LSH prefilter, ASYMMETRIC: only query-side bands
-    * join the corpus bands, exact cosine ≥ `threshold` verified on
-    * candidates only, full neighborhoods returned (no id ordering).
-    *
-    * THE SCALE KNOB IS `width` (hyperplanes per band): band-bucket
-    * occupancy is N / 2^width — a CONSTANT key space saturates at corpus
-    * scale no matter how the data is distributed, so width must grow
-    * ~log2(N) to hold occupancy (and with it candidate volume) flat.
-    * Width trades against recall at a given radius (P(band match) =
-    * p^width with p = 1 − θ/π), so radius and width co-tune: the fixture
-    * instantiates (threshold 0.45, width 3 — 12 bits, lane-compatible
-    * with graft_srp12 and the oracle replay; 0.45 because the fixture has
-    * no higher-cosine pairs, dedup_embedding_cosine's documented demo
-    * threshold), while a production near-dup radius (~0.9, p ≈ 0.86)
-    * holds ~75% recall per 4-band split at width 8. The width sizing is
-    * MEASURED across corpus decades in SCALE.md ("Round-9: the
-    * radius-search band-width knob, measured"), not argued in prose.
-    * Key encoding is internal: any injective encoding
-    * of the width-bit tuple yields the same candidate set, so the demo
-    * oracle's arithmetic 3-bit keys and this method's concat keys agree. */
-  /** The persisted (vec_id, band, key) frame shared by the SRP family:
-    * width-parameterized native signature, one explode to band keys.
-    * Key encoding (bit concat) is internal — any injective encoding of
-    * the width-bit tuple partitions candidates identically. */
   /** Occupancy-targeted SRP band width — the `width ~ log2(N)` growth
     * rule the decade probes measured (SCALE.md, "Round-9: the
     * radius-search band-width knob, measured"), as code: expected
@@ -961,8 +928,11 @@ object Similarity {
     math.min(256, math.max(3, w))
   }
 
+  /** The persisted (vec_id, band, key) frame shared by the SRP family:
+    * width-parameterized native signature, one explode to band keys.
+    * Key encoding (bit concat) is internal — any injective encoding of
+    * the width-bit tuple partitions candidates identically. */
   private def srpBands(emb: DataFrame, width: Int, nBands: Int): DataFrame = {
-    graft.functions.HashExpressions.register(emb.sparkSession)
     val signed = emb
       .selectExpr("vec_id", s"graft_srp(embedding, ${width * nBands}) AS sg")
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -996,6 +966,28 @@ object Similarity {
       .transform(graft.Sorted.byNames(_, "id_a", "id_b"))
   }
 
+  /** Radius (ε-NN) similarity search — ALL corpus vectors within a cosine
+    * radius of each query (queries = corpus vectors with `vec_id %
+    * queryMod = 0`). SRP-LSH prefilter, ASYMMETRIC: only query-side bands
+    * join the corpus bands, exact cosine ≥ `threshold` verified on
+    * candidates only, full neighborhoods returned (no id ordering).
+    *
+    * THE SCALE KNOB IS `width` (hyperplanes per band): band-bucket
+    * occupancy is N / 2^width — a CONSTANT key space saturates at corpus
+    * scale no matter how the data is distributed, so width must grow
+    * ~log2(N) to hold occupancy (and with it candidate volume) flat.
+    * Width trades against recall at a given radius (P(band match) =
+    * p^width with p = 1 − θ/π), so radius and width co-tune: the fixture
+    * instantiates (threshold 0.45, width 3 — 12 bits, lane-compatible
+    * with graft_srp12 and the oracle replay; 0.45 because the fixture has
+    * no higher-cosine pairs, dedup_embedding_cosine's documented demo
+    * threshold), while a production near-dup radius (~0.9, p ≈ 0.86)
+    * holds ~75% recall per 4-band split at width 8. The width sizing is
+    * MEASURED across corpus decades in SCALE.md ("Round-9: the
+    * radius-search band-width knob, measured"), not argued in prose.
+    * Key encoding is internal: any injective encoding
+    * of the width-bit tuple yields the same candidate set, so the demo
+    * oracle's arithmetic 3-bit keys and this method's concat keys agree. */
   def rangeSearch(emb: DataFrame, queryMod: Int = 25, threshold: Double = 0.45,
       width: Int = 3, nBands: Int = 4): DataFrame = {
     val bands = srpBands(emb, width, nBands)
@@ -1014,6 +1006,25 @@ object Similarity {
       .transform(graft.Sorted.byNames(_, "q_id", "vec_id"))
   }
 
+  /** Scored in-cell pairs shared by [[knnLabelProbe]] and
+    * [[hardNegatives]]: the persisted cell frame ([[assignCells]], k ~ √N
+    * default — ONE definition of the kk sizing), both pair sides off the
+    * cache, exact cosine per pair with BOTH endpoint labels carried.
+    * Pair volume ~N²/k — the measured knob (SCALE.md, "Round-9: the
+    * semantic-dedup cell knob, measured"). */
+  private def inCellPairs(emb: DataFrame, k: Int, corpusSize: Long): DataFrame = {
+    val kk = sqrtCellK(emb, k, corpusSize)
+    val ce = emb.join(assignCells(emb, kk).drop("sim"), "vec_id")
+      .select(col("vec_id"), col("label"), col("cell"), col("embedding"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val a = ce.selectExpr("cell", "vec_id AS q_id", "label", "embedding AS q_emb")
+    val b = ce.selectExpr("cell", "vec_id", "label AS nb_label", "embedding")
+    a.join(b, "cell")
+      .filter(col("q_id") =!= col("vec_id"))
+      .selectExpr("q_id", "label", "vec_id", "nb_label",
+        "graft_cosine(q_emb, embedding) AS cosine")
+  }
+
   /** kNN label-probe: leave-one-out k-nearest-neighbor classification of
     * every vector by majority vote of its `kNN` nearest IN-CELL neighbors,
     * reported as per-label accuracy — the standard probe for "does the
@@ -1029,26 +1040,6 @@ object Similarity {
     * (votes, -label) struct, ties to the smaller label). Zero-norm
     * vectors drop from both sides of the vote (NaN cosine — TopK and the
     * oracle's rankable guard agree). Accuracy is integer per-mille. */
-  /** Scored in-cell pairs shared by [[knnLabelProbe]] and
-    * [[hardNegatives]]: the persisted cell frame ([[assignCells]], k ~ √N
-    * default — ONE definition of the kk sizing), both pair sides off the
-    * cache, exact cosine per pair with BOTH endpoint labels carried.
-    * Pair volume ~N²/k — the measured knob (SCALE.md, "Round-9: the
-    * semantic-dedup cell knob, measured"). */
-  private def inCellPairs(emb: DataFrame, k: Int, corpusSize: Long): DataFrame = {
-    val kk = sqrtCellK(emb, k, corpusSize)
-    graft.functions.HashExpressions.register(emb.sparkSession)
-    val ce = emb.join(assignCells(emb, kk).drop("sim"), "vec_id")
-      .select(col("vec_id"), col("label"), col("cell"), col("embedding"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val a = ce.selectExpr("cell", "vec_id AS q_id", "label", "embedding AS q_emb")
-    val b = ce.selectExpr("cell", "vec_id", "label AS nb_label", "embedding")
-    a.join(b, "cell")
-      .filter(col("q_id") =!= col("vec_id"))
-      .selectExpr("q_id", "label", "vec_id", "nb_label",
-        "graft_cosine(q_emb, embedding) AS cosine")
-  }
-
   def knnLabelProbe(emb: DataFrame, k: Int = 0, kNN: Int = 5,
       corpusSize: Long = 0L): DataFrame = {
     val scored = inCellPairs(emb, k, corpusSize).drop("nb_label")
@@ -1102,7 +1093,6 @@ object Similarity {
     * Zero-norm vectors score the -2 sentinel against every centroid
     * (margin 0, counted non-positive) — the assignCells contract. */
   def labelCentroidMargin(embIn: DataFrame): DataFrame = {
-    graft.functions.HashExpressions.register(embIn.sparkSession)
     // 64-dim contract, pinned EXPLICITLY: the DuckDB oracle replays the
     // centroid sum over a fixed range(1, 65) (dims past the actual length
     // contribute NULL to the sum but still count in n), so slice+zero-pad
@@ -1143,20 +1133,6 @@ object Similarity {
       .orderBy("label")
   }
 
-  /** k-means (`iters` Lloyd iterations over the first-k seeds) — the IVF
-    * TRAINING step ann_ivf_probe's content-derived cells assume. Scale
-    * shape per round: assignment is a k×N broadcast score + window-free
-    * argmax (one partial+final agg); the update is a posexplode to
-    * (cell, dim) rows — one corpus-linear shuffle bounded by k×dim
-    * groups — and centroids re-enter as a broadcast. localCheckpoint
-    * bounds plan depth like every iterative op here. Cross-engine
-    * parity: float sums are order-dependent, so the update accumulates
-    * floor(x * 2^20) scaled int64 (exact, commutative); the mean returns
-    * to double (sum/n/2^20 — identical IEEE op sequence both sides) and
-    * is cast to FLOAT, so round-2 cosines see bit-identical centroids.
-    * Empty cells would drop (fixture cells are all populated);
-    * production keeps the stale centroid via a left join — documented,
-    * not needed at any tested SF. */
   /** Balance report of any `(vec_id, cell)` index assignment — see the
     * `ann_index_stats` registry comment. `k` is the INTENDED cell count
     * (empty cells = k − cells actually used). One row out. */
@@ -1177,8 +1153,21 @@ object Similarity {
            |END AS imbalance_milli""".stripMargin)
   }
 
+  /** k-means (`iters` Lloyd iterations over the first-k seeds) — the IVF
+    * TRAINING step ann_ivf_probe's content-derived cells assume. Scale
+    * shape per round: assignment is a k×N broadcast score + window-free
+    * argmax (one partial+final agg); the update is a posexplode to
+    * (cell, dim) rows — one corpus-linear shuffle bounded by k×dim
+    * groups — and centroids re-enter as a broadcast. localCheckpoint
+    * bounds plan depth like every iterative op here. Cross-engine
+    * parity: float sums are order-dependent, so the update accumulates
+    * floor(x * 2^20) scaled int64 (exact, commutative); the mean returns
+    * to double (sum/n/2^20 — identical IEEE op sequence both sides) and
+    * is cast to FLOAT, so round-2 cosines see bit-identical centroids.
+    * Empty cells would drop (fixture cells are all populated);
+    * production keeps the stale centroid via a left join — documented,
+    * not needed at any tested SF. */
   def kmeansAssign(emb0: DataFrame, k: Int = 4, iters: Int = 2): DataFrame = {
-    graft.functions.HashExpressions.register(emb0.sparkSession)
     val emb = emb0.select(col("vec_id"), col("embedding"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     var cents = seedCents(emb, k)
@@ -1203,41 +1192,6 @@ object Similarity {
       .transform(graft.Sorted.byNames(_, "vec_id"))
   }
 
-  /** Prototypicality pruning (Sorscher et al. 2022): keep the hardest
-    * `keepPm` per mille of each k-means cell, hardness = ascending
-    * cosine to the own-cell centroid (the cell's prototype), ties to
-    * the smaller vec_id. `keep_n = ceil(n_cell * keepPm / 1000)` in
-    * exact integer arithmetic, so a non-empty cell always keeps at
-    * least one example when keepPm > 0. Scale shape: the clustering is
-    * [[kmeansAssign]] (assignment broadcast-scored, update a k×dim
-    * group — documented there); the prune adds exactly ONE extra
-    * exchange — a window partitioned BY CELL carrying both the
-    * hardness rank and the cell count (same partitioning, one shuffle,
-    * never a SinglePartition sort). Nothing here is pair-volume: the
-    * quota is a rank against a windowed count, not a comparison
-    * against other examples — so unlike the in-cell pair family, k is
-    * NOT a safety knob. Measured (SCALE.md round-10 continuation):
-    * fixed k stays near-flat across two decades (1.89 → 3.88 s) while
-    * k ~ √N drives the N·k assignment cosines to N^1.5 (267 s at
-    * 100×). Size k for clustering granularity and so N/k rows fit one
-    * window task (the shard_shuffle argument); beyond that the
-    * documented paths are two-level coarse-to-fine assignment and the
-    * ccnet_buckets distribution-cutoff replacement for the per-cell
-    * sort. */
-  /** Top principal component by deterministic power iteration — see the
-    * `embedding_pca` registry comment. Scale shape: TWO corpus passes
-    * (the mean fold, then the covariance fold) plus one projection
-    * pass; the covariance explode emits dim² = 4096 quantized products
-    * per vector, but they flow into a combiner-perfect 4096-group
-    * aggregate — map-side partials absorb the volume, nothing
-    * corpus-sized crosses an exchange (plan-pinned: the only wide
-    * exchanges carry ≤ 4096 rows). The iteration itself runs on the
-    * ONE-ROW (covariance, means) frame — 8 chained projections, each a
-    * 64×64 HOF — and the resulting direction re-enters the projection
-    * pass as a broadcast. dim is the knob: the update is dim² groups
-    * (d = 1024 → 1M groups, still model-sized); components beyond the
-    * first come from deflation (S ← S − λvvᵀ on the same one-row
-    * frame), same arithmetic, documented not duplicated. */
   /** The shared PCA substrate: (centered 64-dim frame, 1-row mean list,
     * 1-row top component) — one definition behind embedding_pca and the
     * anisotropy report so the power-iteration arithmetic can never fork. */
@@ -1298,6 +1252,20 @@ object Similarity {
       "acc + CAST(floor(element_at(cent, pi + 1) * element_at(v, pi + 1) * " +
       "1048576D) AS BIGINT)) AS DOUBLE) / 1048576D"
 
+  /** Top principal component by deterministic power iteration — see the
+    * `embedding_pca` registry comment. Scale shape: TWO corpus passes
+    * (the mean fold, then the covariance fold) plus one projection
+    * pass; the covariance explode emits dim² = 4096 quantized products
+    * per vector, but they flow into a combiner-perfect 4096-group
+    * aggregate — map-side partials absorb the volume, nothing
+    * corpus-sized crosses an exchange (plan-pinned: the only wide
+    * exchanges carry ≤ 4096 rows). The iteration itself runs on the
+    * ONE-ROW (covariance, means) frame — 8 chained projections, each a
+    * 64×64 HOF — and the resulting direction re-enters the projection
+    * pass as a broadcast. dim is the knob: the update is dim² groups
+    * (d = 1024 → 1M groups, still model-sized); components beyond the
+    * first come from deflation (S ← S − λvvᵀ on the same one-row
+    * frame), same arithmetic, documented not duplicated. */
   def embeddingPca(embIn: DataFrame, iters: Int = 8): DataFrame = {
     val (centered, _, vrow) = pcaParts(embIn, iters)
     centered.crossJoin(broadcast(vrow))
@@ -1428,6 +1396,27 @@ object Similarity {
        |FROM t CROSS JOIN men""".stripMargin
   }
 
+  /** Prototypicality pruning (Sorscher et al. 2022): keep the hardest
+    * `keepPm` per mille of each k-means cell, hardness = ascending
+    * cosine to the own-cell centroid (the cell's prototype), ties to
+    * the smaller vec_id. `keep_n = ceil(n_cell * keepPm / 1000)` in
+    * exact integer arithmetic, so a non-empty cell always keeps at
+    * least one example when keepPm > 0. Scale shape: the clustering is
+    * [[kmeansAssign]] (assignment broadcast-scored, update a k×dim
+    * group — documented there); the prune adds exactly ONE extra
+    * exchange — a window partitioned BY CELL carrying both the
+    * hardness rank and the cell count (same partitioning, one shuffle,
+    * never a SinglePartition sort). Nothing here is pair-volume: the
+    * quota is a rank against a windowed count, not a comparison
+    * against other examples — so unlike the in-cell pair family, k is
+    * NOT a safety knob. Measured (SCALE.md round-10 continuation):
+    * fixed k stays near-flat across two decades (1.89 → 3.88 s) while
+    * k ~ √N drives the N·k assignment cosines to N^1.5 (267 s at
+    * 100×). Size k for clustering granularity and so N/k rows fit one
+    * window task (the shard_shuffle argument); beyond that the
+    * documented paths are two-level coarse-to-fine assignment and the
+    * ccnet_buckets distribution-cutoff replacement for the per-cell
+    * sort. */
   def prototypePrune(emb: DataFrame, k: Int = 4, iters: Int = 2,
       keepPm: Int = 700): DataFrame = {
     require(keepPm >= 0 && keepPm <= 1000,

@@ -50,7 +50,6 @@ object TextOps {
     // tie-break (fixed precedence chain) ------------------------------------
     "text_lang_id" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         Tables.load(s, dir, "documents")
           .selectExpr("doc_id", "lang AS labeled_lang", "graft_text_stats(text) AS st")
           .selectExpr("doc_id", "labeled_lang",
@@ -92,7 +91,6 @@ object TextOps {
     // |langs|²- and |langs|-row domains; totals broadcast back. ----------
     "langid_eval" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         val pred = Tables.load(s, dir, "documents")
           .selectExpr("lang AS labeled_lang", "graft_text_stats(text) AS st")
           .selectExpr("labeled_lang",
@@ -131,7 +129,6 @@ object TextOps {
     // ---- quality scoring: length/punctuation/stopword/uniqueness ratios ---
     "text_quality" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         Tables.load(s, dir, "documents")
           .selectExpr("doc_id", "n_chars", "graft_text_stats(text) AS st")
           .selectExpr("doc_id", "n_chars", "st", "st.n_punct AS n_punct",
@@ -203,7 +200,6 @@ object TextOps {
     // ASCII class throughout. ----------------------------------------------
     "text_normalize" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         Tables.load(s, dir, "documents")
           .selectExpr("doc_id",
             "trim(regexp_replace(lower(text), '[ \\\\t\\\\n\\\\f\\\\r]+', ' ')) AS norm")
@@ -222,7 +218,6 @@ object TextOps {
     // the full text plus a first-8-token prefix fingerprint ------------------
     "doc_fingerprint" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         Tables.load(s, dir, "documents")
           .selectExpr("doc_id",
             "graft_polyhash(text) AS fp",
@@ -562,7 +557,6 @@ object TextOps {
     // three-sentence-span dedup — is dedup_paragraph's shape. ------------
     "c4_rules" -> QueryDef(
       (s, dir) => {
-        graft.functions.HashExpressions.register(s)
         Tables.load(s, dir, "documents")
           .selectExpr("doc_id",
             s"${Portable.tokensSql("coalesce(text, '')")} AS ts",

@@ -51,7 +51,6 @@ object StreamingCuration {
   def gate(batch: DataFrame, histBytes: Option[Array[Byte]] = None): DataFrame =
     histBytes match {
       case Some(bytes) =>
-        graft.functions.HashExpressions.register(batch.sparkSession)
         // xxhash64 maps NULL to the seed (not to NULL), so a null digest
         // must short-circuit to "not a member" explicitly — same posture
         // as bloom_membership's null handling
@@ -90,7 +89,6 @@ object StreamingCuration {
   def classifierGate(batch: DataFrame, w: Array[Long],
       thresholdPpb: Long = 0L): DataFrame = {
     require(w.length == 8192, s"expected 8192 weights, got ${w.length}")
-    graft.functions.HashExpressions.register(batch.sparkSession)
     // null text: graft_token_hashes yields no usable array, the CASE
     // guard in bigramBktExpr falls through to the empty branch, and the
     // empty-bkts IF below leaves score_ppb null -> gate fails closed

@@ -32,7 +32,6 @@ object StreamingDriftMonitor {
 
   /** Offline reference distribution: (bkt, c) hashed-bigram counts. */
   def referenceCounts(docs: DataFrame): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     docs.select(expr("graft_token_hashes(text)").as("th"))
       .select(explode(expr(graft.operators.CorpusOps.bigramBktExpr)).as("bkt"))
       .groupBy(col("bkt")).agg(count(lit(1)).as("c"))
@@ -69,7 +68,6 @@ object StreamingDriftMonitor {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     require(ref.agg(coalesce(sum(col("c")), lit(0L))).collect()(0).getLong(0) > 0,
       "reference distribution has no bigrams")
-    graft.functions.HashExpressions.register(texts.sparkSession)
     val counts = texts
       .select(expr("graft_token_hashes(text)").as("th"))
       .select(explode(expr(graft.operators.CorpusOps.bigramBktExpr)).as("bkt"))

@@ -85,7 +85,6 @@ object StreamingEmbeddingNearDup {
     require(width >= 1 && nBands >= 1, s"bad banding: ($width, $nBands)")
     val s = vecs.sparkSession
     import s.implicits._
-    HashExpressions.register(s)
     val banded = vecs
       .withColumn("ets", col("ts").cast("timestamp"))
       .withWatermark("ets", delay)

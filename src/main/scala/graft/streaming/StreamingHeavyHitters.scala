@@ -41,10 +41,9 @@ object StreamingHeavyHitters {
     def update(batch: DataFrame, batchId: Long = -1L): Unit = {
       if (store.isReplay(batchId)) return
       val s = batch.sparkSession
-      graft.functions.HashExpressions.register(s)
       import s.implicits._
       val partial = batch
-        .selectExpr("explode(filter(split(lower(text), '[^a-z0-9]+'), t -> t != '')) AS term")
+        .selectExpr(s"explode(${graft.functions.Portable.tokensSql("text")}) AS term")
         .selectExpr("graft_polyhash(term) AS h").as[Long]
         .select(agg.toColumn).head()
       // merge into a COPY, then publish: CountMin.merge mutates its first
@@ -61,7 +60,6 @@ object StreamingHeavyHitters {
       * count >= total/denominator, deterministic (est DESC, term) order. */
     def heavyHitters(dict: DataFrame, denominator: Long = 200L): DataFrame = {
       val s = dict.sparkSession
-      graft.functions.HashExpressions.register(s)
       import s.implicits._
       val frozen = Seq(sketch).toDF("cms")
       dict.selectExpr("term", "graft_polyhash(term) AS h")

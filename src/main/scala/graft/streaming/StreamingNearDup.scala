@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.functions.HashExpressions
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -109,7 +108,6 @@ object StreamingNearDup {
   private def banded(docs: DataFrame, delay: String): Dataset[BandRow] = {
     val s = docs.sparkSession
     import s.implicits._
-    HashExpressions.register(s)
     docs
       .withColumn("ets", col("ts").cast("timestamp"))
       .withWatermark("ets", delay)

@@ -107,4 +107,45 @@ class GraftExtensionsSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("graft_* functions resolve in sessions derived from a configured one") {
+    withExtensionsSession { spark =>
+      // "ab c" -> token hashes [a*31 + b, c] = [3105, 99];
+      // cos([1, 0], [1, 1]) = 1 / sqrt(2)
+      val want = (Seq(3105L, 99L), 1.0 / math.sqrt(2.0))
+      def call(df: org.apache.spark.sql.DataFrame): (Seq[Long], Double) = {
+        val r = df.selectExpr("graft_token_hashes(t)",
+          "graft_cosine(array(1.0f, 0.0f), array(1.0f, CAST(n AS FLOAT)))").head()
+        (r.getSeq[Long](0), r.getDouble(1))
+      }
+      // newSession: fresh SQL state, shared context
+      val fresh = spark.newSession()
+      assert(call(fresh.createDataFrame(Seq(("ab c", 1)))
+        .toDF("t", "n")) == want)
+      // foreachBatch: the batch runs on the stream's cloned session
+      import org.apache.spark.sql.DataFrame
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+      import spark.implicits._
+      val ms = MemoryStream[(String, Int)]
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[Long], Double)]()
+      val sessions = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+      val q = ms.toDF().toDF("t", "n").writeStream
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          sessions.add(b.sparkSession)
+          seen.add(call(b))
+          ()
+        }
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft-ext-stream").toString)
+        .start()
+      try {
+        ms.addData(("ab c", 1))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(!sessions.isEmpty && sessions.stream().allMatch(_ ne spark),
+        "foreachBatch must run on a session other than the configured one")
+      assert(seen.size == 1 && seen.peek() == want, s"got $seen")
+    }
+  }
 }

@@ -13,7 +13,6 @@ class PlanAuditSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(name: String): String = {
-    graft.functions.HashExpressions.register(spark)
     // audits assert the COLD plan shape. Suites share one JVM session, so
     // another suite that materialized the same query (e.g. LlmOpsEdgeSpec's
     // ccnet_buckets run on this very sfDir) leaves its persisted

@@ -17,7 +17,6 @@ class GopherStatsSpec extends SparkSpec {
 
   test("native stats equal the lambda form column-for-column") {
     import spark.implicits._
-    graft.functions.HashExpressions.register(spark)
     val texts = Seq(
       "The quick brown fox and the lazy dog have to be with that of it",
       "42 007 12345 only digits here 99",

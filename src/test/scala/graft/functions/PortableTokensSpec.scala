@@ -19,7 +19,6 @@ class PortableTokensSpec extends SparkSpec {
 
   test("native tokens equal the lambda form on edge shapes") {
     import spark.implicits._
-    graft.functions.HashExpressions.register(spark)
     val texts = Seq(
       "The quick brown fox! 42 times.",
       "", "   ", "...!!,,", // empty / separator-only
@@ -49,7 +48,6 @@ class PortableTokensSpec extends SparkSpec {
 
   test("graft_tokens and graft_token_hashes tokenize alike") {
     import spark.implicits._
-    graft.functions.HashExpressions.register(spark)
     val texts = Seq(
       "İstanbul İİ xİy", // U+0130: one code point, lowers to 'i'
       "KELVKN Kelvin K", // U+212A KELVIN SIGN lowers to 'k'

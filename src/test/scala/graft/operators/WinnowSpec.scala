@@ -19,7 +19,6 @@ class WinnowSpec extends SparkSpec {
     StructField("text", StringType)))
 
   private def docs(rows: (Long, String)*) = {
-    graft.functions.HashExpressions.register(spark)
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(r => Row(r._1, r._2)), 2),
       docSchema)

@@ -149,7 +149,6 @@ class StreamingEmbeddingNearDupSpec extends SparkSpec {
       def norm(v: Array[Float]) = math.sqrt(v.map(x => x.toDouble * x).sum)
       dot / (norm(a) * norm(b))
     }
-    graft.functions.HashExpressions.register(spark)
     val batch = Seq((a, b)).toDF("x", "y")
       .selectExpr("graft_cosine(x, y)").head().getDouble(0)
     assert(java.lang.Double.doubleToLongBits(doubleProducts) !=
