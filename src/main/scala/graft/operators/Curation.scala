@@ -347,7 +347,7 @@ object Curation {
       (s, dir) => {
         Tables.load(s, dir, "documents")
           .selectExpr(
-            "size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) AS n_tokens")
+            s"size(${graft.functions.Portable.tokensSql("text")}) AS n_tokens")
           .selectExpr(
             """CASE WHEN n_tokens < 16 THEN 'b000_016'
               |     WHEN n_tokens < 32 THEN 'b016_032'

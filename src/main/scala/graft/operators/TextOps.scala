@@ -177,7 +177,7 @@ object TextOps {
         Tables.load(s, dir, "documents")
           .selectExpr("doc_id", "source",
             "size(filter(split(text, '[ \\\\t\\\\n\\\\f\\\\r]+'), t -> length(t) > 0)) AS n_ws_tokens",
-            "size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) AS n_re_tokens",
+            s"size(${Portable.tokensSql("text")}) AS n_re_tokens",
             "size(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 \\\\t\\\\n\\\\f\\\\r]+', 0)) AS n_bpe_tokens",
             "n_chars")
           .transform(graft.Sorted.byNames(_, "doc_id"))

@@ -5,13 +5,19 @@ import org.apache.spark.sql.SparkSession
 
 /** Small-files compaction for append-mode parquet logs.
   *
-  * Every micro-batch append (`LogPipeline.run`, `StreamingCuration`,
-  * `CdcRouter.processBatch`) adds a handful of files per trigger; at a
+  * Every micro-batch append adds a handful of files per trigger; at a
   * 5 s cadence that is ~17 k files/day/sink — the classic small-files
   * problem that makes a 100 TB table unreadable (NameNode pressure, task
   * per tiny split, footer-read storms). Compaction rewrites a closed
   * partition (yesterday's date dir, a finished topic dir) into
   * size-targeted files, preserving every row.
+  *
+  * The streaming layer outputs (`LogPipeline.run`, `StreamingCuration`,
+  * `CdcRouter.processBatch`, `OrderWide.run`) are not its targets: their
+  * `_spark_metadata` sink log ([[graft.streaming.LayerSink]]) lists each
+  * committed file, so a rewrite would drop the log with the old root or
+  * leave entries that point at deleted files. A dir at or under a logged
+  * root is refused with [[SinkLoggedException]], untouched.
   *
   * Implementation is on the Hadoop `FileSystem` API, so the same code
   * runs against local paths, HDFS, and object stores with rename
@@ -44,11 +50,14 @@ object Compaction {
   /** Compact one partition directory in place. Returns (filesBefore,
     * filesAfter). No-op (and no rewrite) if the dir already has at most
     * the target file count. If a previous attempt crashed mid-swap, the
-    * parked backup is restored first. */
+    * parked backup is restored first. Throws [[SinkLoggedException]]
+    * and touches nothing when `dir` or an ancestor holds a sink log. */
   def compactPartition(spark: SparkSession, dir: String,
       targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.streaming.LayerSink.loggedRoot(fs, p).foreach(root =>
+      throw new SinkLoggedException(s"$dir is under the sink-logged output $root"))
     val bak = bakPath(p)
     // recover a crashed swap: data parked at the backup, partition absent
     if (!fs.exists(p) && fs.exists(bak)) {
@@ -84,3 +93,7 @@ object Compaction {
     (before, dataFiles(fs, p).length)
   }
 }
+
+/** [[Compaction.compactPartition]] refused a dir whose files a streaming
+  * sink log lists. */
+final class SinkLoggedException(message: String) extends IllegalArgumentException(message)

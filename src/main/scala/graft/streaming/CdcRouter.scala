@@ -63,48 +63,38 @@ object CdcRouter {
 
   /** One micro-batch of routing: facts appended per-topic (partitioned by
     * sink_table ≈ dynamic-topic Kafka sink), dims upserted by primary key
-    * (last write wins ≈ Phoenix `upsert into`, DimSink.java:34-61). */
+    * (last write wins ≈ Phoenix `upsert into`, DimSink.java:34-61). Both
+    * logs are written through [[LayerSink]] under `batchId`, so a replayed
+    * batch id is skipped, facts and dims alike; `batch_id` stays on the
+    * rows as lineage. */
   def processBatch(batch: DataFrame, config: DataFrame, outDir: String, batchId: Long): Unit = {
     import org.apache.spark.sql.expressions.Window
     val routed = route(batch, config).persist()
     try {
-      // seq: a DETERMINISTIC within-batch discriminator. Two legitimately
-      // identical fact records in one batch get seq 1 and 2 (they must both
-      // survive the exactly-once dedup); a replayed batch regenerates the
-      // SAME (data, seq) multiset, so replays still collapse. Ordering among
-      // identical rows is immaterial — any assignment yields the same set.
-      val factSeq = Window.partitionBy(col("sink_table"), col("data")).orderBy(lit(1))
-      routed.filter(col("sink_type") === "kafka")
-        .select(col("sink_table"), col("data"), lit(batchId).as("batch_id"))
-        .withColumn("seq", row_number().over(factSeq))
-        .write.mode("append").partitionBy("sink_table").parquet(s"$outDir/facts")
+      LayerSink.write(routed.filter(col("sink_type") === "kafka")
+          .select(col("sink_table"), col("data"), lit(batchId).as("batch_id")),
+        s"$outDir/facts", batchId, "sink_table")
 
-      // same device for dims: two upserts to one pk within a batch need a
-      // deterministic winner (the reference has Kafka offset order; a file
-      // batch does not) — rank by payload for a stable, replay-identical
-      // intra-batch order, and let dimSnapshot take the highest
+      // two upserts to one pk within a batch need a deterministic winner
+      // (the reference has Kafka offset order; a file batch does not) —
+      // rank by payload for a stable, replay-identical intra-batch order,
+      // and let dimSnapshot take the highest
       val dimSeq = Window.partitionBy(col("sink_table"), col("pk"))
         .orderBy(col("data"))
       val dims = routed.filter(col("sink_type") === "hbase")
         .select(col("sink_table"), col("pk"),
           col("data"), lit(batchId).as("batch_id"),
           row_number().over(dimSeq).as("seq"))
-      dims.write.mode("append").partitionBy("sink_table").parquet(s"$outDir/dims_log")
+      LayerSink.write(dims, s"$outDir/dims_log", batchId, "sink_table")
     } finally routed.unpersist()
   }
 
-  /** Exactly-once view over the at-least-once facts log. Spark's Kafka (and
-    * file) sinks are at-least-once: a micro-batch replayed after a failure
-    * between sink write and checkpoint commit appends byte-identical
-    * (sink_table, batch_id, data) rows. Keyed dedup on read restores
-    * exactly-once — the idempotent-consumer recipe for the reference's
-    * transactional-producer gap (MyKafkaUtil.java:43-49; see COVERAGE.md,
-    * "Paper-parity gap: MyKafkaUtil", and CdcRouterSpec's replay test). At
-    * scale this is a per-(batch_id) shuffle-free dedup when the log is
-    * partitioned by batch_id; here the general dropDuplicates form. */
+  /** The facts log, per-topic. [[LayerSink]] keeps it exactly-once, the
+    * role of the reference's transactional producer (MyKafkaUtil.java:43-49;
+    * see COVERAGE.md, "Paper-parity gap: MyKafkaUtil"), so this is a plain
+    * read of committed batches. */
   def factsExactlyOnce(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/facts")
-      .dropDuplicates("sink_table", "batch_id", "data", "seq")
 
   /** Read the current dim snapshot: last write per (sink_table, pk) from the
     * upsert log — the keyed-KV-store view the reference holds in HBase. */
@@ -119,8 +109,11 @@ object CdcRouter {
   }
 
   /** Launch the streaming router: config re-read from `configPath` (CSV with
-    * a header, FIXTURES.md §B.4) every micro-batch. */
-  def run(spark: SparkSession, raw: DataFrame, configPath: String, outDir: String) =
+    * a header, FIXTURES.md §B.4) every micro-batch. Throws
+    * [[CheckpointResetException]] before start when `outDir/_chk` was
+    * deleted but the logs were kept. */
+  def run(spark: SparkSession, raw: DataFrame, configPath: String, outDir: String) = {
+    LayerSink.requireOffsets(spark, s"$outDir/_chk", s"$outDir/facts", s"$outDir/dims_log")
     raw.writeStream
       .option("checkpointLocation", s"$outDir/_chk")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -128,4 +121,5 @@ object CdcRouter {
         processBatch(parse(batch), config, outDir, batchId)
       }
       .start()
+  }
 }

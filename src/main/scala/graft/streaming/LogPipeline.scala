@@ -73,18 +73,23 @@ object LogPipeline {
       .select(col("mid"), col("page_id"), col("d.item").as("item"),
         col("d.pos_id").as("pos_id"), col("ts"))
 
-  /** Drive all three splits from one raw stream into in-memory/parquet sinks
-    * via a single pass per micro-batch. Returns the streaming query. */
+  /** Drive all three splits from one raw stream into parquet, one pass per
+    * micro-batch, each split written through [[LayerSink]] under the
+    * batch id: a batch replayed after a crash lands in every split exactly
+    * once, and readers of a split see whole batches only. Throws
+    * [[CheckpointResetException]] before start when `outDir/_chk` was
+    * deleted but the splits were kept. Returns the streaming query. */
   def run(spark: SparkSession, raw: DataFrame, outDir: String) = {
+    val splits = Seq("dwd_start_log" -> startStream _, "dwd_page_log" -> pageStream _,
+      "dwd_display_log" -> displayStream _)
+    LayerSink.requireOffsets(spark, s"$outDir/_chk", splits.map(s => s"$outDir/${s._1}"): _*)
     raw.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", s"$outDir/_chk")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val parsed = LogSchema.parse(batch).persist()
-        try {
-          startStream(parsed).write.mode("append").parquet(s"$outDir/dwd_start_log")
-          pageStream(parsed).write.mode("append").parquet(s"$outDir/dwd_page_log")
-          displayStream(parsed).write.mode("append").parquet(s"$outDir/dwd_display_log")
+        try splits.foreach { case (name, split) =>
+          LayerSink.write(split(parsed), s"$outDir/$name", batchId)
         } finally parsed.unpersist()
       }
       .start()

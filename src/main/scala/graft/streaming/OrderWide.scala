@@ -284,20 +284,25 @@ object OrderWide {
     * OrderWideApp.java:255-259): parse both raw JSON streams, interval-join
     * them, then per micro-batch re-read the dims (freshness = batch
     * cadence, replacing the reference's Redis-cached async lookups), enrich,
-    * project the full 34-field surface, and append to parquet (the
-    * `dwm_order_wide` topic analog). Returns the streaming query. */
+    * project the full 34-field surface, and append it through
+    * [[LayerSink]] under the batch id (the `dwm_order_wide` topic analog;
+    * a replayed batch is skipped). Throws [[CheckpointResetException]]
+    * before start when `outDir/_chk` was deleted but the output was kept.
+    * Returns the streaming query. */
   def run(spark: SparkSession, rawInfo: DataFrame, rawDetail: DataFrame,
       dimDir: String, outDir: String, asOfDate: String,
-      boundSeconds: Int = 5): org.apache.spark.sql.streaming.StreamingQuery =
+      boundSeconds: Int = 5): org.apache.spark.sql.streaming.StreamingQuery = {
+    LayerSink.requireOffsets(spark, s"$outDir/_chk", s"$outDir/dwm_order_wide")
     intervalJoin(parseInfo(rawInfo), parseDetail(rawDetail), boundSeconds)
       .writeStream
       .option("checkpointLocation", s"$outDir/_chk")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val dims = dimsFromParquet(spark, dimDir) // re-read: config freshness
-        toOrderWide(enrich(batch, dims, asOfDate))
-          .write.mode("append").parquet(s"$outDir/dwm_order_wide")
+        LayerSink.write(toOrderWide(enrich(batch, dims, asOfDate)),
+          s"$outDir/dwm_order_wide", batchId)
       }
       .start()
+  }
 
   /** Dimension table bundle (FIXTURES.md §B.6 columns). */
   case class Dims(

@@ -108,11 +108,10 @@ object StreamingCuration {
   /** One micro-batch: quality-score, gate against the historical corpus
     * (when a serialized Bloom filter of historical digest hashes is
     * supplied), stamp the batch id, split kept/rejected in a single
-    * persisted pass. The parquet appends are at-least-once (a replay
-    * after a crash between write and checkpoint commit appends
-    * byte-identical rows carrying the SAME batch_id), so read through
-    * [[kept]]/[[rejected]] for exactly-once — the idempotent-consumer
-    * recipe shared with `CdcRouter.factsExactlyOnce`.
+    * persisted pass. Both sides are written through [[LayerSink]] under
+    * `batchId`, so a batch replayed after a crash between write and
+    * checkpoint commit is skipped; `batch_id` stays on the rows as
+    * lineage.
     *
     * `hist_hit` rides along on BOTH outputs so consumers can distinguish
     * a quality rejection from a historical duplicate. A Bloom hit is
@@ -129,21 +128,18 @@ object StreamingCuration {
     }
     val s = gated.withColumn("batch_id", lit(batchId)).persist()
     try {
-      s.filter(col("keep")).drop("keep")
-        .write.mode("append").parquet(s"$outDir/kept")
-      s.filter(!col("keep")).drop("keep")
-        .write.mode("append").parquet(s"$outDir/rejected")
+      LayerSink.write(s.filter(col("keep")).drop("keep"), s"$outDir/kept", batchId)
+      LayerSink.write(s.filter(!col("keep")).drop("keep"), s"$outDir/rejected", batchId)
     } finally { s.unpersist(); () }
   }
 
-  /** Exactly-once view over the at-least-once kept log (replays append
-    * identical (digest, batch_id) rows; keyed dedup removes them). */
+  /** The kept log: committed batches only, each once ([[LayerSink]]). */
   def kept(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/kept").dropDuplicates("digest", "batch_id")
+    spark.read.parquet(s"$outDir/kept")
 
-  /** Exactly-once view over the rejected log. */
+  /** The rejected log: committed batches only, each once ([[LayerSink]]). */
   def rejected(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/rejected").dropDuplicates("digest", "batch_id")
+    spark.read.parquet(s"$outDir/rejected")
 
   /** One digest definition for BOTH the filter build and the stream gate —
     * and for the batch exact-dedup layer: all share
@@ -204,11 +200,13 @@ object StreamingCuration {
     * deploy the 8192-slot weight array in the stream — the
     * train-offline / score-online composition a production intake runs.
     * Adds a `score_ppb` column to both outputs (mergeSchema note above
-    * applies). */
+    * applies). Throws [[CheckpointResetException]] before start when
+    * `outDir/_chk` was deleted but the outputs were kept. */
   def run(spark: SparkSession, raw: DataFrame, outDir: String,
       horizon: String = "1 hour",
       historical: Option[BloomFilter] = None,
       classifier: Option[(Array[Long], Long)] = None): StreamingQuery = {
+    LayerSink.requireOffsets(spark, s"$outDir/_chk", s"$outDir/kept", s"$outDir/rejected")
     val histB = historical.map(serialize)
     val deduped = raw
       // null text digests to null, and dropDuplicatesWithinWatermark would

@@ -76,4 +76,41 @@ class CompactionSpec extends SparkSpec {
     assert(b == 5 && a == 5, s"no rewrite when target count >= current, got $b -> $a")
     assert(spark.read.parquet(dir).count() == wantRows, "partition untouched and readable")
   }
+
+  test("refuses a sink-logged layer output and the partitions under one, files untouched") {
+    implicit val sq = spark.sqlContext
+    val out = tmpDir("compactlogged")
+    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
+    val q = graft.streaming.LogPipeline.run(spark, ms.toDF(), out)
+    try {
+      ms.addData(
+        """{"common":{"mid":"m1"},"page":{"page_id":"home"},"ts":1704067200000}""")
+      q.processAllAvailable()
+      ms.addData(
+        """{"common":{"mid":"m2"},"page":{"page_id":"list"},"ts":1704067201000}""")
+      q.processAllAvailable()
+    } finally q.stop()
+    val pages = s"$out/dwd_page_log"
+    def listing(dir: String) = org.apache.commons.io.FileUtils
+      .listFiles(new java.io.File(dir), null, true).toArray.map(_.toString).sorted.toSeq
+    val before = listing(pages)
+    assert(before.count(_.endsWith(".parquet")) >= 2)
+    val e = intercept[SinkLoggedException](Compaction.compactPartition(spark, pages))
+    assert(e.getMessage.contains("dwd_page_log"))
+    assert(listing(pages) == before, "the refused split is left as it was")
+    assert(spark.read.parquet(pages).count() == 2)
+
+    val cdcOut = tmpDir("compactloggedcdc")
+    val config = Seq(("order_info", "insert", "kafka", "dwd_order_info", "id", "id", ""))
+      .toDF("source_table", "operate_type", "sink_type", "sink_table",
+        "sink_columns", "sink_pk", "sink_extend")
+    val batch = Seq("""{"database":"g","table":"order_info","type":"insert","data":{"id":"1"}}""")
+      .toDF("value")
+    graft.streaming.CdcRouter.processBatch(
+      graft.streaming.CdcRouter.parse(batch), config, cdcOut, 0L)
+    val topic = s"$cdcOut/facts/sink_table=dwd_order_info"
+    val topicBefore = listing(topic)
+    intercept[SinkLoggedException](Compaction.compactPartition(spark, topic))
+    assert(listing(topic) == topicBefore)
+  }
 }

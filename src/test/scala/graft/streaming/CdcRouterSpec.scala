@@ -47,14 +47,14 @@ class CdcRouterSpec extends SparkSpec {
       cdc("order_info", "insert", """{"id":"2","user_id":"u2","total_amount":"7.00"}""")).toDF("value"))
     CdcRouter.processBatch(b0, configDf, out, 0L)
     // forced replay: the same micro-batch re-runs after a failure between
-    // sink write and checkpoint commit (at-least-once duplicates)
+    // sink write and checkpoint commit
     CdcRouter.processBatch(b0, configDf, out, 0L)
     val b1 = CdcRouter.parse(Seq(
       cdc("order_info", "insert", """{"id":"3","user_id":"u3","total_amount":"9.00"}""")).toDF("value"))
     CdcRouter.processBatch(b1, configDf, out, 1L)
 
     val raw = spark.read.parquet(s"$out/facts")
-    assert(raw.count() == 5, "at-least-once log should contain the duplicates")
+    assert(raw.count() == 3, "the sink log skips the replayed batch id")
     val eo = CdcRouter.factsExactlyOnce(spark, out)
     assert(eo.count() == 3, "idempotent view should restore exactly-once counts")
     val ids = eo.select(get_json_object(col("data"), "$.id")).as[String].collect().toSet
@@ -92,8 +92,7 @@ class CdcRouterSpec extends SparkSpec {
     val before = snapshot()
 
     // forced replay of the LATEST batch (failure between sink write and
-    // checkpoint commit): the log gains duplicate (batch_id, seq) rows but
-    // the keyed last-write-wins view must not move
+    // checkpoint commit): the keyed last-write-wins view must not move
     CdcRouter.processBatch(b1, configDf, out, 1L)
     assert(snapshot() == before, "replaying the latest batch changed the snapshot")
 
@@ -101,8 +100,8 @@ class CdcRouterSpec extends SparkSpec {
     // rows rank below batch 1 for u1, so the snapshot still must not move
     CdcRouter.processBatch(b0, configDf, out, 0L)
     assert(snapshot() == before, "replaying an older batch changed the snapshot")
-    assert(spark.read.parquet(s"$out/dims_log").count() == 6,
-      "the at-least-once log itself does keep the replayed duplicates")
+    assert(spark.read.parquet(s"$out/dims_log").count() == 3,
+      "the sink log skips the replayed batch ids")
   }
 
   test("dim upsert: last write per primary key wins across batches") {

@@ -27,10 +27,10 @@ object RestartFault {
   * RT/app/BaseDbTask.java:42-45): a live streaming query dies mid-batch —
   * via the deterministic injected fault above, and once via a literal
   * `stop()` with no await — then restarts against the SAME checkpoint
-  * dir. Recovery must deliver exactly-once outputs (directly, or through
-  * the documented idempotent-consumer views for the at-least-once
-  * foreachBatch sinks) with keyed visitor state intact. Runs under the
-  * RocksDB state-store provider like every streaming suite (SparkSpec).
+  * dir. Recovery must deliver exactly-once outputs (each layer output's
+  * sink log skips a replayed batch) with keyed visitor state intact. Runs
+  * under the RocksDB state-store provider like every streaming suite
+  * (SparkSpec).
   */
 class RestartRecoverySpec extends SparkSpec {
   import spark.implicits._
@@ -138,14 +138,13 @@ class RestartRecoverySpec extends SparkSpec {
 
     val q2 = CdcRouter.run(spark, spark.readStream.text(src), cfg, out)
     try q2.processAllAvailable() finally q2.stop()
-    // facts: the log itself is at-least-once (a kill between sink write
-    // and checkpoint commit replays the batch); the documented
-    // idempotent-consumer view restores exactly-once
+    // facts: a kill between sink write and checkpoint commit replays the
+    // batch, and the sink log skips its already-committed batch id
     val facts = CdcRouter.factsExactlyOnce(spark, out)
     assert(facts.count() == 2)
     assert(facts.selectExpr("get_json_object(data, '$.id')").as[String]
       .collect().sorted.toSeq == Seq("1", "2"))
-    // dims: upsert log replay is idempotent; snapshot is last-write-wins
+    // dims: the same sink log; the snapshot is last-write-wins
     val snap1 = CdcRouter.dimSnapshot(spark, out)
     assert(snap1.count() == 1)
     assert(snap1.selectExpr("get_json_object(data, '$.name')")
