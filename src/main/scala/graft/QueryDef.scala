@@ -17,8 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    doc: String = "")
+    oracle: Option[String])
 
 object QueryDef {
   def apply(fn: (SparkSession, String) => DataFrame, oracle: String): QueryDef =

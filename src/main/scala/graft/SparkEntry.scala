@@ -41,5 +41,5 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    registry.collect { case (k, QueryDef(_, Some(sql), _)) => k -> sql }
+    registry.collect { case (k, QueryDef(_, Some(sql))) => k -> sql }
 }

@@ -12,9 +12,9 @@ import scala.collection.immutable.ListMap
   * §2.5–2.7), expressed over the `events` fixture (`user_id` plays the role of
   * the device id `mid`; `event_type` the role of the log-record type).
   *
-  * The same column-level transforms are reused by the Structured Streaming
-  * jobs in `graft.streaming` — Spark's unified model means a
-  * `DataFrame => DataFrame` written here runs unchanged on a stream.
+  * The streaming jobs in `graft.streaming` implement the same semantics on
+  * their own and call none of these transforms; StreamingAbMonitor shares
+  * only the `chi2Readout` expressions.
   *
   * Reference semantics re-expressed (citations into /root/reference/):
   *  - daily unique-visit dedup: RT/app/dwm/UniqueVisitApp.java:57-95

@@ -61,33 +61,22 @@ object CdcRouter {
         // keeps a malformed envelope a null-pk row, not a query failure.
         expr("try_element_at(data_map, sink_pk)").cast(StringType).as("pk"))
 
+  /** The two logs [[processBatch]] routes a batch to. */
+  private val logs = Seq(
+    LayerOutput("facts", _.filter(col("sink_type") === "kafka")
+      .select(col("sink_table"), col("data"), col("batch_id")), "sink_table"),
+    LayerOutput("dims_log", _.filter(col("sink_type") === "hbase")
+      .select(col("sink_table"), col("pk"), col("data"), col("batch_id")), "sink_table"))
+
   /** One micro-batch of routing: facts appended per-topic (partitioned by
     * sink_table ≈ dynamic-topic Kafka sink), dims upserted by primary key
-    * (last write wins ≈ Phoenix `upsert into`, DimSink.java:34-61). Both
-    * logs are written through [[LayerSink]] under `batchId`, so a replayed
-    * batch id is skipped, facts and dims alike; `batch_id` stays on the
-    * rows as lineage. */
-  def processBatch(batch: DataFrame, config: DataFrame, outDir: String, batchId: Long): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val routed = route(batch, config).persist()
-    try {
-      LayerSink.write(routed.filter(col("sink_type") === "kafka")
-          .select(col("sink_table"), col("data"), lit(batchId).as("batch_id")),
-        s"$outDir/facts", batchId, "sink_table")
-
-      // two upserts to one pk within a batch need a deterministic winner
-      // (the reference has Kafka offset order; a file batch does not) —
-      // rank by payload for a stable, replay-identical intra-batch order,
-      // and let dimSnapshot take the highest
-      val dimSeq = Window.partitionBy(col("sink_table"), col("pk"))
-        .orderBy(col("data"))
-      val dims = routed.filter(col("sink_type") === "hbase")
-        .select(col("sink_table"), col("pk"),
-          col("data"), lit(batchId).as("batch_id"),
-          row_number().over(dimSeq).as("seq"))
-      LayerSink.write(dims, s"$outDir/dims_log", batchId, "sink_table")
-    } finally routed.unpersist()
-  }
+    * (last write wins ≈ Phoenix `upsert into`, DimSink.java:34-61; see
+    * [[dimSnapshot]]). Both logs are written through [[LayerSink]] under
+    * `batchId`, so a replayed batch id is skipped, facts and dims alike;
+    * `batch_id` stays on the rows as lineage. */
+  def processBatch(batch: DataFrame, config: DataFrame, outDir: String, batchId: Long): Unit =
+    MicroBatch.fanOut(route(batch, config).withColumn("batch_id", lit(batchId)),
+      outDir, batchId, logs)
 
   /** The facts log, per-topic. [[LayerSink]] keeps it exactly-once, the
     * role of the reference's transactional producer (MyKafkaUtil.java:43-49;
@@ -97,29 +86,27 @@ object CdcRouter {
     spark.read.parquet(s"$outDir/facts")
 
   /** Read the current dim snapshot: last write per (sink_table, pk) from the
-    * upsert log — the keyed-KV-store view the reference holds in HBase. */
+    * upsert log — the keyed-KV-store view the reference holds in HBase.
+    * Within a batch (no Kafka offset order) the greater payload wins, the
+    * same on every replay; rows that tie are byte-identical. */
   def dimSnapshot(spark: SparkSession, outDir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("sink_table"), col("pk"))
-      .orderBy(col("batch_id").desc, col("seq").desc)
+      .orderBy(col("batch_id").desc, col("data").desc)
     spark.read.parquet(s"$outDir/dims_log")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
-      .drop("rn", "batch_id", "seq")
+      .drop("rn", "batch_id")
   }
 
   /** Launch the streaming router: config re-read from `configPath` (CSV with
     * a header, FIXTURES.md §B.4) every micro-batch. Throws
     * [[CheckpointResetException]] before start when `outDir/_chk` was
     * deleted but the logs were kept. */
-  def run(spark: SparkSession, raw: DataFrame, configPath: String, outDir: String) = {
-    LayerSink.requireOffsets(spark, s"$outDir/_chk", s"$outDir/facts", s"$outDir/dims_log")
-    raw.writeStream
-      .option("checkpointLocation", s"$outDir/_chk")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+  def run(spark: SparkSession, raw: DataFrame, configPath: String, outDir: String) =
+    MicroBatch.start(raw, s"$outDir/_chk", stores = MicroBatch.stores(outDir, logs)) {
+      (batch, batchId) =>
         val config = graft.SchemaMemo.read(spark, configPath, "csv", Map("header" -> "true"))
         processBatch(parse(batch), config, outDir, batchId)
-      }
-      .start()
-  }
+    }
 }

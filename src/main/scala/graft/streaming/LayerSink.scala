@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStrea
   * `spark.read` / `readStream` of the dir see committed files only. This
   * is the only file that names the sink: Spark moved it between 3.x and
   * 4.x. Delete an output together with its query's checkpoint (see
-  * [[requireOffsets]]). */
+  * [[MicroBatch.start]]). */
 object LayerSink {
 
   /** Append `df` to the parquet dir `path` as batch `batchId` of its log.
@@ -45,28 +45,14 @@ object LayerSink {
     Iterator.iterate(fs.makeQualified(dir))(_.getParent).takeWhile(_ != null)
       .find(p => fs.exists(new Path(p, FileStreamSink.metadataDir)))
 
-  /** Throw [[CheckpointResetException]] when the query checkpoint
-    * `checkpoint` holds no offsets but one of `outputs` already logs
-    * batches. A fresh checkpoint numbers its batches from 0 again, so
-    * every batch id up to the logged one would be skipped: the new data
-    * would be dropped silently. Call before `start()`. */
-  def requireOffsets(spark: SparkSession, checkpoint: String, outputs: String*): Unit = {
-    val offsets = new Path(checkpoint, "offsets")
-    val fs = offsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val resumes = fs.exists(offsets) &&
-      fs.listStatus(offsets).exists(_.getPath.getName.forall(_.isDigit))
-    if (!resumes) outputs.foreach { out =>
-      val log = new Path(out, FileStreamSink.metadataDir)
-      val logged = fs.exists(log) &&
+  /** The layer output `dir`: it holds a batch once its sink log does. */
+  private[streaming] final case class Output(dir: String) extends BatchKeyed {
+    def holdsBatch(spark: SparkSession): Boolean = {
+      val log = new Path(dir, FileStreamSink.metadataDir)
+      log.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(log) &&
         new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark, log.toString, None)
           .getLatestBatchId().nonEmpty
-      if (logged) throw new CheckpointResetException(
-        s"$out logs committed batches but checkpoint $checkpoint has no offsets; " +
-          "delete the outputs with their checkpoint, or restore the checkpoint")
     }
+    override def toString: String = dir
   }
 }
-
-/** A query would start on a reset checkpoint over outputs that already log
-  * batches (see [[LayerSink.requireOffsets]]). */
-final class CheckpointResetException(message: String) extends IllegalStateException(message)

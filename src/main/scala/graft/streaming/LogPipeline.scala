@@ -8,12 +8,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
-/** P2 — base log task: new/old-visitor fix + 3-way split + display explode.
+/** P2 — base log task: 3-way split + display explode ([[run]]) and the
+  * new/old-visitor fix ([[fixVisitors]], which `run` does not apply).
   *
-  * Reference: RT/app/dwd/BaseLogTask.java:35-168. The keyed `ValueState`
-  * correction (lines 65-99) becomes `flatMapGroupsWithState`; the side-output
-  * 3-way split (lines 109-148) becomes three filtered projections of one
-  * parsed frame (single-pass when driven through `foreachBatch` + persist).
+  * Reference: RT/app/dwd/BaseLogTask.java:35-168. The side-output 3-way
+  * split (lines 109-148) becomes three filtered projections of one parsed
+  * frame; the keyed `ValueState` correction (lines 65-99) becomes
+  * `flatMapGroupsWithState`.
   *
   * Deviation (documented, SURVEY.md §7.4.2): the reference stamps first-visit
   * dates with wall-clock `new Date()` (BaseLogTask.java:87); we use event
@@ -73,25 +74,17 @@ object LogPipeline {
       .select(col("mid"), col("page_id"), col("d.item").as("item"),
         col("d.pos_id").as("pos_id"), col("ts"))
 
-  /** Drive all three splits from one raw stream into parquet, one pass per
-    * micro-batch, each split written through [[LayerSink]] under the
-    * batch id: a batch replayed after a crash lands in every split exactly
-    * once, and readers of a split see whole batches only. Throws
-    * [[CheckpointResetException]] before start when `outDir/_chk` was
-    * deleted but the splits were kept. Returns the streaming query. */
-  def run(spark: SparkSession, raw: DataFrame, outDir: String) = {
-    val splits = Seq("dwd_start_log" -> startStream _, "dwd_page_log" -> pageStream _,
-      "dwd_display_log" -> displayStream _)
-    LayerSink.requireOffsets(spark, s"$outDir/_chk", splits.map(s => s"$outDir/${s._1}"): _*)
-    raw.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", s"$outDir/_chk")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val parsed = LogSchema.parse(batch).persist()
-        try splits.foreach { case (name, split) =>
-          LayerSink.write(split(parsed), s"$outDir/$name", batchId)
-        } finally parsed.unpersist()
-      }
-      .start()
-  }
+  /** The three splits, each a [[LayerSink]] output of [[run]]. */
+  private val splits = Seq(LayerOutput("dwd_start_log", startStream),
+    LayerOutput("dwd_page_log", pageStream), LayerOutput("dwd_display_log", displayStream))
+
+  /** Parse a raw envelope stream and write its three splits, one persisted
+    * pass per micro-batch, each through [[LayerSink]] under the batch id: a
+    * replayed batch lands in every split once, and readers see whole batches
+    * only. Throws [[CheckpointResetException]] before start when
+    * `outDir/_chk` was deleted but the splits were kept. */
+  def run(spark: SparkSession, raw: DataFrame, outDir: String) =
+    MicroBatch.start(raw, s"$outDir/_chk", stores = MicroBatch.stores(outDir, splits)) {
+      (batch, batchId) => MicroBatch.fanOut(LogSchema.parse(batch), outDir, batchId, splits)
+    }
 }

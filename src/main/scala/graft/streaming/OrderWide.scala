@@ -280,6 +280,9 @@ object OrderWide {
         coalesce(col(s"l.$c"), col(s"r.$c")).as(c)): _*)
   }
 
+  /** The one output of [[run]]. */
+  private val wide = Seq(LayerOutput("dwm_order_wide", identity))
+
   /** Launchable P6 pipeline (the `env.execute("order wide task")` analog,
     * OrderWideApp.java:255-259): parse both raw JSON streams, interval-join
     * them, then per micro-batch re-read the dims (freshness = batch
@@ -291,18 +294,12 @@ object OrderWide {
     * Returns the streaming query. */
   def run(spark: SparkSession, rawInfo: DataFrame, rawDetail: DataFrame,
       dimDir: String, outDir: String, asOfDate: String,
-      boundSeconds: Int = 5): org.apache.spark.sql.streaming.StreamingQuery = {
-    LayerSink.requireOffsets(spark, s"$outDir/_chk", s"$outDir/dwm_order_wide")
-    intervalJoin(parseInfo(rawInfo), parseDetail(rawDetail), boundSeconds)
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_chk")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dims = dimsFromParquet(spark, dimDir) // re-read: config freshness
-        LayerSink.write(toOrderWide(enrich(batch, dims, asOfDate)),
-          s"$outDir/dwm_order_wide", batchId)
-      }
-      .start()
-  }
+      boundSeconds: Int = 5): org.apache.spark.sql.streaming.StreamingQuery =
+    MicroBatch.start(intervalJoin(parseInfo(rawInfo), parseDetail(rawDetail), boundSeconds),
+        s"$outDir/_chk", stores = MicroBatch.stores(outDir, wide)) { (batch, batchId) =>
+      val dims = dimsFromParquet(spark, dimDir) // re-read: config freshness
+      MicroBatch.fanOut(toOrderWide(enrich(batch, dims, asOfDate)), outDir, batchId, wide)
+    }
 
   /** Dimension table bundle (FIXTURES.md §B.6 columns). */
   case class Dims(

@@ -26,7 +26,7 @@ import org.apache.spark.sql.SparkSession
   * Readers see snapshots: `values` is replaced, never mutated, so commit
   * a fresh array. */
 private[streaming] final class SnapshotStore(stateDir: Option[String],
-    prefix: String, zero: Array[Long]) extends Serializable {
+    prefix: String, zero: Array[Long]) extends BatchKeyed with Serializable {
   @volatile private var current: Array[Long] = zero
   @volatile private var lastBatchId: Long = -1L
 
@@ -36,6 +36,9 @@ private[streaming] final class SnapshotStore(stateDir: Option[String],
   restore()
 
   def values: Array[Long] = current
+
+  def holdsBatch(spark: SparkSession): Boolean = lastBatchId >= 0
+  override def toString: String = s"$prefix state in ${stateDir.getOrElse("memory")}"
 
   /** A non-negative id at or below the last committed one: a replay. */
   def isReplay(batchId: Long): Boolean = batchId >= 0 && batchId <= lastBatchId

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Streaming A/B experiment monitor: `ab_test_chi2`'s readout maintained
   * ACROSS micro-batches — the live dashboard a running experiment is
@@ -42,7 +42,7 @@ object StreamingAbMonitor {
     val cum = units
       .groupBy(col("variant"))
       .agg(count(lit(1)).as("n"), sum(col("converted").cast("long")).as("conv"))
-    CompleteMonitor.run(cum, checkpointDir) { (batch, batchId) =>
+    MicroBatch.start(cum, checkpointDir, OutputMode.Complete) { (batch, batchId) =>
       // <= |variants| rows by construction of the complete-mode agg
       val rows = batch.collect()
       def cnt(v: Int, i: Int): Long =

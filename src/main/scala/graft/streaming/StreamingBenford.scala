@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.operators.CorpusOps
 
@@ -42,7 +42,7 @@ object StreamingBenford {
       .where(col("x") > 0L)
       .selectExpr("CAST(substring(CAST(x AS STRING), 1, 1) AS BIGINT) AS d")
       .groupBy(col("d")).agg(count(lit(1)).as("c"))
-    CompleteMonitor.run(dig, checkpointDir) { (batch, batchId) =>
+    MicroBatch.start(dig, checkpointDir, OutputMode.Complete) { (batch, batchId) =>
       // an all-nonpositive (or empty) stream leaves the digit histogram
       // empty; the readout's global sum would be NULL — short-circuit to
       // the defined "no data, no verdict" row instead

@@ -144,7 +144,7 @@ object StreamingConversionLatency {
   final class HistTracker(stateDir: Option[String], subBits: Int)
       extends Serializable {
     val len: Int = histLen(subBits)
-    private val store = new SnapshotStore(stateDir, "hdr_state", new Array[Long](len))
+    private[streaming] val store = new SnapshotStore(stateDir, "hdr_state", new Array[Long](len))
 
     def hist: Array[Long] = store.values
 
@@ -165,10 +165,11 @@ object StreamingConversionLatency {
   /** Start the full sketch: pairing + histogram + shared HDR readout.
     * `stateDir` enables exactly-once histogram recovery across restarts
     * (the checkpointed query replays no offsets, so without it the
-    * pre-crash histogram would silently vanish). `delay` inherits
-    * [[latencies]]' ordering contract: size it to the source's
-    * cross-batch out-of-orderness or conversions whose view arrives in
-    * a later batch than the purchase are silently missed. */
+    * pre-crash histogram would silently vanish); a restored histogram
+    * under a checkpoint with no offsets throws [[CheckpointResetException]]
+    * before start. `delay` inherits [[latencies]]' ordering contract: size
+    * it to the source's cross-batch out-of-orderness or conversions whose
+    * view arrives in a later batch than the purchase are silently missed. */
   def run(events: DataFrame, checkpointDir: String,
       stateDir: Option[String] = None, subBits: Int = 5,
       qsPm: Seq[Int] = Seq(500, 900), fromType: String = "view",
@@ -178,31 +179,26 @@ object StreamingConversionLatency {
     CorpusOps.requireSketchKnobs(subBits, qsPm)
     val s = events.sparkSession
     val tracker = new HistTracker(stateDir, subBits)
-    latencies(events, fromType, toType, ttlMs, delay).toDF()
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // <= domain rows reach the driver: executors partial-sum first
-        val partials = batch
-          .selectExpr(s"${CorpusOps.hdrBucketExpr("lat_s", subBits)} AS bkt")
-          .groupBy(col("bkt")).agg(count(lit(1)).as("cnt"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        tracker.update(partials, batchId)
-        val nonzero = tracker.hist.zipWithIndex.collect {
-          case (c, i) if c > 0 => (i.toLong, c)
-        }.toSeq
-        import s.implicits._
-        val rows =
-          if (nonzero.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else CorpusOps.hdrQuantiles(
-              nonzero.toDF("bkt", "cnt"), Seq.empty, subBits, qsPm)
-            .orderBy(col("q_pm")).collect()
-        val n = if (rows.isEmpty) 0L else rows(0).getLong(1)
-        onReadout(Readout(batchId,
-          rows.map(r => r.getInt(0) -> r.getLong(2)).toSeq, n, nonzero.size.toLong))
-        ()
-      }
-      .start()
+    MicroBatch.start(latencies(events, fromType, toType, ttlMs, delay), checkpointDir,
+        stores = Seq(tracker.store)) { (batch, batchId) =>
+      // <= domain rows reach the driver: executors partial-sum first
+      val partials = batch
+        .selectExpr(s"${CorpusOps.hdrBucketExpr("lat_s", subBits)} AS bkt")
+        .groupBy(col("bkt")).agg(count(lit(1)).as("cnt"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      tracker.update(partials, batchId)
+      val nonzero = tracker.hist.zipWithIndex.collect {
+        case (c, i) if c > 0 => (i.toLong, c)
+      }.toSeq
+      import s.implicits._
+      val rows =
+        if (nonzero.isEmpty) Array.empty[org.apache.spark.sql.Row]
+        else CorpusOps.hdrQuantiles(
+            nonzero.toDF("bkt", "cnt"), Seq.empty, subBits, qsPm)
+          .orderBy(col("q_pm")).collect()
+      val n = if (rows.isEmpty) 0L else rows(0).getLong(1)
+      onReadout(Readout(batchId,
+        rows.map(r => r.getInt(0) -> r.getLong(2)).toSeq, n, nonzero.size.toLong))
+    }
   }
 }

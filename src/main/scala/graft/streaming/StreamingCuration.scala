@@ -17,8 +17,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * row per distinct document inside the watermark horizon and EVICTS it
   * once the watermark passes — at 100 TB/day of intake the dedup state is
   * bounded by the horizon's distinct-content volume, not by history.
-  * The kept/rejected fan-out reuses the one-pass `foreachBatch` multi-sink
-  * pattern of `LogPipeline` (persist once, write both sides).
+  * The kept/rejected split is one persisted pass per micro-batch
+  * ([[MicroBatch.fanOut]]).
   */
 object StreamingCuration {
 
@@ -126,12 +126,12 @@ object StreamingCuration {
       case Some((w, thr)) => classifierGate(gate(batch, historical), w, thr)
       case None           => gate(batch, historical)
     }
-    val s = gated.withColumn("batch_id", lit(batchId)).persist()
-    try {
-      LayerSink.write(s.filter(col("keep")).drop("keep"), s"$outDir/kept", batchId)
-      LayerSink.write(s.filter(!col("keep")).drop("keep"), s"$outDir/rejected", batchId)
-    } finally { s.unpersist(); () }
+    MicroBatch.fanOut(gated.withColumn("batch_id", lit(batchId)), outDir, batchId, sides)
   }
+
+  /** The kept and rejected sides [[processBatch]] writes. */
+  private val sides = Seq(LayerOutput("kept", _.filter(col("keep")).drop("keep")),
+    LayerOutput("rejected", _.filter(!col("keep")).drop("keep")))
 
   /** The kept log: committed batches only, each once ([[LayerSink]]). */
   def kept(spark: SparkSession, outDir: String): DataFrame =
@@ -206,7 +206,6 @@ object StreamingCuration {
       horizon: String = "1 hour",
       historical: Option[BloomFilter] = None,
       classifier: Option[(Array[Long], Long)] = None): StreamingQuery = {
-    LayerSink.requireOffsets(spark, s"$outDir/_chk", s"$outDir/kept", s"$outDir/rejected")
     val histB = historical.map(serialize)
     val deduped = raw
       // null text digests to null, and dropDuplicatesWithinWatermark would
@@ -218,11 +217,8 @@ object StreamingCuration {
         coalesce(digestCol, concat(lit("null-text-"), col("doc_id"))))
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("digest")
-    deduped.writeStream
-      .option("checkpointLocation", s"$outDir/_chk")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, outDir, batchId, histB, classifier)
-      }
-      .start()
+    MicroBatch.start(deduped, s"$outDir/_chk", stores = MicroBatch.stores(outDir, sides)) {
+      (batch, batchId) => processBatch(batch, outDir, batchId, histB, classifier)
+    }
   }
 }

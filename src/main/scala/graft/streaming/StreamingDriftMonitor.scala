@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Streaming distribution-drift monitor: `source_drift`'s TVD statistic
   * maintained ACROSS micro-batches against an OFFLINE reference — the
@@ -72,7 +72,7 @@ object StreamingDriftMonitor {
       .select(expr("graft_token_hashes(text)").as("th"))
       .select(explode(expr(graft.operators.CorpusOps.bigramBktExpr)).as("bkt"))
       .groupBy(col("bkt")).agg(count(lit(1)).as("o"))
-    CompleteMonitor.run(counts, checkpointDir) { (batch, batchId) =>
+    MicroBatch.start(counts, checkpointDir, OutputMode.Complete) { (batch, batchId) =>
       val n = batch.agg(coalesce(sum(col("o")), lit(0L))).collect()(0).getLong(0)
       val tvd = tvdPpb(batch, ref)
       onReadout(Readout(batchId, n, tvd, tvd >= thresholdPpb))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Streaming referential-integrity monitor: `fk_integrity`'s fact-side
   * checks maintained ACROSS micro-batches — the live gauge a dim-backed
@@ -48,7 +48,7 @@ object StreamingFkMonitor {
       .agg(count(lit(1)).as("n_fact"),
         coalesce(sum(col("is_null")), lit(0L)).as("n_fk_null"),
         coalesce(sum(col("is_orphan")), lit(0L)).as("n_orphan"))
-    CompleteMonitor.run(flagged, checkpointDir) { (batch, batchId) =>
+    MicroBatch.start(flagged, checkpointDir, OutputMode.Complete) { (batch, batchId) =>
       val rows = batch.collect()
       if (rows.isEmpty) onReadout(Readout(batchId, 0L, 0L, 0L, 0L))
       else {

@@ -31,7 +31,7 @@ object StreamingHeavyHitters {
     * sketch lives in a [[SnapshotStore]] (`cms_state.<batchId>.bin`). */
   final class Tracker(stateDir: Option[String] = None) extends Serializable {
     val agg = new CountMin()
-    private val store = new SnapshotStore(stateDir, "cms_state", agg.zero)
+    private[streaming] val store = new SnapshotStore(stateDir, "cms_state", agg.zero)
 
     def sketch: Array[Long] = store.values
 
@@ -72,12 +72,11 @@ object StreamingHeavyHitters {
   }
 
   /** Wire a document stream into a tracker via foreachBatch (batch ids
-    * flow through so the tracker's replay/restart guarantees hold). */
+    * flow through so the tracker's replay/restart guarantees hold). Throws
+    * [[CheckpointResetException]] before start when `checkpointDir` holds
+    * no offsets but the tracker restored a committed batch. */
   def start(stream: Dataset[_], tracker: Tracker, checkpointDir: String): StreamingQuery =
-    stream.toDF().writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        tracker.update(batch.toDF(), batchId)
-      }
-      .start()
+    MicroBatch.start(stream, checkpointDir, stores = Seq(tracker.store)) {
+      (batch, batchId) => tracker.update(batch, batchId)
+    }
 }

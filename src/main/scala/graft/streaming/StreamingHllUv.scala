@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Streaming unique-visitor estimate: the HLL register sketch
   * (`hll_distinct`'s kernel) maintained ACROSS micro-batches — the
@@ -47,7 +47,7 @@ object StreamingHllUv {
       .selectExpr(s"h2 % ${m}L AS idx",
         s"${graft.operators.CorpusOps.hllRhoExpr("v", m)} AS rho")
       .groupBy(col("idx")).agg(max(col("rho")).as("mj"))
-    CompleteMonitor.run(regs, checkpointDir) { (batch, batchId) =>
+    MicroBatch.start(regs, checkpointDir, OutputMode.Complete) { (batch, batchId) =>
       val r = graft.operators.CorpusOps.hllEstimate(batch, m, Seq.empty)
         .collect()(0)
       onReadout(Readout(batchId, r.getLong(1), r.getLong(0)))

@@ -31,7 +31,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (cross-band duplicates of the same pair are possible by design —
   * band-keyed state cannot see other bands; the batch twin `distinct()`s
   * for exactly this reason). Downstream consumers dedup on (doc_a,
-  * doc_b) — the exactly-once-view posture StreamingCuration documents.
+  * doc_b).
   * Re-delivered doc_ids (at-least-once sources) are idempotent: a
   * resident doc_id re-arriving neither re-pairs nor re-enters state
   * ([[KeyedState.admit]]).

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.operators.CorpusOps
 
@@ -48,7 +48,7 @@ object StreamingQuantiles {
     val hist = vals
       .selectExpr(s"${CorpusOps.hdrBucketExpr("x", subBits)} AS bkt")
       .groupBy(col("bkt")).agg(count(lit(1)).as("cnt"))
-    CompleteMonitor.run(hist, checkpointDir) { (batch, batchId) =>
+    MicroBatch.start(hist, checkpointDir, OutputMode.Complete) { (batch, batchId) =>
       val resident = batch.persist()
       val rows = CorpusOps.hdrQuantiles(resident, Seq.empty, subBits, qsPm)
         .orderBy(col("q_pm")).collect()

@@ -35,8 +35,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Emission: one verdict row per arriving doc — (doc_id, url_canon,
   * canonical_id, is_dup). A re-delivered CANONICAL doc_id (at-least-once
   * source) is absorbed silently; a re-delivered duplicate re-emits its
-  * (deterministic, identical) verdict — consumers dedup on doc_id, the
-  * exactly-once-view posture StreamingCuration documents.
+  * (deterministic, identical) verdict — consumers dedup on doc_id.
   */
 object StreamingUrlDedup {
 

@@ -75,7 +75,7 @@ class CdcRouterSpec extends SparkSpec {
     // now force a replay of that same batch: counts must NOT grow
     CdcRouter.processBatch(twins, configDf, out, 0L)
     assert(CdcRouter.factsExactlyOnce(spark, out).count() == 2,
-      "the replayed batch regenerates the same (data, seq) set and collapses")
+      "the sink log skips the replayed batch id")
   }
 
   test("dim-side replay: forced micro-batch re-runs leave the dim snapshot identical") {
@@ -102,6 +102,22 @@ class CdcRouterSpec extends SparkSpec {
     assert(snapshot() == before, "replaying an older batch changed the snapshot")
     assert(spark.read.parquet(s"$out/dims_log").count() == 3,
       "the sink log skips the replayed batch ids")
+  }
+
+  test("dim upsert: two upserts of one pk in one batch keep the greater payload, also after a replay") {
+    val out = tmpDir("cdcdimtie")
+    val b0 = CdcRouter.parse(Seq(
+      cdc("user_info", "update", """{"id":"u1","name":"bob","birthday":"1990-01-01"}"""),
+      cdc("user_info", "insert", """{"id":"u1","name":"alice","birthday":"1990-01-01"}""")).toDF("value"))
+    def snapshot(): Seq[(String, String)] =
+      CdcRouter.dimSnapshot(spark, out).select("pk", "data").as[(String, String)].collect().toSeq
+    CdcRouter.processBatch(b0, configDf, out, 0L)
+    val first = snapshot()
+    assert(first.size == 1 && first.head._1 == "u1")
+    assert(first.head._2.contains("bob"), s"the greater payload must win: $first")
+    // forced replay of the batch: the snapshot must not move
+    CdcRouter.processBatch(b0, configDf, out, 0L)
+    assert(snapshot() == first, "replaying the batch changed the snapshot")
   }
 
   test("dim upsert: last write per primary key wins across batches") {

@@ -154,6 +154,22 @@ class StreamingConversionLatencySpec extends SparkSpec {
       "post-restart readout must equal the one-shot build over all events")
   }
 
+  test("a restored histogram on a fresh checkpoint fails before start instead of dropping batches") {
+    val st = tmpDir("sclat_reset")
+    val got = drive(tmpDir("sclat_reset_ck1"), Some(st), Seq(b1))
+    assert(got.last.n == 1L)
+    // a new checkpoint restarts at batch 0, which the restored histogram
+    // already holds: the run must refuse to start, not skip the batch
+    implicit val sq = spark.sqlContext
+    val in = MemoryStream[(Long, Long, Long, String)].toDF()
+      .toDF("user_id", "ems", "seq", "event_type")
+      .selectExpr("user_id", "timestamp_millis(ems) AS ts", "seq", "event_type")
+    val e = intercept[CheckpointResetException](StreamingConversionLatency.run(
+      in, tmpDir("sclat_reset_ck2"), Some(st), 5, qs, onReadout = _ => ()))
+    assert(e.getMessage.contains("no offsets") && e.getMessage.contains(st), e.getMessage)
+    assert(spark.streams.active.isEmpty, "the query started")
+  }
+
   test("a restart with another bucket width fails loudly instead of restarting empty") {
     val st = Some(tmpDir("sclat_width"))
     val t5 = new StreamingConversionLatency.HistTracker(st, 5)

@@ -90,4 +90,22 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     t2.update(b2.toDF("text"), batchId = 1L)
     assert(t2.totalTokens == (b1 ++ b2).flatMap(_.split(" ")).count(_.nonEmpty).toLong)
   }
+
+  test("a restored tracker on a fresh checkpoint fails before start instead of dropping batches") {
+    implicit val sq = spark.sqlContext
+    val stateDir = tmpDir("shhreset")
+    val ms = MemoryStream[String]
+    val t1 = new StreamingHeavyHitters.Tracker(Some(stateDir))
+    val q = StreamingHeavyHitters.start(ms.toDF().toDF("text"), t1, tmpDir("shhreset_ck1"))
+    try { ms.addData(b1: _*); q.processAllAvailable() } finally q.stop()
+    val committed = t1.sketch.toSeq
+    // a restart on a new checkpoint would number its batches from 0 again,
+    // and the restored tracker would skip every one up to its batch 0
+    val t2 = new StreamingHeavyHitters.Tracker(Some(stateDir))
+    val e = intercept[CheckpointResetException](
+      StreamingHeavyHitters.start(ms.toDF().toDF("text"), t2, tmpDir("shhreset_ck2")))
+    assert(e.getMessage.contains("no offsets") && e.getMessage.contains(stateDir), e.getMessage)
+    assert(spark.streams.active.isEmpty, "the query started")
+    assert(t2.sketch.toSeq == committed)
+  }
 }
