@@ -396,9 +396,7 @@ object CorpusOps {
               "i -> concat_ws(' ', slice(ts, i - 4, 5))) " +
               "ELSE CAST(array() AS array<string>) END")).as("g"))
           .distinct()
-        sg.alias("a").join(sg.alias("b"),
-            expr("a.g = b.g AND a.source < b.source"))
-          .selectExpr("a.source AS src_a", "b.source AS src_b")
+        BucketPairs(sg, Seq("g"), "source", BucketPairs.All, ("src_a", "src_b"))
           .groupBy(col("src_a"), col("src_b"))
           .agg(count(lit(1)).as("shared_shingles"))
           .filter(col("shared_shingles") >= 2)
@@ -2319,9 +2317,7 @@ object CorpusOps {
     if (!withExact)
       return out.transform(Sorted.byNames(_, "src_a", "src_b"))
     val ex = fed.select(col("source"), col("fp")).distinct()
-    val exact = ex.alias("a")
-      .join(ex.alias("b"), expr("a.fp = b.fp AND a.source < b.source"))
-      .selectExpr("a.source AS src_a", "b.source AS src_b")
+    val exact = BucketPairs(ex, Seq("fp"), "source", BucketPairs.All, ("src_a", "src_b"))
       .groupBy(col("src_a"), col("src_b"))
       .agg(count(lit(1)).as("exact_intersect"))
     out.join(exact, Seq("src_a", "src_b"), "left")

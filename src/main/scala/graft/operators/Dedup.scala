@@ -8,6 +8,8 @@ import org.apache.spark.storage.StorageLevel
 
 import scala.collection.immutable.ListMap
 
+import BucketPairs.{All, Capped, DefaultBucketCap, DepthCap, Star, Tiered, Volume}
+
 /** Deduplication operators over `documents` (the LLM-data north star):
   * exact (content hash), MinHash+LSH banding, SimHash, and char-n-gram
   * Jaccard with length-band blocking.
@@ -71,7 +73,7 @@ object Dedup {
     * (all three pair emitters AND the bucket-load profiler), so a band
     * retune cannot silently desynchronize the profile from the buckets
     * the emitters actually pair on. */
-  private def bandsOf(sig: DataFrame, nb: Int = 4, w: Int = 4): DataFrame = {
+  private[operators] def bandsOf(sig: DataFrame, nb: Int = 4, w: Int = 4): DataFrame = {
     require(nb * w == 16, s"band split must cover the 16 lanes: $nb x $w")
     sig.selectExpr("doc_id",
         s"explode(transform(sequence(0, ${nb - 1}), b -> struct(b AS band, concat_ws('_', slice(sig, b * $w + 1, $w)) AS key))) AS bk")
@@ -79,46 +81,36 @@ object Dedup {
   }
 
   /** Banded candidate pairs (doc_a < doc_b) over a signature table for an
-    * arbitrary (bands × width) split of the 16 lanes — the LSH recall
-    * knob as a parameter (minhash_band_sweep measures the alternatives;
-    * the operating point is [[bandedCandidates]]). */
-  private def bandedCandidatesCfg(sig: DataFrame, nb: Int, w: Int): DataFrame = {
-    val bands = bandsOf(sig, nb, w)
-    bands.alias("a")
-      .join(bands.alias("b"),
-        expr("a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id"))
-      .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b").distinct()
-  }
+    * arbitrary (bands × width) split of the 16 lanes, under one volume
+    * policy — the LSH recall knob (minhash_band_sweep measures the
+    * alternatives; 4 × 4 is the operating point) composes with the
+    * volume knob:
+    *  - `All`: the in-bucket self-join, quadratic in bucket occupancy;
+    *  - `Star`: every resident against the bucket's canonical (min
+    *    doc_id) only — Σ(n − 1), LINEAR in corpus (measured: 16.6 B
+    *    all-pairs vs ~20 M star candidates on the K=1000
+    *    duplicate-saturated corpus — SCALE.md round 13). The semantic
+    *    trade, stated exactly: a doc is dropped iff VERIFIED similar to
+    *    one of its band canonicals, so an A~B, B~C, A≁C chain sharing
+    *    one bucket keeps C where all-pairs (which emits (B, C)) would
+    *    drop it — the keep-first approximation production-scale dedup
+    *    pipelines run when clusters are huge; the 4 independent bands
+    *    give C four chances to meet a canonical it IS similar to;
+    *  - `Capped(cap)`: exactly StreamingNearDup's `maxPerBucket`
+    *    semantics in batch — the first `cap` residents of each bucket
+    *    (by doc_id, the streaming twin's deterministic arrival order)
+    *    pair among themselves AND against every overflow doc; overflow
+    *    docs never pair with each other. O(cap·n) at any saturation,
+    *    with full all-pairs recall inside the resident set (cap = 1
+    *    pairs like star; cap = ∞ like all-pairs). */
+  private def bandedCandidates(sig: DataFrame, volume: Volume,
+      nb: Int = 4, w: Int = 4): DataFrame =
+    BucketPairs(bandsOf(sig, nb, w), Seq("band", "key"), "doc_id", volume).distinct()
 
-  /** The operating point: 4 bands × 4 lanes; ONE definition shared by
-    * dedup_minhash and minhash_calibration (the Scala twin of
-    * [[duckBandsCte]]/[[duckCandCte]]'s one-definition rule). */
-  private def bandedCandidates(sig: DataFrame): DataFrame =
-    bandedCandidatesCfg(sig, 4, 4)
-
-  /** Canonical-STAR candidates: within each band bucket, pair every
-    * resident only against the bucket's canonical (min doc_id) — the
-    * bounded alternative to [[bandedCandidates]]' in-bucket self-join.
-    * Candidate volume is Σ(n_bucket − 1) = LINEAR in corpus where
-    * all-pairs is Σ n(n−1)/2 = quadratic in bucket occupancy (measured:
-    * 16.6 B all-pairs candidates vs ~20 M star candidates on the K=1000
-    * duplicate-saturated corpus — SCALE.md round 13). The semantic
-    * trade, stated exactly: a doc is dropped iff VERIFIED similar to
-    * one of its band canonicals, so an A~B, B~C, A≁C chain sharing one
-    * bucket keeps C where all-pairs (which emits (B, C)) would drop it
-    * — the keep-first approximation production-scale dedup pipelines
-    * run when clusters are huge; the 4 independent bands give C four
-    * chances to meet a canonical it IS similar to. One groupBy + one
-    * equi-join, no self-join anywhere. */
-  private def bandedCandidatesStar(sig: DataFrame,
-      nb: Int = 4, w: Int = 4): DataFrame = {
-    val bands = bandsOf(sig, nb, w)
-    val canon = bands.groupBy(col("band"), col("key"))
-      .agg(min(col("doc_id")).as("doc_a"))
-    bands.join(canon, Seq("band", "key"))
-      .filter(col("doc_id") > col("doc_a"))
-      .select(col("doc_a"), col("doc_id").as("doc_b")).distinct()
-  }
+  /** The ngram and winnow families' depth tiers: all pairs up to `dfCap`,
+    * then the hub (midCap = 1) or the first midCap residents. */
+  private def tiered(dfCap: Int, midCap: Int): Volume =
+    Tiered(dfCap, Some(if (midCap == 1) Star else Capped(midCap)))
 
   /** Exact shingle-Jaccard verification (≥ 0.8) of a candidate pair set
     * on the zero-allocation sorted-merge kernel — ONE verify definition
@@ -134,15 +126,25 @@ object Dedup {
       .filter("jaccard >= 0.8")
   }
 
-  /** Verified star near-dup pairs — [[minhashPairsOf]]'s bounded twin
-    * (same signature/shingle/Jaccard fragments, star candidates). The
-    * (nb × w) band split is a parameter so the LSH RECALL knob composes
-    * with the volume knob: a caller who retunes bands (e.g. 8×2 for
-    * higher recall) keeps the bounded emitter instead of being forced
-    * back to the quadratic all-pairs path. */
+  /** Verified near-dup pairs of `docs` under one candidate volume
+    * policy: the same signature/shingle/Jaccard fragments for every
+    * rung, and the (nb × w) band split a parameter so the recall knob
+    * composes with the volume knob (a caller who retunes bands keeps
+    * the bounded emitter instead of the quadratic all-pairs path). */
+  private[graft] def minhashPairsVia(docs: DataFrame, volume: Volume,
+      nb: Int = 4, w: Int = 4): DataFrame =
+    verifyPairs(shinglesOf(docs), bandedCandidates(minhashSigOf(docs), volume, nb, w))
+
+  /** Verified star near-dup pairs — [[minhashPairsOf]]'s linear twin. */
   private[graft] def minhashPairsStarOf(docs: DataFrame,
       nb: Int = 4, w: Int = 4): DataFrame =
-    verifyPairs(shinglesOf(docs), bandedCandidatesStar(minhashSigOf(docs), nb, w))
+    minhashPairsVia(docs, Star, nb, w)
+
+  /** Verified capped near-dup pairs — [[minhashPairsOf]]'s O(cap·n)
+    * variant; both bound knobs (volume: `cap`; recall: `nb × w`). */
+  private[graft] def minhashPairsCappedOf(docs: DataFrame,
+      cap: Int = DefaultBucketCap, nb: Int = 4, w: Int = 4): DataFrame =
+    minhashPairsVia(docs, Capped(cap), nb, w)
 
   /** DuckDB star-candidate CTE over an arbitrary banding CTE — ONE
     * canonical-min rule for every instantiation (the operating point
@@ -155,51 +157,6 @@ object Dedup {
 
   /** The operating point (expects [[duckBandsCte]]'s `bands`). */
   private[operators] val duckStarCandCte: String = duckStarCandCteOn()
-
-  /** Default per-bucket resident cap for [[bandedCandidatesCapped]] —
-    * the batch twin of StreamingNearDup's `maxPerBucket = 64` default.
-    * 64 residents cost at most 64·63/2 ≈ 2k resident-resident pairs per
-    * bucket (an acceptable verify bill) and bound the per-bucket volume
-    * at 64·n thereafter; the `dedup_minhash_profile` verdict that
-    * engages this emitter is `max_bucket > cap`. */
-  private[operators] val DefaultBucketCap = 64
-
-  /** CAPPED candidate pairs: the recall-preserving middle ground between
-    * [[bandedCandidates]] (all-pairs, quadratic in bucket occupancy) and
-    * [[bandedCandidatesStar]] (canonical-star, linear but keep-first-
-    * approximate on chains). Exactly StreamingNearDup's `maxPerBucket`
-    * semantics in batch: the first `cap` residents of each bucket (by
-    * doc_id — the deterministic arrival order of the streaming twin)
-    * pair among themselves AND against every overflow doc; overflow
-    * docs never pair with each other. Per-bucket volume is n(n−1)/2 for
-    * n ≤ cap and cap·n − cap(cap+1)/2 = O(cap·n) beyond — LINEAR in
-    * occupancy at any saturation, with full all-pairs recall inside the
-    * resident set (cap = 1 degenerates to the star emitter; cap = ∞ to
-    * all-pairs). The rank is a per-bucket window sort — the same
-    * (band, key) shuffle the star emitter's groupBy pays, plus an
-    * in-partition sort bounded by bucket occupancy. */
-  private def bandedCandidatesCapped(sig: DataFrame, cap: Int,
-      nb: Int = 4, w: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bands = bandsOf(sig, nb, w)
-    val residents = bands
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("band"), col("key")).orderBy(col("doc_id"))))
-      .filter(col("rk") <= cap)
-      .select(col("band"), col("key"), col("doc_id"))
-    residents.alias("a")
-      .join(bands.alias("b"),
-        expr("a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id"))
-      .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b").distinct()
-  }
-
-  /** Verified capped near-dup pairs — [[minhashPairsOf]]'s bounded-volume
-    * variant (same signature/shingle/Jaccard fragments, capped
-    * candidates). Band split parameterized like [[minhashPairsStarOf]]:
-    * both bound knobs (volume: `cap`; recall: `nb × w`) compose. */
-  private[graft] def minhashPairsCappedOf(docs: DataFrame,
-      cap: Int = DefaultBucketCap, nb: Int = 4, w: Int = 4): DataFrame =
-    verifyPairs(shinglesOf(docs), bandedCandidatesCapped(minhashSigOf(docs), cap, nb, w))
 
   /** Bucket-occupancy profile of a signature table: ONE linear map +
     * aggregation, never a pair — (n_buckets, max_bucket, cand_pairs
@@ -225,13 +182,13 @@ object Dedup {
   }
 
   /** The adversarial-regime flag: TRUE when the all-pairs emitter's
-    * bucket load exceeds the cap — [[chooseEmitter]]'s "not all" verdict
-    * (one definition; this is the boolean view the specs pin). */
+    * bucket load exceeds the cap — [[emitterPolicy]]'s "not all"
+    * verdict (one definition; this is the boolean view the specs pin). */
   private[operators] def starRegime(docs: DataFrame,
       cap: Int = DefaultBucketCap): Boolean =
-    chooseEmitter(docs, cap) != "all"
+    emitterPolicy(docs, cap) != All
 
-  /** Default capped-candidate budget for [[chooseEmitter]]'s middle
+  /** Default capped-candidate budget for [[emitterPolicy]]'s middle
     * rung, derived from the round-14 decade measurements: 85.4 M capped
     * candidates (salt-100×) verified comfortably on one 32-thread box
     * (65.6 s) while 1.14 B (salt-1000×) exceeded its disk — 200 M sits
@@ -258,36 +215,45 @@ object Dedup {
     * setting this repo benches on. */
   private[operators] val AutoCappedBudget = 200000000L
 
+  /** The MinHash emitter ladder at the default cap, in sweep order. */
+  private[graft] val emitterLadder: Seq[Volume] = Seq(All, Capped(DefaultBucketCap), Star)
+
   /** Profile-gated three-rung emitter choice — the measured ladder
-    * (SCALE.md round 14) as one decision function. Returns "all",
-    * "capped", or "star":
-    *  - `max_bucket ≤ cap` → "all": the cap would not bind, the exact
+    * (SCALE.md round 14) as one decision function:
+    *  - `max_bucket ≤ cap` → `All`: the cap would not bind, the exact
     *    emitter is free (natural corpora — sf0.1 max_bucket 18);
-    *  - else if `cand_pairs_capped ≤ cappedBudget` → "capped": full
-    *    all-pairs recall inside the resident set at O(cap·n) volume —
-    *    measured EXACT drop-set agreement at mid-saturation where star
-    *    loses 3.7% of drops and splits clusters;
-    *  - else → "star": the only linear-volume rung (Σ(n−1)) when even
+    *  - else if `cand_pairs_capped ≤ cappedBudget` → `Capped(cap)`:
+    *    full all-pairs recall inside the resident set at O(cap·n)
+    *    volume — measured EXACT drop-set agreement at mid-saturation
+    *    where star loses 3.7% of drops and splits clusters;
+    *  - else → `Star`: the only linear-volume rung (Σ(n−1)) when even
     *    O(cap·n) is billions of rows (K=1000: capped owes 1.14 B,
     *    star 18.4 M).
     * ONE driver-side profile row (the `cap` used to decide is the cap
     * threaded into the profile's capped-volume estimate, so the verdict
     * prices the emitter the caller will actually run); the persisted
     * sig table is reused from cache by whichever emitter runs. An empty
-    * corpus (nothing shingles) profiles as max_bucket 0 → "all". */
-  private[graft] def chooseEmitter(docs: DataFrame,
+    * corpus (nothing shingles) profiles as max_bucket 0 → `All`. */
+  private[graft] def emitterPolicy(docs: DataFrame,
       cap: Int = DefaultBucketCap,
       cappedBudget: Long = AutoCappedBudget,
-      nb: Int = 4, w: Int = 4): String = {
+      nb: Int = 4, w: Int = 4): Volume = {
     // profile at the SAME (nb × w) split the chosen emitter will band on,
     // so a recall retune reprices the ladder instead of reading 4×4 stats
     val row = bucketProfileOf(minhashSigOf(docs), cap, nb, w).collect()(0)
     def l(c: String): Long =
       Option(row.getAs[java.lang.Long](c)).map(_.longValue).getOrElse(0L)
-    if (l("max_bucket") <= cap) "all"
-    else if (l("cand_pairs_capped") <= cappedBudget) "capped"
-    else "star"
+    if (l("max_bucket") <= cap) All
+    else if (l("cand_pairs_capped") <= cappedBudget) Capped(cap)
+    else Star
   }
+
+  /** [[emitterPolicy]]'s label: "all", "capped" or "star". */
+  private[graft] def chooseEmitter(docs: DataFrame,
+      cap: Int = DefaultBucketCap,
+      cappedBudget: Long = AutoCappedBudget,
+      nb: Int = 4, w: Int = 4): String =
+    emitterPolicy(docs, cap, cappedBudget, nb, w).label
 
   /** DuckDB capped-candidate CTE over an arbitrary banding CTE — ONE
     * rank rule shared with the Spark emitter above, instantiable per
@@ -337,7 +303,7 @@ object Dedup {
     * `dedup_containment` QueryDef supplies the deterministic fixture pool.
     *
     * Doc A is CONTAINED in doc B when >= 80% of A's informative 8-token
-    * windows (df in [2, 50] — boilerplate windows excluded) also appear in
+    * windows (df in [2, DepthCap] — boilerplate windows excluded) appear in
     * B, and A is properly smaller (|W(A)| <= 0.8 |W(B)|). Same candidate
     * machinery as dedup_substring: group-by-window-hash with the
     * stop-window cap, one corpus-linear explode, bounded self-join; per-doc
@@ -348,20 +314,15 @@ object Dedup {
     val ex = corpus
       .selectExpr("doc_id", "explode(graft_winhash8(text)) AS h")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val hot = ex.join(
-      ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .filter("df BETWEEN 2 AND 50")
-        .select(col("h")),
-      "h").persist(StorageLevel.MEMORY_AND_DISK)
+    val hot = BucketPairs.shallow(ex, Seq("h"), "doc_id")
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // denominators from the UNFILTERED window sets: the df >= 2 cut
     // deletes source-unique windows, which would collapse the excerpt/
     // source size asymmetry (wa == wb) and bias containment to 1.0 for
     // both sides; with true counts the metric is a conservative lower
     // bound (boilerplate windows count against, never for)
     val wc = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("w"))
-    val shared = hot.alias("a").join(hot.alias("b"),
-        expr("a.h = b.h AND a.doc_id < b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val shared = BucketPairs(hot, Seq("h"), "doc_id", All)
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
     // lazy result — both caches feed the executed plan
@@ -477,7 +438,7 @@ object Dedup {
     * `(doc_id, lang, n_chars, text)` frame: the verified
     * `(doc_a, doc_b, jaccard)` pairs; its per-stage candidate volumes
     * are recorded in SCALE.md, "Measured scaling, 1× → 10× corpus".
-    * `midCap` selects the deep-bucket (df > 50) pairing tier:
+    * `midCap` selects the deep-bucket (df > DepthCap) pairing tier:
     * 1 = hub pairing (the default, each member witnessed by the bucket
     * min — O(df) per bucket); k > 1 = CAPPED pairing (the
     * dedup_minhash_capped semantics: first k residents by doc_id pair
@@ -487,7 +448,6 @@ object Dedup {
   private[graft] def ngramPipelineOf(docs: DataFrame,
       midCap: Int = 1): DataFrame = {
       require(midCap >= 1, s"midCap must be >= 1, got $midCap")
-      val s = docs.sparkSession
       // gram arrays are recomputed per use — the native graft_gram5 is a
       // cheap map-side loop, and columnar-caching the heavy array<long>
       // column measured SLOWER than recomputation (cache build + decode
@@ -526,54 +486,18 @@ object Dedup {
       // verify-and-discard work (measured: a corpus whose copies share
       // word-internal grams pushed the verify stage to 208 s at 10x —
       // pure false-positive volume, every candidate below threshold).
-      //  - df = 1: dropped (no pair to witness).
-      //  - 2 <= df <= 50: full in-bucket pairing, <= 1225 pairs.
-      //  - df > 50: HUB pairing — each member pairs with the bucket's
-      //    min doc_id only, O(df) not O(df^2). A plain drop would be a
-      //    recall CLIFF: a near-identical cluster of > 50 docs shares
-      //    ALL its bucket keys (identical minima under every
-      //    permutation, same length band), so every witness would
-      //    vanish at once (review find, round 7). Hub pairs keep every
-      //    member witnessed — for the near-identical clusters that
-      //    produce crowded buckets, (hub, member) passes the exact
-      //    verify just as the member-member pairs would — while a
-      //    10^7-doc boilerplate bucket emits 10^7 candidates, not
-      //    10^14.
-      // The groupBy, the cap join, and the candidate self-join all key
-      // on (lang, band, tag, mva, mvb) — one shuffle partitioning, reused.
-      val bKey = Seq("lang", "band", "tag", "mva", "mvb")
-      val depth = bucketed.groupBy(bKey.map(col): _*)
-        .agg(count(lit(1)).as("df"), min(col("doc_id")).as("hub"))
-      val capped = bucketed.join(
-        depth.filter("df BETWEEN 2 AND 50").select(bKey.map(col): _*), bKey)
-      val selfPairs = capped.alias("a").join(capped.alias("b"),
-          expr(bKey.map(c => s"a.$c = b.$c").mkString(" AND ") + " AND a.doc_id < b.doc_id"))
-        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
-      val deepPairs =
-        if (midCap == 1)
-          // hub tier: the depth census already carries the bucket min —
-          // no window sort needed (the fast default path)
-          bucketed.join(
-              depth.filter("df > 50").select((bKey.map(col) :+ col("hub")): _*), bKey)
-            .filter(col("doc_id") =!= col("hub"))
-            .selectExpr("hub AS doc_a", "doc_id AS doc_b") // hub = bucket min < doc_id
-        else {
-          // capped tier: first midCap residents per deep bucket pair fully
-          // and against every member — the dedup_minhash_capped rank rule
-          // on the SAME (lang, band, tag, mva, mvb) shuffle partitioning
-          import org.apache.spark.sql.expressions.Window
-          val deep = bucketed.join(
-            depth.filter("df > 50").select(bKey.map(col): _*), bKey)
-          val residents = deep
-            .withColumn("rk", row_number().over(
-              Window.partitionBy(bKey.map(col): _*).orderBy(col("doc_id"))))
-            .filter(col("rk") <= midCap)
-            .select((bKey :+ "doc_id").map(col): _*)
-          residents.alias("a").join(deep.alias("b"),
-              expr(bKey.map(c => s"a.$c = b.$c").mkString(" AND ") + " AND a.doc_id < b.doc_id"))
-            .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
-        }
-      val cand = selfPairs.unionByName(deepPairs).distinct()
+      // Buckets of 2..DepthCap docs pair fully; deeper ones pair through
+      // the hub (or the first midCap residents), never dropped: a plain
+      // drop would be a recall CLIFF — a near-identical cluster of more
+      // than DepthCap docs shares ALL its bucket keys (identical minima
+      // under every permutation, same length band), so every witness
+      // would vanish at once (review find, round 7). Hub pairs keep
+      // every member witnessed, while a 10^7-doc boilerplate bucket
+      // emits 10^7 candidates, not 10^14. The census, the depth join and
+      // the candidate self-join all key on (lang, band, tag, mva, mvb) —
+      // one shuffle partitioning, reused.
+      val cand = BucketPairs(bucketed, Seq("lang", "band", "tag", "mva", "mvb"), "doc_id",
+        tiered(DepthCap, midCap)).distinct()
       // size-compatibility prefilter: jaccard >= 0.7 forces
       // min(|A|,|B|) >= 0.7/1.7*(|A|+|B|), i.e. sizes within ~0.7 ratio —
       // sound pruning, applied on slim rows before shipping gram arrays.
@@ -616,7 +540,7 @@ object Dedup {
   private[graft] def minhashPairsOf(docs: DataFrame,
       nb: Int = 4, w: Int = 4): DataFrame =
     // persisted slim sig: computed once, shared across consumers via cache
-    verifyPairs(shinglesOf(docs), bandedCandidatesCfg(minhashSigOf(docs), nb, w))
+    minhashPairsVia(docs, All, nb, w)
 
   val defs: ListMap[String, QueryDef] = ListMap(
 
@@ -656,7 +580,7 @@ object Dedup {
     // size, where dedup_minhash's in-bucket self-join is quadratic (the
     // K=1000 salted corpus: 16.6 B vs ~20 M candidates). Verified by the
     // SAME verifyPairs / duckJaccardSelect; semantics documented on
-    // bandedCandidatesStar (keep-first approximation: chains sharing one
+    // bandedCandidates (keep-first approximation: chains sharing one
     // bucket may keep a middle-linked doc all-pairs would drop). --------
     "dedup_minhash_star" -> QueryDef(
       (s, dir) => minhashPairsStarOf(Tables.load(s, dir, "documents"))
@@ -669,7 +593,7 @@ object Dedup {
     // ---- capped MinHash pairs: the recall-preserving middle ground the
     // dedup_minhash_profile verdict engages when max_bucket exceeds the
     // cap but full in-resident recall still matters — StreamingNearDup's
-    // maxPerBucket semantics in batch (first 64 residents per bucket by
+    // maxPerBucket semantics in batch (first DefaultBucketCap residents by
     // doc_id pair fully; overflow docs pair against residents only), so
     // per-bucket volume is O(cap·n) at any saturation. cap=1 is the star
     // emitter; cap=∞ is dedup_minhash. Verified by the SAME verifyPairs /
@@ -801,7 +725,7 @@ object Dedup {
       (s, dir) => {
         val sig = minhashSigTable(s, dir)
         val sh = shingles(s, dir)
-        bandedCandidates(sig)
+        bandedCandidates(sig, All)
           .join(sig.selectExpr("doc_id AS doc_a", "sig AS sig_a"), "doc_a")
           .join(sig.selectExpr("doc_id AS doc_b", "sig AS sig_b"), "doc_b")
           .join(sh.selectExpr("doc_id AS doc_a", "sort_array(sh) AS sh_a"), "doc_a")
@@ -851,12 +775,8 @@ object Dedup {
     "minhash_band_sweep" -> QueryDef(
       (s, dir) => {
         val sig = minhashSigTable(s, dir)
-        val emitters: Seq[(String, (Int, Int) => DataFrame)] = Seq(
-          ("all", (nb, w) => bandedCandidatesCfg(sig, nb, w)),
-          ("capped", (nb, w) => bandedCandidatesCapped(sig, DefaultBucketCap, nb, w)),
-          ("star", (nb, w) => bandedCandidatesStar(sig, nb, w)))
-        (for { (nb, w) <- bandSweepCfgs; (em, candFn) <- emitters } yield {
-          candFn(nb, w)
+        (for { (nb, w) <- bandSweepCfgs; v <- emitterLadder } yield {
+          bandedCandidates(sig, v, nb, w)
             .join(sig.selectExpr("doc_id AS doc_a", "sig AS sig_a"), "doc_a")
             .join(sig.selectExpr("doc_id AS doc_b", "sig AS sig_b"), "doc_b")
             .selectExpr(
@@ -865,17 +785,18 @@ object Dedup {
               coalesce(sum(expr("(lanes * 1000L) div 16")), lit(0L)).as("sum_est"),
               coalesce(sum(expr("IF((lanes * 1000L) div 16 >= 500, 1L, 0L)")), lit(0L)).as("n_est_ge_500"))
             .selectExpr(s"CAST($nb AS BIGINT) AS bands", s"CAST($w AS BIGINT) AS width",
-              s"'$em' AS emitter", "n_candidates",
+              s"'${v.label}' AS emitter", "n_candidates",
               "IF(n_candidates = 0, 0L, sum_est div n_candidates) AS mean_est_mille",
               "n_est_ge_500")
         }).reduce(_.union(_)).transform(graft.Sorted.byNames(_, "bands", "emitter"))
       },
       s"""WITH $duckSigCtes,
          |${bandSweepCfgs.map { case (nb, w) =>
-             val cands = Seq(
-               ("all", duckCandCteOn(s"bands_$nb", s"cand_all_$nb")),
-               ("capped", duckCappedCandCteOn(DefaultBucketCap, s"bands_$nb", s"cand_capped_$nb")),
-               ("star", duckStarCandCteOn(s"bands_$nb", s"cand_star_$nb")))
+             val cands = emitterLadder.map(v => (v.label, v match {
+               case Capped(cap) => duckCappedCandCteOn(cap, s"bands_$nb", s"cand_capped_$nb")
+               case Star => duckStarCandCteOn(s"bands_$nb", s"cand_star_$nb")
+               case _ => duckCandCteOn(s"bands_$nb", s"cand_all_$nb")
+             }))
              (Seq(duckBandsCteCfg(nb, w, s"bands_$nb")) ++ cands.map(_._2) ++
                cands.map { case (em, _) =>
                  s"""l_${em}_$nb AS (SELECT CAST(list_sum(list_transform(range(1, 17),
@@ -891,8 +812,8 @@ object Dedup {
          |SELECT bands, width, emitter, n_candidates,
          |  CASE WHEN n_candidates = 0 THEN 0 ELSE sum_est // n_candidates END AS mean_est_mille,
          |  n_est_ge_500
-         |FROM (${(for { (nb, _) <- bandSweepCfgs; em <- Seq("all", "capped", "star") }
-             yield s"SELECT * FROM r_${em}_$nb").mkString(" UNION ALL ")})
+         |FROM (${(for { (nb, _) <- bandSweepCfgs; v <- emitterLadder }
+             yield s"SELECT * FROM r_${v.label}_$nb").mkString(" UNION ALL ")})
          |ORDER BY bands, emitter""".stripMargin),
 
     // ---- char-5-gram Jaccard near-dups with (lang, length-band) blocking --
@@ -924,7 +845,7 @@ object Dedup {
          |bc AS (SELECT lang, band, tag, mva, mvb, count(*) AS df, min(doc_id) AS hub
          |  FROM bucketed GROUP BY lang, band, tag, mva, mvb),
          |capped AS (SELECT b.* FROM bucketed b
-         |  JOIN (SELECT lang, band, tag, mva, mvb FROM bc WHERE df BETWEEN 2 AND 50)
+         |  JOIN (SELECT lang, band, tag, mva, mvb FROM bc WHERE df BETWEEN 2 AND $DepthCap)
          |  USING (lang, band, tag, mva, mvb)),
          |cand AS (SELECT DISTINCT doc_a, doc_b, ga.g AS g_a, gb.g AS g_b FROM (
          |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -935,7 +856,7 @@ object Dedup {
          |    UNION
          |    SELECT c.hub AS doc_a, b.doc_id AS doc_b
          |    FROM bucketed b
-         |    JOIN (SELECT * FROM bc WHERE df > 50) c
+         |    JOIN (SELECT * FROM bc WHERE df > $DepthCap) c
          |      USING (lang, band, tag, mva, mvb)
          |    WHERE b.doc_id != c.hub)
          |  JOIN g ga ON ga.doc_id = doc_a JOIN g gb ON gb.doc_id = doc_b)
@@ -953,7 +874,7 @@ object Dedup {
     // (graft_winhash8, native codegen'd); candidate generation is
     // group-by-window-hash, NOT all-pairs. Two scale guards on the window
     // frequency: df >= 2 keeps only windows that can witness a pair at
-    // all, and df <= 50 drops boilerplate windows whose bucket would fan
+    // all, and df <= DepthCap drops boilerplate windows whose bucket would fan
     // out quadratically (the standard stop-window cap — at 100 TB a
     // navigation header shared by 10^7 docs must not emit 10^14 pairs;
     // pairs lost to the cap are re-witnessed by their rarer neighbors).
@@ -965,17 +886,10 @@ object Dedup {
         val ex = Tables.load(s, dir, "documents")
           .selectExpr("doc_id", "explode(graft_winhash8(text)) AS h")
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val hot = ex.join(
-          ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
-            .filter("df BETWEEN 2 AND 50")
-            .select(col("h")),
-          "h")
         // NO unpersist here: the returned frame is lazy, so dropping the
         // cache now would make the df-filter and both join sides re-derive
         // the explode at execution. The harness clears cache per query.
-        hot.alias("a").join(hot.alias("b"),
-            expr("a.h = b.h AND a.doc_id < b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        BucketPairs(ex, Seq("h"), "doc_id", Tiered(DepthCap, None))
           .groupBy(col("doc_a"), col("doc_b"))
           .agg(count(lit(1)).as("n_shared"))
           .transform(graft.Sorted.byNames(_, "doc_a", "doc_b"))
@@ -990,7 +904,7 @@ object Dedup {
          |  i -> list_reduce(list_prepend(0::BIGINT, th[i:i+7]), (h, x) -> (h * 31 + x) % $P))) AS w
          |  FROM th WHERE len(th) >= 8),
          |ex AS (SELECT doc_id, unnest(w) AS h FROM wins),
-         |df AS (SELECT h FROM ex GROUP BY h HAVING COUNT(*) BETWEEN 2 AND 50)
+         |df AS (SELECT h FROM ex GROUP BY h HAVING COUNT(*) BETWEEN 2 AND $DepthCap)
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
          |FROM ex a JOIN df USING (h) JOIN ex b USING (h)
          |WHERE a.doc_id < b.doc_id
@@ -998,7 +912,7 @@ object Dedup {
 
     // ---- asymmetric containment dedup (excerpt/quote detection): doc A is
     // CONTAINED in doc B when >= 80% of A's informative 8-token windows
-    // (df ∈ [2, 50] — boilerplate windows excluded from numerator AND
+    // (df ∈ [2, DepthCap] — boilerplate windows excluded from numerator AND
     // denominator) also appear in B, and A is properly smaller
     // (|W(A)| <= 0.8 |W(B)|), so near-dups stay dedup_minhash's business
     // and this op reports true excerpts. Jaccard misses these pairs by
@@ -1036,7 +950,7 @@ object Dedup {
          |  FROM th WHERE len(th) >= 8),
          |ex AS (SELECT doc_id, unnest(w) AS h FROM wins),
          |hot AS (SELECT ex.doc_id, ex.h FROM ex
-         |  JOIN (SELECT h FROM ex GROUP BY h HAVING COUNT(*) BETWEEN 2 AND 50) df USING (h)),
+         |  JOIN (SELECT h FROM ex GROUP BY h HAVING COUNT(*) BETWEEN 2 AND $DepthCap) df USING (h)),
          |wc AS (SELECT doc_id, COUNT(*) AS w FROM ex GROUP BY doc_id),
          |shared AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
          |  FROM hot a JOIN hot b ON a.h = b.h AND a.doc_id < b.doc_id
@@ -1171,10 +1085,7 @@ object Dedup {
           .select(col("doc_id"), graft.functions.Portable.contentDigest.as("digest"))
           .join(histDig.withColumn("hit", lit(1)), Seq("digest"), "left")
           .select(col("doc_id"), coalesce(col("hit"), lit(0)).as("exact_dup"))
-        val sig = minhashSigTable(s, dir) // persisted slim, shared plan
-        val bands = sig.selectExpr("doc_id",
-          "explode(transform(sequence(0, 3), b -> struct(b AS band, concat_ws('_', slice(sig, b * 4 + 1, 4)) AS key))) AS bk")
-          .selectExpr("doc_id", "bk.band AS band", "bk.key AS key")
+        val bands = bandsOf(minhashSigTable(s, dir)) // persisted slim sig, shared plan
         val cand = bands.filter(col("doc_id") % 10 === 0).alias("a")
           .join(bands.filter(col("doc_id") % 10 =!= 0).alias("b"),
             expr("a.band = b.band AND a.key = b.key"))
@@ -1280,8 +1191,8 @@ object Dedup {
     // higher-order-function work over the ONE native token-hash array
     // (O(len) per doc — see winnowSelect for why NOT char grams);
     // the only corpus-volume shuffle is the fingerprint hash-group, and
-    // pairing rides the ngram-jaccard two-tier bucket policy (df<=50
-    // full in-bucket pairing, df>50 hub pairing) so a boilerplate
+    // pairing rides the ngram-jaccard two-tier bucket policy (df <= DepthCap
+    // full in-bucket pairing, hub pairing beyond) so a boilerplate
     // fingerprint can never go quadratic. ---------------------------------
     "dedup_winnow" -> QueryDef(
       (s, dir) => {
@@ -1294,7 +1205,7 @@ object Dedup {
     // (df > dfCap) buckets pair their first midCap residents fully and
     // against every member instead of hub-only, recovering the
     // resident-resident witnesses hub pairing trades away at O(midCap·df)
-    // per bucket. dfCap is LOWERED here (50 → 3) so the deep tier — and
+    // per bucket. dfCap is LOWERED here (DepthCap → 3) so the deep tier — and
     // therefore the capped rank rule — actually ENGAGES on the natural
     // sf0.01 gate fixture (max fingerprint df there is 7; 147 buckets sit
     // past 3), making this a real cross-engine check of the tier, not a
@@ -1318,8 +1229,8 @@ object Dedup {
     // O(len²) DP: the block join itself, and |len_a − len_b| ≤
     // (1000−simPm)/1000 · max_len (length difference lower-bounds edit
     // distance), applied on slim rows BEFORE any text ships. Blocks ride
-    // the ngram-jaccard two-tier depth policy (df ≤ 50 full in-bucket
-    // pairing, df > 50 hub pairing) so a boilerplate first token can
+    // the ngram-jaccard two-tier depth policy (df ≤ DepthCap full in-bucket
+    // pairing, hub pairing beyond) so a boilerplate first token can
     // never go quadratic. Production note at 100 TB: swap the full DP
     // for the threshold-banded variant (levenshtein(a, b, k) — O(len·k))
     // once simPm fixes k; the full DP here keeps the oracle contract
@@ -1345,10 +1256,10 @@ object Dedup {
          |    AND a.band = b.band AND a.doc_id < b.doc_id
          |  JOIN depth t ON t.lang = a.lang AND t.tok1 = a.tok1
          |    AND t.band = a.band
-         |  WHERE t.df BETWEEN 2 AND 50),
+         |  WHERE t.df BETWEEN 2 AND $DepthCap),
          |hub_pairs AS (SELECT t.hub AS doc_a, f.doc_id AS doc_b
          |  FROM blocks f JOIN depth t USING (lang, tok1, band)
-         |  WHERE t.df > 50 AND f.doc_id <> t.hub),
+         |  WHERE t.df > $DepthCap AND f.doc_id <> t.hub),
          |cand AS (SELECT DISTINCT doc_a, doc_b FROM
          |  (SELECT * FROM self_pairs UNION ALL SELECT * FROM hub_pairs)),
          |pruned AS (SELECT doc_a, doc_b, ta.text AS text_a,
@@ -1559,7 +1470,7 @@ object Dedup {
     * registry cannot drift from each other (the deep tier instantiates
     * hub SQL at midCap = 1 and the rank rule otherwise, mirroring the
     * Spark branch exactly). */
-  private def duckWinnowSql(dfCap: Int = 50, midCap: Int = 1,
+  private def duckWinnowSql(dfCap: Int = DepthCap, midCap: Int = 1,
       minShared: Int = 2): String =
     s"""WITH toks AS (SELECT doc_id,
        |    ${graft.functions.Portable.duckToksSql("text")} AS toks
@@ -1618,7 +1529,7 @@ object Dedup {
     * member), the same volume ladder as the MinHash family's emitters.
     */
   def winnowPairs(docs: DataFrame, k: Int = 3, w: Int = 4,
-      dfCap: Int = 50, minShared: Int = 2, midCap: Int = 1): DataFrame = {
+      dfCap: Int = DepthCap, minShared: Int = 2, midCap: Int = 1): DataFrame = {
     require(midCap >= 1, s"midCap must be >= 1, got $midCap")
     // distinct fp VALUES per doc; persisted — feeds the df census, both
     // pairing tiers and the per-doc fingerprint counts
@@ -1626,41 +1537,11 @@ object Dedup {
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nf = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    val depth = fps.groupBy(col("fp"))
-      .agg(count(lit(1)).as("df"), min(col("doc_id")).as("hub"))
-    val capped = fps.join(
-      depth.filter(s"df BETWEEN 2 AND $dfCap").select(col("fp")), "fp")
-    val selfPairs = capped.alias("a").join(capped.alias("b"),
-        expr("a.fp = b.fp AND a.doc_id < b.doc_id"))
-      .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
-    // deep-bucket (df > dfCap) tier: midCap = 1 is hub pairing (bucket
-    // min witnesses every member, O(df) per bucket — the census already
-    // carries the hub, no window); midCap > 1 is CAPPED pairing (the
-    // dedup_minhash_capped rank rule: first midCap residents by doc_id
-    // pair fully and against every member, O(midCap·df) — recovering
-    // resident-resident recall hub pairing trades away). Triples grow
+    // midCap = 1 pairs deep buckets through the hub, O(df); midCap > 1
+    // through the first midCap residents, O(midCap·df). Triples grow
     // monotonically in midCap, so hub ⊆ capped ⊆ full holds on the
     // FILTERED output too (shared_fp is nondecreasing per pair).
-    val deepPairs =
-      if (midCap == 1)
-        fps.join(
-            depth.filter(s"df > $dfCap").select(col("fp"), col("hub")), "fp")
-          .filter(col("doc_id") =!= col("hub"))
-          .selectExpr("hub AS doc_a", "doc_id AS doc_b")
-      else {
-        import org.apache.spark.sql.expressions.Window
-        val deep = fps.join(
-          depth.filter(s"df > $dfCap").select(col("fp")), "fp")
-        val residents = deep
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("fp")).orderBy(col("doc_id"))))
-          .filter(col("rk") <= midCap)
-          .select(col("fp"), col("doc_id"))
-        residents.alias("a").join(deep.alias("b"),
-            expr("a.fp = b.fp AND a.doc_id < b.doc_id"))
-          .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
-      }
-    selfPairs.unionByName(deepPairs)
+    BucketPairs(fps, Seq("fp"), "doc_id", tiered(dfCap, midCap))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("shared_fp"))
       .filter(s"shared_fp >= $minShared")
       .join(nf.selectExpr("doc_id AS doc_a", "nf AS nfa"), "doc_a")
@@ -1678,7 +1559,7 @@ object Dedup {
     * `dfCap` is the full-pairing block-depth ceiling.
     */
   def editBlockedPairs(docs: DataFrame, simPm: Long = 800L,
-      dfCap: Int = 50): DataFrame = {
+      dfCap: Int = DepthCap): DataFrame = {
     require(simPm >= 1 && simPm <= 1000, s"simPm must be in [1,1000], got $simPm")
     require(dfCap >= 2, s"dfCap must be >= 2, got $dfCap")
     val d2 = docs.filter(col("text").isNotNull)
@@ -1693,20 +1574,8 @@ object Dedup {
       .selectExpr("doc_id", "lang", "tok1",
         "explode(array(len div 100, (len + 50) div 100)) AS band")
       .distinct()
-    val bKey = Seq("lang", "tok1", "band")
-    val depth = blocks.groupBy(bKey.map(col): _*)
-      .agg(count(lit(1)).as("df"), min(col("doc_id")).as("hub"))
-    val capped = blocks.join(
-      depth.filter(s"df BETWEEN 2 AND $dfCap").select(bKey.map(col): _*), bKey)
-    val selfPairs = capped.alias("a").join(capped.alias("b"),
-        expr(bKey.map(c => s"a.$c = b.$c").mkString(" AND ") +
-          " AND a.doc_id < b.doc_id"))
-      .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
-    val hubPairs = blocks.join(
-        depth.filter(s"df > $dfCap").select((bKey.map(col) :+ col("hub")): _*), bKey)
-      .filter(col("doc_id") =!= col("hub"))
-      .selectExpr("hub AS doc_a", "doc_id AS doc_b")
-    val cand = selfPairs.unionByName(hubPairs).distinct()
+    val cand = BucketPairs(blocks, Seq("lang", "tok1", "band"), "doc_id",
+      Tiered(dfCap, Some(Star))).distinct()
     // length prune on slim rows first, THEN the text join — |Δlen|
     // lower-bounds the edit distance, so this is sound for the floor
     val lens = d2.selectExpr("doc_id", "len")
@@ -1729,7 +1598,7 @@ object Dedup {
     // never re-coalesces. The extra shuffle moves id-only rows.
     // ROUND-ROBIN, not keyed (round-17 ADVICE + measured): doc_a-only
     // hashing serializes a deep (df > dfCap) block's entire candidate set
-    // onto one partition (hubPairs emits `hub AS doc_a` for every member),
+    // onto one partition (the hub tier emits `hub AS doc_a` for every member),
     // and keying on BOTH pair columns is silently ELIMINATED as redundant
     // — cand.distinct() already hash-partitions by (doc_a, doc_b), so the
     // optimizer drops the same-keys repartition and AQE re-coalesces the

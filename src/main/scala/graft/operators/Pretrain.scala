@@ -113,14 +113,15 @@ object Pretrain {
     *    decade a box cannot pay all-pairs on (16.6 B vs ~20 M —
     *    SCALE.md round 13); oracle-checked by `pretrain_prep_star`
     *    with the star CTE spliced into the same DuckDB twin;
-    *  - `"capped"` — [[Dedup.minhashPairsCappedOf]] (maxPerBucket = 64
-    *    in batch, O(cap·n) volume with measured EXACT all-pairs
-    *    drop-set agreement at mid-saturation — SCALE.md round 14);
+    *  - `"capped"` — [[Dedup.minhashPairsCappedOf]] (maxPerBucket =
+    *    DefaultBucketCap in batch, O(cap·n) volume with measured EXACT
+    *    all-pairs drop-set agreement at mid-saturation — SCALE.md
+    *    round 14);
     *  - `"auto"` — the profile-before-pairing discipline AS CODE:
-    *    [[Dedup.chooseEmitter]]'s O(n) bucket-load profile over the
+    *    [[Dedup.emitterPolicy]]'s O(n) bucket-load profile over the
     *    exact-dedup survivors picks the rung (one linear aggregation,
     *    one driver-side row — the AQE-stats shape; thresholds
-    *    documented there: max_bucket ≤ 64 → all; capped candidates ≤
+    *    documented there: max_bucket ≤ cap → all; capped candidates ≤
     *    `autoCappedBudget` → capped; else star). Natural corpora pay
     *    nothing for the guard but the profile pass, whose persisted
     *    sig table the chosen emitter reuses from cache.
@@ -182,20 +183,14 @@ object Pretrain {
     val ekDocs = gated.join(ek, "doc_id")
 
     // ---- 3. MinHash near-dedup, keep-first -------------------------------
-    val emitter = dedupEmitter match {
-      case "auto" =>
-        Dedup.chooseEmitter(ekDocs.select("doc_id", "text"),
+    val volume =
+      if (dedupEmitter == "auto")
+        Dedup.emitterPolicy(ekDocs.select("doc_id", "text"),
           cappedBudget = autoCappedBudget)
-      case e @ ("all" | "star" | "capped") => e
-      case other => throw new IllegalArgumentException(
-        s"dedupEmitter must be all|star|capped|auto, got '$other'")
-    }
-    val pairFn: DataFrame => DataFrame = emitter match {
-      case "star" => Dedup.minhashPairsStarOf(_)
-      case "capped" => Dedup.minhashPairsCappedOf(_)
-      case _ => Dedup.minhashPairsOf(_)
-    }
-    val drops = pairFn(ekDocs.select("doc_id", "text"))
+      else Dedup.emitterLadder.find(_.label == dedupEmitter).getOrElse(
+        throw new IllegalArgumentException(
+          s"dedupEmitter must be all|star|capped|auto, got '$dedupEmitter'"))
+    val drops = Dedup.minhashPairsVia(ekDocs.select("doc_id", "text"), volume)
       .select(col("doc_b").as("doc_id")).distinct()
     val ndIds = ek.join(drops, Seq("doc_id"), "left_anti")
 

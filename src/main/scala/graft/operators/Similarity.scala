@@ -955,9 +955,8 @@ object Similarity {
   def embeddingCosinePairs(emb: DataFrame, threshold: Double = 0.45,
       width: Int = 3, nBands: Int = 4): DataFrame = {
     val bands = srpBands(emb, width, nBands)
-    val cand = bands.alias("a").join(bands.alias("b"),
-        expr("a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id"))
-      .selectExpr("a.vec_id AS id_a", "b.vec_id AS id_b").distinct()
+    val cand = BucketPairs(bands, Seq("band", "key"), "vec_id", BucketPairs.All,
+      ("id_a", "id_b")).distinct()
     val ea = emb.selectExpr("vec_id AS id_a", "embedding AS q_emb")
     val eb = emb.selectExpr("vec_id AS id_b", "embedding")
     cand.join(ea, "id_a").join(eb, "id_b")

@@ -50,8 +50,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    the one-run special case.
   *
   * At scale this is the same shape as every stateful op here: state is
-  * one bounded prefix (< steps.size events) per key, evicted by the
-  * event-time timeout, living in the RocksDB state store (GraftSession).
+  * one fixed-size partial match per key, evicted by the event-time
+  * timeout, living in the RocksDB state store (GraftSession).
   */
 object Sequence {
 
@@ -74,54 +74,65 @@ object Sequence {
     require(steps.size >= 2, "a sequence pattern needs at least two steps")
   }
 
+  /** A partial match: its anchor, the event time of its last matched
+    * event and how many steps it has matched. A fixed struct, not the
+    * matched events themselves: the state function reads nothing else,
+    * and a collection-typed state decodes through a `MapObjects` whose
+    * fresh lambda id makes Spark generate (and compile) a new projection
+    * in every micro-batch. */
+  final case class Partial[E](anchor: E, lastTs: Long, size: Int)
+
   /** The pure keyed state function (unit-testable via TestGroupState).
-    * State = the current partial match, in match order (head = anchor). */
+    * State = the current partial match. */
   def stateFn[E](p: Pattern[E])(
-      key: String, rows: Iterator[E], state: GroupState[Seq[E]]): Iterator[E] = {
+      key: String, rows: Iterator[E], state: GroupState[Partial[E]]): Iterator[E] = {
     if (rows.isEmpty && state.hasTimedOut) {
-      val anchor = state.get.head
+      val anchor = state.get.anchor
       state.remove()
       return if (p.emitTimedOut) Iterator.single(anchor) else Iterator.empty
     }
     val sorted = rows.toIndexedSeq.sortBy(p.eventTs)
-    var prefix: Seq[E] = state.getOption.getOrElse(Seq.empty)
+    var partial: Option[Partial[E]] = state.getOption
     val out = Seq.newBuilder[E]
     sorted.foreach { e =>
       val ts = p.eventTs(e)
-      // only a TRUE successor (ts >= last matched ts) advances or expires
-      // the partial; earlier stragglers fall through to the anchor check
-      // below, which rejects them while a partial is pending
-      if (prefix.nonEmpty && ts >= p.eventTs(prefix.last)) {
-        if (ts - p.eventTs(prefix.head) > p.withinMs) {
-          if (p.emitTimedOut) out += prefix.head // window expired before this successor
-          prefix = Seq.empty
-        } else if (p.steps(prefix.size)(e)) {
-          prefix = prefix :+ e
-          if (prefix.size == p.steps.size) { // full match
-            if (p.emitMatched) out += e
-            prefix = Seq.empty
-          }
-        } else if (p.strict) prefix = Seq.empty // next: a wrong event kills the partial
-        // else followedBy: the non-matching successor is skipped, the
-        // partial survives (and the skipped event does NOT re-anchor —
-        // single-partial state keeps one match in flight per key)
+      partial match {
+        // only a TRUE successor (ts >= last matched ts) advances or expires
+        // the partial; earlier stragglers fall through to the anchor check
+        // below, which rejects them while a partial is pending
+        case Some(m) if ts >= m.lastTs =>
+          if (ts - p.eventTs(m.anchor) > p.withinMs) {
+            if (p.emitTimedOut) out += m.anchor // window expired before this successor
+            partial = None
+          } else if (p.steps(m.size)(e)) {
+            if (m.size + 1 == p.steps.size) { // full match
+              if (p.emitMatched) out += e
+              partial = None
+            } else partial = Some(m.copy(lastTs = ts, size = m.size + 1))
+          } else if (p.strict) partial = None // next: a wrong event kills the partial
+          // else followedBy: the non-matching successor is skipped, the
+          // partial survives (and the skipped event does NOT re-anchor —
+          // single-partial state keeps one match in flight per key)
+        case _ =>
       }
-      if (prefix.isEmpty && p.steps.head(e)) prefix = Seq(e) // (re-)anchor
+      if (partial.isEmpty && p.steps.head(e)) partial = Some(Partial(e, ts, 1)) // (re-)anchor
     }
-    if (prefix.nonEmpty) {
-      state.update(prefix)
-      // a straggler anchor whose window already elapsed is clamped past the
-      // watermark: the partial had no completion inside its window, so the
-      // timeout emission is exactly right, just late
-      KeyedState.expireAt(state, p.eventTs(prefix.head) + p.withinMs)
-    } else if (state.exists) state.remove()
+    partial match {
+      case Some(m) =>
+        state.update(m)
+        // a straggler anchor whose window already elapsed is clamped past the
+        // watermark: the partial had no completion inside its window, so the
+        // timeout emission is exactly right, just late
+        KeyedState.expireAt(state, p.eventTs(m.anchor) + p.withinMs)
+      case None => if (state.exists) state.remove()
+    }
     out.result().iterator
   }
 
   /** Keyed-stream driver: requires a watermarked event-time column on
     * `events` (e.g. [[BounceDetect.withEventTime]]) when streaming. */
   def detect[E: Encoder](events: Dataset[E], p: Pattern[E])(key: E => String)(
-      implicit prefixEnc: Encoder[Seq[E]]): Dataset[E] =
+      implicit partialEnc: Encoder[Partial[E]]): Dataset[E] =
     events.groupByKey(key)(Encoders.STRING)
       .flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(stateFn(p))
@@ -142,7 +153,7 @@ object Sequence {
     * (expired runs evict on the earliest-deadline event-time timeout) —
     * the same state-growth contract as Flink's noSkip, where the window
     * is the bound. Use [[stateFn]] (single-run) when overlap is not
-    * required: it holds one prefix instead of many. */
+    * required: it holds one fixed-size partial instead of many prefixes. */
   def stateFnMulti[E](p: Pattern[E])(
       key: String, rows: Iterator[E], state: GroupState[Seq[Seq[E]]]): Iterator[E] = {
     def deadline(run: Seq[E]): Long = p.eventTs(run.head) + p.withinMs

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.HashExpressions
+import graft.operators.BucketPairs.DefaultBucketCap
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -80,7 +81,7 @@ object StreamingEmbeddingNearDup {
     * ts: timestamp). Returns the stream of near-dup candidate pairs
     * (append mode). */
   def pairs(vecs: DataFrame, width: Int = 8, nBands: Int = 4,
-      maxPerBucket: Int = 64, threshold: Double = 0.45,
+      maxPerBucket: Int = DefaultBucketCap, threshold: Double = 0.45,
       ttlMs: Long = 10L * 60 * 1000, delay: String = "0 seconds"): Dataset[VecCandPair] = {
     require(width >= 1 && nBands >= 1, s"bad banding: ($width, $nBands)")
     val s = vecs.sparkSession

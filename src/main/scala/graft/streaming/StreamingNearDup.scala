@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.BucketPairs.DefaultBucketCap
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -125,7 +126,7 @@ object StreamingNearDup {
 
   /** `docs` must carry (doc_id: long, text: string, ts: timestamp).
     * Returns the stream of near-dup candidate pairs (append mode). */
-  def pairs(docs: DataFrame, maxPerBucket: Int = 64, minEstPm: Long = 750,
+  def pairs(docs: DataFrame, maxPerBucket: Int = DefaultBucketCap, minEstPm: Long = 750,
       ttlMs: Long = 10L * 60 * 1000, delay: String = "0 seconds"): Dataset[CandPair] = {
     val s = docs.sparkSession
     import s.implicits._
@@ -176,7 +177,7 @@ object StreamingNearDup {
     * the pair query re-processes it — load telemetry faithful to the
     * pair query's state admissions, not an exact distinct census (that
     * is the batch `dedup_minhash_profile`). */
-  def bucketLoad(docs: DataFrame, maxPerBucket: Int = 64,
+  def bucketLoad(docs: DataFrame, maxPerBucket: Int = DefaultBucketCap,
       ttlMs: Long = 10L * 60 * 1000, delay: String = "0 seconds"): Dataset[BucketLoad] = {
     val s = docs.sparkSession
     import s.implicits._

@@ -55,11 +55,11 @@ object BounceProperties extends Properties("BounceDetect") {
   /** Run one batch through the real operator with fresh state; returns
     * (emitted bounces, parked entry, its timeout timestamp). */
   private def run(events: List[LogEvent]): (List[LogEvent], Option[LogEvent], Option[Long]) = {
-    val state = TestGroupState.create[Seq[LogEvent]](
+    val state = TestGroupState.create[Sequence.Partial[LogEvent]](
       Optional.empty(), GroupStateTimeout.EventTimeTimeout,
       0L, Optional.of(0L), false)
     val out = Sequence.stateFn(BounceDetect.pattern)("m", events.iterator, state).toList
-    val parked = if (state.exists) state.get.headOption else None
+    val parked = if (state.exists) Some(state.get.anchor) else None
     val timeout: Option[Long] =
       if (state.getTimeoutTimestampMs.isPresent)
         Some(state.getTimeoutTimestampMs.get.asInstanceOf[Long])
@@ -100,8 +100,8 @@ object BounceProperties extends Properties("BounceDetect") {
   property("timeout firing emits the parked entry exactly once") =
     forAll(Gen.choose(0L, 100000L)) { ts =>
       val parked = entry(ts)
-      val state = TestGroupState.create[Seq[LogEvent]](
-        Optional.of(Seq(parked)), GroupStateTimeout.EventTimeTimeout,
+      val state = TestGroupState.create[Sequence.Partial[LogEvent]](
+        Optional.of(Sequence.Partial(parked, parked.ts, 1)), GroupStateTimeout.EventTimeTimeout,
         0L, Optional.of(ts + BounceDetect.BounceWindowMs + 1), true)
       val out = Sequence.stateFn(BounceDetect.pattern)("m", Iterator.empty, state).toList
       out == List(parked) && state.isRemoved
