@@ -26,13 +26,13 @@ import scala.collection.immutable.ListMap
 object Graph {
 
   /** One PageRank step: contributions flow src→dst over `esrc` (corpus-sized
-    * edge frame, reused every round), new mass is summed per dst, and
-    * dangling nodes fall back to the teleport term. `ranks` is
-    * node-domain-sized (bounded page-id domain) so it is explicitly
-    * [[broadcast]]: the per-iteration plan must not depend on AQE having
-    * fresh stats for a just-checkpointed frame — on a cluster the edge side
-    * is the only graph-sized shuffle each round. Exposed so PlanAuditSpec
-    * can assert the broadcast on the pre-checkpoint plan. */
+    * edge frame, reused every round) and are summed per page with one
+    * zero-mass row per node, so a page nothing links to keeps the teleport
+    * term: one shuffle, no join back to `nodes` (every `dst` is a node).
+    * `ranks` is node-domain-sized (bounded page-id domain) so it is
+    * explicitly [[broadcast]]: a round's plan must not depend on AQE's
+    * estimate of the previous round — on a cluster the edge side is the
+    * only graph-sized shuffle each round. Exposed for PlanAuditSpec. */
   private[graft] def iterate(esrc: org.apache.spark.sql.DataFrame,
                              nodes: org.apache.spark.sql.DataFrame,
                              ranks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
@@ -40,10 +40,8 @@ object Graph {
       .join(broadcast(ranks), esrc("src") === ranks("page"))
       .select(col("dst").as("page"),
         expr("(r * 85L * w) div (100L * ow)").as("c"))
-      .groupBy(col("page")).agg(sum(col("c")).as("in_mass"))
-    nodes.join(contrib, Seq("page"), "left")
-      .select(col("page"),
-        (lit(150000L) + coalesce(col("in_mass"), lit(0L))).as("r"))
+    nodes.select(col("page"), lit(0L).as("c")).union(contrib)
+      .groupBy(col("page")).agg((lit(150000L) + sum(col("c"))).as("r"))
   }
 
   /** Directed page-transition edges (src, dst, w=count) from the event
@@ -98,29 +96,26 @@ object Graph {
 
     // ---- weighted PageRank, 3 iterations, damping 0.85 --------------------
     // Scale shape: edges are built once (one window pass over events, one
-    // (src,dst) aggregation) and persisted WITH their source out-weight, so
-    // each iteration is exactly one join (ranks ⋈ edges on src — the
-    // graph-sized shuffle real PageRank pays) plus one partial+final sum by
-    // dst. Ranks are localCheckpoint'd per round: constant plan depth over
-    // any iteration count (same recipe as Curation.connectedComponents;
-    // single-process caveat documented there — use reliable checkpoint()
-    // on a cluster). Dangling-node mass decays (no redistribution), which
-    // is deterministic and mirrored by the oracle.
+    // (src,dst) aggregation) and persisted WITH their source out-weight (a
+    // window over src; edges are page-id-domain-bounded), so each iteration
+    // is exactly one join (ranks ⋈ edges on src — the graph-sized shuffle
+    // real PageRank pays) plus one partial+final sum by dst. The three
+    // rounds are one lazy plan: a fixed round count bounds plan depth, so
+    // no per-round checkpoint job chain (clearCache releases both caches).
+    // Dangling-node mass decays (no redistribution), mirrored by the oracle.
     "pagerank_pages" -> QueryDef(
       (s, dir) => {
-        val edges = pageEdges(s, dir)
-        val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
         // slim, reused every iteration: (src, dst, w, ow)
-        val esrc = edges.join(outw, "src").persist(StorageLevel.MEMORY_AND_DISK)
+        val esrc = pageEdges(s, dir)
+          .withColumn("ow", sum(col("w")).over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
+          .persist(StorageLevel.MEMORY_AND_DISK)
         val nodes = esrc.select(col("src").as("page"))
           .union(esrc.select(col("dst")))
           .distinct()
           .persist(StorageLevel.MEMORY_AND_DISK)
-        var ranks = nodes.withColumn("r", lit(1000000L)).localCheckpoint(true)
-        for (_ <- 1 to 3)
-          ranks = iterate(esrc, nodes, ranks).localCheckpoint(true)
-        esrc.unpersist()
-        nodes.unpersist()
+        var ranks = nodes.withColumn("r", lit(1000000L))
+        for (_ <- 1 to 3) ranks = iterate(esrc, nodes, ranks)
         ranks.select(col("page"), col("r").as("rank_scaled"))
           .orderBy(col("rank_scaled").desc, col("page"))
       },
@@ -184,9 +179,9 @@ object Graph {
     // so both broadcast — per hop the DIRECTED edge table sees one
     // broadcast-join probe (map-side) and the only shuffle is the
     // node-bounded distinct; the not-yet-visited filter is a broadcast
-    // left-anti join. localCheckpoint after each hop bounds plan depth
-    // exactly like the PageRank/LPA loops. Level count is fixed (3), so
-    // the oracle unrolls the same frontier algebra as plain CTEs. ----------
+    // left-anti join. localCheckpoint after each hop materializes `next`
+    // once for both its readers and bounds plan depth. Level count is fixed
+    // (3), so the oracle unrolls the same frontier algebra as plain CTEs. -
     "graph_bfs_levels" -> QueryDef(
       (s, dir) => {
         val edges = pageEdges(s, dir).select(col("src"), col("dst"))
@@ -325,7 +320,7 @@ object Graph {
     // deterministic argmax via max(struct(w, -label)) — max weight, ties
     // to the SMALLEST label, bit-identical to the oracle's
     // row_number(ORDER BY w DESC, label). Integer weights throughout: no
-    // float order-dependence. localCheckpoint bounds plan depth per round.
+    // float order-dependence. Both rounds are one lazy plan (pagerank_pages).
     "graph_communities" -> QueryDef(
       (s, dir) => {
         val e = pageEdges(s, dir).filter(col("src") =!= col("dst"))
@@ -334,15 +329,10 @@ object Graph {
           .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
           .persist(StorageLevel.MEMORY_AND_DISK)
         val nodes = adj.select(col("u").as("page")).distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        var labels = nodes.withColumn("lbl", col("page")).localCheckpoint(true)
-        for (_ <- 1 to 2)
-          labels = lpaStep(adj, labels).localCheckpoint(true)
-        val out = labels.select(col("page"), col("lbl").as("community"))
+        var labels = nodes.withColumn("lbl", col("page"))
+        for (_ <- 1 to 2) labels = lpaStep(adj, labels)
+        labels.select(col("page"), col("lbl").as("community"))
           .transform(graft.Sorted.byNames(_, "page"))
-        adj.unpersist()
-        nodes.unpersist()
-        out
       },
       s"""WITH $duckEdges,
          |e AS (SELECT src, dst, w FROM edges WHERE src <> dst),
@@ -473,8 +463,8 @@ object Graph {
     // equi SHUFFLE joins (never a broadcast of an N-shaped frame), the
     // per-(node, word) bit_or fold is partial+final, the visited mask is
     // a (node, word_idx)-keyed left join with bits & ~prev, and
-    // localCheckpoint truncates lineage per round (the pagerank
-    // discipline). `rounds` bounds the radius: distances beyond it read
+    // localCheckpoint materializes each round's frontier once for its
+    // three readers. `rounds` bounds the radius: distances beyond it read
     // as unreached (sums bias low at the periphery — the documented
     // bounded-radius contract). --------------------------------------------
     "graph_closeness" -> QueryDef(

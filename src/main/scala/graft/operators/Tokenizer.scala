@@ -20,7 +20,7 @@ import scala.collection.immutable.ListMap
   * TakeOrdered(1) argmax, and the winning pair applied via a 1-row
   * broadcast — no driver-side collect, no corpus re-scan, plan depth
   * bounded by localCheckpoint per round (same recipe as
-  * Graph.pagerank_pages).
+  * Curation.connectedComponents).
   *
   * Cross-engine parity: a word's symbol sequence is encoded as a string
   * with every symbol carrying its OWN leading+trailing space

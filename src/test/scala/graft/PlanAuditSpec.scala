@@ -289,8 +289,8 @@ class PlanAuditSpec extends SparkSpec {
 
   test("pagerank iteration: ranks side is a pinned broadcast (edge side carries the only shuffle)") {
     import spark.implicits._
-    // the per-round plan is consumed by localCheckpoint inside the query, so
-    // audit the exposed single-step builder on representative slim frames
+    // the query's plan nests three rounds, so audit the exposed
+    // single-step builder on representative slim frames
     val esrc = Seq((1L, 2L, 3L, 5L), (2L, 1L, 2L, 2L)).toDF("src", "dst", "w", "ow")
     val nodes = Seq(1L, 2L).toDF("page")
     val ranks = Seq((1L, 1000000L), (2L, 1000000L)).toDF("page", "r")

@@ -1,36 +1,11 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /** `Tables.load` infers a table's schema once per file identity
   * (SchemaMemo): a repeat load starts no job, a rewritten table infers
   * again, and the rows are those of a plain read. */
 class TablesSpec extends SparkSpec {
-
-  /** Jobs started while `body` runs, counted after the listener bus drains
-    * (the bus is private[spark] to scalac but public in bytecode). */
-  private def jobsDuring[T](body: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    def drain(): Unit = {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-        .invoke(bus, java.lang.Long.valueOf(60000L))
-    }
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    drain()
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      drain()
-      (jobs.get, r)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
@@ -39,16 +14,16 @@ class TablesSpec extends SparkSpec {
     val path = Tables.path(dir, "t")
     spark.range(40).selectExpr("id", "id * 3 AS v").coalesce(1).write.parquet(path)
     val (firstJobs, first) = jobsDuring(Tables.load(spark, dir, "t"))
-    assert(firstJobs >= 1, "the first load infers the schema")
+    assert(firstJobs.jobs >= 1, "the first load infers the schema")
     val (againJobs, again) = jobsDuring(Tables.load(spark, dir, "t"))
-    assert(againJobs == 0, s"the repeat load started $againJobs jobs")
+    assert(againJobs.jobs == 0, s"the repeat load started ${againJobs.jobs} jobs")
     assert(again.schema == first.schema)
     assert(rows(again) == rows(spark.read.parquet(path)))
 
     spark.range(40).selectExpr("id", "id * 3 AS v", "id % 4 AS w").coalesce(1)
       .write.mode("overwrite").parquet(path)
     val (rewrittenJobs, rewritten) = jobsDuring(Tables.load(spark, dir, "t"))
-    assert(rewrittenJobs >= 1, "a rewritten table infers again")
+    assert(rewrittenJobs.jobs >= 1, "a rewritten table infers again")
     assert(rewritten.columns.toSeq == Seq("id", "v", "w"))
     assert(rows(rewritten) == rows(spark.read.parquet(path)))
   }

@@ -1,10 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.execution.ExplainMode
-
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The capstone audit: pretrain_prep's composition is oracle-checked by
   * the registry (hash vs the chained DuckDB twin); THIS suite pins what
@@ -54,27 +51,14 @@ class PretrainPrepSpec extends SparkSpec {
 
   test("the pipeline is stage-bounded: no per-stage corpus re-scan explosion") {
     spark.catalog.clearCache()
-    val jobs = new AtomicInteger
-    val stages = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        stages.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      Pretrain.pretrainPrep(spark, dir).collect()
-      // stage-submitted events are posted synchronously enough for a
-      // bounded-count assertion, but give the bus a beat to drain
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (n, _) = jobsDuring(Pretrain.pretrainPrep(spark, dir).collect())
     // measured 92 stages / 92 jobs on the fixture (AQE materializes one
     // job per exchange, so the count is the pipeline's SHUFFLE budget —
     // fixed by plan shape, not data volume; see SCALE.md pretrain_prep
     // row). The ceiling leaves AQE re-planning slack but fails if a
     // stage stops fusing (each lost fusion adds corpus-scan stages).
-    assert(stages.get <= 115,
-      s"pipeline submitted ${stages.get} stages (jobs=${jobs.get}) — a stage stopped fusing")
+    assert(n.stages <= 115,
+      s"pipeline submitted ${n.stages} stages (jobs=${n.jobs}) — a stage stopped fusing")
   }
 
   test("pretrain_prep_fixed: vacuous bound at base scale; bounded pool on a salted corpus") {

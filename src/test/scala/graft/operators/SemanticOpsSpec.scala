@@ -140,27 +140,16 @@ class SemanticOpsSpec extends SparkSpec {
     val n = emb.count()
     // constructing the frame with corpusSize supplied must launch ZERO
     // Spark jobs (the 100 TB contract: no hidden full-scan count per call)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val lazyFrames = Seq(
-        Similarity.semanticDedup(emb, corpusSize = n),
-        Similarity.knnLabelProbe(emb, corpusSize = n),
-        Similarity.hardNegatives(emb, corpusSize = n))
-      // listener events are async: give the bus a beat before asserting
-      Thread.sleep(500)
-      assert(jobs.get() == 0,
-        s"frame construction with corpusSize must launch no jobs, saw ${jobs.get()}")
-      // and the sizing is the SAME k the count path derives
-      val viaCount = Similarity.semanticDedup(emb).collect().toSeq
-      assert(lazyFrames.head.collect().toSeq == viaCount,
-        "corpusSize path must produce identical results to the count path")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (built, lazyFrames) = jobsDuring(Seq(
+      Similarity.semanticDedup(emb, corpusSize = n),
+      Similarity.knnLabelProbe(emb, corpusSize = n),
+      Similarity.hardNegatives(emb, corpusSize = n)))
+    assert(built.jobs == 0,
+      s"frame construction with corpusSize must launch no jobs, saw ${built.jobs}")
+    // and the sizing is the SAME k the count path derives
+    val viaCount = Similarity.semanticDedup(emb).collect().toSeq
+    assert(lazyFrames.head.collect().toSeq == viaCount,
+      "corpusSize path must produce identical results to the count path")
   }
 
   test("label_centroid_margin: ragged widths agree with their zero-padded twins (the 64-dim contract)") {

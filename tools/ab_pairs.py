@@ -3,6 +3,7 @@
 
 Usage: tools/ab_pairs.py PARENT_DIR CHANGE_DIR [--pairs N]
            [--workloads log_chain,registry_slice] [--seed0 1] [--out FILE]
+           [--jobs]
 
 PARENT_DIR and CHANGE_DIR are two checkouts (`git archive <ref> | tar -x
 -C DIR`), each with its own `gmallbench/`. Both are built first, so no
@@ -24,6 +25,14 @@ the change's wins (pairs where it beat its own partner) and a verdict:
 
 It also prints each side's share of failed operations. `--out` writes
 every run's raw values as JSON. Exits 1 if any metric reads regression.
+
+With `--jobs` it runs no pairs: each checkout runs every workload once
+with `--trace 1` (seed seed0) and it prints the Spark jobs of each side,
+`exec.jobs` (the whole timed window) for every workload and, for
+registry_slice, each query's jobs in the last timed pass (`detail` in
+`.bench_work/registry_slice/trace.json`). A query's count is set by its
+plan; log_chain's `exec.jobs` also follows how many triggers ran, so it
+moves between runs of one checkout.
 """
 import argparse
 import json
@@ -69,14 +78,50 @@ def build(checkout):
                    cwd=checkout, check=True, timeout=900)
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed, seconds, trace=0):
     """One run's stdout JSON line: {correct, attempted, failed, metrics}."""
     cmd = [sys.executable, "gmallbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds)]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True, timeout=900)
     if p.returncode != 0:
         raise RuntimeError(f"{checkout}: {workload} seed {seed} failed:\n{p.stderr[-2000:]}")
     return json.loads(p.stdout.strip().splitlines()[-1])
+
+
+def job_counts(result, trace):
+    """{label: jobs} of one traced run: `exec.jobs` from its result line and
+    each query's jobs from its trace.json `detail`, where it has one."""
+    counts = {"exec.jobs": int(result["metrics"]["exec.jobs"]["value"])}
+    for q, d in trace.get("detail", {}).items():
+        counts[q] = int(d["jobs"])
+    return counts
+
+
+def jobs_report(counts):
+    """Table lines of {workload: {"parent": {label: jobs}, "change": ...}}."""
+    lines = []
+    for w, sides in counts.items():
+        par, chg = sides["parent"], sides["change"]
+        lines.append(f"{w}: jobs")
+        lines.append(f"  {'':<28}{'parent':>8}{'change':>8}{'delta':>8}")
+        for label in list(par) + [k for k in chg if k not in par]:
+            p, c = par.get(label), chg.get(label)
+            delta = f"{c - p:+d}" if p is not None and c is not None else "-"
+            lines.append(f"  {label:<28}{'-' if p is None else p:>8}"
+                         f"{'-' if c is None else c:>8}{delta:>8}")
+    return lines
+
+
+def traced_jobs(a, bench, workloads):
+    """One `--trace 1` run per checkout and workload: their job counts."""
+    counts = {w: {} for w in workloads}
+    for w in workloads:
+        for side in ("parent", "change"):
+            checkout = getattr(a, side)
+            r = run_once(checkout, w, a.seed0, bench["run_seconds"], trace=1)
+            with open(os.path.join(checkout, ".bench_work", w, "trace.json")) as f:
+                counts[w][side] = job_counts(r, json.load(f))
+    return counts
 
 
 def report(runs, metrics):
@@ -112,6 +157,8 @@ def main(argv=None):
     ap.add_argument("--workloads", default="log_chain,registry_slice")
     ap.add_argument("--seed0", type=int, default=1)
     ap.add_argument("--out")
+    ap.add_argument("--jobs", action="store_true",
+                    help="print each side's Spark job counts instead of pairs")
     a = ap.parse_args(argv)
     with open(os.path.join(a.parent, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -119,6 +166,13 @@ def main(argv=None):
     workloads = a.workloads.split(",")
     for d in (a.parent, a.change):
         build(d)
+    if a.jobs:
+        counts = traced_jobs(a, bench, workloads)
+        if a.out:
+            with open(a.out, "w") as f:
+                json.dump(counts, f, indent=1)
+        print("\n".join(jobs_report(counts)))
+        return 0
     runs = {w: {"parent": [], "change": []} for w in workloads}
     for i in range(a.pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")

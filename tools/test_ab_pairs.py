@@ -5,7 +5,7 @@ import sys
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from ab_pairs import quartiles, report, verdict, wins  # noqa: E402
+from ab_pairs import job_counts, jobs_report, quartiles, report, verdict, wins  # noqa: E402
 
 PARENT = [10.0, 10.2, 9.9, 10.1, 10.0, 10.3, 9.8, 10.1, 10.0, 10.2]
 
@@ -52,6 +52,27 @@ class ReportTest(unittest.TestCase):
         self.assertTrue(regressed)
         self.assertIn("  change failed operations: 1/20", lines)
         self.assertTrue(lines[-1].rstrip().endswith("regression"))
+
+
+class JobsTest(unittest.TestCase):
+    def test_counts_read_exec_jobs_and_each_querys_detail(self):
+        result = {"metrics": {"exec.jobs": {"value": 57.0, "unit": "count"}}}
+        trace = {"exec.jobs": 57.0,
+                 "detail": {"pagerank_pages": {"wall_s": 0.7, "jobs": 21, "tasks": 80},
+                            "gopher_rules": {"wall_s": 0.2, "jobs": 3, "tasks": 9}}}
+        self.assertEqual(job_counts(result, trace),
+                         {"exec.jobs": 57, "pagerank_pages": 21, "gopher_rules": 3})
+        # log_chain's trace has no per-query detail
+        self.assertEqual(job_counts(result, {"exec.jobs": 57.0}), {"exec.jobs": 57})
+
+    def test_report_lists_both_sides_and_the_delta(self):
+        lines = jobs_report({"registry_slice": {
+            "parent": {"exec.jobs": 120, "pagerank_pages": 26},
+            "change": {"exec.jobs": 115, "pagerank_pages": 21, "new_q": 4}}})
+        self.assertEqual(lines[0], "registry_slice: jobs")
+        self.assertEqual(lines[2].split(), ["exec.jobs", "120", "115", "-5"])
+        self.assertEqual(lines[3].split(), ["pagerank_pages", "26", "21", "-5"])
+        self.assertEqual(lines[4].split(), ["new_q", "-", "4", "-"])
 
 
 if __name__ == "__main__":
